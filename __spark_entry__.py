@@ -10,6 +10,12 @@ express; the few that SQL can't (xxhash64-seeded LSH internals, LCG
 hyperplanes, numpy feature stubs) are listed in ``ROWS_ONLY`` and get the
 driver's weaker rows-only check.
 
+Most entries are tagged-union composites declared once in the part
+table ``_COMPOSITES`` (see ``_composite``): an output schema plus, per
+part, the tag, the Spark builder, the part's DuckDB SQL and an output
+column map. The Spark union, the oracle ``UNION ALL``, ``_TAGGED_PARTS``
+and ``query_parts()`` are all derived from that one table.
+
 Determinism across engines: timestamps are exported as epoch
 microseconds; double aggregates pass through DECIMAL so sums are exact
 and order-independent; per-row double arithmetic is identical IEEE ops in
@@ -18,7 +24,10 @@ both engines; everything ranked has a total tiebreak.
 
 from __future__ import annotations
 
+import re
 from collections.abc import Callable
+from functools import reduce
+from typing import NamedTuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -131,6 +140,24 @@ def _dec_sum(col, scale: int = 2, precision: int = 18):
     return F.sum(c.cast(f"decimal({precision},{scale})")).cast("double")
 
 
+def _build_on_pool(builders: dict, *args) -> dict:
+    """``{tag: builder(*args)}`` with the independent builders run on a
+    small thread pool: part construction is py4j round-trip latency
+    plus eager pre-scans and stream startups, so overlapping it lets
+    the scheduler back-fill idle cores with the other parts' jobs."""
+    from concurrent.futures import ThreadPoolExecutor
+    with ThreadPoolExecutor(max_workers=min(len(builders), 8)) as pool:
+        futs = {tag: pool.submit(fn, *args) for tag, fn in builders.items()}
+        return {tag: f.result() for tag, f in futs.items()}
+
+
+def _with_micros(df: DataFrame, **cols: str) -> DataFrame:
+    """*df* plus epoch-microsecond copies (name=timestamp column) — the
+    integer time slots of the composite schemas (DuckDB: epoch_us)."""
+    return df.withColumns({name: F.unix_micros(F.col(ts).cast("timestamp"))
+                          for name, ts in cols.items()})
+
+
 # ===========================================================================
 # entry — flagship pipeline (SURVEY §7.1: load, mask, derive, summarize)
 # ===========================================================================
@@ -184,14 +211,7 @@ def q_r_slice_mask(spark, sf_dir):
     mask = fr.mask_rows(["l_quantity", "l_discount"],
                         lambda q, d: (q > 40) & (d < 0.02))
     return fr.slice(mask, ["l_orderkey", "l_linenumber",
-                           "l_quantity", "l_discount"]).spark_df
-
-
-def q_r_count_rows(spark, sf_dir):
-    """R16: count_rows (eager count under a predicate)."""
-    fr = _f(spark, sf_dir, "lineitem")
-    n = fr.count_rows(["l_returnflag"], lambda rf: rf == "A")
-    return spark.createDataFrame([(n,)], "n bigint")
+                    "l_quantity", "l_discount"]).spark_df
 
 
 def q_r_map_rows(spark, sf_dir):
@@ -262,34 +282,6 @@ def q_r_slice_positional(spark, sf_dir):
                          ["c_custkey", "c_name", "c_acctbal"]).spark_df
 
 
-def q_r_summary_quantiles(spark, sf_dir):
-    """R27: generic column summary — exact 5-point quantiles (>10 distinct
-    reals branch), as a one-row frame."""
-    fr = _f(spark, sf_dir, "lineitem")
-    s = fr.column_summary("l_extendedprice")
-    q = s.quantiles
-    return spark.createDataFrame(
-        [(q.count, q.min, q.q25, q.q50, q.q75, q.max)],
-        "n bigint, min double, q25 double, q50 double, q75 double, max double")
-
-
-def q_r_summary_freq(spark, sf_dir):
-    """R27: generic column summary — exact frequency table branch."""
-    fr = _f(spark, sf_dir, "lineitem")
-    s = fr.column_summary("l_returnflag")
-    return spark.createDataFrame(
-        [(v, c) for v, c in s.frequencies], "value string, cnt bigint")
-
-
-def q_r_summary_bits(spark, sf_dir):
-    """R26: bit-column summary (ones count over a boolean mask column)."""
-    fr = _f(spark, sf_dir, "lineitem")
-    flagged = fr.add_columns("high_disc", F.col("l_discount") > 0.05)
-    s = flagged.column_summary("high_disc")
-    return spark.createDataFrame([(s.length, s.count)],
-                                 "length bigint, ones bigint")
-
-
 def q_r_alist_plist(spark, sf_dir):
     """R3: alist_df / plist_df constructors round-trip the region table."""
     data = _f(spark, sf_dir, "region").as_dict()
@@ -311,16 +303,6 @@ def q_r_matrix_df(spark, sf_dir):
     return rebuilt.spark_df
 
 
-def q_r_keys_dims(spark, sf_dir):
-    """R7/R24/R25: keys / column_length / nrow / ncol / dims."""
-    fr = _f(spark, sf_dir, "nation")
-    return spark.createDataFrame(
-        [(",".join(fr.keys()), fr.column_length("n_name"),
-          fr.nrow, fr.ncol, fr.dims[0], fr.dims[1])],
-        "keys string, collen bigint, nrow bigint, ncol bigint, "
-        "d0 bigint, d1 bigint")
-
-
 def q_r_column_get_set(spark, sf_dir):
     """R8/R9: column() eager fetch + (setf column) replacement."""
     fr = _f(spark, sf_dir, "region")
@@ -336,25 +318,6 @@ def q_r_map_columns(spark, sf_dir):
     return out.spark_df
 
 
-def q_r_datavector_slice(spark, sf_dir):
-    """R13: scalar row slice -> DataVector; key slice on it -> scalar."""
-    fr = _f(spark, sf_dir, "customer")
-    ordered = R.order_by(fr, "c_custkey")
-    dv = ordered.slice(0, ["c_custkey", "c_name", "c_acctbal"])
-    return spark.createDataFrame(
-        [(dv["c_custkey"], dv["c_name"], dv["c_acctbal"])],
-        "c_custkey bigint, c_name string, c_acctbal double")
-
-
-def q_r_do_rows(spark, sf_dir):
-    """R18: do_rows — ordered driver-side side effects (accumulator)."""
-    fr = _f(spark, sf_dir, "region")
-    acc: list[int] = []
-    fr.do_rows(["r_regionkey"], lambda k: acc.append(int(k)))
-    return spark.createDataFrame(
-        [(len(acc), sum(acc))], "n bigint, total bigint")
-
-
 def q_r_copy_isolation(spark, sf_dir):
     """R22/R23: copy() isolates destructive replace_column_ from the
     original (returns the ORIGINAL, unchanged)."""
@@ -362,28 +325,6 @@ def q_r_copy_isolation(spark, sf_dir):
     clone = fr.copy()
     clone.replace_column_("p_size", lambda s: s * 1000)
     return fr.spark_df
-
-
-def q_r_errors(spark, sf_dir):
-    """R29: error surface — KeyNotFound (with valid keys listed),
-    DuplicateKey, ColumnLengthMismatch, each raised and caught."""
-    from cl_data_frame_spark.errors import (ColumnLengthMismatch,
-                                            DuplicateKey, KeyNotFound)
-    fr = _f(spark, sf_dir, "region")
-    caught = []
-    try:
-        fr.column("no_such_column")
-    except KeyNotFound as e:
-        caught.append(("KeyNotFound", "r_name" in str(e)))
-    try:
-        fr.add_column_("r_name", [1, 2, 3, 4, 5])
-    except DuplicateKey:
-        caught.append(("DuplicateKey", True))
-    try:
-        fr.add_column_("extra", [1, 2, 3])
-    except ColumnLengthMismatch:
-        caught.append(("ColumnLengthMismatch", True))
-    return spark.createDataFrame(caught, "error string, ok boolean")
 
 
 # ===========================================================================
@@ -443,29 +384,6 @@ def q_s_window_topk_per_group(spark, sf_dir):
     ranked = R.window_over(orders, {"rn": F.row_number().over(w)})
     return (ranked.spark_df.filter(F.col("rn") <= 3)
             .select("o_custkey", "o_orderkey", "o_totalprice", "rn"))
-
-
-def q_s_window_running(spark, sf_dir):
-    """Window functions: running per-customer sum (unbounded preceding)."""
-    orders = _f(spark, sf_dir, "orders")
-    w = (Window.partitionBy("o_custkey")
-         .orderBy(F.col("o_orderdate").asc(), F.col("o_orderkey").asc())
-         .rowsBetween(Window.unboundedPreceding, 0))
-    run = F.sum(F.col("o_totalprice").cast("decimal(18,2)")).over(w)
-    ranked = R.window_over(orders, {"running_total": run.cast("double")})
-    return ranked.spark_df.select("o_custkey", "o_orderkey", "running_total")
-
-
-def q_s_window_lag(spark, sf_dir):
-    """Window functions: lag/lead navigation."""
-    orders = _f(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.col("o_orderdate").asc(), F.col("o_orderkey").asc())
-    ranked = R.window_over(orders, {
-        "prev_price": F.lag("o_totalprice").over(w),
-        "next_status": F.lead("o_orderstatus").over(w)})
-    return ranked.spark_df.select("o_custkey", "o_orderkey",
-                                  "prev_price", "next_status")
 
 
 def q_s_sort_topk(spark, sf_dir):
@@ -536,28 +454,6 @@ def q_s_unpivot(spark, sf_dir):
                                F.col("val").cast("double").alias("val"))
 
 
-def q_s_pivot_unpivot(spark, sf_dir):
-    """Pivot + unpivot in one tagged union (round 8: the two 0.2-0.5s
-    entries share their result-shape machinery — merging them freed a
-    registry slot for ``s_stats_rank``, splitting the oversized
-    ``s_stats`` composite)."""
-    a = _tag(q_s_pivot(spark, sf_dir), "pivot",
-             F.col("o_orderstatus").alias("s1"),
-             F.col("p1").cast("bigint").alias("i1"),
-             F.col("p2").cast("bigint").alias("i2"),
-             F.col("p3").cast("bigint").alias("i3"),
-             F.col("p4").cast("bigint").alias("i4"),
-             F.col("p5").cast("bigint").alias("i5"),
-             _DNULL().alias("d1"))
-    b = _tag(q_s_unpivot(spark, sf_dir), "unpivot",
-             F.col("measure").alias("s1"),
-             F.col("p_partkey").cast("bigint").alias("i1"),
-             _BNULL().alias("i2"), _BNULL().alias("i3"),
-             _BNULL().alias("i4"), _BNULL().alias("i5"),
-             F.col("val").cast("double").alias("d1"))
-    return a.unionByName(b)
-
-
 def q_s_group_quantiles(spark, sf_dir):
     """Per-group exact quantiles: median + p90 of extendedprice per
     returnflag (ordered-set aggregate analog)."""
@@ -569,7 +465,7 @@ def q_s_group_quantiles(spark, sf_dir):
     }).spark_df
 
 
-def q_s_time_rollup(spark, sf_dir):
+def _s_time_rollup_parts(spark, sf_dir):
     """Hypertable-style multi-resolution rollup: event counts at (day,
     hour) with ROLLUP so day totals and the grand total come out of the
     same shuffle (one pass, grouping sets)."""
@@ -585,12 +481,6 @@ def q_s_time_rollup(spark, sf_dir):
     rolled = out.spark_df.select(
         F.unix_micros("d").alias("d_us"), F.unix_micros("h").alias("h_us"),
         "n", "sum_value")
-    a = _tag(rolled, "rollup",
-             F.col("d_us").cast("bigint").alias("d_us"),
-             F.col("h_us").cast("bigint").alias("h_us"),
-             _SNULL().alias("s1"),
-             F.col("n").cast("bigint").alias("n"),
-             F.col("sum_value").cast("double").alias("sum_value"))
     # hourly resample per event_type with zero-filled gaps: every bucket
     # between each type's first and last event exists in the output
     dense = R.resample_fill(
@@ -600,12 +490,6 @@ def q_s_time_rollup(spark, sf_dir):
          "sum_value": F.sum(F.col("value").cast("decimal(18,6)"))
          .cast("double")},
         fill="zero").spark_df
-    b = _tag(dense, "resample",
-             _BNULL().alias("d_us"),
-             F.unix_micros("bucket").alias("h_us"),
-             F.col("event_type").alias("s1"),
-             F.col("n").cast("bigint").alias("n"),
-             F.col("sum_value").cast("double").alias("sum_value"))
     # linear interpolation over the same grid: gap buckets take the
     # straight line between surrounding observations (sensor-series
     # repair; endpoints degrade to ffill/bfill)
@@ -614,12 +498,6 @@ def q_s_time_rollup(spark, sf_dir):
         "ts", "1 hour", ["event_type"],
         {"v": F.max(F.col("value").cast("double"))},
         fill="linear").spark_df
-    c = _tag(lin, "linear",
-             _BNULL().alias("d_us"),
-             F.unix_micros("bucket").alias("h_us"),
-             F.col("event_type").alias("s1"),
-             _BNULL().alias("n"),
-             F.col("v").cast("double").alias("sum_value"))
     # classical additive seasonal decomposition of the zero-filled
     # hourly series (relational.seasonal_decompose, daily cycle p=24);
     # three component rows per bucket, NULL trend/residual at edges
@@ -636,13 +514,14 @@ def q_s_time_rollup(spark, sf_dir):
                      F.col("seasonal").alias("x")),
             F.struct(F.lit("residual").alias("c"),
                      F.col("residual").alias("x")))).alias("e"))
-    d = _tag(comp, "seasonal",
-             _BNULL().alias("d_us"),
-             F.unix_micros("bucket").alias("h_us"),
-             F.concat_ws("|", "event_type", "e.c").alias("s1"),
-             F.col("phase").cast("bigint").alias("n"),
-             F.col("e.x").cast("double").alias("sum_value"))
-    return a.unionByName(b).unionByName(c).unionByName(d)
+    seasonal = comp.select(
+        F.unix_micros("bucket").alias("h_us"),
+        F.concat_ws("|", "event_type", "e.c").alias("s1"), "phase",
+        F.col("e.x").alias("x"))
+    return {"rollup": rolled,
+            "resample": _with_micros(dense, h_us="bucket"),
+            "linear": _with_micros(lin, h_us="bucket"),
+            "seasonal": seasonal}
 
 
 def q_s_asof_join(spark, sf_dir):
@@ -875,21 +754,6 @@ def q_x_minhash_neardup(spark, sf_dir):
     return out.spark_df
 
 
-def q_x_ngram_jaccard(spark, sf_dir):
-    """Exact word-3-gram Jaccard pairs, blocked by lang."""
-    docs = _f(spark, sf_dir, "documents")
-    return X.ngram_jaccard_pairs(docs, n=3, threshold=0.5,
-                                 block_col="lang").spark_df
-
-
-def q_x_ngram_jaccard_global(spark, sf_dir):
-    """EXACT global n-gram Jaccard pairs WITHOUT blocking: prefix-filtered
-    set-similarity join (AllPairs/PPJoin) — near-linear candidate
-    generation instead of the O(n²) pair join."""
-    docs = _f(spark, sf_dir, "documents")
-    return X.ngram_jaccard_pairs_prefix(docs, n=3, threshold=0.5).spark_df
-
-
 def q_x_embed_pairs(spark, sf_dir):
     """Embedding-cosine near-dup pairs, blocked by label. The synthetic
     embeddings are near-orthogonal (max within-label cosine ~0.47 at
@@ -919,22 +783,6 @@ def q_x_semantic_dedup(spark, sf_dir):
              .select("vec_id", "embedding").collect())
     centroids = [(int(r[0]), list(r[1])) for r in cents]
     return X.semantic_dedup(emb, centroids, threshold=0.4).spark_df
-
-
-def q_x_embed_neardup(spark, sf_dir):
-    """Embedding near-dup pairs + SemDeDup per-vector verdicts."""
-    a = _tag(q_x_embed_pairs(spark, sf_dir), "pairs",
-             F.col("id_a").cast("bigint").alias("id_a"),
-             F.col("id_b").cast("bigint").alias("id_b"),
-             F.col("cosine").cast("double").alias("cosine"),
-             _BNULL().alias("cid"), _BNULL().alias("keep"))
-    b = _tag(q_x_semantic_dedup(spark, sf_dir), "semdedup",
-             F.col("vec_id").cast("bigint").alias("id_a"),
-             F.col("dup_of").cast("bigint").alias("id_b"),
-             F.col("max_sim").cast("double").alias("cosine"),
-             F.col("centroid_id").cast("bigint").alias("cid"),
-             F.col("keep").cast("bigint").alias("keep"))
-    return a.unionByName(b)
 
 
 def q_x_cosine_topk(spark, sf_dir):
@@ -1093,81 +941,36 @@ def q_s_frequent_items(spark, sf_dir):
     return out.spark_df
 
 
-def q_s_approx_sketches(spark, sf_dir):
-    """Mergeable sketch family with REAL oracles: HLL union rollup, Theta
-    distinct, KLL quantile merge (all in their exact ranges), and exact
-    grouped frequent items."""
-    a = _tag(q_s_hll_rollup(spark, sf_dir), "hll",
-             F.col("lang").alias("g"),
-             F.col("distinct_cb").cast("bigint").alias("i1"),
-             _BNULL().alias("i2"), _BNULL().alias("i3"),
-             _DNULL().alias("d1"), _DNULL().alias("d2"),
-             _DNULL().alias("d3"))
-    b = _tag(q_s_theta_distinct(spark, sf_dir), "theta",
-             F.col("lang").alias("g"),
-             F.col("distinct_cb").cast("bigint").alias("i1"),
-             _BNULL().alias("i2"), _BNULL().alias("i3"),
-             _DNULL().alias("d1"), _DNULL().alias("d2"),
-             _DNULL().alias("d3"))
-    c = _tag(q_s_kll_quantiles(spark, sf_dir), "kll",
-             F.col("l_returnflag").alias("g"),
-             _BNULL().alias("i1"), _BNULL().alias("i2"),
-             _BNULL().alias("i3"),
-             F.col("q25").cast("double").alias("d1"),
-             F.col("q50").cast("double").alias("d2"),
-             F.col("q75").cast("double").alias("d3"))
-    d = _tag(q_s_frequent_items(spark, sf_dir), "freq",
-             F.col("l_returnflag").alias("g"),
-             F.col("l_partkey").cast("bigint").alias("i1"),
-             F.col("cnt").cast("bigint").alias("i2"),
-             F.col("rank").cast("bigint").alias("i3"),
-             _DNULL().alias("d1"), _DNULL().alias("d2"),
-             _DNULL().alias("d3"))
-    # theta set algebra: en-vs-de overlap of the bounded char-bucket
-    # domain (both slices < 2^lg_k -> every estimate exact)
+def q_s_theta_set_ops(spark, sf_dir):
+    """Theta set algebra: en-vs-de overlap of the bounded char-bucket
+    domain (both slices < 2^lg_k -> every estimate exact)."""
     docs = _t(spark, sf_dir, "documents").select(
         "lang", (F.col("n_chars") % 97).alias("cb"))
-    so = SK.theta_set_ops(docs, "cb", "lang", "en", "de").spark_df
-    e = _tag(so, "setops",
-             F.lit("en~de").alias("g"),
-             F.col("n_a").alias("i1"), F.col("n_b").alias("i2"),
-             F.col("n_union").alias("i3"),
-             F.col("n_intersect").cast("double").alias("d1"),
-             F.col("n_diff").cast("double").alias("d2"),
-             _DNULL().alias("d3"))
-    return (a.unionByName(b).unionByName(c).unionByName(d)
-            .unionByName(e))
+    return SK.theta_set_ops(docs, "cb", "lang", "en", "de").spark_df
 
 
-def q_s_funnel(spark, sf_dir):
-    """User-journey analytics: ordered funnel (signup -> view -> click
-    -> purchase) + daily cohort retention matrix + first/last-touch
-    conversion attribution."""
+def q_s_funnel_stages(spark, sf_dir):
+    """Ordered funnel signup -> view -> click -> purchase (single
+    conditional aggregation)."""
     ev = _f(spark, sf_dir, "events")
-    fn = R.funnel(ev, ["signup", "view", "click", "purchase"]).spark_df
-    a = _tag(fn, "funnel",
-             F.col("stage_idx").cast("bigint").alias("i1"),
-             _BNULL().alias("i2"), F.col("stage").alias("s1"),
-             F.col("n_users").cast("bigint").alias("n"),
-             _BNULL().alias("i3"), _SNULL().alias("s2"))
-    ret = R.cohort_retention(ev, granularity="day").spark_df
-    b = _tag(ret, "retention",
-             F.col("offset").cast("bigint").alias("i1"),
-             F.unix_micros("cohort").alias("i2"), _SNULL().alias("s1"),
-             F.col("n_users").cast("bigint").alias("n"),
-             _BNULL().alias("i3"), _SNULL().alias("s2"))
-    at = R.conversion_attribution(ev).spark_df
-    c = _tag(at, "attribution",
-             F.col("event_id").cast("bigint").alias("i1"),
-             F.col("last_touch_id").cast("bigint").alias("i2"),
-             F.col("last_touch_type").alias("s1"),
-             F.col("user_id").cast("bigint").alias("n"),
-             F.col("first_touch_id").cast("bigint").alias("i3"),
-             F.col("first_touch_type").alias("s2"))
-    return a.unionByName(b).unionByName(c)
+    return R.funnel(ev, ["signup", "view", "click", "purchase"]).spark_df
 
 
-def q_s_window_range_trailing(spark, sf_dir):
+def q_s_cohort_retention(spark, sf_dir):
+    """Daily cohort retention matrix (offset in days, cohort day in
+    epoch micros)."""
+    ev = _f(spark, sf_dir, "events")
+    return R.cohort_retention(ev, granularity="day").spark_df.select(
+        F.col("offset").alias("day_offset"),
+        F.unix_micros("cohort").alias("cohort_us"), "n_users")
+
+
+def q_s_attribution(spark, sf_dir):
+    """First/last-touch conversion attribution."""
+    return R.conversion_attribution(_f(spark, sf_dir, "events")).spark_df
+
+
+def _s_window_range_trailing_parts(spark, sf_dir):
     """Event-time RANGE-frame windows: 7-day trailing per-user sum/count
     + rolling z-score anomaly flags from the same frame shape + bounded
     k-lag EWMA (one more pass over the same user-keyed shuffle) +
@@ -1177,67 +980,18 @@ def q_s_window_range_trailing(spark, sf_dir):
     aggregate)."""
     ev = _f(spark, sf_dir, "events")
     tr = R.trailing_range_window(ev, days=7).spark_df
-    a = _tag(tr, "trailing",
-             F.col("user_id").cast("bigint").alias("user_id"),
-             F.col("event_id").cast("bigint").alias("event_id"),
-             F.col("ts_us").cast("bigint").alias("ts_us"),
-             F.col("trailing_sum").cast("double").alias("d1"),
-             _DNULL().alias("d2"), _DNULL().alias("d3"),
-             F.col("trailing_n").cast("bigint").alias("i1"))
     zs = R.rolling_zscore(ev, days=7, z_threshold=3.0).spark_df
-    b = _tag(zs, "zscore",
-             F.col("user_id").cast("bigint").alias("user_id"),
-             F.col("event_id").cast("bigint").alias("event_id"),
-             F.col("ts_us").cast("bigint").alias("ts_us"),
-             F.col("roll_mean").cast("double").alias("d1"),
-             F.col("roll_std").cast("double").alias("d2"),
-             F.col("zscore").cast("double").alias("d3"),
-             F.col("is_anomaly").cast("bigint").alias("i1"))
     ew = R.ewma(ev, alpha=0.3, k=8).spark_df
-    c = _tag(ew, "ewma",
-             F.col("user_id").cast("bigint").alias("user_id"),
-             F.col("event_id").cast("bigint").alias("event_id"),
-             F.col("ts_us").cast("bigint").alias("ts_us"),
-             F.col("ewma").cast("double").alias("d1"),
-             F.col("value").cast("double").alias("d2"),
-             _DNULL().alias("d3"), _BNULL().alias("i1"))
     au = R.trailing_active_users(ev, days=7).spark_df
-    d = _tag(au, "distinct7",
-             _BNULL().alias("user_id"), _BNULL().alias("event_id"),
-             F.unix_micros("obs_day").alias("ts_us"),
-             _DNULL().alias("d1"), _DNULL().alias("d2"),
-             _DNULL().alias("d3"),
-             F.col("active_users").cast("bigint").alias("i1"))
     rm = R.rolling_median(ev, k=7).spark_df
-    e = _tag(rm, "rollmed",
-             F.col("user_id").cast("bigint").alias("user_id"),
-             F.col("event_id").cast("bigint").alias("event_id"),
-             F.col("ts_us").cast("bigint").alias("ts_us"),
-             F.col("roll_median").cast("double").alias("d1"),
-             F.col("value").cast("double").alias("d2"),
-             _DNULL().alias("d3"), _BNULL().alias("i1"))
     # per-user autocorrelation at lags 1..3 (lag slot rides in ts_us)
     ac = R.acf(ev, max_lag=3).spark_df
-    f = _tag(ac, "acf",
-             F.col("user_id").cast("bigint").alias("user_id"),
-             _BNULL().alias("event_id"),
-             F.col("lag").cast("bigint").alias("ts_us"),
-             F.col("acf").cast("double").alias("d1"),
-             _DNULL().alias("d2"), _DNULL().alias("d3"),
-             F.col("n_pairs").cast("bigint").alias("i1"))
     # Holt linear-trend smoothing per user over the value series
     # (relational.holt_linear; list-state fold, alpha=0.5 beta=0.3,
     # 3-step-ahead forecast) — bit-identical DuckDB list_reduce mirror
     hl = R.holt_linear(ev, "ts", "value", by=["user_id"],
                        alpha=0.5, beta=0.3, horizon=3,
                        order_cols=["ts", "event_id"]).spark_df
-    g = _tag(hl, "holt",
-             F.col("user_id").cast("bigint").alias("user_id"),
-             _BNULL().alias("event_id"), _BNULL().alias("ts_us"),
-             F.col("level").cast("double").alias("d1"),
-             F.col("trend").cast("double").alias("d2"),
-             F.col("forecast").cast("double").alias("d3"),
-             F.col("n").cast("bigint").alias("i1"))
     # two-sided CUSUM mean-shift detector per user (relational.
     # cusum_drift; kappa=0.5, h=4 in per-key sigma units).
     # assume_bounded: holt_linear's guard just verified the bound on
@@ -1247,17 +1001,9 @@ def q_s_window_range_trailing(spark, sf_dir):
                        kappa=0.5, h=4.0,
                        order_cols=["ts", "event_id"],
                        assume_bounded=True).spark_df
-    hh = _tag(cu, "cusum",
-              F.col("user_id").cast("bigint").alias("user_id"),
-              F.col("alarm").cast("bigint").alias("event_id"),
-              F.col("n").cast("bigint").alias("ts_us"),
-              F.col("max_s_plus").cast("double").alias("d1"),
-              F.col("max_s_minus").cast("double").alias("d2"),
-              F.col("sd").cast("double").alias("d3"),
-              _BNULL().alias("i1"))
-    return (a.unionByName(b).unionByName(c).unionByName(d)
-            .unionByName(e).unionByName(f).unionByName(g)
-            .unionByName(hh))
+    return {"trailing": tr, "zscore": zs, "ewma": ew,
+            "distinct7": _with_micros(au, day_us="obs_day"),
+            "rollmed": rm, "acf": ac, "holt": hl, "cusum": cu}
 
 
 def q_s_udtf_tokens(spark, sf_dir):
@@ -1279,10 +1025,10 @@ def q_s_udtf_tokens(spark, sf_dir):
 def _merge_upsert_base(spark, sf_dir):
     """MERGE/upsert as a relational rewrite (update matched orders'
     totalprice from a delta source, insert unmatched source keys) + SCD2
-    type-2 dimension history built from the orders change log — one
-    tagged union (the materialized-view parts join in
-    ``q_s_merge_upsert``; per-part attribution times the two families
-    separately so a non-mv part never pays the mv DML history)."""
+    type-2 dimension history built from the orders change log — the
+    relational parts of ``s_merge_upsert`` (the materialized-view parts
+    come from ``_matview_parts``, a builder of their own, so timing a
+    non-mv part never pays the mv DML history)."""
     orders = _f(spark, sf_dir, "orders")
     delta = SparkFrame(
         _t(spark, sf_dir, "orders")
@@ -1297,13 +1043,6 @@ def _merge_upsert_base(spark, sf_dir):
                        F.lit(42.0).alias("o_totalprice"))))
     merged = R.merge_into(orders, delta, on="o_orderkey",
                           update_cols=["o_totalprice"])
-    a = _tag(merged.spark_df, "merge",
-             F.col("o_orderkey").cast("bigint").alias("k1"),
-             F.col("o_custkey").cast("bigint").alias("k2"),
-             F.col("o_totalprice").cast("double").alias("v"),
-             _SNULL().alias("s1"), _BNULL().alias("vf"),
-             _BNULL().alias("vt"),
-             F.lit(None).cast("int").alias("cur"))
     # SCD2: per-customer order-status history (change log = the orders
     # stream ordered by o_orderdate, tie-broken by o_orderkey)
     hist = R.scd2_build(
@@ -1311,18 +1050,6 @@ def _merge_upsert_base(spark, sf_dir):
             "o_custkey", "o_orderdate", "o_orderkey", "o_orderstatus")),
         "o_custkey", "o_orderdate", ["o_orderstatus"],
         tiebreak_col="o_orderkey").spark_df.localCheckpoint(eager=False)
-    b = _tag(hist, "scd2",
-             F.col("o_custkey").cast("bigint").alias("k1"),
-             F.col("version").cast("bigint").alias("k2"),
-             _DNULL().alias("v"),
-             F.col("o_orderstatus").alias("s1"),
-             # o_orderdate scans as TIMESTAMP_NTZ; session TZ is pinned
-             # UTC so the cast to TIMESTAMP is lossless
-             F.unix_micros(F.col("valid_from").cast("timestamp"))
-             .alias("vf"),
-             F.unix_micros(F.col("valid_to").cast("timestamp"))
-             .alias("vt"),
-             F.col("is_current").cast("int").alias("cur"))
     # incremental aggregate maintenance: partials built on the base slice
     # absorb the delta slice WITHOUT rescanning base; merged state must
     # equal the full recompute the oracle runs
@@ -1335,13 +1062,6 @@ def _merge_upsert_base(spark, sf_dir):
         "o_custkey", ["o_totalprice"])
     incr = R.incremental_agg_merge(base_part, delta_part, "o_custkey",
                                    ["o_totalprice"]).spark_df
-    c = _tag(incr, "incr",
-             F.col("o_custkey").cast("bigint").alias("k1"),
-             F.col("cnt").cast("bigint").alias("k2"),
-             F.col("sum_o_totalprice").cast("double").alias("v"),
-             _SNULL().alias("s1"), _BNULL().alias("vf"),
-             _BNULL().alias("vt"),
-             F.lit(None).cast("int").alias("cur"))
     # snapshot diff: old = orders, new = orders with every 10th price
     # bumped and every 1000th key shifted (same delta recipe as 'merge')
     # compared values pass through DECIMAL strings so the md5
@@ -1363,30 +1083,12 @@ def _merge_upsert_base(spark, sf_dir):
                      "o_orderstatus"))
     diff = R.table_diff(SparkFrame(old_t), SparkFrame(new_t),
                         "o_orderkey").spark_df
-    d = _tag(diff, "diff",
-             F.col("o_orderkey").cast("bigint").alias("k1"),
-             _BNULL().alias("k2"), _DNULL().alias("v"),
-             F.concat_ws("|", "change_type",
-                         F.coalesce("old_fp", F.lit("")),
-                         F.coalesce("new_fp", F.lit(""))).alias("s1"),
-             _BNULL().alias("vf"), _BNULL().alias("vt"),
-             F.lit(None).cast("int").alias("cur"))
     # point-in-time lookup: each customer's status version valid at the
     # probe instant, straight off the checkpointed SCD2 history
     probe_ts = F.lit("1998-06-15 00:00:00").cast(hist.schema["valid_from"].dataType)
     probes = (hist.select("o_custkey").distinct()
               .withColumn("__pts__", probe_ts))
     pit = R.scd2_lookup(hist, probes, "o_custkey", "__pts__").spark_df
-    e = _tag(pit, "pit",
-             F.col("o_custkey").cast("bigint").alias("k1"),
-             F.col("version").cast("bigint").alias("k2"),
-             _DNULL().alias("v"),
-             F.col("o_orderstatus").alias("s1"),
-             F.unix_micros(F.col("valid_from").cast("timestamp"))
-             .alias("vf"),
-             F.unix_micros(F.col("valid_to").cast("timestamp"))
-             .alias("vt"),
-             F.col("is_current").cast("int").alias("cur"))
     # CDC apply (the inverse of 'diff'): a compacted insert/update/
     # delete feed replayed onto the snapshot
     snap = _t(spark, sf_dir, "orders").select(
@@ -1409,76 +1111,45 @@ def _merge_upsert_base(spark, sf_dir):
                         F.lit("X").alias("o_orderstatus"),
                         F.lit("insert").alias("op"))))
     applied = R.cdc_apply(snap, feed, "o_orderkey").spark_df
-    g = _tag(applied, "apply",
-             F.col("o_orderkey").cast("bigint").alias("k1"),
-             _BNULL().alias("k2"),
-             F.col("o_totalprice").cast("double").alias("v"),
-             F.col("o_orderstatus").alias("s1"),
-             _BNULL().alias("vf"), _BNULL().alias("vt"),
-             F.lit(None).cast("int").alias("cur"))
-    return (a.unionByName(b).unionByName(c).unionByName(d)
-            .unionByName(e).unionByName(g))
+    return {"merge": merged.spark_df,
+            "scd2": _with_micros(hist, vf="valid_from", vt="valid_to"),
+            "incr": incr, "diff": diff,
+            "pit": _with_micros(pit, vf="valid_from", vt="valid_to"),
+            "apply": applied}
 
 
-def q_s_merge_upsert(spark, sf_dir):
-    """The maintenance-family composite: the relational
-    merge/scd2/incr/diff/pit/apply parts plus the incrementally-
-    maintained materialized view (the delete/update-aware sibling of
-    'incr'): mvmid + mvread, oracled against full GROUP BY recomputes
-    of the DML history's states."""
-    return _merge_upsert_base(spark, sf_dir) \
-        .unionByName(_matview_parts(spark, sf_dir))
-
-
-def q_s_sessionize(spark, sf_dir):
-    """Behavioral sequence analytics: 30-minute-gap sessionization +
-    first-order Markov event-transition matrix + gaps-and-islands
-    interval merge (6-hour activity windows per user) + top-20
-    session-opening paths (journey mining over the same session
-    assignment), one tagged union — all window passes over the same
-    user-keyed shuffle."""
+def q_s_sessions(spark, sf_dir):
+    """30-minute-gap sessionization (bounds in epoch micros)."""
     ev = _f(spark, sf_dir, "events")
-    ses = R.sessionize(ev, gap_minutes=30.0).spark_df.select(
+    return R.sessionize(ev, gap_minutes=30.0).spark_df.select(
         "user_id", "session_id",
         F.unix_micros("session_start").alias("start_us"),
         F.unix_micros("session_end").alias("end_us"),
         "n_events")
-    a = _tag(ses, "sessions",
-             F.col("user_id").cast("bigint").alias("i1"),
-             F.col("session_id").cast("bigint").alias("i2"),
-             F.col("start_us").cast("bigint").alias("i3"),
-             F.col("end_us").cast("bigint").alias("i4"),
-             F.col("n_events").cast("bigint").alias("n"),
-             _SNULL().alias("s1"), _SNULL().alias("s2"),
-             _DNULL().alias("d1"))
-    tr = R.event_transitions(ev).spark_df
-    b = _tag(tr, "transitions",
-             _BNULL().alias("i1"), _BNULL().alias("i2"),
-             _BNULL().alias("i3"), _BNULL().alias("i4"),
-             F.col("n").cast("bigint").alias("n"),
-             F.col("from_type").alias("s1"),
-             F.col("to_type").alias("s2"),
-             F.col("prob").cast("double").alias("d1"))
+
+
+def q_s_transitions(spark, sf_dir):
+    """First-order Markov event-transition matrix."""
+    return R.event_transitions(_f(spark, sf_dir, "events")).spark_df
+
+
+def q_s_islands(spark, sf_dir):
+    """Gaps-and-islands interval merge of 6-hour activity windows per
+    user."""
+    ev = _f(spark, sf_dir, "events")
     iv = ev.spark_df.select(
         "user_id", F.col("ts").alias("s"),
         (F.col("ts") + F.expr("INTERVAL 6 HOURS")).alias("e"))
     isl = R.merge_intervals(iv, "user_id", "s", "e").spark_df
-    c = _tag(isl, "islands",
-             F.col("user_id").cast("bigint").alias("i1"),
-             F.col("island_id").cast("bigint").alias("i2"),
-             F.unix_micros("island_start").alias("i3"),
-             F.unix_micros("island_end").alias("i4"),
-             F.col("n_intervals").cast("bigint").alias("n"),
-             _SNULL().alias("s1"), _SNULL().alias("s2"),
-             _DNULL().alias("d1"))
-    tp = R.top_paths(ev, depth=3, k=20).spark_df
-    d = _tag(tp, "paths",
-             _BNULL().alias("i1"), _BNULL().alias("i2"),
-             _BNULL().alias("i3"), _BNULL().alias("i4"),
-             F.col("n_sessions").cast("bigint").alias("n"),
-             F.col("path").alias("s1"), _SNULL().alias("s2"),
-             _DNULL().alias("d1"))
-    return (a.unionByName(b).unionByName(c).unionByName(d))
+    return _with_micros(isl, start_us="island_start",
+                        end_us="island_end")
+
+
+def q_s_top_paths(spark, sf_dir):
+    """Top-20 session-opening paths (journey mining over the same
+    session assignment)."""
+    return R.top_paths(_f(spark, sf_dir, "events"), depth=3,
+                       k=20).spark_df
 
 
 def q_x_chunk_documents(spark, sf_dir):
@@ -1517,7 +1188,7 @@ def q_x_repetition_stats(spark, sf_dir):
     return TS.repetition_stats(docs).spark_df
 
 
-def q_x_dedup_clusters(spark, sf_dir):
+def _x_dedup_clusters_parts(spark, sf_dir):
     """Graph analytics over the within-lang n-gram-Jaccard pair graph:
     connected components (iterative min-label propagation,
     dedup.duplicate_clusters; recursive-CTE oracle) + integer
@@ -1532,41 +1203,14 @@ def q_x_dedup_clusters(spark, sf_dir):
         .spark_df.localCheckpoint(eager=True)
     # the four graph parts are independent once the pair substrate is
     # materialized; cc and bfs iterate with driver-side convergence
-    # checks (a job per round), so running the four builders on a small
-    # thread pool overlaps those sequential rounds (guide §2.6 — the
-    # scheduler back-fills idle cores with the other parts' jobs)
-    from concurrent.futures import ThreadPoolExecutor
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        f_cc = pool.submit(lambda: X.duplicate_clusters(pairs).spark_df)
-        f_pr = pool.submit(lambda: G.pagerank(pairs, n_iter=3).spark_df)
-        f_tg = pool.submit(lambda: G.triangle_counts(pairs).spark_df)
-        f_bf = pool.submit(
-            lambda: G.bfs_distances(pairs, max_hops=3).spark_df)
-        cc, pr, tg, bf = (f_cc.result(), f_pr.result(),
-                          f_tg.result(), f_bf.result())
-    a = _tag(cc, "cc",
-             F.col("node").cast("bigint").alias("node"),
-             F.col("component").cast("bigint").alias("i1"),
-             F.col("is_canonical").alias("flag"),
-             _DNULL().alias("d1"))
-    b = _tag(pr, "pagerank",
-             F.col("node").cast("bigint").alias("node"),
-             F.col("rank").cast("bigint").alias("i1"),
-             F.lit(None).cast("boolean").alias("flag"),
-             F.col("rank_scaled").cast("double").alias("d1"))
-    c = _tag(tg, "triangles",
-             F.col("node").cast("bigint").alias("node"),
-             F.col("triangles").cast("bigint").alias("i1"),
-             F.lit(None).cast("boolean").alias("flag"),
-             F.col("degree").cast("double").alias("d1"))
-    # BFS hop distances from the smallest node (graph.bfs_distances;
+    # checks (a job per round), so their builders share a pool. bfs:
+    # hop distances from the smallest node (graph.bfs_distances;
     # recursive-CTE oracle) — k-hop neighbourhood over the same graph
-    d = _tag(bf, "bfs",
-             F.col("node").cast("bigint").alias("node"),
-             F.col("dist").cast("bigint").alias("i1"),
-             F.lit(None).cast("boolean").alias("flag"),
-             _DNULL().alias("d1"))
-    return a.unionByName(b).unionByName(c).unionByName(d)
+    return _build_on_pool({
+        "cc": lambda: X.duplicate_clusters(pairs).spark_df,
+        "pagerank": lambda: G.pagerank(pairs, n_iter=3).spark_df,
+        "triangles": lambda: G.triangle_counts(pairs).spark_df,
+        "bfs": lambda: G.bfs_distances(pairs, max_hops=3).spark_df})
 
 
 def q_x_hash_sample(spark, sf_dir):
@@ -1704,7 +1348,7 @@ def q_st_holt_only(spark, sf_dir):
                     F.round("forecast", 6).alias("forecast")))
 
 
-def q_st_stateful(spark, sf_dir):
+def _st_stateful_parts(spark, sf_dir):
     """Stateful streaming composite (round 8: +holt): per-user running
     totals AND the streaming Holt twin, each its own REAL
     applyInPandasWithState stream into a memory sink, tag-unioned. The
@@ -1713,24 +1357,8 @@ def q_st_stateful(spark, sf_dir):
     single-micro-batch prefix by construction (pytest pins the
     bit-equality on multi-batch prefixes too)."""
     # the two real streams are independent — overlap their startups
-    # and micro-batches on a 2-thread pool (guide §2.6)
-    from concurrent.futures import ThreadPoolExecutor
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_tot = pool.submit(q_st_totals_only, spark, sf_dir)
-        f_holt = pool.submit(q_st_holt_only, spark, sf_dir)
-        tot, holt = f_tot.result(), f_holt.result()
-    a = _tag(tot, "totals",
-             F.col("user_id").cast("bigint").alias("i1"),
-             F.col("count").cast("bigint").alias("i2"),
-             F.col("total").cast("double").alias("d1"),
-             _DNULL().alias("d2"), _DNULL().alias("d3"))
-    b = _tag(holt, "holt",
-             F.col("user_id").cast("bigint").alias("i1"),
-             F.col("n").cast("bigint").alias("i2"),
-             F.col("level").cast("double").alias("d1"),
-             F.col("trend").cast("double").alias("d2"),
-             F.col("forecast").cast("double").alias("d3"))
-    return a.unionByName(b)
+    # and micro-batches
+    return _build_on_pool(_ST_STATEFUL_STREAMS, spark, sf_dir)
 
 
 def q_st_dedup_only(spark, sf_dir):
@@ -1835,123 +1463,33 @@ def q_st_snapsrc_only(spark, sf_dir):
                  .cast("double").alias("sum_value")))
 
 
-def q_st_dedup(spark, sf_dir):
+def _st_dedup_parts(spark, sf_dir):
     """Streaming dedup over an at-least-once stream: the events file read
     as TWO unioned file-source streams (every record delivered twice),
     watermarked dropDuplicates collapsing them back; the oracle is the
     plain batch aggregate over the single copy."""
     # the five REAL-stream parts are fully independent (distinct
     # sources, sinks, checkpoint/table dirs): start and drain them
-    # from a thread pool so their micro-batches and driver-side
-    # start/stop latencies overlap (guide §2.6) instead of paying five
-    # stream startups back to back. bench's st_windows entry measures
-    # the windowed analytical plans; stream startup latency is
-    # verified here.
-    from concurrent.futures import ThreadPoolExecutor
-    with ThreadPoolExecutor(max_workers=5) as pool:
-        f_a = pool.submit(q_st_dedup_only, spark, sf_dir)
-        f_b = pool.submit(q_st_ss_join, spark, sf_dir)
-        f_c = pool.submit(q_st_static_join, spark, sf_dir)
-        f_d = pool.submit(q_st_snapsink_only, spark, sf_dir)
-        f_e = pool.submit(q_st_snapsrc_only, spark, sf_dir)
-        agg, rb, rc, rd, re_ = (f_a.result(), f_b.result(),
-                                f_c.result(), f_d.result(),
-                                f_e.result())
-    a = _tag(agg, "dedup", F.col("event_type").alias("s1"),
-             _BNULL().alias("i1"),
-             F.col("n").cast("bigint").alias("n"),
-             F.col("sum_value").cast("double").alias("sum_value"))
-    b = _tag(rb, "ss_join",
-             _SNULL().alias("s1"),
-             F.col("user_id").cast("bigint").alias("i1"),
-             F.col("n").cast("bigint").alias("n"),
-             F.col("sum_delta").cast("double").alias("sum_value"))
-    c = _tag(rc, "static_join",
-             F.col("n_name").alias("s1"), _BNULL().alias("i1"),
-             F.col("n").cast("bigint").alias("n"),
-             F.col("sum_value").cast("double").alias("sum_value"))
-    d = _tag(rd, "snapsink",
-             F.col("event_type").alias("s1"), _BNULL().alias("i1"),
-             F.col("n").cast("bigint").alias("n"),
-             F.col("sum_value").cast("double").alias("sum_value"))
-    e = _tag(re_, "snapsrc",
-             F.col("event_type").alias("s1"), _BNULL().alias("i1"),
-             F.col("n").cast("bigint").alias("n"),
-             F.col("sum_value").cast("double").alias("sum_value"))
-    return (a.unionByName(b).unionByName(c).unionByName(d)
-            .unionByName(e))
+    # together so their micro-batches and start/stop latencies overlap
+    # instead of paying five stream startups back to back. bench's
+    # st_windows entry measures the windowed analytical plans; stream
+    # startup latency is verified here.
+    return _build_on_pool(_ST_DEDUP_STREAMS, spark, sf_dir)
 
 
 # ===========================================================================
-# composite queries — the driver's correctness gate checks at most the
-# first 50 registry entries (round 2 stopped at exactly 50), so operator
-# families with compatible result shapes are verified through ONE tagged
-# union / join each: every sub-result carries a `part` tag (or joins on
-# its natural key) and the oracle composes the same sub-oracles with
-# identical casts. The per-operator building-block functions above stay —
-# they are the API surface — and the registry registers the composites.
+# composite part builders — source frames for the tagged-union
+# composites (the part table below the oracles declares their schemas,
+# tags and column maps): a ``q_*`` builder returns one part, a
+# ``*_parts`` builder ``{part tag: DataFrame}`` for parts that share a
+# substrate or a build pool
 # ===========================================================================
 
-# typed NULL literals, built once at import: Column objects are
-# immutable expression wrappers, safe to reuse across plans — the
-# composite builders call these ~100 times per build and each
-# lit+cast pair costs two py4j round trips otherwise
-_NULLS: dict = {}
-
-
-def _tnull(t: str):
-    c = _NULLS.get(t)
-    if c is None:
-        c = _NULLS[t] = F.lit(None).cast(t)
-    return c
-
-
-def _BNULL():
-    return _tnull("bigint")
-
-
-def _SNULL():
-    return _tnull("string")
-
-
-def _DNULL():
-    return _tnull("double")
-
-
-def _tag(df: DataFrame, tag: str, *cols) -> DataFrame:
-    return df.select(F.lit(tag).alias("part"), *cols)
-
-
-def q_r_construct_roundtrips(spark, sf_dir):
-    """R1-R6/R8/R9/R11: constructor sugar (df/make_df/alist/plist/
-    matrix_df/as_array), column get/set, map_columns — one tagged union."""
-    a = _tag(q_r_construct_df(spark, sf_dir), "construct",
-             F.col("r_regionkey").cast("bigint").alias("i1"),
-             _BNULL().alias("i2"), F.col("r_name").alias("s1"))
-    b = _tag(q_r_alist_plist(spark, sf_dir), "alist_plist",
-             F.col("r_regionkey").cast("bigint").alias("i1"),
-             _BNULL().alias("i2"), F.col("r_name").alias("s1"))
-    c = _tag(q_r_matrix_df(spark, sf_dir), "matrix",
-             F.col("n_nationkey").cast("bigint").alias("i1"),
-             F.col("n_regionkey").cast("bigint").alias("i2"),
-             _SNULL().alias("s1"))
-    d = _tag(q_r_column_get_set(spark, sf_dir), "column_get_set",
-             F.col("r_regionkey").cast("bigint").alias("i1"),
-             _BNULL().alias("i2"), F.col("r_name").alias("s1"))
-    e = _tag(q_r_map_columns(spark, sf_dir), "map_columns",
-             F.col("n_nationkey").cast("bigint").alias("i1"),
-             F.col("n_regionkey").cast("bigint").alias("i2"),
-             _SNULL().alias("s1"))
-    # key rename (engine completion): order-preserving projection
+def q_r_rename_columns(spark, sf_dir):
+    """Key rename (engine completion): order-preserving projection."""
     ren = _f(spark, sf_dir, "nation").rename_columns(
         {"n_nationkey": "nation_id", "n_name": "nation_name"})
-    fr = _tag(ren.select(["nation_id", "n_regionkey",
-                          "nation_name"]).spark_df, "rename",
-              F.col("nation_id").cast("bigint").alias("i1"),
-              F.col("n_regionkey").cast("bigint").alias("i2"),
-              F.col("nation_name").alias("s1"))
-    return (a.unionByName(b).unionByName(c).unionByName(d)
-            .unionByName(e).unionByName(fr))
+    return ren.select(["nation_id", "n_regionkey", "nation_name"]).spark_df
 
 
 def q_r_shape_meta(spark, sf_dir):
@@ -2008,7 +1546,7 @@ _PROFILE_COLS = ["o_orderkey", "o_custkey", "o_orderstatus",
 _PROFILE_NUMERIC = {"o_orderkey", "o_custkey", "o_totalprice"}
 
 
-def q_r_summary_all(spark, sf_dir):
+def _r_summary_all_parts(spark, sf_dir):
     """R26-R28: bit summary, exact-quantile summary, frequency summary in
     long form (counts in v_i, statistics in v_d, strings in v_s) + the
     family-split whole-table column profiler (summary.profile_table)
@@ -2027,66 +1565,46 @@ def q_r_summary_all(spark, sf_dir):
         f_sb = pool.submit(flagged.column_summary, "high_disc")
         s, fsum, sb = f_s.result(), f_fq.result(), f_sb.result()
     q = s.quantiles
-    rows = [("quantiles", "n", q.count, None),
-            ("quantiles", "min", None, q.min),
-            ("quantiles", "q25", None, q.q25),
-            ("quantiles", "q50", None, q.q50),
-            ("quantiles", "q75", None, q.q75),
-            ("quantiles", "max", None, q.max)]
-    rows += [("freq", v, c, None) for v, c in fsum.frequencies]
-    rows += [("bits", "length", sb.length, None),
-             ("bits", "ones", sb.count, None)]
-    lit_rows = spark.createDataFrame(
-        [(p, k, vi, vd, None) for (p, k, vi, vd) in rows],
-        "part string, k string, v_i bigint, v_d double, v_s string")
+
+    def kv(rows):
+        return spark.createDataFrame(rows, "k string, v_i bigint, v_d double")
+    out = {"quantiles": kv([("n", q.count, None), ("min", None, q.min),
+                            ("q25", None, q.q25), ("q50", None, q.q50),
+                            ("q75", None, q.q75), ("max", None, q.max)]),
+           "freq": kv([(v, c, None) for v, c in fsum.frequencies]),
+           "bits": kv([("length", sb.length, None),
+                       ("ones", sb.count, None)])}
     from cl_data_frame_spark.summary import equi_width_histogram
-    hist = equi_width_histogram(fr.spark_df, "l_extendedprice",
-                                n_bins=10)
-    h = hist.select(F.lit("hist").alias("part"),
-                    F.col("bin").cast("string").alias("k"),
-                    F.col("n").cast("bigint").alias("v_i"),
-                    F.col("lo").cast("double").alias("v_d"),
-                    _SNULL().alias("v_s"))
+    out["hist"] = equi_width_histogram(fr.spark_df, "l_extendedprice",
+                                       n_bins=10)
     from cl_data_frame_spark.summary import equi_width_histogram2d
-    hist2 = equi_width_histogram2d(fr.spark_df, "l_quantity",
-                                   "l_extendedprice",
-                                   n_bins_x=5, n_bins_y=5)
-    h2 = hist2.select(
-        F.lit("hist2d").alias("part"),
-        F.concat_ws(":", F.col("bin_x").cast("string"),
-                    F.col("bin_y").cast("string")).alias("k"),
-        F.col("n").cast("bigint").alias("v_i"),
-        F.col("lo_x").cast("double").alias("v_d"),
-        _SNULL().alias("v_s"))
+    out["hist2d"] = equi_width_histogram2d(fr.spark_df, "l_quantity",
+                                           "l_extendedprice",
+                                           n_bins_x=5, n_bins_y=5)
     from cl_data_frame_spark.summary import profile_table
     prof = profile_table(_t(spark, sf_dir, "orders"),
                          _PROFILE_COLS).spark_df
 
+    def null(t):
+        return F.lit(None).cast(t)
+
     def _stat(name, v_i=None, v_d=None, v_s=None):
         return F.struct(
             F.concat_ws("|", F.col("column"), F.lit(name)).alias("k"),
-            (v_i if v_i is not None else _BNULL()).alias("v_i"),
-            (v_d if v_d is not None else _DNULL()).alias("v_d"),
-            (v_s if v_s is not None else _SNULL()).alias("v_s"))
+            (v_i if v_i is not None else null("bigint")).alias("v_i"),
+            (v_d if v_d is not None else null("double")).alias("v_d"),
+            (v_s if v_s is not None else null("string")).alias("v_s"))
 
-    p = (prof.select(F.explode(F.array(
+    out["profile"] = prof.select(F.explode(F.array(
              _stat("n_rows", v_i=F.col("n_rows")),
              _stat("n_null", v_i=F.col("n_null")),
              _stat("n_distinct", v_i=F.col("n_distinct")),
              _stat("min", v_s=F.col("min_str")),
              _stat("max", v_s=F.col("max_str")),
-             _stat("mean", v_d=F.col("mean")))).alias("r"))
-         .select(F.lit("profile").alias("part"),
-                 F.col("r.k"), F.col("r.v_i"), F.col("r.v_d"),
-                 F.col("r.v_s")))
+             _stat("mean", v_d=F.col("mean")))).alias("r")).select("r.*")
     from cl_data_frame_spark.operators.stats import benford_digit_test
-    bf = benford_digit_test(_t(spark, sf_dir, "orders"),
-                            "o_totalprice").spark_df
-    bfp = bf.select(F.lit("benford").alias("part"),
-                    F.col("digit").cast("string").alias("k"),
-                    F.col("n_obs").cast("bigint").alias("v_i"),
-                    F.col("chi2_term").cast("double").alias("v_d"),
-                    _SNULL().alias("v_s"))
+    out["benford"] = benford_digit_test(_t(spark, sf_dir, "orders"),
+                                        "o_totalprice").spark_df
     # foreign-key discovery (summary.key_containment): the four real
     # TPC-H FK edges verify as 'fk'; the reverse direction
     # customer->orders is only 'partial' (not every customer ordered)
@@ -2103,85 +1621,15 @@ def q_r_summary_all(spark, sf_dir):
         one = key_containment(_t(spark, sf_dir, ct), cc,
                               _t(spark, sf_dir, pt), pc).spark_df
         fk = one if fk is None else fk.unionByName(one)
-    fkp = fk.select(F.lit("fk").alias("part"),
-                    F.col("pair").alias("k"),
-                    F.col("n_missing").cast("bigint").alias("v_i"),
-                    F.col("containment").cast("double").alias("v_d"),
-                    F.col("verdict").alias("v_s"))
-    return (lit_rows.unionByName(h).unionByName(h2).unionByName(p)
-            .unionByName(bfp).unionByName(fkp))
+    out["fk"] = fk
+    return out
 
 
-def q_r_select_positional(spark, sf_dir):
-    """R10/R12/R14: column selection incl. negative index + positional
-    integer-range row slice over an explicit total order."""
-    a = _tag(q_r_columns_select(spark, sf_dir), "columns_select",
-             F.col("n_regionkey").cast("bigint").alias("i1"),
-             F.col("n_name").alias("s1"), _DNULL().alias("d1"))
-    b = _tag(q_r_slice_positional(spark, sf_dir), "slice_positional",
-             F.col("c_custkey").cast("bigint").alias("i1"),
-             F.col("c_name").alias("s1"),
-             F.col("c_acctbal").cast("double").alias("d1"))
-    return a.unionByName(b)
-
-
-def q_r_map_mutate(spark, sf_dir):
-    """R17/R19-R23: map_rows, map_df (typed multi-out), add/replace
-    (destructive + functional), copy isolation — one tagged union."""
-    a = _tag(q_r_map_rows(spark, sf_dir), "map_rows",
-             F.col("l_orderkey").cast("bigint").alias("i1"),
-             F.col("l_linenumber").cast("bigint").alias("i2"),
-             F.col("revenue").cast("double").alias("d1"))
-    b = _tag(q_r_map_df(spark, sf_dir), "map_df",
-             F.col("p_partkey").cast("bigint").alias("i1"),
-             F.col("size10").cast("bigint").alias("i2"),
-             F.col("big").cast("int").cast("double").alias("d1"))
-    c = _tag(q_r_add_replace(spark, sf_dir), "add_replace",
-             F.col("p_partkey").cast("bigint").alias("i1"),
-             F.col("p_size").cast("bigint").alias("i2"),
-             F.col("margin").cast("double").alias("d1"))
-    d = _tag(q_r_copy_isolation(spark, sf_dir), "copy_isolation",
-             F.col("p_partkey").cast("bigint").alias("i1"),
-             F.col("p_size").cast("bigint").alias("i2"),
-             _DNULL().alias("d1"))
-
-    def _na(tag, qfn):
-        return _tag(qfn(spark, sf_dir), tag,
-                    F.col("l_orderkey").cast("bigint").alias("i1"),
-                    F.col("l_linenumber").cast("bigint").alias("i2"),
-                    F.col("qty").cast("double").alias("d1"))
-    e = _na("na_fill", q_r_na_fill)
-    f_ = _na("na_drop", q_r_na_drop)
-    g = _na("na_replace", q_r_na_replace)
-    return (a.unionByName(b).unionByName(c).unionByName(d)
-            .unionByName(e).unionByName(f_).unionByName(g))
-
-
-def q_s_join_agg(spark, sf_dir):
-    """Joins + aggregation: broadcast dim snowflake and fact-fact shuffle
-    join, each grouped — one tagged union."""
-    a = _tag(q_s_join_broadcast(spark, sf_dir), "broadcast",
-             F.col("r_name").alias("k"),
-             F.col("n_customers").cast("bigint").alias("n"),
-             F.col("total_acctbal").cast("double").alias("v"))
-    b = _tag(q_s_join_fact(spark, sf_dir), "fact",
-             F.col("o_orderpriority").alias("k"),
-             F.col("n_items").cast("bigint").alias("n"),
-             F.col("sum_revenue").cast("double").alias("v"))
-    return a.unionByName(b)
-
-
-def q_s_join_semi_anti(spark, sf_dir):
-    """Semi + anti joins (key-only probe side) + Bloom-filter semi
-    pre-filter (broadcast bitset, scan-side membership test; the
-    per-priority audit counts bloom-passing vs exact-semi rows, so the
-    false-positive overhead is part of the checked result)."""
-    a = _tag(q_s_join_semi(spark, sf_dir), "semi",
-             F.col("c_custkey").cast("bigint").alias("i1"),
-             F.col("c_name").alias("s1"), _BNULL().alias("i2"))
-    b = _tag(q_s_join_anti(spark, sf_dir), "anti",
-             F.col("c_custkey").cast("bigint").alias("i1"),
-             F.col("c_mktsegment").alias("s1"), _BNULL().alias("i2"))
+def q_s_bloom_semi(spark, sf_dir):
+    """Bloom-filter semi pre-filter (broadcast bitset, scan-side
+    membership test); the per-priority audit counts bloom-passing vs
+    exact-semi rows, so the false-positive overhead is part of the
+    checked result."""
     orders = _t(spark, sf_dir, "orders")
     rich = _t(spark, sf_dir, "customer").filter(
         F.col("c_acctbal") > 9000).select("c_custkey")
@@ -2194,39 +1642,19 @@ def q_s_join_semi_anti(spark, sf_dir):
              .join(exact.groupBy("o_orderpriority")
                    .agg(F.count(F.lit(1)).alias("n_exact")),
                    on="o_orderpriority"))
-    c = _tag(audit, "bloom",
-             F.col("n_bloom").cast("bigint").alias("i1"),
-             F.col("o_orderpriority").alias("s1"),
-             F.col("n_exact").cast("bigint").alias("i2"))
-    return a.unionByName(b).unionByName(c)
+    return audit
 
 
-def q_s_group_sets(spark, sf_dir):
-    """Grouping sets: ROLLUP and CUBE in one tagged union (NULL grouping
-    keys are the semantics, not the harmonization)."""
-    a = _tag(q_s_group_rollup(spark, sf_dir), "rollup",
-             F.col("l_returnflag").alias("k1"),
-             F.col("l_linestatus").alias("k2"),
-             F.col("sum_qty").cast("double").alias("agg"),
-             F.col("n").cast("bigint").alias("n"))
-    b = _tag(q_s_group_cube(spark, sf_dir), "cube",
-             F.col("o_orderstatus").alias("k1"),
-             F.col("o_orderpriority").alias("k2"),
-             _DNULL().alias("agg"), F.col("n").cast("bigint").alias("n"))
-    # explicit GROUPING SETS (the general form rollup/cube abbreviate)
-    # with grouping_id disambiguating NULL keys from superaggregates
+def q_s_grouping_sets(spark, sf_dir):
+    """Explicit GROUPING SETS (the general form rollup/cube abbreviate)
+    with grouping_id disambiguating NULL keys from superaggregates."""
     li = _f(spark, sf_dir, "lineitem")
     gs = R.group_agg(li, ["l_returnflag", "l_linestatus"], {
         "n": F.count(F.lit(1)),
         "gid": F.grouping_id(),
     }, kind="grouping_sets",
         sets=[["l_returnflag", "l_linestatus"], ["l_linestatus"], []])
-    c = _tag(gs.spark_df, "gsets",
-             F.col("l_returnflag").alias("k1"),
-             F.col("l_linestatus").alias("k2"),
-             F.col("gid").cast("double").alias("agg"),
-             F.col("n").cast("bigint").alias("n"))
-    return a.unionByName(b).unionByName(c)
+    return gs.spark_df
 
 
 def q_s_window_running_lag(spark, sf_dir):
@@ -2247,57 +1675,6 @@ def q_s_window_running_lag(spark, sf_dir):
     return out.spark_df.select("o_custkey", "o_orderkey", "running_total",
                                "prev_price", "next_status", "pct_rank",
                                "cume", "quartile")
-
-
-def q_s_set_ops(spark, sf_dir):
-    """Set operations: EXCEPT, INTERSECT+UNION ALL, DISTINCT."""
-    a = _tag(q_s_set_except(spark, sf_dir), "except",
-             F.col("custkey").cast("bigint").alias("i1"),
-             _SNULL().alias("s1"), _SNULL().alias("s2"))
-    b = _tag(q_s_set_intersect_union(spark, sf_dir), "intersect_union",
-             F.col("custkey").cast("bigint").alias("i1"),
-             _SNULL().alias("s1"), _SNULL().alias("s2"))
-    c = _tag(q_s_distinct(spark, sf_dir), "distinct",
-             _BNULL().alias("i1"), F.col("l_returnflag").alias("s1"),
-             F.col("l_linestatus").alias("s2"))
-    return a.unionByName(b).unionByName(c)
-
-
-def q_s_asof(spark, sf_dir):
-    """As-of joins: keyed (union + last-over-window per key) and unkeyed
-    (range-partitioned merge with carry fix-up)."""
-    a = _tag(q_s_asof_join(spark, sf_dir), "keyed",
-             F.col("event_id").cast("bigint").alias("event_id"),
-             F.col("user_id").cast("bigint").alias("user_id"),
-             F.col("ts_us").cast("bigint").alias("ts_us"),
-             F.col("r_last_orderkey").cast("bigint").alias("r_last_orderkey"))
-    b = _tag(q_s_asof_join_unkeyed(spark, sf_dir), "unkeyed",
-             F.col("event_id").cast("bigint").alias("event_id"),
-             _BNULL().alias("user_id"),
-             F.col("ts_us").cast("bigint").alias("ts_us"),
-             F.col("r_last_orderkey").cast("bigint").alias("r_last_orderkey"))
-    c = _tag(q_s_asof_nearest(spark, sf_dir), "nearest",
-             F.col("event_id").cast("bigint").alias("event_id"),
-             F.col("user_id").cast("bigint").alias("user_id"),
-             F.col("ts_us").cast("bigint").alias("ts_us"),
-             F.col("r_last_orderkey").cast("bigint").alias("r_last_orderkey"))
-    return a.unionByName(b).unionByName(c)
-
-
-def q_s_range_joins(spark, sf_dir):
-    """Range joins: broadcast interval probe and the two-large-sides
-    bucket-grid path — identical results, different physical plans."""
-    a = _tag(q_s_range_join(spark, sf_dir), "broadcast",
-             F.col("band").alias("band"), F.col("n").cast("bigint").alias("n"),
-             F.col("sum_qty").cast("double").alias("sum_qty"))
-    b = _tag(q_s_bucketed_range_join(spark, sf_dir), "bucketed",
-             F.col("band").alias("band"), F.col("n").cast("bigint").alias("n"),
-             F.col("sum_qty").cast("double").alias("sum_qty"))
-    c = _tag(q_s_interval_overlap(spark, sf_dir), "overlap",
-             F.col("lid").cast("string").alias("band"),
-             F.col("n_overlaps").cast("bigint").alias("n"),
-             F.col("sum_rid").cast("double").alias("sum_qty"))
-    return a.unionByName(b).unionByName(c)
 
 
 def q_s_grouped_map(spark, sf_dir):
@@ -2325,60 +1702,19 @@ def q_s_grouped_map(spark, sf_dir):
     return out.spark_df
 
 
-def q_s_skew_udaf(spark, sf_dir):
-    """Skew-salted join + grouped pandas UDAF + grouped-map transform +
-    the key-skew diagnostics report (per-key count Gini/CV/max-share —
-    the decide-before-you-shuffle companion to salted_join)."""
-    a = _tag(q_s_salted_join(spark, sf_dir), "salted",
-             F.col("o_orderstatus").alias("k"),
-             F.col("n").cast("bigint").alias("n"),
-             F.col("sum_qty").cast("double").alias("v"),
-             _DNULL().alias("v2"), _DNULL().alias("v3"))
-    b = _tag(q_s_udaf_wavg(spark, sf_dir), "udaf",
-             F.col("l_returnflag").alias("k"), _BNULL().alias("n"),
-             F.col("wavg_price").cast("double").alias("v"),
-             _DNULL().alias("v2"), _DNULL().alias("v3"))
-    c = _tag(q_s_grouped_map(spark, sf_dir), "grouped_map",
-             F.col("l_returnflag").alias("k"),
-             F.col("n").cast("bigint").alias("n"),
-             F.col("median_price").cast("double").alias("v"),
-             F.col("min_price").cast("double").alias("v2"),
-             F.col("max_price").cast("double").alias("v3"))
-    sk = STAT.key_skew_report(_t(spark, sf_dir, "orders"),
-                              "o_custkey").spark_df
-    d = _tag(sk, "skewreport",
-             F.lit("o_custkey").alias("k"),
-             F.col("n_keys").cast("bigint").alias("n"),
-             F.col("max_frac").cast("double").alias("v"),
-             F.col("gini").cast("double").alias("v2"),
-             F.col("cv").cast("double").alias("v3"))
-    return a.unionByName(b).unionByName(c).unionByName(d)
+def q_s_key_skew_report(spark, sf_dir):
+    """Key-skew diagnostics (per-key count Gini/CV/max-share) — the
+    decide-before-you-shuffle companion to salted_join."""
+    return STAT.key_skew_report(_t(spark, sf_dir, "orders"),
+                                "o_custkey").spark_df
 
 
-def q_s_functions(spark, sf_dir):
-    """Scalar + collection function surface in one tagged union."""
-    a = _tag(q_s_scalar_functions(spark, sf_dir), "scalar",
-             F.col("o_orderkey").cast("bigint").alias("i1"),
-             F.col("prio_name").alias("s1"),
-             F.col("yr").cast("bigint").alias("i2"),
-             F.col("mo").cast("bigint").alias("i3"),
-             F.col("sqrt_price").cast("double").alias("d1"),
-             F.col("tag").alias("s2"),
-             F.col("prio_len").cast("bigint").alias("i4"),
-             F.col("edit_dist").cast("bigint").alias("i5"))
-    b = _tag(q_s_collection_functions(spark, sf_dir), "collection",
-             F.col("n_nationkey").cast("bigint").alias("i1"),
-             F.col("json_name").alias("s1"),
-             F.col("arr_sum").cast("bigint").alias("i2"),
-             F.col("arr_max").cast("bigint").alias("i3"),
-             _DNULL().alias("d1"), F.col("map_val").alias("s2"),
-             F.col("n_distinct").cast("bigint").alias("i4"),
-             _BNULL().alias("i5"))
-    # feature scaling (round 9): the three standard scalers applied
-    # per returnflag; the checked values are boundary scalings whose
-    # per-row double arithmetic the oracle mirrors exactly (max of the
-    # rounded per-row value == rounded value at the group max, since
-    # every scaler is monotone)
+def q_s_scaling(spark, sf_dir):
+    """Feature scaling (round 9): the three standard scalers applied
+    per returnflag, long (metric, val) form; the checked values are
+    boundary scalings whose per-row double arithmetic the oracle
+    mirrors exactly (max of the rounded per-row value == rounded value
+    at the group max, since every scaler is monotone)."""
     li = _t(spark, sf_dir, "lineitem").select("l_returnflag",
                                               "l_extendedprice")
     zs = STAT.standardize(li, "l_extendedprice",
@@ -2404,17 +1740,10 @@ def q_s_functions(spark, sf_dir):
                      F.col(name).alias("val"))
             for name in ("z_hi", "mm_lo", "mm_hi", "rb_hi")]))
         .alias("m")).select("l_returnflag", "n", "m.metric", "m.val")
-    c = _tag(long, "scaling",
-             F.col("n").cast("bigint").alias("i1"),
-             F.col("l_returnflag").alias("s1"),
-             _BNULL().alias("i2"), _BNULL().alias("i3"),
-             F.col("val").cast("double").alias("d1"),
-             F.col("metric").alias("s2"),
-             _BNULL().alias("i4"), _BNULL().alias("i5"))
-    return a.unionByName(b).unionByName(c)
+    return long
 
 
-def q_s_source_roundtrip(spark, sf_dir):
+def _s_source_roundtrip_parts(spark, sf_dir):
     """Sources/sinks: parquet sink -> scan round-trip of a filtered
     projection through the sources module (predicate pushed down to the
     original scan, pruned schema on the round-trip file), then an
@@ -2433,10 +1762,6 @@ def q_s_source_roundtrip(spark, sf_dir):
     agg = (back.spark_df.groupBy("l_returnflag")
            .agg(F.count(F.lit(1)).alias("n"),
                 _dec_sum("l_quantity").alias("sum_qty")))
-    a = _tag(agg, "roundtrip", F.col("l_returnflag").alias("s1"),
-             F.col("n").cast("bigint").alias("i1"),
-             F.col("sum_qty").cast("double").alias("d1"),
-             _BNULL().alias("i2"))
     # z-order layout: the Morton value that drives write_parquet_zordered
     # (file-level multi-dim pruning), checked bit-for-bit by the oracle
     from cl_data_frame_spark.partitioning import zorder_value
@@ -2447,9 +1772,6 @@ def q_s_source_roundtrip(spark, sf_dir):
                  zorder_value([F.col("l_partkey") % 256,
                                F.col("l_suppkey") % 256], bits=8)
                  .alias("z")))
-    b = _tag(z, "zorder", _SNULL().alias("s1"),
-             F.col("key").cast("bigint").alias("i1"),
-             _DNULL().alias("d1"), F.col("z").cast("bigint").alias("i2"))
     # order-independent integrity checksum of the ROUND-TRIPPED copy —
     # hash-matching the oracle (which reads the original table) proves
     # the sink->scan path byte-preserved the data
@@ -2458,10 +1780,6 @@ def q_s_source_roundtrip(spark, sf_dir):
         F.col("l_quantity").cast("decimal(18,2)").cast("string")
         .alias("qty"), "l_returnflag")
     cs = R.table_checksum(cs_in).spark_df
-    c = _tag(cs, "checksum", _SNULL().alias("s1"),
-             F.col("n_rows").cast("bigint").alias("i1"),
-             F.col("sum_h").cast("double").alias("d1"),
-             F.col("xor_h").cast("bigint").alias("i2"))
     # widen (round 13): METADATA-ONLY type widening — write a narrow
     # slice (int key, decimal(10,2) qty), widen to bigint /
     # decimal(20,4) without touching a data file, and aggregate
@@ -2484,52 +1802,22 @@ def q_s_source_roundtrip(spark, sf_dir):
             .agg(F.count(F.lit(1)).alias("n"),
                  F.sum("qty").alias("s"),
                  F.min("k").alias("mk")))
-    d = _tag(wagg, "widen", F.col("l_returnflag").alias("s1"),
-             F.col("n").cast("bigint").alias("i1"),
-             F.col("s").cast("double").alias("d1"),
-             F.col("mk").cast("bigint").alias("i2"))
-    return a.unionByName(b).unionByName(c).unionByName(d)
+    return {"roundtrip": agg, "zorder": z, "checksum": cs, "widen": wagg}
 
 
-def q_x_dedup(spark, sf_dir):
-    """Exact dedup (distinct on subset) + normalized-text dedup with a
-    deterministic min-id winner + sub-document duplicated-span removal
-    + keep-best dedup (score-ranked winner over a synthesized
-    corpus-with-variants — sf0.01 documents have no natural normalized
-    dups, so the part constructs them)."""
-    a = _tag(q_x_dedup_exact(spark, sf_dir), "exact",
-             _BNULL().alias("doc_id"), F.col("lang").alias("lang"),
-             F.col("source").alias("source"),
-             _BNULL().alias("i1"), _BNULL().alias("i2"),
-             _BNULL().alias("i3"), _DNULL().alias("d1"),
-             _SNULL().alias("s1"))
-    b = _tag(q_x_dedup_normalized(spark, sf_dir), "normalized",
-             F.col("doc_id").cast("bigint").alias("doc_id"),
-             F.col("lang").alias("lang"), F.col("source").alias("source"),
-             _BNULL().alias("i1"), _BNULL().alias("i2"),
-             _BNULL().alias("i3"), _DNULL().alias("d1"),
-             _SNULL().alias("s1"))
-    c = _tag(q_x_dedup_spans(spark, sf_dir), "spans",
-             F.col("doc_id").cast("bigint").alias("doc_id"),
-             _SNULL().alias("lang"), _SNULL().alias("source"),
-             F.col("n_tokens").cast("bigint").alias("i1"),
-             F.col("dup_spans").cast("bigint").alias("i2"),
-             F.col("dup_tokens").cast("bigint").alias("i3"),
-             F.col("dup_frac").cast("double").alias("d1"),
-             F.col("clean_md5").alias("s1"))
-    selfrep = X.self_repetition_removal(
-        _f(spark, sf_dir, "documents"), n=4).spark_df
-    d = _tag(selfrep, "selfspans",
-             F.col("doc_id").cast("bigint").alias("doc_id"),
-             _SNULL().alias("lang"), _SNULL().alias("source"),
-             F.col("n_tokens").cast("bigint").alias("i1"),
-             F.col("rep_spans").cast("bigint").alias("i2"),
-             F.col("rep_tokens").cast("bigint").alias("i3"),
-             F.col("rep_frac").cast("double").alias("d1"),
-             F.md5("clean_text").alias("s1"))
-    # keep-best dedup over a corpus with REAL normalized duplicates:
-    # each doc gets an upper-cased double-spaced variant with a higher
-    # quality score — the winner set must be exactly the variants
+def q_x_self_repetition(spark, sf_dir):
+    """Within-document repeated-span removal (n=4) with the cleaned
+    text's md5."""
+    return X.self_repetition_removal(
+        _f(spark, sf_dir, "documents"), n=4).spark_df.withColumn(
+            "clean_md5", F.md5("clean_text"))
+
+
+def q_x_dedup_keep_best(spark, sf_dir):
+    """Keep-best dedup over a corpus with REAL normalized duplicates:
+    each doc gets an upper-cased double-spaced variant with a higher
+    quality score — the winner set must be exactly the variants
+    (sf0.01 documents have no natural normalized dups)."""
     docs = _t(spark, sf_dir, "documents")
     variant = docs.select(
         (F.col("doc_id") + 10000).alias("doc_id"),
@@ -2540,15 +1828,7 @@ def q_x_dedup(spark, sf_dir):
     kb = X.dedup_keep_best(
         docs.select("doc_id", "text", "lang", "source", "n_chars")
         .unionByName(variant), score_col="n_chars").spark_df
-    e = _tag(kb.select("doc_id", "lang", "source"), "keepbest",
-             F.col("doc_id").cast("bigint").alias("doc_id"),
-             F.col("lang").alias("lang"),
-             F.col("source").alias("source"),
-             _BNULL().alias("i1"), _BNULL().alias("i2"),
-             _BNULL().alias("i3"), _DNULL().alias("d1"),
-             _SNULL().alias("s1"))
-    return (a.unionByName(b).unionByName(c).unionByName(d)
-            .unionByName(e))
+    return kb.select("doc_id", "lang", "source")
 
 
 def q_x_edit_distance(spark, sf_dir):
@@ -2560,7 +1840,7 @@ def q_x_edit_distance(spark, sf_dir):
                                 max_dist=1).spark_df
 
 
-def q_x_ngram_jaccard_all(spark, sf_dir):
+def _x_ngram_jaccard_parts(spark, sf_dir):
     """String-similarity joins: lang-blocked quadratic and global
     prefix-filtered PPJoin n-gram Jaccard pairs + edit-distance fuzzy
     join (length-band blocked, exact levenshtein verify) + directed
@@ -2622,10 +1902,6 @@ def q_x_ngram_jaccard_all(spark, sf_dir):
     glob = (X.ngram_jaccard_pairs_prefix(
         docs0, n=3, threshold=0.5, profile=prof).spark_df
         .localCheckpoint(eager=False))       # tiny verified pair set
-    b = _tag(glob, "global",
-             F.col("id_a").cast("bigint").alias("id_a"),
-             F.col("id_b").cast("bigint").alias("id_b"),
-             F.col("jaccard").cast("double").alias("jaccard"))
     langs = prof.select("doc_id", "lang")
     blocked = (glob
                .join(langs.select(F.col("doc_id").alias("id_a"),
@@ -2636,38 +1912,19 @@ def q_x_ngram_jaccard_all(spark, sf_dir):
                      on="id_b")
                .filter(F.col("__la__") == F.col("__lb__"))
                .select("id_a", "id_b", "jaccard"))
-    a = _tag(blocked, "blocked",
-             F.col("id_a").cast("bigint").alias("id_a"),
-             F.col("id_b").cast("bigint").alias("id_b"),
-             F.col("jaccard").cast("double").alias("jaccard"))
-    c = _tag(f_ed.result(), "editdist",
-             F.col("id_a").cast("bigint").alias("id_a"),
-             F.col("id_b").cast("bigint").alias("id_b"),
-             F.col("dist").cast("double").alias("jaccard"))
-    # SimHash with the portable md5 hash family — the ONE hash-family
+    # simhash: the portable md5 hash family — the ONE hash-family
     # near-dup probe that IS SQL-expressible, so it gets a full oracle
     # (the xxhash64 production variant is pytest-covered,
-    # tests/test_dedup.py::test_simhash_identical_docs_pair)
-    d = _tag(f_sh.result(), "simhash",
-             F.col("id_a").cast("bigint").alias("id_a"),
-             F.col("id_b").cast("bigint").alias("id_b"),
-             F.col("hamming").cast("double").alias("jaccard"))
-    e = _tag(f_cp.result(), "containment",
-             F.col("id_a").cast("bigint").alias("id_a"),
-             F.col("id_b").cast("bigint").alias("id_b"),
-             F.col("containment").cast("double").alias("jaccard"))
-    # Fellegi-Sunter probabilistic record linkage: customer
+    # tests/test_dedup.py::test_simhash_identical_docs_pair).
+    # linkage: Fellegi-Sunter probabilistic record linkage — customer
     # self-linkage blocked by nation, three agreement fields (market
     # segment, balance sign, name last-4); only pairs whose summed
     # log2 weight clears the threshold are link candidates
-    fs = f_fs.result()
+    out = {"blocked": blocked, "global": glob,
+           "editdist": f_ed.result(), "simhash": f_sh.result(),
+           "containment": f_cp.result(), "linkage": f_fs.result()}
     pool.shutdown()
-    g = _tag(fs, "linkage",
-             F.col("id_a").cast("bigint").alias("id_a"),
-             F.col("id_b").cast("bigint").alias("id_b"),
-             F.col("weight").cast("double").alias("jaccard"))
-    return (a.unionByName(b).unionByName(c).unionByName(d)
-            .unionByName(e).unionByName(g))
+    return out
 
 
 #: (m, u) per linkage field — shared between the Spark entry and the
@@ -2689,7 +1946,7 @@ def q_x_ivf_topk(spark, sf_dir):
                                nprobe=3).spark_df
 
 
-def q_x_cosine_search(spark, sf_dir):
+def _x_cosine_search_parts(spark, sf_dir):
     """Similarity search: brute-force cosine top-k (zero-shuffle
     TakeOrdered) + blocked top-k similarity join + IVF-probed ANN +
     hyperplane-LSH multi-probe ANN (the LCG planes are materialized as
@@ -2697,78 +1954,33 @@ def q_x_cosine_search(spark, sf_dir):
     hash-checked, not rows-only)."""
     # the five search parts are independent; ivf_topk's centroid
     # collects and recall's double join machinery dominate the build,
-    # so construct them on a pool (§2.6)
-    def _build_recall():
-        # recall@5 of the multi-probe LSH JOIN against exact ground
-        # truth (similarity.ann_join_topk_lsh + ann_recall_at_k): 20
-        # queries, 6 planes, hamming<=2 multi-probe — the evaluation
-        # an approximate index must pass before it replaces the
-        # brute-force path
-        emb = _f(spark, sf_dir, "embeddings")
-        qf = SparkFrame(emb.spark_df.filter(F.col("vec_id") < 20))
-        truth = SIM.similarity_join_topk(qf, emb, k=5)
-        approx = SIM.ann_join_topk_lsh(qf, emb, k=5, n_planes=6,
-                                       max_hamming=2)
-        return SIM.ann_recall_at_k(truth, approx, k=5).spark_df
-
-    from concurrent.futures import ThreadPoolExecutor
-    with ThreadPoolExecutor(max_workers=5) as pool:
-        f_a = pool.submit(q_x_cosine_topk, spark, sf_dir)
-        f_b = pool.submit(q_x_similarity_join_topk, spark, sf_dir)
-        f_c = pool.submit(q_x_ivf_topk, spark, sf_dir)
-        f_d = pool.submit(q_x_ann_lsh, spark, sf_dir)
-        f_e = pool.submit(_build_recall)
-        ra, rb, rc, rd, rec = (f_a.result(), f_b.result(),
-                               f_c.result(), f_d.result(),
-                               f_e.result())
-    a = _tag(ra, "topk",
-             _BNULL().alias("id_l"),
-             F.col("vec_id").cast("bigint").alias("id_r"),
-             F.col("cosine").cast("double").alias("cosine"),
-             _BNULL().alias("rank"))
-    b = _tag(rb, "join_topk",
-             F.col("id_l").cast("bigint").alias("id_l"),
-             F.col("id_r").cast("bigint").alias("id_r"),
-             F.col("cosine").cast("double").alias("cosine"),
-             F.col("rank").cast("bigint").alias("rank"))
-    c = _tag(rc, "ivf_topk",
-             F.col("centroid_id").cast("bigint").alias("id_l"),
-             F.col("vec_id").cast("bigint").alias("id_r"),
-             F.col("cosine").cast("double").alias("cosine"),
-             _BNULL().alias("rank"))
-    d = _tag(rd, "ann_lsh",
-             _BNULL().alias("id_l"),
-             F.col("vec_id").cast("bigint").alias("id_r"),
-             F.col("cosine").cast("double").alias("cosine"),
-             _BNULL().alias("rank"))
-    e = _tag(rec, "recall",
-             F.col("id_l").cast("bigint").alias("id_l"),
-             F.col("n_hit").cast("bigint").alias("id_r"),
-             F.col("recall").cast("double").alias("cosine"),
-             F.col("n_truth").cast("bigint").alias("rank"))
-    return (a.unionByName(b).unionByName(c).unionByName(d)
-            .unionByName(e))
+    # so construct them on a pool
+    return _build_on_pool({
+        "topk": q_x_cosine_topk, "join_topk": q_x_similarity_join_topk,
+        "ivf_topk": q_x_ivf_topk, "ann_lsh": q_x_ann_lsh,
+        "recall": q_x_ann_recall}, spark, sf_dir)
 
 
-def q_x_cluster_assign(spark, sf_dir):
+def q_x_ann_recall(spark, sf_dir):
+    """Recall@5 of the multi-probe LSH JOIN against exact ground truth
+    (similarity.ann_join_topk_lsh + ann_recall_at_k): 20 queries, 6
+    planes, hamming<=2 multi-probe — the evaluation an approximate
+    index must pass before it replaces the brute-force path."""
+    emb = _f(spark, sf_dir, "embeddings")
+    qf = SparkFrame(emb.spark_df.filter(F.col("vec_id") < 20))
+    truth = SIM.similarity_join_topk(qf, emb, k=5)
+    approx = SIM.ann_join_topk_lsh(qf, emb, k=5, n_planes=6,
+                                   max_hamming=2)
+    return SIM.ann_recall_at_k(truth, approx, k=5).spark_df
+
+
+def _x_cluster_assign_parts(spark, sf_dir):
     """IVF centroid routing + iterative k-means assignment (3 Lloyd
     rounds; the oracle unrolls the same rounds in SQL). Both parts are
     driver-coordinated (centroid collects; per-round Lloyd jobs), so
     they run on a 2-thread pool and their small jobs overlap (§2.6)."""
-    from concurrent.futures import ThreadPoolExecutor
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_ivf = pool.submit(q_x_ivf_assign, spark, sf_dir)
-        f_km = pool.submit(q_x_kmeans_assign, spark, sf_dir)
-        ivf_df, km_df = f_ivf.result(), f_km.result()
-    a = _tag(ivf_df, "ivf",
-             F.col("vec_id").cast("bigint").alias("vec_id"),
-             F.col("centroid_id").cast("bigint").alias("centroid_id"),
-             F.col("centroid_sim").cast("double").alias("centroid_sim"))
-    b = _tag(km_df, "kmeans",
-             F.col("vec_id").cast("bigint").alias("vec_id"),
-             F.col("centroid_id").cast("bigint").alias("centroid_id"),
-             F.col("centroid_sim").cast("double").alias("centroid_sim"))
-    return a.unionByName(b)
+    return _build_on_pool({"ivf": q_x_ivf_assign,
+                          "kmeans": q_x_kmeans_assign}, spark, sf_dir)
 
 
 def q_x_text_stats(spark, sf_dir):
@@ -2889,175 +2101,56 @@ def q_x_text_stats(spark, sf_dir):
                 F.col("flesch").cast("double").alias("flesch")))
 
 
-def q_x_term_weights(spark, sf_dir):
-    """TF-IDF top-k terms + CountVectorizer long form + top-50 PMI
-    collocations (corpus-level phrase mining, textstats.collocations)."""
-    a = _tag(q_x_tfidf_topk(spark, sf_dir), "tfidf",
-             F.col("doc_id").cast("bigint").alias("doc_id"),
-             F.col("term").alias("term"),
-             F.col("tf").cast("bigint").alias("tf"),
-             F.col("tfidf").cast("double").alias("val_d"),
-             F.col("rank").cast("bigint").alias("val_i"))
-    b = _tag(q_x_count_vectorize(spark, sf_dir), "count_vectorize",
-             F.col("doc_id").cast("bigint").alias("doc_id"),
-             F.col("term").alias("term"),
-             F.col("tf").cast("bigint").alias("tf"),
-             _DNULL().alias("val_d"),
-             F.col("idx").cast("bigint").alias("val_i"))
-    co = TS.collocations(_t(spark, sf_dir, "documents"),
-                         min_count=5, top_k=50).spark_df
-    c = _tag(co, "colloc",
-             _BNULL().alias("doc_id"),
-             F.concat_ws(" ", "gram_a", "gram_b").alias("term"),
-             F.col("n_pair").cast("bigint").alias("tf"),
-             F.col("pmi").cast("double").alias("val_d"),
-             _BNULL().alias("val_i"))
-    # TF-IDF cosine near-topic pairs on the 'de' block: inverted-index
-    # join with the max_df_frac stop-term knob (weighted sibling of
-    # the Jaccard pair family)
+def q_x_collocations(spark, sf_dir):
+    """Top-50 PMI collocations (corpus-level phrase mining)."""
+    return TS.collocations(_t(spark, sf_dir, "documents"),
+                           min_count=5, top_k=50).spark_df
+
+
+def q_x_tfidf_cosine(spark, sf_dir):
+    """TF-IDF cosine near-topic pairs on the 'de' block: inverted-index
+    join with the max_df_frac stop-term knob (weighted sibling of the
+    Jaccard pair family)."""
     de = _t(spark, sf_dir, "documents").filter(F.col("lang") == "de")
-    tcp = TS.tfidf_cosine_pairs(SparkFrame(de), threshold=0.8,
-                                max_df_frac=0.3).spark_df
-    d = _tag(tcp, "tfcos",
-             F.col("id_a").cast("bigint").alias("doc_id"),
-             _SNULL().alias("term"), _BNULL().alias("tf"),
-             F.col("cosine").cast("double").alias("val_d"),
-             F.col("id_b").cast("bigint").alias("val_i"))
-    return a.unionByName(b).unionByName(c).unionByName(d)
+    return TS.tfidf_cosine_pairs(SparkFrame(de), threshold=0.8,
+                                 max_df_frac=0.3).spark_df
 
 
-def q_x_hash_sampling(spark, sf_dir):
-    """Deterministic md5-bucket sampling: stratified sample + train/val/
-    test split summary + weighted/mixture/per-group variants +
-    contrastive negative sampling (k pseudo-random corpus negatives per
-    doc via an equi-join, no cross join)."""
-    a = _tag(q_x_hash_sample(spark, sf_dir), "sample",
-             F.col("doc_id").cast("bigint").alias("doc_id"),
-             F.col("lang").alias("lang"), _SNULL().alias("split"),
-             _BNULL().alias("n"), _BNULL().alias("i2"))
-    b = _tag(q_x_hash_split(spark, sf_dir), "split",
-             _BNULL().alias("doc_id"), F.col("lang").alias("lang"),
-             F.col("split").alias("split"),
-             F.col("n").cast("bigint").alias("n"), _BNULL().alias("i2"))
-    # weighted sampling without replacement: longer docs win
-    # proportionally more often, same sample on every engine
+def q_x_weighted_sample(spark, sf_dir):
+    """Weighted sampling without replacement: longer docs win
+    proportionally more often, same sample on every engine."""
     docs = _t(spark, sf_dir, "documents") \
         .select("doc_id", "lang", (F.col("n_chars") + 1).alias("w"))
-    w = SAMP.weighted_sample(docs, "doc_id", "w", k=100).spark_df
-    c = _tag(w, "weighted",
-             F.col("doc_id").cast("bigint").alias("doc_id"),
-             F.col("lang").alias("lang"), _SNULL().alias("split"),
-             _BNULL().alias("n"), _BNULL().alias("i2"))
-    d = _tag(q_x_mixture_sample(spark, sf_dir), "mix",
-             _BNULL().alias("doc_id"), F.col("lang").alias("lang"),
-             _SNULL().alias("split"),
-             F.col("n_kept").cast("bigint").alias("n"),
-             F.col("chars_kept").cast("bigint").alias("i2"))
-    # deterministic k-per-group sample: exactly 8 docs per language in a
-    # fixed md5-derived order
-    pg = SAMP.per_group_sample(_t(spark, sf_dir, "documents"),
-                               "doc_id", "lang", k=8).spark_df
-    e = _tag(pg, "pergroup",
-             F.col("doc_id").cast("bigint").alias("doc_id"),
-             F.col("lang").alias("lang"), _SNULL().alias("split"),
-             _BNULL().alias("n"), _BNULL().alias("i2"))
-    ns = SAMP.negative_sample(_t(spark, sf_dir, "documents"),
-                              "doc_id", k=4).spark_df
-    f = _tag(ns, "negatives",
-             F.col("doc_id").cast("bigint").alias("doc_id"),
-             _SNULL().alias("lang"), _SNULL().alias("split"),
-             F.col("j").cast("bigint").alias("n"),
-             F.col("neg_id").cast("bigint").alias("i2"))
-    # deterministic k-fold CV assignment, summarized per (fold, lang)
-    kf = SAMP.kfold_split(_t(spark, sf_dir, "documents"),
-                          "doc_id", k=5)
-    kfs = (kf.groupBy("fold", "lang")
-           .agg(F.count(F.lit(1)).alias("n"),
-                F.sum("doc_id").alias("sum_id")))
-    g = _tag(kfs, "kfold",
-             _BNULL().alias("doc_id"), F.col("lang").alias("lang"),
-             F.col("fold").cast("string").alias("split"),
-             F.col("n").cast("bigint").alias("n"),
-             F.col("sum_id").cast("bigint").alias("i2"))
-    return (a.unionByName(b).unionByName(c).unionByName(d)
-            .unionByName(e).unionByName(f).unionByName(g))
+    return SAMP.weighted_sample(docs, "doc_id", "w", k=100).spark_df
 
 
-def q_x_chunk_pack(spark, sf_dir):
-    """Context-window chunking + sharded contiguous sequence packing."""
-    a = _tag(q_x_chunk_documents(spark, sf_dir), "chunk",
-             F.col("doc_id").cast("bigint").alias("doc_id"),
-             F.col("chunk_id").cast("bigint").alias("i1"),
-             F.col("chunk_text").alias("s1"),
-             F.col("n_tokens").cast("bigint").alias("n_tokens"),
-             _BNULL().alias("i2"))
-    b = _tag(q_x_pack_sequences(spark, sf_dir), "pack",
-             F.col("doc_id").cast("bigint").alias("doc_id"),
-             F.col("shard").cast("bigint").alias("i1"), _SNULL().alias("s1"),
-             F.col("n_tokens").cast("bigint").alias("n_tokens"),
-             F.col("bin_id").cast("bigint").alias("i2"))
-    # sentence-boundary chunking (RAG chunks never cut mid-sentence)
-    cs = TS.chunk_by_sentences(_t(spark, sf_dir, "documents"),
-                               max_tokens=48).spark_df
-    c = _tag(cs, "chunk_sent",
-             F.col("doc_id").cast("bigint").alias("doc_id"),
-             F.col("chunk_id").cast("bigint").alias("i1"),
-             F.col("chunk_text").alias("s1"),
-             F.col("n_tokens").cast("bigint").alias("n_tokens"),
-             F.col("n_sentences").cast("bigint").alias("i2"))
-    return a.unionByName(b).unionByName(c)
+def q_x_per_group_sample(spark, sf_dir):
+    """Deterministic k-per-group sample: exactly 8 docs per language in
+    a fixed md5-derived order."""
+    return SAMP.per_group_sample(_t(spark, sf_dir, "documents"),
+                                 "doc_id", "lang", k=8).spark_df
 
 
-def q_x_media(spark, sf_dir):
-    """Multimodal binary columns: sha2 content dedup + frame-sampling
-    plumbing + REAL audio decode metadata (round 9 late)."""
-    a = _tag(q_x_media_dedup(spark, sf_dir), "dedup",
-             F.col("media_id").cast("bigint").alias("media_id"),
-             F.col("digest").alias("s1"), _BNULL().alias("i1"),
-             _BNULL().alias("i2"), _BNULL().alias("i3"),
-             _BNULL().alias("i4"))
-    b = _tag(q_x_media_frames(spark, sf_dir), "frames",
-             F.col("media_id").cast("bigint").alias("media_id"),
-             _SNULL().alias("s1"),
-             F.col("n_frames").cast("bigint").alias("i1"),
-             _BNULL().alias("i2"), _BNULL().alias("i3"),
-             _BNULL().alias("i4"))
-    c = _tag(q_x_media_audiometa(spark, sf_dir), "audiometa",
-             F.col("media_id").cast("bigint").alias("media_id"),
-             _SNULL().alias("s1"),
-             F.col("sample_rate").cast("bigint").alias("i1"),
-             F.col("duration_ms").cast("bigint").alias("i2"),
-             F.col("n_frames").cast("bigint").alias("i3"),
-             F.col("decoded").cast("bigint").alias("i4"))
-    # gifpix: real GIF LZW decode of solid-color frames — dims are
-    # exact ints, and the mean channel of a SOLID image is exactly
-    # (palette value)/255.0, so round(mean*255) recovers the palette
-    # byte EXACTLY; the oracle states the bytes from the synthesis
-    # arithmetic (ints compare exactly, no float stringification)
-    def pix_tag(df, part):
-        return _tag(df, part,
-                    F.col("media_id").cast("bigint").alias("media_id"),
-                    F.round(F.col("mean_b") * 255, 0).cast("bigint")
-                    .cast("string").alias("s1"),
-                    F.col("width").cast("bigint").alias("i1"),
-                    F.col("height").cast("bigint").alias("i2"),
-                    F.round(F.col("mean_r") * 255, 0).cast("bigint")
-                    .alias("i3"),
-                    F.round(F.col("mean_g") * 255, 0).cast("bigint")
-                    .alias("i4"))
-    d = pix_tag(q_x_media_gifpix(spark, sf_dir), "gifpix")
-    # pngpix: the SAME exactness argument for the lossless PNG path
-    # (zlib inflate + scanline unfiltering); JPEG stays golden-pixel
-    # pytest-only — it is lossy, so the decoded bytes are not pure
-    # doc_id arithmetic
-    e = pix_tag(q_x_media_pngpix(spark, sf_dir), "pngpix")
-    # resizepix: decode -> pure-numpy bilinear resample -> lossless
-    # re-encode; a SOLID source is exact through interpolation, so
-    # the resized payload's decoded bytes are the synthesis
-    # arithmetic at the NEW dimensions
-    f = pix_tag(q_x_media_resizepix(spark, sf_dir), "resizepix")
-    return (a.unionByName(b).unionByName(c).unionByName(d)
-            .unionByName(e).unionByName(f))
+def q_x_negative_sample(spark, sf_dir):
+    """Contrastive negative sampling: k pseudo-random corpus negatives
+    per doc via an equi-join, no cross join."""
+    return SAMP.negative_sample(_t(spark, sf_dir, "documents"),
+                                "doc_id", k=4).spark_df
+
+
+def q_x_kfold(spark, sf_dir):
+    """Deterministic k-fold CV assignment, summarized per (fold,
+    lang)."""
+    kf = SAMP.kfold_split(_t(spark, sf_dir, "documents"), "doc_id", k=5)
+    return (kf.groupBy("fold", "lang")
+            .agg(F.count(F.lit(1)).alias("n"),
+                 F.sum("doc_id").alias("sum_id")))
+
+
+def q_x_chunk_sentences(spark, sf_dir):
+    """Sentence-boundary chunking (RAG chunks never cut mid-sentence)."""
+    return TS.chunk_by_sentences(_t(spark, sf_dir, "documents"),
+                                 max_tokens=48).spark_df
 
 
 def q_x_media_audiometa(spark, sf_dir):
@@ -3255,7 +2348,20 @@ def q_x_media_resizepix(spark, sf_dir):
             .mapInPandas(decode, schema=schema))
 
 
-def q_s_layout_prune(spark, sf_dir):
+def _pixel_bytes(decode_fn):
+    """Builder over a solid-image decode part: the per-channel means
+    scaled back to the palette bytes (r, g, b) — exact for a SOLID
+    image, so the oracle states them from the synthesis arithmetic
+    (ints compare exactly, no float stringification)."""
+    def build(spark, sf_dir):
+        df = decode_fn(spark, sf_dir)
+        return df.select("media_id", "width", "height", *[
+            F.round(F.col(f"mean_{c}") * 255, 0).cast("bigint").alias(c)
+            for c in "rgb"])
+    return build
+
+
+def _s_layout_prune_parts(spark, sf_dir):
     """Physical-layout maintenance, hash-checked end to end (round 6:
     this entry replaces the oracle-less ``x_probes_rows_only`` slot —
     its xxhash64-SimHash twin and codec-stub probes remain pytest-only
@@ -3317,10 +2423,7 @@ def q_s_layout_prune(spark, sf_dir):
                 .agg(F.count(F.lit(1)).alias("n"),
                      _dec_sum("l_quantity").alias("sum_qty"),
                      F.sum("l_orderkey").alias("sum_ok")))
-        return _tag(zagg, "zprune",
-                    F.col("n").cast("bigint").alias("i1"),
-                    F.col("sum_qty").cast("double").alias("d1"),
-                    F.col("sum_ok").cast("bigint").alias("i2"))
+        return zagg
 
     def g_hprune():
         # Hilbert-curve layout twin: same rewrite + pruned scan
@@ -3336,10 +2439,7 @@ def q_s_layout_prune(spark, sf_dir):
                 .agg(F.count(F.lit(1)).alias("n"),
                      _dec_sum("l_quantity").alias("sum_qty"),
                      F.sum("l_orderkey").alias("sum_ok")))
-        return _tag(hagg, "hprune",
-                    F.col("n").cast("bigint").alias("i1"),
-                    F.col("sum_qty").cast("double").alias("d1"),
-                    F.col("sum_ok").cast("bigint").alias("i2"))
+        return hagg
 
     def g_compact():
         tmp = _scratch_tmp("cdf_compact_")
@@ -3353,10 +2453,7 @@ def q_s_layout_prune(spark, sf_dir):
             F.col("l_quantity").cast("decimal(18,2)").cast("string")
             .alias("qty"), "l_returnflag")
         cs = R.table_checksum(back).spark_df
-        return _tag(cs, "compact",
-                    F.col("n_rows").cast("bigint").alias("i1"),
-                    F.col("sum_h").cast("double").alias("d1"),
-                    F.col("xor_h").cast("bigint").alias("i2"))
+        return cs
 
     def g_partitioned():
         # dynamic partition overwrite: base table partitioned by
@@ -3378,12 +2475,8 @@ def q_s_layout_prune(spark, sf_dir):
                 .agg(F.count(F.lit(1)).alias("n"),
                      _dec_sum("l_quantity").alias("sum_qty"),
                      F.sum("l_orderkey").alias("sum_ok")))
-        return _tag(pagg.select(F.col("n"), F.col("sum_qty"),
-                                F.col("sum_ok")),
-                    "partitioned",
-                    F.col("n").cast("bigint").alias("i1"),
-                    F.col("sum_qty").cast("double").alias("d1"),
-                    F.col("sum_ok").cast("bigint").alias("i2"))
+        return pagg.select(F.col("n"), F.col("sum_qty"),
+                           F.col("sum_ok"))
 
     from cl_data_frame_spark.sources.snapshots import (
         snapshot_count, snapshot_read, snapshot_scan_files,
@@ -3419,10 +2512,7 @@ def q_s_layout_prune(spark, sf_dir):
                 .agg(F.count(F.lit(1)).alias("n"),
                      _dec_sum("l_quantity").alias("sum_qty"),
                      F.sum("l_orderkey").alias("sum_ok")))
-        return _tag(bagg, "snapbloom",
-                    F.col("n").cast("bigint").alias("i1"),
-                    F.col("sum_qty").cast("double").alias("d1"),
-                    F.col("sum_ok").cast("bigint").alias("i2"))
+        return bagg
 
     def g_hp():
         # snaphp (round 11 late): HIDDEN PARTITIONING (Iceberg
@@ -3458,10 +2548,6 @@ def q_s_layout_prune(spark, sf_dir):
                  .agg(F.count(F.lit(1)).alias("n"),
                       _dec_sum("l_quantity").alias("sum_qty"),
                       F.sum("l_orderkey").alias("sum_ok")))
-        hp = _tag(hpagg, "snaphp",
-                  F.col("n").cast("bigint").alias("i1"),
-                  F.col("sum_qty").cast("double").alias("d1"),
-                  F.col("sum_ok").cast("bigint").alias("i2"))
         # snapcnt (round 11 late): METADATA-ONLY predicated COUNT(*) —
         # zero data scan: every year bucket is provably-all (the
         # cutoff sits exactly at a bucket start) or provably-none, so
@@ -3470,11 +2556,7 @@ def q_s_layout_prune(spark, sf_dir):
         # same predicate
         n_meta = snapshot_count(hppath, where=hp_pred)
         cnt_df = spark.createDataFrame([(int(n_meta),)], "n bigint")
-        hc = _tag(cnt_df, "snapcnt",
-                  F.col("n").cast("bigint").alias("i1"),
-                  F.lit(None).cast("double").alias("d1"),
-                  F.lit(None).cast("bigint").alias("i2"))
-        return hp, hc
+        return hpagg, cnt_df
 
     # the six groups above are independent of the snapshot DML chain
     # below (separate table dirs, separate tempdirs): submit them to a
@@ -3483,8 +2565,9 @@ def q_s_layout_prune(spark, sf_dir):
     # §2.6, overlap independent jobs
     pool = ThreadPoolExecutor(max_workers=6)
     futs = {k: pool.submit(fn) for k, fn in [
-        ("a", g_zprune), ("ah", g_hprune), ("b", g_compact),
-        ("c", g_partitioned), ("hb", g_bloom), ("hp_hc", g_hp)]}
+        ("zprune", g_zprune), ("hprune", g_hprune), ("compact", g_compact),
+        ("partitioned", g_partitioned), ("snapbloom", g_bloom),
+        ("snaphp", g_hp)]}
 
     # snapshot table with time travel (sources.snapshots): publish
     # v1 (qty<=2), append v2 (qty=3), overwrite v3 (qty=4); the
@@ -3508,10 +2591,6 @@ def q_s_layout_prune(spark, sf_dir):
             .agg(F.count(F.lit(1)).alias("n"),
                  _dec_sum("l_quantity").alias("sum_qty"),
                  F.sum("l_orderkey").alias("sum_ok")))
-    d = _tag(sagg, "snapshot",
-             F.col("n").cast("bigint").alias("i1"),
-             F.col("sum_qty").cast("double").alias("d1"),
-             F.col("sum_ok").cast("bigint").alias("i2"))
     # stats-pruned time travel: the predicated v2 read must (i) hand
     # Spark STRICTLY fewer files than the full v2 file set — asserted
     # on the manifest listing right here, every run, at every SF —
@@ -3530,10 +2609,6 @@ def q_s_layout_prune(spark, sf_dir):
              .agg(F.count(F.lit(1)).alias("n"),
                   _dec_sum("l_quantity").alias("sum_qty"),
                   F.sum("l_orderkey").alias("sum_ok")))
-    e = _tag(pagg2, "snapprune",
-             F.col("n").cast("bigint").alias("i1"),
-             F.col("sum_qty").cast("double").alias("d1"),
-             F.col("sum_ok").cast("bigint").alias("i2"))
     # snapin (round 11): IN-LIST predicated time travel — the
     # OR-of-equalities disjunct in the snapshot predicate language
     # (the op that lets ann_index_delete forget k ids in one commit
@@ -3561,10 +2636,6 @@ def q_s_layout_prune(spark, sf_dir):
             .agg(F.count(F.lit(1)).alias("n"),
                  _dec_sum("l_quantity").alias("sum_qty"),
                  F.sum("l_orderkey").alias("sum_ok")))
-    ein = _tag(iagg, "snapin",
-               F.col("n").cast("bigint").alias("i1"),
-               F.col("sum_qty").cast("double").alias("d1"),
-               F.col("sum_ok").cast("bigint").alias("i2"))
     # row-level DELETE with file skipping (round 9): remove the same
     # key band from the latest (qty=4) version — files whose stats
     # exclude the band must be carried VERBATIM into the delete
@@ -3583,10 +2654,6 @@ def q_s_layout_prune(spark, sf_dir):
             .agg(F.count(F.lit(1)).alias("n"),
                  _dec_sum("l_quantity").alias("sum_qty"),
                  F.sum("l_orderkey").alias("sum_ok")))
-    g = _tag(dagg, "snapdelete",
-             F.col("n").cast("bigint").alias("i1"),
-             F.col("sum_qty").cast("double").alias("d1"),
-             F.col("sum_ok").cast("bigint").alias("i2"))
     # snapdv (round 10): point-delete exactly ONE surviving row via a
     # positional DELETION VECTOR — the file set must be UNCHANGED
     # (asserted inline on the manifests: merge-on-read, zero rewrite,
@@ -3612,10 +2679,6 @@ def q_s_layout_prune(spark, sf_dir):
              .agg(F.count(F.lit(1)).alias("n"),
                   _dec_sum("l_quantity").alias("sum_qty"),
                   F.sum("l_orderkey").alias("sum_ok")))
-    gdv = _tag(dvagg, "snapdv",
-               F.col("n").cast("bigint").alias("i1"),
-               F.col("sum_qty").cast("double").alias("d1"),
-               F.col("sum_ok").cast("bigint").alias("i2"))
     # snapcdc (round 10): the batch CHANGE FEED over versions 3..5 —
     # the v3 overwrite (all v2 rows delete, all v3 rows insert: the
     # multiset diff cancels nothing across disjoint qty slices), the
@@ -3630,10 +2693,6 @@ def q_s_layout_prune(spark, sf_dir):
             .agg(F.count(F.lit(1)).alias("n"),
                  _dec_sum("l_quantity").alias("sum_qty"),
                  F.sum("l_orderkey").alias("sum_ok")))
-    gcdc = _tag(cagg, "snapcdc",
-                F.col("n").cast("bigint").alias("i1"),
-                F.col("sum_qty").cast("double").alias("d1"),
-                F.col("sum_ok").cast("bigint").alias("i2"))
     # snapera (round 11): CDC ERA AUTO-SPLIT — rename the quantity
     # column AFTER the DML history (metadata-only commit), append one
     # more slice under the new name, then read the change feed over
@@ -3658,43 +2717,32 @@ def q_s_layout_prune(spark, sf_dir):
             .agg(F.count(F.lit(1)).alias("n"),
                  _dec_sum("qty2").alias("sum_qty"),
                  F.sum("l_orderkey").alias("sum_ok")))
-    gera = _tag(eagg, "snapera",
-                F.col("n").cast("bigint").alias("i1"),
-                F.col("sum_qty").cast("double").alias("d1"),
-                F.col("sum_ok").cast("bigint").alias("i2"))
     # gather the overlapped groups (exceptions — including the inline
     # pruning asserts — propagate through .result())
-    a = futs["a"].result()
-    ah = futs["ah"].result()
-    b = futs["b"].result()
-    c = futs["c"].result()
-    hb = futs["hb"].result()
-    hp, hc = futs["hp_hc"].result()
+    out = {tag: futs[tag].result() for tag in
+           ("zprune", "hprune", "compact", "partitioned", "snapbloom")}
+    out["snaphp"], out["snapcnt"] = futs["snaphp"].result()
     pool.shutdown()
-    return (a.unionByName(ah).unionByName(b)
-            .unionByName(c).unionByName(d).unionByName(e)
-            .unionByName(ein)
-            .unionByName(g).unionByName(gdv).unionByName(gcdc)
-            .unionByName(gera).unionByName(hb).unionByName(hp)
-            .unionByName(hc))
+    return {**out, "snapshot": sagg, "snapprune": pagg2, "snapin": iagg,
+            "snapdelete": dagg, "snapdv": dvagg, "snapcdc": cagg,
+            "snapera": eagg}
 
 
-def _mv_long_form(mv, part, key_col="l_returnflag"):
-    m = mv.select(
+def _mv_rows(m):
+    """Long (flag, metric, val) view rows in the s_merge_upsert slots."""
+    return m.select("cnt", F.concat_ws("|", "flag", "metric").alias("s1"),
+                    F.col("val").alias("v"))
+
+
+def _mv_long_form(mv, key_col="l_returnflag"):
+    return _mv_rows(mv.select(
         F.col(key_col).alias("flag"), "cnt",
         F.explode(F.create_map(
             F.lit("sum"), F.col("sum_l_quantity").cast("double"),
             F.lit("avg"), F.col("avg_l_quantity").cast("double"),
             F.lit("min"), F.col("min_l_quantity").cast("double"),
             F.lit("max"), F.col("max_l_quantity").cast("double"),
-        )).alias("metric", "val"))
-    return _tag(m, part,
-                _BNULL().alias("k1"),
-                F.col("cnt").cast("bigint").alias("k2"),
-                F.col("val").alias("v"),
-                F.concat_ws("|", "flag", "metric").alias("s1"),
-                _BNULL().alias("vf"), _BNULL().alias("vt"),
-                F.lit(None).cast("int").alias("cur"))
+        )).alias("metric", "val")))
 
 
 def _mv_cache_dir(sf_dir):
@@ -3915,11 +2963,11 @@ def _matview_parts(spark, sf_dir):
         v_mid = int(_json.load(fh)["v_mid"])
     view = os.path.join(base, "mv")
     a = _mv_long_form(
-        matview_read(spark, view, version=v_mid).spark_df, "mvmid")
-    b = _mv_long_form(matview_read(spark, view).spark_df, "mvread")
+        matview_read(spark, view, version=v_mid).spark_df)
+    b = _mv_long_form(matview_read(spark, view).spark_df)
     c = _mv_long_form(
         matview_read(spark, os.path.join(base, "mvj")).spark_df,
-        "mvjoin", key_col="o_orderstatus")
+        key_col="o_orderstatus")
     # mvstar (round 13): the 2-dim star view after DML on fact AND
     # both dims in one refresh interval — the telescoping cross
     # terms, hash-checked against DuckDB's full 3-way join recompute;
@@ -3927,15 +2975,14 @@ def _matview_parts(spark, sf_dir):
     d = _mv_long_form(
         matview_read(spark, os.path.join(base, "mvs")).spark_df
         .withColumn("skey", F.concat_ws(
-            "#", "o_orderstatus", "p_brand")), "mvstar",
-        key_col="skey")
+            "#", "o_orderstatus", "p_brand")), key_col="skey")
     # mvdistinct (round 13): exact COUNT(DISTINCT l_orderkey) per
     # flag maintained via the per-value multiplicity state — the
     # band delete removes every surviving row of each deleted
     # orderkey (the mass last-occurrence case)
     mvd = matview_read(
         spark, os.path.join(base, "mvd")).spark_df
-    e = _tag(mvd.select(
+    e = _mv_rows(mvd.select(
         F.col("l_returnflag").alias("flag"), "cnt",
         F.explode(F.create_map(
             F.lit("cntd"),
@@ -3943,14 +2990,7 @@ def _matview_parts(spark, sf_dir):
             F.lit("sumd"),
             F.col("sumd_l_orderkey").cast("double"),
             F.lit("avgd"), F.col("avgd_l_orderkey"),
-        )).alias("metric", "val")),
-        "mvdistinct",
-        _BNULL().alias("k1"),
-        F.col("cnt").cast("bigint").alias("k2"),
-        F.col("val").alias("v"),
-        F.concat_ws("|", "flag", "metric").alias("s1"),
-        _BNULL().alias("vf"), _BNULL().alias("vt"),
-        F.lit(None).cast("int").alias("cur"))
+        )).alias("metric", "val")))
     # mvexpr (round 14): the EXPRESSION-keyed view — a derived
     # date_trunc('month', l_shipdate) group key maintained across the
     # same DML history; the month folds to a yyyy-MM string on both
@@ -3958,9 +2998,9 @@ def _matview_parts(spark, sf_dir):
     mve = matview_read(
         spark, os.path.join(base, "mve")).spark_df \
         .withColumn("skey", F.date_format("smonth", "yyyy-MM"))
-    f = _mv_long_form(mve, "mvexpr", key_col="skey")
-    return a.unionByName(b).unionByName(c).unionByName(d) \
-        .unionByName(e).unionByName(f)
+    f = _mv_long_form(mve, key_col="skey")
+    return {"mvmid": a, "mvread": b, "mvjoin": c, "mvstar": d,
+            "mvdistinct": e, "mvexpr": f}
 
 
 def q_st_ss_join(spark, sf_dir):
@@ -4012,24 +3052,12 @@ def q_st_static_join(spark, sf_dir):
                  .cast("double").alias("sum_value")))
 
 
-def q_st_windows(spark, sf_dir):
-    """Streaming window aggregations (plans identical in batch/stream):
-    tumbling, sliding, and session windows in one tagged union."""
-    a = _tag(q_st_tumbling(spark, sf_dir), "tumbling",
-             F.col("win_us").cast("bigint").alias("win_us"),
-             _BNULL().alias("i1"), F.col("event_type").alias("s1"),
-             F.col("n").cast("bigint").alias("n"),
-             F.col("sum_value").cast("double").alias("sum_value"))
-    b = _tag(q_st_sliding(spark, sf_dir), "sliding",
-             F.col("win_us").cast("bigint").alias("win_us"),
-             _BNULL().alias("i1"), _SNULL().alias("s1"),
-             F.col("n").cast("bigint").alias("n"), _DNULL().alias("sum_value"))
-    c = _tag(q_st_session(spark, sf_dir), "session",
-             F.col("session_us").cast("bigint").alias("win_us"),
-             F.col("user_id").cast("bigint").alias("i1"), _SNULL().alias("s1"),
-             F.col("n_events").cast("bigint").alias("n"),
-             _DNULL().alias("sum_value"))
-    return a.unionByName(b).unionByName(c)
+#: the real-stream parts of the two stream composites
+_ST_STATEFUL_STREAMS = {"totals": q_st_totals_only, "holt": q_st_holt_only}
+_ST_DEDUP_STREAMS = {
+    "dedup": q_st_dedup_only, "ss_join": q_st_ss_join,
+    "static_join": q_st_static_join, "snapsink": q_st_snapsink_only,
+    "snapsrc": q_st_snapsrc_only}
 
 
 # ---------------------------------------------------------------------------
@@ -4081,7 +3109,7 @@ def q_x_pii_redact(spark, sf_dir):
         F.col("redacted_md5").alias("redacted_md5"))
 
 
-def q_x_curation_scrub(spark, sf_dir):
+def _x_curation_scrub_parts(spark, sf_dir):
     """Curation scrub composite: benchmark decontamination + PII
     redaction in one tagged union.
 
@@ -4095,24 +3123,10 @@ def q_x_curation_scrub(spark, sf_dir):
     urls = _messy_urls(spark, sf_dir)
 
     def _b_decon():
-        return _tag(q_x_decontaminate(spark, sf_dir), "decontaminate",
-                    F.col("doc_id").alias("doc_id"),
-                    F.col("n_ngrams").alias("i1"),
-                    F.col("n_hit").alias("i2"),
-                    F.col("contaminated").alias("i3"),
-                    _BNULL().alias("i4"),
-                    F.col("overlap_frac").alias("d1"),
-                    _SNULL().alias("s1"))
+        return q_x_decontaminate(spark, sf_dir)
 
     def _b_pii():
-        return _tag(q_x_pii_redact(spark, sf_dir), "pii",
-                    F.col("doc_id").alias("doc_id"),
-                    F.col("n_email").alias("i1"),
-                    F.col("n_phone").alias("i2"),
-                    F.col("n_ipv4").alias("i3"),
-                    F.col("n_pii").alias("i4"),
-                    _DNULL().alias("d1"),
-                    F.col("redacted_md5").alias("s1"))
+        return q_x_pii_redact(spark, sf_dir)
 
     def _b_expect():
         # data-quality expectation gate: the whole rule suite in one scan
@@ -4124,26 +3138,14 @@ def q_x_curation_scrub(spark, sf_dir):
         }).spark_df
         uniq = CUR.rule_unique(li, ["l_orderkey", "l_linenumber"]).spark_df
         checks = gate.unionByName(uniq)
-        return _tag(checks, "expect",
-                    _BNULL().alias("doc_id"),
-                    F.col("n_violations").cast("bigint").alias("i1"),
-                    F.col("n_rows").cast("bigint").alias("i2"),
-                    F.col("passed").cast("bigint").alias("i3"),
-                    _BNULL().alias("i4"), _DNULL().alias("d1"),
-                    F.col("rule").alias("s1"))
+        return checks
 
     def _b_blocklist():
         # wordlist blocklist screen (C4-badwords-style): literal-array
         # token membership, no join, no shuffle
         bl = CUR.blocklist_screen(docs, ["table", "spark", "window"],
                                   max_hits=2).spark_df
-        return _tag(bl, "blocklist",
-                    F.col("doc_id").cast("bigint").alias("doc_id"),
-                    F.col("n_hits").cast("bigint").alias("i1"),
-                    F.col("n_terms").cast("bigint").alias("i2"),
-                    F.col("blocked").cast("bigint").alias("i3"),
-                    _BNULL().alias("i4"), _DNULL().alias("d1"),
-                    _SNULL().alias("s1"))
+        return bl
 
     def _b_url():
         # URL curation (curation.url_normalize / url_dedup / domain_cap):
@@ -4153,41 +3155,22 @@ def q_x_curation_scrub(spark, sf_dir):
         # the oracle states the EXPECTED canonical form directly (ground
         # truth, not a regex re-implementation)
         un = CUR.url_normalize(urls, "url").spark_df
-        return _tag(un, "url",
-                    F.col("doc_id").cast("bigint").alias("doc_id"),
-                    _BNULL().alias("i1"), _BNULL().alias("i2"),
-                    _BNULL().alias("i3"), _BNULL().alias("i4"),
-                    _DNULL().alias("d1"),
-                    F.concat(F.col("url_norm"), F.lit("|"),
-                             F.col("domain")).alias("s1"))
+        return un.withColumn("s1", F.concat(F.col("url_norm"), F.lit("|"),
+                                            F.col("domain")))
 
     def _b_urldedup():
         ud = CUR.url_dedup(urls, "url", "doc_id").spark_df
-        return _tag(ud, "urldedup",
-                    F.col("doc_id").cast("bigint").alias("doc_id"),
-                    _BNULL().alias("i1"), _BNULL().alias("i2"),
-                    _BNULL().alias("i3"), _BNULL().alias("i4"),
-                    _DNULL().alias("d1"), F.col("url_norm").alias("s1"))
+        return ud
 
     def _b_domcap():
         dc = CUR.domain_cap(urls, "url", "doc_id", k=5).spark_df
-        return _tag(dc, "domcap",
-                    F.col("doc_id").cast("bigint").alias("doc_id"),
-                    _BNULL().alias("i1"), _BNULL().alias("i2"),
-                    _BNULL().alias("i3"), _BNULL().alias("i4"),
-                    _DNULL().alias("d1"), F.col("domain").alias("s1"))
+        return dc
 
     def _b_tempw():
         # temperature-scaled language mix (sampling.temperature_weights /
         # temperature_sample): alpha=0.7 upsamples rare languages
         tw = SAMP.temperature_weights(docs, "lang", alpha=0.7).spark_df
-        return _tag(tw, "tempw",
-                    _BNULL().alias("doc_id"),
-                    F.col("n").cast("bigint").alias("i1"),
-                    _BNULL().alias("i2"), _BNULL().alias("i3"),
-                    _BNULL().alias("i4"),
-                    F.col("w").cast("double").alias("d1"),
-                    F.col("lang").alias("s1"))
+        return tw
 
     def _b_tempsamp():
         ts = SAMP.temperature_sample(docs, "doc_id", "lang",
@@ -4195,12 +3178,7 @@ def q_x_curation_scrub(spark, sf_dir):
         tss = (ts.groupBy("lang")
                .agg(F.count(F.lit(1)).alias("n_kept"),
                     F.sum("doc_id").alias("sum_id")))
-        return _tag(tss, "tempsamp",
-                    _BNULL().alias("doc_id"),
-                    F.col("n_kept").cast("bigint").alias("i1"),
-                    F.col("sum_id").cast("bigint").alias("i2"),
-                    _BNULL().alias("i3"), _BNULL().alias("i4"),
-                    _DNULL().alias("d1"), F.col("lang").alias("s1"))
+        return tss
 
     def _b_fuzzydecon():
         # fuzzy MinHash decontamination (round 9): benchmark = the
@@ -4214,13 +3192,7 @@ def q_x_curation_scrub(spark, sf_dir):
             .select("doc_id", "text"),
             num_hashes=96, bands=24, shingle_k=5,
             jaccard_threshold=0.8).spark_df
-        return _tag(fd, "fuzzydecon",
-                    F.col("doc_id").cast("bigint").alias("doc_id"),
-                    F.col("contaminated").cast("bigint").alias("i1"),
-                    F.col("bench_id").cast("bigint").alias("i2"),
-                    _BNULL().alias("i3"), _BNULL().alias("i4"),
-                    F.col("jaccard").cast("double").alias("d1"),
-                    _SNULL().alias("s1"))
+        return fd
 
     def _b_cardpii():
         # Luhn-gated payment-card PII (round 9): deterministic card
@@ -4230,43 +3202,21 @@ def q_x_curation_scrub(spark, sf_dir):
         # of the regex + checksum)
         cards = _card_texts(spark, sf_dir)
         cp = CUR.card_pii(cards, "doc_id", "text").spark_df
-        return _tag(cp, "cardpii",
-                    F.col("doc_id").cast("bigint").alias("doc_id"),
-                    F.col("n_candidates").cast("bigint").alias("i1"),
-                    F.col("n_valid").cast("bigint").alias("i2"),
-                    _BNULL().alias("i3"), _BNULL().alias("i4"),
-                    _DNULL().alias("d1"),
-                    F.col("redacted_md5").alias("s1"))
+        return cp
 
     def _b_qualclf():
         # hashed linear quality classifier (fastText-style APPLY, round 9):
         # md5 token buckets -> broadcast k-sized weight table -> exact
         # integer mean-weight logit; no float in the label decision
         qc = CUR.quality_classifier(docs, "doc_id", "text").spark_df
-        return _tag(qc, "qualclf",
-                    F.col("doc_id").cast("bigint").alias("doc_id"),
-                    F.col("n_tokens").cast("bigint").alias("i1"),
-                    F.col("logit_milli").cast("bigint").alias("i2"),
-                    F.col("label").cast("bigint").alias("i3"),
-                    _BNULL().alias("i4"),
-                    F.col("score").cast("double").alias("d1"),
-                    _SNULL().alias("s1"))
+        return qc
 
-    from concurrent.futures import ThreadPoolExecutor
-    builders = [
-        ("a", _b_decon), ("b", _b_pii), ("c", _b_expect),
-        ("d", _b_blocklist), ("e", _b_url), ("f", _b_urldedup),
-        ("g", _b_domcap), ("h", _b_tempw), ("i", _b_tempsamp),
-        ("jt", _b_fuzzydecon), ("ct", _b_cardpii), ("kt", _b_qualclf)]
-    with ThreadPoolExecutor(max_workers=8) as pool:
-        futs = {k: pool.submit(fn) for k, fn in builders}
-        out = {k: f.result() for k, f in futs.items()}
-    return (out["a"].unionByName(out["b"]).unionByName(out["c"])
-            .unionByName(out["d"]).unionByName(out["e"])
-            .unionByName(out["f"]).unionByName(out["g"])
-            .unionByName(out["h"]).unionByName(out["i"])
-            .unionByName(out["jt"]).unionByName(out["kt"])
-            .unionByName(out["ct"]))
+    return _build_on_pool({
+        "decontaminate": _b_decon, "pii": _b_pii, "expect": _b_expect,
+        "blocklist": _b_blocklist, "url": _b_url, "urldedup": _b_urldedup,
+        "domcap": _b_domcap, "tempw": _b_tempw, "tempsamp": _b_tempsamp,
+        "fuzzydecon": _b_fuzzydecon, "cardpii": _b_cardpii,
+        "qualclf": _b_qualclf})
 
 
 def _card_texts(spark, sf_dir):
@@ -4302,23 +3252,6 @@ def _messy_urls(spark, sf_dir):
         "url", F.when(d % 2 == 0, even).otherwise(odd))
 
 
-def q_s_moment_stats(spark, sf_dir):
-    """DataFrameStatFunctions parity: per-returnflag Pearson corr /
-    sample cov / stddevs of (quantity, extendedprice) from exact decimal
-    moment sums (order-independent, cross-engine exact)."""
-    li = _t(spark, sf_dir, "lineitem")
-    return STAT.moment_stats(li, "l_quantity", "l_extendedprice",
-                             by=["l_returnflag"]).spark_df
-
-
-def q_s_crosstab(spark, sf_dir):
-    """Contingency table: returnflag x linestatus with an explicit pivot
-    value list (single-pass, stable schema)."""
-    li = _t(spark, sf_dir, "lineitem")
-    return STAT.crosstab(li, "l_returnflag", "l_linestatus",
-                         ["F", "O"]).spark_df
-
-
 def q_s_top_frequent(spark, sf_dir):
     """Exact top-5 frequent part brands (deterministic freqItems)."""
     part = _t(spark, sf_dir, "part")
@@ -4328,7 +3261,7 @@ def q_s_top_frequent(spark, sf_dir):
 _STATS_COLS = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
 
 
-def q_s_stats(spark, sf_dir):
+def _s_stats_parts(spark, sf_dir):
     """Statistical functions composite: moments + correlation matrix +
     grouped OLS regression + crosstab + chi-square cells + exact
     frequent items in one tagged union.
@@ -4408,84 +3341,38 @@ def q_s_stats(spark, sf_dir):
     # latency (guide §2.6) — the union order (and therefore the
     # result) is unchanged
     def _b_moments():
-        return _tag(STAT.moment_stats_from_sums(
-                        sums, _STATS_COLS, "l_quantity",
-                        "l_extendedprice",
-                        by=["l_returnflag"]).spark_df, "moments",
-                    F.col("l_returnflag").alias("s1"),
-                    F.col("n").cast("bigint").alias("i1"),
-                    _BNULL().alias("i2"),
-                    F.col("corr").cast("double").alias("d1"),
-                    F.col("cov_samp").cast("double").alias("d2"),
-                    F.col("std_x").cast("double").alias("d3"),
-                    F.col("std_y").cast("double").alias("d4"))
+        return STAT.moment_stats_from_sums(
+            sums, _STATS_COLS, "l_quantity",
+            "l_extendedprice",
+            by=["l_returnflag"]).spark_df
 
     def _b_corrmatrix():
-        return _tag(STAT.corr_matrix(None, _STATS_COLS,
-                                     sums=gsums).spark_df,
-                    "corrmatrix",
-                    F.concat_ws(">", "col_x", "col_y").alias("s1"),
-                    F.col("n").cast("bigint").alias("i1"),
-                    _BNULL().alias("i2"),
-                    F.col("corr").cast("double").alias("d1"),
-                    F.col("cov_samp").cast("double").alias("d2"),
-                    _DNULL().alias("d3"), _DNULL().alias("d4"))
+        return STAT.corr_matrix(None, _STATS_COLS,
+                                sums=gsums).spark_df
 
     def _b_regression():
-        return _tag(STAT.grouped_regression(
-                        None, "l_quantity", "l_extendedprice",
-                        by=["l_returnflag"], sums=sums,
-                        cols=_STATS_COLS).spark_df, "regression",
-                    F.col("l_returnflag").alias("s1"),
-                    F.col("n").cast("bigint").alias("i1"),
-                    _BNULL().alias("i2"),
-                    F.col("slope").cast("double").alias("d1"),
-                    F.col("intercept").cast("double").alias("d2"),
-                    F.col("r2").cast("double").alias("d3"),
-                    _DNULL().alias("d4"))
+        return STAT.grouped_regression(
+            None, "l_quantity", "l_extendedprice",
+            by=["l_returnflag"], sums=sums,
+            cols=_STATS_COLS).spark_df
 
     def _b_regression2():
-        return _tag(STAT.grouped_regression2(
-                        None, "l_quantity", "l_discount",
-                        "l_extendedprice",
-                        by=["l_returnflag"], sums=sums,
-                        cols=_STATS_COLS).spark_df, "regression2",
-                    F.col("l_returnflag").alias("s1"),
-                    F.col("n").cast("bigint").alias("i1"),
-                    _BNULL().alias("i2"),
-                    F.col("b0").cast("double").alias("d1"),
-                    F.col("b1").cast("double").alias("d2"),
-                    F.col("b2").cast("double").alias("d3"),
-                    F.col("r2").cast("double").alias("d4"))
+        return STAT.grouped_regression2(
+            None, "l_quantity", "l_discount",
+            "l_extendedprice",
+            by=["l_returnflag"], sums=sums,
+            cols=_STATS_COLS).spark_df
 
     def _b_crosstab():
-        return _tag(ct, "crosstab",
-                    F.col("l_returnflag").alias("s1"),
-                    F.col("n_F").cast("bigint").alias("i1"),
-                    F.col("n_O").cast("bigint").alias("i2"),
-                    _DNULL().alias("d1"), _DNULL().alias("d2"),
-                    _DNULL().alias("d3"), _DNULL().alias("d4"))
+        return ct
 
     def _b_chisq():
-        return _tag(STAT.chisq_cells(cells=cells,
-                                     row_col="l_returnflag",
-                                     col_col="l_linestatus").spark_df,
-                    "chisq",
-                    F.concat_ws(":", "l_returnflag",
-                                "l_linestatus").alias("s1"),
-                    F.col("n_obs").cast("bigint").alias("i1"),
-                    _BNULL().alias("i2"),
-                    F.col("expected").cast("double").alias("d1"),
-                    F.col("chi2_term").cast("double").alias("d2"),
-                    _DNULL().alias("d3"), _DNULL().alias("d4"))
+        return STAT.chisq_cells(cells=cells,
+                                row_col="l_returnflag",
+                                col_col="l_linestatus").spark_df
 
     def _b_freq():
-        return _tag(q_s_top_frequent(spark, sf_dir), "freq",
-                    F.col("p_brand").alias("s1"),
-                    F.col("n").cast("bigint").alias("i1"),
-                    F.col("rank").cast("bigint").alias("i2"),
-                    _DNULL().alias("d1"), _DNULL().alias("d2"),
-                    _DNULL().alias("d3"), _DNULL().alias("d4"))
+        return q_s_top_frequent(spark, sf_dir)
 
     def _b_bins_outliers():
         # equal-frequency binning + Tukey fences from ONE shared
@@ -4502,26 +3389,12 @@ def q_s_stats(spark, sf_dir):
                         .alias("n_outliers"),
                         F.min("fence_lo").alias("fence_lo"),
                         F.max("fence_hi").alias("fence_hi")))
-        d = _tag(per_bin, "bins",
-                 F.col("l_returnflag").alias("s1"),
-                 F.col("bin").cast("bigint").alias("i1"),
-                 F.col("n").cast("bigint").alias("i2"),
-                 F.col("sum_price").cast("double").alias("d1"),
-                 _DNULL().alias("d2"), _DNULL().alias("d3"),
-                 _DNULL().alias("d4"))
         fence_agg = (per_bin.groupBy("l_returnflag")
                      .agg(F.sum("n_outliers").alias("n_outliers"),
                           F.sum("n").alias("n"),
                           F.min("fence_lo").alias("fence_lo"),
                           F.max("fence_hi").alias("fence_hi")))
-        e = _tag(fence_agg, "outliers",
-                 F.col("l_returnflag").alias("s1"),
-                 F.col("n_outliers").cast("bigint").alias("i1"),
-                 F.col("n").cast("bigint").alias("i2"),
-                 F.col("fence_lo").cast("double").alias("d1"),
-                 F.col("fence_hi").cast("double").alias("d2"),
-                 _DNULL().alias("d3"), _DNULL().alias("d4"))
-        return d, e
+        return per_bin, fence_agg
 
     def _b_mad():
         # MAD robust outliers: the group median comes FREE from the
@@ -4539,26 +3412,13 @@ def q_s_stats(spark, sf_dir):
                         F.count(F.lit(1)).alias("n"),
                         F.min("median").alias("median"),
                         F.min("mad").alias("mad")))
-        return _tag(mad_agg, "mad",
-                    F.col("l_returnflag").alias("s1"),
-                    F.col("n_out").cast("bigint").alias("i1"),
-                    F.col("n").cast("bigint").alias("i2"),
-                    F.col("median").cast("double").alias("d1"),
-                    F.col("mad").cast("double").alias("d2"),
-                    _DNULL().alias("d3"), _DNULL().alias("d4"))
+        return mad_agg
 
     def _b_welch():
         wt = STAT.welch_t_test(None, "l_extendedprice",
                                "l_returnflag",
                                sums=sums, cols=_STATS_COLS).spark_df
-        return _tag(wt, "welch",
-                    F.concat_ws(">", "g1", "g2").alias("s1"),
-                    F.col("n1").cast("bigint").alias("i1"),
-                    F.col("n2").cast("bigint").alias("i2"),
-                    F.col("t_stat").cast("double").alias("d1"),
-                    F.col("welch_df").cast("double").alias("d2"),
-                    F.col("cohens_d").cast("double").alias("d3"),
-                    _DNULL().alias("d4"))
+        return wt
 
     def _b_anova():
         # one-way ANOVA across all flags: ANOTHER zero-extra-scan
@@ -4566,13 +3426,7 @@ def q_s_stats(spark, sf_dir):
         av = STAT.anova_oneway(None, "l_extendedprice",
                                "l_returnflag",
                                sums=sums, cols=_STATS_COLS).spark_df
-        return _tag(av, "anova",
-                    F.lit("l_extendedprice~l_returnflag").alias("s1"),
-                    F.col("k").cast("bigint").alias("i1"),
-                    F.col("n").cast("bigint").alias("i2"),
-                    F.col("f_stat").cast("double").alias("d1"),
-                    F.col("eta_sq").cast("double").alias("d2"),
-                    _DNULL().alias("d3"), _DNULL().alias("d4"))
+        return av
 
     def _b_kappa():
         # Cohen's kappa between two deterministic pseudo-raters; the 9
@@ -4587,14 +3441,7 @@ def q_s_stats(spark, sf_dir):
             .localCheckpoint(eager=False))
         kp = STAT.cohens_kappa(rater_a="ra", rater_b="rb",
                                cells=kcells).spark_df
-        return _tag(kp, "kappa",
-                    F.lit("qty%3~partkey%3").alias("s1"),
-                    F.col("n").cast("bigint").alias("i1"),
-                    _BNULL().alias("i2"),
-                    F.col("kappa").cast("double").alias("d1"),
-                    F.col("p_obs").cast("double").alias("d2"),
-                    F.col("p_exp").cast("double").alias("d3"),
-                    _DNULL().alias("d4"))
+        return kp
 
     def _b_cramer():
         # Cramér's V association strength — its contingency table IS
@@ -4604,14 +3451,7 @@ def q_s_stats(spark, sf_dir):
         cv = STAT.cramers_v(row_col="l_returnflag",
                             col_col="l_linestatus",
                             cells=ccells).spark_df
-        return _tag(cv, "cramer",
-                    F.lit("l_returnflag~l_linestatus").alias("s1"),
-                    F.col("n").cast("bigint").alias("i1"),
-                    F.col("r").cast("bigint").alias("i2"),
-                    F.col("chi2").cast("double").alias("d1"),
-                    F.col("cramers_v").cast("double").alias("d2"),
-                    F.col("c").cast("double").alias("d3"),
-                    _DNULL().alias("d4"))
+        return cv
 
     def _b_winsor():
         # winsorization: per-flag [p05, p95] clip — bounds from the
@@ -4630,15 +3470,10 @@ def q_s_stats(spark, sf_dir):
                      F.sum((F.col("l_extendedprice_wins") < x)
                            .cast("bigint")).alias("n_hi"))
                 .join(wbounds, on="l_returnflag"))
-        return _tag(wagg, "winsor",
-                    F.col("l_returnflag").alias("s1"),
-                    F.col("n_lo").cast("bigint").alias("i1"),
-                    F.col("n_hi").cast("bigint").alias("i2"),
-                    F.round(F.col("__lo__").cast("double"), 6)
-                    .alias("d1"),
-                    F.round(F.col("__hi__").cast("double"), 6)
-                    .alias("d2"),
-                    _DNULL().alias("d3"), _DNULL().alias("d4"))
+        return wagg.select(
+            "l_returnflag", "n_lo", "n_hi",
+            F.round(F.col("__lo__").cast("double"), 6).alias("lo"),
+            F.round(F.col("__hi__").cast("double"), 6).alias("hi"))
 
     def _b_partialcorr():
         # partial correlation of (quantity, price) controlling
@@ -4647,14 +3482,7 @@ def q_s_stats(spark, sf_dir):
         pc = STAT.partial_correlation(
             None, "l_quantity", "l_extendedprice", "l_discount",
             cols=_STATS_COLS, by=["l_returnflag"], sums=mega).spark_df
-        return _tag(pc, "partialcorr",
-                    F.col("l_returnflag").alias("s1"),
-                    F.col("n").cast("bigint").alias("i1"),
-                    _BNULL().alias("i2"),
-                    F.col("r_xy").cast("double").alias("d1"),
-                    F.col("r_xz").cast("double").alias("d2"),
-                    F.col("r_yz").cast("double").alias("d3"),
-                    F.col("partial_r").cast("double").alias("d4"))
+        return pc
 
     def _b_mahala():
         # multivariate Mahalanobis outliers over (quantity, price,
@@ -4670,13 +3498,7 @@ def q_s_stats(spark, sf_dir):
                     .alias("n_out"),
                     F.sum(F.col("d2").cast("decimal(18,6)"))
                     .cast("double").alias("sum_d2")))
-        return _tag(mha, "mahala",
-                    F.col("l_returnflag").alias("s1"),
-                    F.col("n").cast("bigint").alias("i1"),
-                    F.col("n_out").cast("bigint").alias("i2"),
-                    F.col("sum_d2").cast("double").alias("d1"),
-                    _DNULL().alias("d2"), _DNULL().alias("d3"),
-                    _DNULL().alias("d4"))
+        return mha
 
     def _b_psi():
         # PSI drift report: reference = l_quantity, current = a
@@ -4685,14 +3507,7 @@ def q_s_stats(spark, sf_dir):
             li.select("l_quantity"),
             li.select((F.col("l_quantity") + 5).alias("l_quantity")),
             "l_quantity", n_bins=10).spark_df
-        return _tag(psi, "psi",
-                    F.col("bin").cast("string").alias("s1"),
-                    F.col("n_ref").cast("bigint").alias("i1"),
-                    F.col("n_cur").cast("bigint").alias("i2"),
-                    F.col("p_ref").cast("double").alias("d1"),
-                    F.col("p_cur").cast("double").alias("d2"),
-                    F.col("psi_term").cast("double").alias("d3"),
-                    _DNULL().alias("d4"))
+        return psi
 
     def _b_targetenc():
         # smoothed target encoding: the per-category encoding table
@@ -4700,16 +3515,9 @@ def q_s_stats(spark, sf_dir):
                                           "l_quantity"),
                                 "l_returnflag", "l_quantity",
                                 smoothing=20.0).spark_df
-        return _tag(te.groupBy("l_returnflag")
-                    .agg(F.count(F.lit(1)).alias("n"),
-                         F.min("l_returnflag_enc").alias("enc")),
-                    "targetenc",
-                    F.col("l_returnflag").alias("s1"),
-                    F.col("n").cast("bigint").alias("i1"),
-                    _BNULL().alias("i2"),
-                    F.col("enc").cast("double").alias("d1"),
-                    _DNULL().alias("d2"), _DNULL().alias("d3"),
-                    _DNULL().alias("d4"))
+        return (te.groupBy("l_returnflag")
+                .agg(F.count(F.lit(1)).alias("n"),
+                     F.min("l_returnflag_enc").alias("enc")))
 
     def _b_bootstrap():
         # Poisson bootstrap CI for mean(n_chars) per language over
@@ -4718,44 +3526,23 @@ def q_s_stats(spark, sf_dir):
         bs = STAT.poisson_bootstrap_ci(
             docs.select("lang", "doc_id", "n_chars"), "n_chars",
             "doc_id", n_replicates=40, by=["lang"]).spark_df
-        return _tag(bs, "bootstrap",
-                    F.col("lang").alias("s1"),
-                    F.col("n").cast("bigint").alias("i1"),
-                    F.col("n_replicates").cast("bigint").alias("i2"),
-                    F.col("mean").cast("double").alias("d1"),
-                    F.col("lo").cast("double").alias("d2"),
-                    F.col("hi").cast("double").alias("d3"),
-                    _DNULL().alias("d4"))
+        return bs
 
-    from concurrent.futures import ThreadPoolExecutor
-    builders = [
-        ("a", _b_moments), ("f", _b_corrmatrix), ("g", _b_regression),
-        ("g2", _b_regression2), ("b", _b_crosstab), ("h", _b_chisq),
-        ("c", _b_freq), ("de", _b_bins_outliers), ("m", _b_mad),
-        ("w", _b_welch), ("an", _b_anova), ("kpt", _b_kappa),
-        ("cvt", _b_cramer), ("wn", _b_winsor), ("pct", _b_partialcorr),
-        ("mht", _b_mahala), ("pst", _b_psi), ("tet", _b_targetenc),
-        ("bst", _b_bootstrap)]
-    with ThreadPoolExecutor(max_workers=8) as pool:
-        futs = {k: pool.submit(fn) for k, fn in builders}
-        out = {k: f.result() for k, f in futs.items()}
-    a, f, g, g2 = out["a"], out["f"], out["g"], out["g2"]
-    b, h, c = out["b"], out["h"], out["c"]
-    d, e = out["de"]
-    m, w, an = out["m"], out["w"], out["an"]
-    kpt, cvt, wn = out["kpt"], out["cvt"], out["wn"]
-    pct, mht, pst = out["pct"], out["mht"], out["pst"]
-    tet, bst = out["tet"], out["bst"]
-    return (a.unionByName(f).unionByName(g).unionByName(g2)
-            .unionByName(b).unionByName(h).unionByName(c)
-            .unionByName(d).unionByName(e).unionByName(m)
-            .unionByName(w).unionByName(an).unionByName(wn)
-            .unionByName(cvt).unionByName(kpt)
-            .unionByName(pst).unionByName(tet).unionByName(bst)
-            .unionByName(mht).unionByName(pct))
+    out = _build_on_pool({
+        "moments": _b_moments, "corrmatrix": _b_corrmatrix,
+        "regression": _b_regression, "regression2": _b_regression2,
+        "crosstab": _b_crosstab, "chisq": _b_chisq, "freq": _b_freq,
+        "bins_outliers": _b_bins_outliers, "mad": _b_mad,
+        "welch": _b_welch, "anova": _b_anova, "kappa": _b_kappa,
+        "cramer": _b_cramer, "winsor": _b_winsor,
+        "partialcorr": _b_partialcorr, "mahala": _b_mahala,
+        "psi": _b_psi, "targetenc": _b_targetenc,
+        "bootstrap": _b_bootstrap})
+    out["bins"], out["outliers"] = out.pop("bins_outliers")
+    return out
 
 
-def q_s_stats_rank(spark, sf_dir):
+def _s_stats_rank_parts(spark, sf_dir):
     """Rank/ordinal statistics composite (round 8: split out of the
     26-part ``s_stats`` — VERDICT r7 #4): Spearman rank correlation,
     Mann-Whitney U, ROC AUC, Kendall τ-b, Theil–Sen regression, mutual
@@ -4772,26 +3559,14 @@ def q_s_stats_rank(spark, sf_dir):
     def _b_spearman():
         sp = STAT.spearman_corr(li, "l_quantity",
                                 "l_extendedprice").spark_df
-        return _tag(sp, "spearman",
-                    F.lit("l_quantity>l_extendedprice").alias("s1"),
-                    F.col("n").cast("bigint").alias("i1"),
-                    _BNULL().alias("i2"),
-                    F.col("rho").cast("double").alias("d1"),
-                    _DNULL().alias("d2"), _DNULL().alias("d3"),
-                    _DNULL().alias("d4"))
+        return sp
 
     def _b_mannwhitney():
         # Mann-Whitney U over l_quantity (~50 distinct values — the
         # value-count regime the operator targets)
         mw = STAT.mann_whitney_u(li, "l_quantity", "l_returnflag",
                                  exact=True).spark_df
-        return _tag(mw, "mannwhitney",
-                    F.concat_ws(">", "g1", "g2").alias("s1"),
-                    F.col("n1").cast("bigint").alias("i1"),
-                    F.col("n2").cast("bigint").alias("i2"),
-                    F.col("u1").cast("double").alias("d1"),
-                    F.col("z").cast("double").alias("d2"),
-                    _DNULL().alias("d3"), _DNULL().alias("d4"))
+        return mw
 
     def _b_auc():
         # ROC AUC via the Mann-Whitney identity: quantity as the
@@ -4801,27 +3576,14 @@ def q_s_stats_rank(spark, sf_dir):
                            .alias("is_a"))
         au = STAT.auc_score(auc_in, "score", "is_a",
                             exact=True).spark_df
-        return _tag(au, "auc",
-                    F.lit("l_quantity~is_A").alias("s1"),
-                    F.col("n_pos").cast("bigint").alias("i1"),
-                    F.col("n_neg").cast("bigint").alias("i2"),
-                    F.col("auc").cast("double").alias("d1"),
-                    _DNULL().alias("d2"), _DNULL().alias("d3"),
-                    _DNULL().alias("d4"))
+        return au
 
     def _b_kendall():
         # Kendall tau-b from the (quantity x linenumber) contingency —
         # <=350 cells, quadratic in value pairs, never rows
         kd = STAT.kendall_tau_b(li, "l_quantity", "l_linenumber",
                                 exact=True).spark_df
-        return _tag(kd, "kendall",
-                    F.lit("l_quantity~l_linenumber").alias("s1"),
-                    F.col("n").cast("bigint").alias("i1"),
-                    _BNULL().alias("i2"),
-                    F.col("tau_b").cast("double").alias("d1"),
-                    F.col("concordant").cast("double").alias("d2"),
-                    F.col("discordant").cast("double").alias("d3"),
-                    _DNULL().alias("d4"))
+        return kd
 
     def _b_theilsen():
         # Theil-Sen robust regression of l_tax on l_quantity
@@ -4829,27 +3591,14 @@ def q_s_stats_rank(spark, sf_dir):
         th = STAT.theil_sen(li.select("l_quantity", "l_tax"),
                             "l_quantity", "l_tax",
                             exact=True).spark_df
-        return _tag(th, "theilsen",
-                    F.lit("l_tax~l_quantity").alias("s1"),
-                    F.col("n").cast("bigint").alias("i1"),
-                    _BNULL().alias("i2"),
-                    F.col("slope").cast("double").alias("d1"),
-                    F.col("intercept").cast("double").alias("d2"),
-                    _DNULL().alias("d3"), _DNULL().alias("d4"))
+        return th
 
     def _b_mutualinfo():
         # mutual information + entropies for returnflag x linestatus
         mi = STAT.mutual_information(li, "l_returnflag",
                                      "l_linestatus",
                                      exact=True).spark_df
-        return _tag(mi, "mutualinfo",
-                    F.lit("l_returnflag~l_linestatus").alias("s1"),
-                    F.col("n").cast("bigint").alias("i1"),
-                    _BNULL().alias("i2"),
-                    F.col("mi").cast("double").alias("d1"),
-                    F.col("nmi").cast("double").alias("d2"),
-                    F.col("h_x").cast("double").alias("d3"),
-                    F.col("h_y").cast("double").alias("d4"))
+        return mi
 
     def _b_wpct():
         # unkeyed weighted percentile: the two-pass bucketed global
@@ -4857,120 +3606,165 @@ def q_s_stats_rank(spark, sf_dir):
         wp = STAT.weighted_percentile(li, "l_extendedprice",
                                       "l_quantity",
                                       [0.25, 0.5, 0.9]).spark_df
-        return _tag(wp, "wpct",
-                    F.lit("l_extendedprice~l_quantity").alias("s1"),
-                    F.col("n").cast("bigint").alias("i1"),
-                    _BNULL().alias("i2"),
-                    F.col("p25").cast("double").alias("d1"),
-                    F.col("p50").cast("double").alias("d2"),
-                    F.col("p90").cast("double").alias("d3"),
-                    _DNULL().alias("d4"))
+        return wp
 
     def _b_wpctg():
         # grouped twin: per-flag keyed cumulative-weight windows
         wpg = STAT.weighted_percentile(li, "l_extendedprice",
                                        "l_quantity", [0.5, 0.9],
                                        by=["l_returnflag"]).spark_df
-        return _tag(wpg, "wpctg",
-                    F.col("l_returnflag").alias("s1"),
-                    F.col("n").cast("bigint").alias("i1"),
-                    _BNULL().alias("i2"),
-                    F.col("p50").cast("double").alias("d1"),
-                    F.col("p90").cast("double").alias("d2"),
-                    _DNULL().alias("d3"), _DNULL().alias("d4"))
+        return wpg
 
     # all eight branches derive from the one shared checkpointed
     # projection — build them on a pool (guide §2.6; plan construction
     # is py4j latency, not compute)
-    from concurrent.futures import ThreadPoolExecutor
-    builders = [("s", _b_spearman), ("mwt", _b_mannwhitney),
-                ("aut", _b_auc), ("kt", _b_kendall),
-                ("tht", _b_theilsen), ("mit", _b_mutualinfo),
-                ("wpt", _b_wpct), ("wpgt", _b_wpctg)]
-    with ThreadPoolExecutor(max_workers=8) as pool:
-        futs = {k: pool.submit(fn) for k, fn in builders}
-        out = {k: f.result() for k, f in futs.items()}
-    s, mwt, aut, kt = out["s"], out["mwt"], out["aut"], out["kt"]
-    tht, mit, wpt, wpgt = (out["tht"], out["mit"], out["wpt"],
-                           out["wpgt"])
-    return (s.unionByName(mwt).unionByName(aut).unionByName(kt)
-            .unionByName(tht).unionByName(mit).unionByName(wpt)
-            .unionByName(wpgt))
+    return _build_on_pool({
+        "spearman": _b_spearman, "mannwhitney": _b_mannwhitney,
+        "auc": _b_auc, "kendall": _b_kendall, "theilsen": _b_theilsen,
+        "mutualinfo": _b_mutualinfo, "wpct": _b_wpct, "wpctg": _b_wpctg})
 
 
-def q_x_bm25(spark, sf_dir):
-    """Full-text search composite: Okapi BM25 scoring, exact-phrase
-    search (zero-shuffle array adjacency scan), top-10 inverted-index
-    term stats, and KWIC context snippets per phrase occurrence, in
-    one tagged union."""
+def q_x_bm25_scores(spark, sf_dir):
+    """Okapi BM25 scoring of a three-term query."""
     docs = _t(spark, sf_dir, "documents")
-    bm = TS.bm25_scores(docs, ["table", "window", "spark"]).spark_df
-    a = _tag(bm, "bm25",
-             _SNULL().alias("s1"),
-             F.col("doc_id").cast("bigint").alias("i1"),
-             F.col("n_terms_hit").cast("bigint").alias("i2"),
-             _BNULL().alias("i3"),
-             F.col("score").cast("double").alias("d1"))
-    ph = TS.phrase_search(docs, "fast table").spark_df
-    b = _tag(ph, "phrase",
-             _SNULL().alias("s1"),
-             F.col("doc_id").cast("bigint").alias("i1"),
-             F.col("n_hits").cast("bigint").alias("i2"),
-             F.col("first_pos").cast("bigint").alias("i3"),
-             _DNULL().alias("d1"))
-    st = TS.postings_stats(docs, k=10).spark_df
-    c = _tag(st, "postings",
-             F.col("term").alias("s1"),
-             F.col("df").cast("bigint").alias("i1"),
-             F.col("cf").cast("bigint").alias("i2"),
-             F.col("rank").cast("bigint").alias("i3"),
-             _DNULL().alias("d1"))
-    sn = TS.phrase_snippets(docs, "fast table", window=3).spark_df
-    d = _tag(sn, "snippets",
-             F.col("snippet").alias("s1"),
-             F.col("doc_id").cast("bigint").alias("i1"),
-             _BNULL().alias("i2"),
-             F.col("pos").cast("bigint").alias("i3"),
-             _DNULL().alias("d1"))
-    return a.unionByName(b).unionByName(c).unionByName(d)
+    return TS.bm25_scores(docs, ["table", "window", "spark"]).spark_df
 
 
-def q_x_embed_quantize(spark, sf_dir):
-    """Embedding compression composite: symmetric int8 quantization
-    (per-vector scale + checksums + L2 recon error) and product
-    quantization (4x4 deterministic codebooks, per-subspace argmin
-    codes + recon error), one tagged union."""
+def q_x_phrase_search(spark, sf_dir):
+    """Exact-phrase search (zero-shuffle array adjacency scan)."""
+    docs = _t(spark, sf_dir, "documents")
+    return TS.phrase_search(docs, "fast table").spark_df
+
+
+def q_x_postings_stats(spark, sf_dir):
+    """Top-10 inverted-index term stats."""
+    return TS.postings_stats(_t(spark, sf_dir, "documents"),
+                             k=10).spark_df
+
+
+def q_x_phrase_snippets(spark, sf_dir):
+    """KWIC context snippets per phrase occurrence."""
+    docs = _t(spark, sf_dir, "documents")
+    return TS.phrase_snippets(docs, "fast table", window=3).spark_df
+
+
+def q_x_embed_int8(spark, sf_dir):
+    """Symmetric int8 quantization: per-vector scale + checksums + L2
+    recon error."""
+    return SIM.quantize_embeddings(_t(spark, sf_dir, "embeddings")).spark_df
+
+
+def q_x_pq_encode(spark, sf_dir):
+    """Product quantization (4x4 deterministic codebooks): per-subspace
+    argmin codes c0..c3 + recon error."""
     emb = _t(spark, sf_dir, "embeddings")
-    out = SIM.quantize_embeddings(emb).spark_df
-    a = _tag(out, "int8",
-             F.col("vec_id").cast("bigint").alias("vec_id"),
-             F.col("q_sum").cast("bigint").alias("i1"),
-             F.col("q_absmax").cast("bigint").alias("i2"),
-             _BNULL().alias("i3"), _BNULL().alias("i4"),
-             F.col("scale").cast("double").alias("d1"),
-             F.col("l2_err").cast("double").alias("d2"))
-    pq = SIM.pq_encode(emb, dim=64, m=4, k=4).spark_df
-    b = _tag(pq, "pq",
-             F.col("vec_id").cast("bigint").alias("vec_id"),
-             F.element_at("codes", 1).cast("bigint").alias("i1"),
-             F.element_at("codes", 2).cast("bigint").alias("i2"),
-             F.element_at("codes", 3).cast("bigint").alias("i3"),
-             F.element_at("codes", 4).cast("bigint").alias("i4"),
-             F.col("recon_err").cast("double").alias("d1"),
-             _DNULL().alias("d2"))
-    # Johnson-Lindenstrauss 64->8 projection: first two renormed
-    # coordinates + positive-coordinate count, hash-checked against
-    # the literal-plane DuckDB twin
+    return SIM.pq_encode(emb, dim=64, m=4, k=4).spark_df.select(
+        "vec_id", "recon_err",
+        *[F.element_at("codes", i + 1).alias(f"c{i}") for i in range(4)])
+
+
+def q_x_jl_projection(spark, sf_dir):
+    """Johnson-Lindenstrauss 64->8 projection: first two renormed
+    coordinates + positive-coordinate count, hash-checked against the
+    literal-plane DuckDB twin."""
+    emb = _t(spark, sf_dir, "embeddings")
     jp = SIM.random_projection(emb, dim=64, out_dim=8).spark_df
-    c = _tag(jp, "jlproj",
-             F.col("vec_id").cast("bigint").alias("vec_id"),
-             F.size(F.filter(F.col("proj"), lambda x: x > 0))
-             .cast("bigint").alias("i1"),
-             _BNULL().alias("i2"), _BNULL().alias("i3"),
-             _BNULL().alias("i4"),
-             F.element_at("proj", 1).cast("double").alias("d1"),
-             F.element_at("proj", 2).cast("double").alias("d2"))
-    return a.unionByName(b).unionByName(c)
+    return jp.select(
+        "vec_id", F.size(F.filter("proj", lambda x: x > 0)).alias("npos"),
+        F.element_at("proj", 1).alias("p0"),
+        F.element_at("proj", 2).alias("p1"))
+
+
+# ===========================================================================
+# composite part table — the correctness gate checks at most the first
+# 50 registry entries, so operator families with compatible result
+# shapes are verified through ONE tagged union each. A composite declares
+# its output schema once (Spark DDL, ``part`` first) and, per part: the
+# tag, the Spark builder, the part's DuckDB SQL, and a map from output
+# column to source column (or an SQL literal / cast both dialects read
+# alike); an unmapped column is a typed NULL. The schema supplies every
+# cast and every NULL pad, so the Spark projection (one ``selectExpr``
+# per part) and the oracle's ``UNION ALL`` projection are the same text.
+# A builder returns the part's DataFrame, or ``{tag: DataFrame}`` when
+# several parts share a substrate (a checkpointed profile, a DML history,
+# a build pool): parts naming the same builder run it once per build.
+# ===========================================================================
+
+class _Part(NamedTuple):
+    tag: str
+    build: Callable        # (spark, sf_dir) -> DataFrame | {tag: DataFrame}
+    sql: str               # DuckDB query producing the mapped source columns
+    cols: dict             # output column -> source column / SQL literal
+
+
+class _Composite(NamedTuple):
+    schema: str            # output schema as a Spark DDL string
+    parts: tuple
+
+
+def _composite(schema: str, *parts: tuple) -> _Composite:
+    """A composite from its schema and ``(tag, build, sql, cols)`` rows."""
+    comp = _Composite(schema, tuple(_Part(*p) for p in parts))
+    assert _columns(comp)[0] == ("part", "STRING"), schema
+    return comp
+
+
+def _columns(comp: _Composite) -> list[tuple[str, str]]:
+    return [tuple(f.split()) for f in
+            re.split(r",\s*(?![^()]*\))", comp.schema)]
+
+
+def _projection(comp: _Composite, part: _Part) -> list[str]:
+    """The tagged, fully-cast select list of one part — valid Spark SQL
+    and DuckDB alike."""
+    return [f"'{part.tag}' AS part"] + [
+        f"CAST({part.cols.get(name, 'NULL')} AS {typ}) AS {name}"
+        for name, typ in _columns(comp)[1:]]
+
+
+def _part_frames(comp: _Composite, spark, sf_dir, parts) -> list:
+    """The projected frame of each of *parts*; a builder shared by
+    several of them runs once."""
+    built: dict = {}
+    out = []
+    for p in parts:
+        if p.build not in built:
+            built[p.build] = p.build(spark, sf_dir)
+        df = built[p.build]
+        df = df[p.tag] if isinstance(df, dict) else df
+        out.append(df.selectExpr(*_projection(comp, p)))
+    return out
+
+
+def _composite_query(name: str):
+    """Registry callable building every part of composite *name*."""
+    def run(spark, sf_dir):
+        comp = _COMPOSITES[name]
+        return reduce(DataFrame.unionByName,
+                      _part_frames(comp, spark, sf_dir, comp.parts))
+    return run
+
+
+def _part_query(name: str, part: _Part):
+    """Callable building ONE part of composite *name* (its builder only)."""
+    def run(spark, sf_dir):
+        return _part_frames(_COMPOSITES[name], spark, sf_dir, [part])[0]
+    return run
+
+
+def _composite_sql(comp: _Composite) -> str:
+    return "\nUNION ALL\n".join(
+        f"SELECT {', '.join(_projection(comp, p))} FROM ({p.sql})"
+        for p in comp.parts)
+
+
+#: tagged-union composites, filled next to their part oracles below
+_COMPOSITES: dict[str, _Composite] = {}
+
+#: the streaming entries' composites stay out of ``_TAGGED_PARTS``:
+#: bench attribution times their stream functions directly (see
+#: query_parts) and the part-tag test does not start their streams
+_STREAMING = ("st_windows", "st_stateful", "st_dedup")
 
 
 # ===========================================================================
@@ -4980,63 +3774,63 @@ def q_x_embed_quantize(spark, sf_dir):
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """50 entries — exactly the driver checker's 50-row cap, so EVERY
     registered query gets a CORRECTNESS row. Composite entries verify
-    several operators at once (see the composite section above); SURVEY
+    several operators at once (see the composite part table); SURVEY
     §2.4 maps each operator to its registry key."""
     return {
         # Tier R (reference contract, SURVEY §2.1)
-        "r_construct_roundtrips": q_r_construct_roundtrips,
+        "r_construct_roundtrips": _composite_query("r_construct_roundtrips"),
         "r_shape_meta": q_r_shape_meta,
-        "r_select_positional": q_r_select_positional,
+        "r_select_positional": _composite_query("r_select_positional"),
         "r_slice_mask": q_r_slice_mask,
-        "r_map_mutate": q_r_map_mutate,
-        "r_summary_all": q_r_summary_all,
+        "r_map_mutate": _composite_query("r_map_mutate"),
+        "r_summary_all": _composite_query("r_summary_all"),
         # Tier S (relational completion, SURVEY §2.2)
-        "s_join_agg": q_s_join_agg,
-        "s_join_semi_anti": q_s_join_semi_anti,
-        "s_group_sets": q_s_group_sets,
+        "s_join_agg": _composite_query("s_join_agg"),
+        "s_join_semi_anti": _composite_query("s_join_semi_anti"),
+        "s_group_sets": _composite_query("s_group_sets"),
         "s_group_quantiles": q_s_group_quantiles,
         "s_window_topk_per_group": q_s_window_topk_per_group,
         "s_window_running_lag": q_s_window_running_lag,
-        "s_window_range_trailing": q_s_window_range_trailing,
+        "s_window_range_trailing": _composite_query("s_window_range_trailing"),
         "s_sort_topk": q_s_sort_topk,
-        "s_set_ops": q_s_set_ops,
-        "s_pivot_unpivot": q_s_pivot_unpivot,
-        "s_time_rollup": q_s_time_rollup,
-        "s_asof": q_s_asof,
-        "s_range_joins": q_s_range_joins,
-        "s_skew_udaf": q_s_skew_udaf,
-        "s_functions": q_s_functions,
-        "s_source_roundtrip": q_s_source_roundtrip,
-        "s_merge_upsert": q_s_merge_upsert,
+        "s_set_ops": _composite_query("s_set_ops"),
+        "s_pivot_unpivot": _composite_query("s_pivot_unpivot"),
+        "s_time_rollup": _composite_query("s_time_rollup"),
+        "s_asof": _composite_query("s_asof"),
+        "s_range_joins": _composite_query("s_range_joins"),
+        "s_skew_udaf": _composite_query("s_skew_udaf"),
+        "s_functions": _composite_query("s_functions"),
+        "s_source_roundtrip": _composite_query("s_source_roundtrip"),
+        "s_merge_upsert": _composite_query("s_merge_upsert"),
         "s_udtf_tokens": q_s_udtf_tokens,
-        "s_funnel": q_s_funnel,
-        "s_approx_sketches": q_s_approx_sketches,
-        "s_sessionize": q_s_sessionize,
-        "s_stats": q_s_stats,
-        "s_stats_rank": q_s_stats_rank,
+        "s_funnel": _composite_query("s_funnel"),
+        "s_approx_sketches": _composite_query("s_approx_sketches"),
+        "s_sessionize": _composite_query("s_sessionize"),
+        "s_stats": _composite_query("s_stats"),
+        "s_stats_rank": _composite_query("s_stats_rank"),
         # Tier X (LLM-pipeline extensions, SURVEY §2.3)
-        "x_dedup": q_x_dedup,
-        "x_ngram_jaccard": q_x_ngram_jaccard_all,
+        "x_dedup": _composite_query("x_dedup"),
+        "x_ngram_jaccard": _composite_query("x_ngram_jaccard"),
         "x_minhash_neardup": q_x_minhash_neardup,
-        "x_embed_neardup": q_x_embed_neardup,
-        "x_cosine_search": q_x_cosine_search,
-        "x_cluster_assign": q_x_cluster_assign,
+        "x_embed_neardup": _composite_query("x_embed_neardup"),
+        "x_cosine_search": _composite_query("x_cosine_search"),
+        "x_cluster_assign": _composite_query("x_cluster_assign"),
         "x_embed_centroid": q_x_embed_centroid,
         "x_text_stats": q_x_text_stats,
-        "x_term_weights": q_x_term_weights,
-        "x_hash_sampling": q_x_hash_sampling,
-        "x_chunk_pack": q_x_chunk_pack,
+        "x_term_weights": _composite_query("x_term_weights"),
+        "x_hash_sampling": _composite_query("x_hash_sampling"),
+        "x_chunk_pack": _composite_query("x_chunk_pack"),
         "x_pipeline_filter": q_x_pipeline_filter,
-        "x_dedup_clusters": q_x_dedup_clusters,
-        "x_media": q_x_media,
-        "x_curation_scrub": q_x_curation_scrub,
-        "x_bm25": q_x_bm25,
-        "x_embed_quantize": q_x_embed_quantize,
-        "s_layout_prune": q_s_layout_prune,
+        "x_dedup_clusters": _composite_query("x_dedup_clusters"),
+        "x_media": _composite_query("x_media"),
+        "x_curation_scrub": _composite_query("x_curation_scrub"),
+        "x_bm25": _composite_query("x_bm25"),
+        "x_embed_quantize": _composite_query("x_embed_quantize"),
+        "s_layout_prune": _composite_query("s_layout_prune"),
         # streaming
-        "st_windows": q_st_windows,
-        "st_stateful": q_st_stateful,
-        "st_dedup": q_st_dedup,
+        "st_windows": _composite_query("st_windows"),
+        "st_stateful": _composite_query("st_stateful"),
+        "st_dedup": _composite_query("st_dedup"),
     }
 
 
@@ -5049,104 +3843,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 ROWS_ONLY: set[str] = set()
 
 
-def _part_filter(fn, pname: str):
-    """Callable running ONE part of a tagged-union composite: filtering
-    on the literal ``part`` tag constant-folds every other branch to an
-    empty relation (ConstantFolding + PruneFilters), so the timed plan
-    is exactly that part's subtree."""
-    def run(spark, sf_dir):
-        return fn(spark, sf_dir).where(F.col("part") == pname)
-    return run
-
-
-#: part tags per tagged-union composite (bench attribution)
-_TAGGED_PARTS: dict[str, list[str]] = {
-    "r_construct_roundtrips": ["construct", "alist_plist", "matrix",
-                               "column_get_set", "map_columns",
-                               "rename"],
-    "r_select_positional": ["columns_select", "slice_positional"],
-    "r_map_mutate": ["map_rows", "map_df", "add_replace",
-                     "copy_isolation", "na_fill", "na_drop",
-                     "na_replace"],
-    "s_join_agg": ["broadcast", "fact"],
-    "s_join_semi_anti": ["semi", "anti", "bloom"],
-    "s_group_sets": ["rollup", "cube", "gsets"],
-    "s_set_ops": ["except", "intersect_union", "distinct"],
-    "s_time_rollup": ["rollup", "resample", "linear", "seasonal"],
-    "s_asof": ["keyed", "unkeyed", "nearest"],
-    "s_range_joins": ["broadcast", "bucketed", "overlap"],
-    "s_skew_udaf": ["salted", "udaf", "grouped_map", "skewreport"],
-    "s_functions": ["scalar", "collection", "scaling"],
-    "s_source_roundtrip": ["roundtrip", "zorder", "checksum",
-                           "widen"],
-    "s_merge_upsert": ["merge", "scd2", "incr", "diff", "pit", "apply",
-                       "mvmid", "mvread", "mvjoin", "mvstar",
-                       "mvdistinct", "mvexpr"],
-    "s_funnel": ["funnel", "retention", "attribution"],
-    "s_sessionize": ["sessions", "transitions", "islands", "paths"],
-    "r_summary_all": ["quantiles", "freq", "bits", "hist", "hist2d", "fk",
-                      "profile", "benford"],
-    "s_approx_sketches": ["hll", "theta", "kll", "freq", "setops"],
-    "s_stats": ["moments", "corrmatrix", "regression", "regression2",
-                "crosstab", "chisq", "freq", "bins", "outliers", "mad",
-                "welch", "anova", "winsor", "cramer", "kappa", "psi",
-                "targetenc", "bootstrap", "mahala", "partialcorr"],
-    "s_stats_rank": ["spearman", "mannwhitney", "kendall", "auc",
-                     "mutualinfo", "theilsen", "wpct", "wpctg"],
-    "s_pivot_unpivot": ["pivot", "unpivot"],
-    "s_window_range_trailing": ["trailing", "zscore", "ewma", "holt",
-                                "cusum", "distinct7", "rollmed",
-                                "acf"],
-    "x_dedup": ["exact", "normalized", "spans", "selfspans",
-                "keepbest"],
-    "x_ngram_jaccard": ["blocked", "global", "editdist", "simhash", "linkage",
-                        "containment"],
-    "x_embed_neardup": ["pairs", "semdedup"],
-    "x_cosine_search": ["topk", "join_topk", "ivf_topk", "ann_lsh",
-                        "recall"],
-    "x_cluster_assign": ["ivf", "kmeans"],
-    "x_term_weights": ["tfidf", "count_vectorize", "colloc", "tfcos"],
-    "x_hash_sampling": ["sample", "split", "weighted", "mix",
-                        "pergroup", "negatives", "kfold"],
-    "x_bm25": ["bm25", "phrase", "postings", "snippets"],
-    "x_embed_quantize": ["int8", "pq", "jlproj"],
-    "x_dedup_clusters": ["cc", "pagerank", "triangles", "bfs"],
-    "x_chunk_pack": ["chunk", "pack", "chunk_sent"],
-    "x_media": ["dedup", "frames", "audiometa", "gifpix", "pngpix",
-                "resizepix"],
-    "x_curation_scrub": ["decontaminate", "pii", "expect", "blocklist",
-                         "url", "urldedup", "domcap", "tempw",
-                         "tempsamp", "fuzzydecon", "qualclf",
-                         "cardpii"],
-    "s_layout_prune": ["zprune", "hprune", "compact", "partitioned",
-                       "snapshot", "snapprune", "snapin",
-                       "snapdelete", "snapdv", "snapcdc",
-                       "snapera", "snapbloom", "snaphp", "snapcnt"],
-}
-
-
 def query_parts() -> dict[str, dict[str, Callable]]:
     """Per-part callables for the composite registry entries, keyed
     entry -> part -> (spark, sf_dir) -> DataFrame. ``bench.py`` times
     these individually (stderr) for any entry whose wall exceeds its
     attribution threshold, so a composite's number decomposes into its
     operators round-over-round. Join-shaped composites (x_text_stats)
-    list their building-block query functions; streaming composites are
-    omitted (each part call would start real streams again)."""
-    qs = queries()
-    out = {entry: {p: _part_filter(qs[entry], p) for p in parts}
-           for entry, parts in _TAGGED_PARTS.items()}
-    # s_merge_upsert splits into its two independent builders: a
-    # relational part must not pay the matview DML history (and vice
-    # versa) just to be timed
-    out["s_merge_upsert"] = {
-        **{p: _part_filter(_merge_upsert_base, p)
-           for p in ("merge", "scd2", "incr", "diff", "pit",
-                     "apply")},
-        **{p: _part_filter(_matview_parts, p)
-           for p in ("mvmid", "mvread", "mvjoin", "mvstar",
-                     "mvdistinct", "mvexpr")},
-    }
+    list their building-block query functions, the stream composites
+    their unprojected stream functions; st_windows is omitted."""
+    out = {entry: {p.tag: _part_query(entry, p)
+                   for p in _COMPOSITES[entry].parts}
+           for entry in _TAGGED_PARTS}
     out["x_text_stats"] = {
         "quality": q_x_text_quality,
         "lang_id": q_x_lang_id,
@@ -5159,20 +3866,10 @@ def query_parts() -> dict[str, dict[str, Callable]]:
         "nll": lambda spark, sf_dir: TS.unigram_logprob_scores(
             _t(spark, sf_dir, "documents")).spark_df,
     }
-    # streaming composite: each part callable runs ITS OWN real stream
-    # (a tag filter over the composite would restart all three), so the
-    # bench clock decomposes st_dedup into its stream plans
-    out["st_dedup"] = {
-        "dedup": q_st_dedup_only,
-        "ss_join": q_st_ss_join,
-        "static_join": q_st_static_join,
-        "snapsink": q_st_snapsink_only,
-        "snapsrc": q_st_snapsrc_only,
-    }
-    out["st_stateful"] = {
-        "totals": q_st_totals_only,
-        "holt": q_st_holt_only,
-    }
+    # streaming composites: each part callable runs ITS OWN real stream,
+    # so the bench clock decomposes them into their stream plans
+    out["st_dedup"] = dict(_ST_DEDUP_STREAMS)
+    out["st_stateful"] = dict(_ST_STATEFUL_STREAMS)
     return out
 
 
@@ -5294,8 +3991,6 @@ _ORACLES: dict[str, str] = {
     "r_slice_mask": """
         SELECT l_orderkey, l_linenumber, l_quantity, l_discount
         FROM lineitem WHERE l_quantity > 40 AND l_discount < 0.02""",
-    "r_count_rows": """
-        SELECT count(*)::BIGINT AS n FROM lineitem WHERE l_returnflag = 'A'""",
     "r_map_rows": """
         SELECT l_orderkey, l_linenumber,
                l_extendedprice * (1.0 - l_discount) AS revenue
@@ -5314,45 +4009,14 @@ _ORACLES: dict[str, str] = {
         SELECT * FROM region UNION ALL SELECT * FROM region""",
     "r_matrix_df": """
         SELECT n_nationkey, n_regionkey FROM nation""",
-    "r_keys_dims": """
-        SELECT 'n_nationkey,n_name,n_regionkey' AS keys,
-               count(*)::BIGINT AS collen, count(*)::BIGINT AS nrow,
-               3::BIGINT AS ncol, count(*)::BIGINT AS d0, 3::BIGINT AS d1
-        FROM nation""",
     "r_column_get_set": """
         SELECT r_regionkey, lower(r_name) AS r_name FROM region""",
     "r_map_columns": """
         SELECT n_nationkey * 2 + 1 AS n_nationkey,
                n_regionkey * 2 + 1 AS n_regionkey
         FROM nation""",
-    "r_datavector_slice": """
-        SELECT c_custkey, c_name, c_acctbal FROM customer
-        ORDER BY c_custkey LIMIT 1""",
-    "r_do_rows": """
-        SELECT count(*)::BIGINT AS n, sum(r_regionkey)::BIGINT AS total
-        FROM region""",
     "r_copy_isolation": """
         SELECT p_partkey, p_size FROM part""",
-    "r_errors": """
-        SELECT * FROM (VALUES ('KeyNotFound', true), ('DuplicateKey', true),
-                              ('ColumnLengthMismatch', true))
-            AS t(error, ok)""",
-    "r_summary_quantiles": """
-        SELECT count(l_extendedprice)::BIGINT AS n,
-               min(l_extendedprice) AS min,
-               quantile_cont(l_extendedprice, 0.25) AS q25,
-               quantile_cont(l_extendedprice, 0.50) AS q50,
-               quantile_cont(l_extendedprice, 0.75) AS q75,
-               max(l_extendedprice) AS max
-        FROM lineitem""",
-    "r_summary_freq": """
-        SELECT l_returnflag AS value, count(*)::BIGINT AS cnt
-        FROM lineitem GROUP BY 1""",
-    "r_summary_bits": """
-        SELECT count(*)::BIGINT AS length,
-               sum(CASE WHEN l_discount > 0.05 THEN 1 ELSE 0 END)::BIGINT
-                   AS ones
-        FROM lineitem""",
     "s_join_broadcast": """
         SELECT r_name, count(*)::BIGINT AS n_customers,
                (sum(c_acctbal::DECIMAL(18,2)))::DOUBLE AS total_acctbal
@@ -5380,20 +4044,6 @@ _ORACLES: dict[str, str] = {
                    row_number() OVER (PARTITION BY o_custkey
                        ORDER BY o_totalprice DESC, o_orderkey ASC) AS rn
             FROM orders) WHERE rn <= 3""",
-    "s_window_running": """
-        SELECT o_custkey, o_orderkey,
-               (sum(o_totalprice::DECIMAL(18,2)) OVER (
-                   PARTITION BY o_custkey
-                   ORDER BY o_orderdate ASC, o_orderkey ASC
-                   ROWS UNBOUNDED PRECEDING))::DOUBLE AS running_total
-        FROM orders""",
-    "s_window_lag": """
-        SELECT o_custkey, o_orderkey,
-               lag(o_totalprice) OVER w AS prev_price,
-               lead(o_orderstatus) OVER w AS next_status
-        FROM orders
-        WINDOW w AS (PARTITION BY o_custkey
-                     ORDER BY o_orderdate ASC, o_orderkey ASC)""",
     "s_sort_topk": """
         SELECT l_orderkey, l_linenumber, l_extendedprice FROM lineitem
         ORDER BY l_extendedprice DESC, l_orderkey ASC, l_linenumber ASC
@@ -5865,315 +4515,6 @@ _ORACLES: dict[str, str] = {
         WITH t AS (SELECT doc_id, {_TOKS} AS tk FROM documents),
         e AS (SELECT doc_id, tk, unnest(range(1, len(tk) + 1)) AS i FROM t)
         SELECT doc_id, (i - 1)::INT AS pos, tk[i] AS word FROM e""",
-    "s_merge_upsert": """
-        WITH delta AS (
-            SELECT o_orderkey, o_totalprice + 1.5 AS o_totalprice
-            FROM orders WHERE o_orderkey % 10 = 0
-            UNION ALL
-            SELECT o_orderkey + 90000000, 42.0
-            FROM orders WHERE o_orderkey % 1000 = 1)
-        SELECT 'merge' AS part,
-               coalesce(t.o_orderkey, s.o_orderkey)::BIGINT AS k1,
-               t.o_custkey::BIGINT AS k2,
-               (CASE WHEN s.o_orderkey IS NOT NULL THEN s.o_totalprice
-                     ELSE t.o_totalprice END)::DOUBLE AS v,
-               NULL::VARCHAR AS s1, NULL::BIGINT AS vf,
-               NULL::BIGINT AS vt, NULL::INT AS cur
-        FROM orders t FULL JOIN delta s ON t.o_orderkey = s.o_orderkey
-        UNION ALL
-        SELECT 'scd2', k1, k2, v, s1, vf, vt, cur FROM (
-            WITH flg AS (
-                SELECT o_custkey AS k, o_orderdate AS ts,
-                       o_orderkey AS id, o_orderstatus AS st,
-                       CASE WHEN lag(o_orderdate) OVER w IS NULL
-                                 OR o_orderstatus IS DISTINCT FROM
-                                    lag(o_orderstatus) OVER w
-                            THEN 1 ELSE 0 END AS chg
-                FROM orders
-                WINDOW w AS (PARTITION BY o_custkey
-                             ORDER BY o_orderdate, o_orderkey)),
-            kept AS (SELECT * FROM flg WHERE chg = 1)
-            SELECT k::BIGINT AS k1,
-                   (row_number() OVER w2)::BIGINT AS k2,
-                   NULL::DOUBLE AS v, st AS s1,
-                   epoch_us(ts)::BIGINT AS vf,
-                   epoch_us(lead(ts) OVER w2)::BIGINT AS vt,
-                   (lead(ts) OVER w2 IS NULL)::INT AS cur
-            FROM kept WINDOW w2 AS (PARTITION BY k ORDER BY ts, id))
-        UNION ALL
-        SELECT 'pit', k1, k2, NULL::DOUBLE AS v, s1, vf, vt, cur FROM (
-            WITH flg2 AS (
-                SELECT o_custkey AS k, o_orderdate AS ts,
-                       o_orderkey AS id, o_orderstatus AS st,
-                       CASE WHEN lag(o_orderdate) OVER w IS NULL
-                                 OR o_orderstatus IS DISTINCT FROM
-                                    lag(o_orderstatus) OVER w
-                            THEN 1 ELSE 0 END AS chg
-                FROM orders
-                WINDOW w AS (PARTITION BY o_custkey
-                             ORDER BY o_orderdate, o_orderkey)),
-            kept2 AS (SELECT * FROM flg2 WHERE chg = 1),
-            hist AS (
-                SELECT k::BIGINT AS k1,
-                       (row_number() OVER w2)::BIGINT AS k2,
-                       st AS s1,
-                       epoch_us(ts)::BIGINT AS vf,
-                       epoch_us(lead(ts) OVER w2)::BIGINT AS vt,
-                       (lead(ts) OVER w2 IS NULL)::INT AS cur
-                FROM kept2 WINDOW w2 AS (PARTITION BY k
-                                         ORDER BY ts, id))
-            SELECT k1, k2, s1, vf, vt, cur FROM hist
-            WHERE vf <= epoch_us(TIMESTAMP '1998-06-15')
-              AND (vt IS NULL
-                   OR epoch_us(TIMESTAMP '1998-06-15') < vt))
-        UNION ALL
-        SELECT 'apply', k1, NULL::BIGINT AS k2, v, s1,
-               NULL::BIGINT AS vf, NULL::BIGINT AS vt, NULL::INT AS cur
-        FROM (
-            SELECT o_orderkey::BIGINT AS k1,
-                   (CASE WHEN o_orderkey % 10 = 0
-                         THEN o_totalprice + 1.5
-                         ELSE o_totalprice END)::DOUBLE AS v,
-                   o_orderstatus AS s1
-            FROM orders WHERE o_orderkey % 1000 <> 1
-            UNION ALL
-            SELECT (o_orderkey + 90000000)::BIGINT, 42.0::DOUBLE, 'X'
-            FROM orders WHERE o_orderkey % 1000 = 2)
-        UNION ALL
-        SELECT 'incr', o_custkey::BIGINT AS k1, count(*)::BIGINT AS k2,
-               (sum(o_totalprice::DECIMAL(28,6)))::DOUBLE AS v,
-               NULL::VARCHAR AS s1, NULL::BIGINT AS vf,
-               NULL::BIGINT AS vt, NULL::INT AS cur
-        FROM orders GROUP BY o_custkey
-        UNION ALL
-        SELECT 'diff', k1, NULL::BIGINT, NULL::DOUBLE, s1,
-               NULL::BIGINT, NULL::BIGINT, NULL::INT FROM (
-            WITH oldt AS (
-                SELECT o_orderkey,
-                       md5(concat_ws('|',
-                           coalesce(
-                               md5(o_totalprice::DECIMAL(18,2)::VARCHAR),
-                               'N'),
-                           coalesce(md5(o_orderstatus), 'N'))) AS ofp
-                FROM orders),
-            newt AS (
-                SELECT o_orderkey,
-                       md5(concat_ws('|',
-                           coalesce(md5((CASE WHEN o_orderkey % 10 = 0
-                                     THEN o_totalprice + 1.5
-                                     ELSE o_totalprice END)
-                               ::DECIMAL(18,2)::VARCHAR), 'N'),
-                           coalesce(md5(o_orderstatus), 'N'))) AS nfp
-                FROM orders WHERE o_orderkey % 1000 <> 1)
-            SELECT coalesce(o.o_orderkey, n.o_orderkey)::BIGINT AS k1,
-                   concat_ws('|',
-                       CASE WHEN o.o_orderkey IS NULL THEN 'insert'
-                            WHEN n.o_orderkey IS NULL THEN 'delete'
-                            ELSE 'update' END,
-                       coalesce(o.ofp, ''), coalesce(n.nfp, '')) AS s1
-            FROM oldt o FULL JOIN newt n ON o.o_orderkey = n.o_orderkey
-            WHERE o.o_orderkey IS NULL OR n.o_orderkey IS NULL
-               OR o.ofp <> n.nfp)
-        UNION ALL
-        -- mvmid: the materialized view after the append-only refresh
-        -- (source = the whole qty<=3 slice), long (flag|metric, v)
-        -- form; avg derives on both sides as exact-decimal-sum
-        -- ::DOUBLE / non-null count, so the doubles are bit-identical
-        SELECT 'mvmid', NULL::BIGINT AS k1, cnt::BIGINT AS k2, v, s1,
-               NULL::BIGINT AS vf, NULL::BIGINT AS vt, NULL::INT AS cur
-        FROM (
-            WITH g AS (
-                SELECT l_returnflag AS flag, count(*) AS cnt,
-                       sum(CAST(l_quantity AS DECIMAL(28,6)))::DOUBLE
-                           AS sum_q,
-                       sum(CAST(l_quantity AS DECIMAL(28,6)))::DOUBLE
-                           / count(l_quantity) AS avg_q,
-                       min(l_quantity)::DOUBLE AS min_q,
-                       max(l_quantity)::DOUBLE AS max_q
-                FROM lineitem WHERE l_quantity <= 3
-                GROUP BY l_returnflag)
-            SELECT cnt, flag || '|sum' AS s1, sum_q AS v FROM g
-            UNION ALL SELECT cnt, flag || '|avg', avg_q FROM g
-            UNION ALL SELECT cnt, flag || '|min', min_q FROM g
-            UNION ALL SELECT cnt, flag || '|max', max_q FROM g)
-        UNION ALL
-        -- mvread: the final view — band rows (orderkey <= cut)
-        -- deleted, returnflag R erased (its cnt=0 tombstone is
-        -- asserted engine-side)
-        SELECT 'mvread', NULL::BIGINT AS k1, cnt::BIGINT AS k2, v, s1,
-               NULL::BIGINT AS vf, NULL::BIGINT AS vt, NULL::INT AS cur
-        FROM (
-            WITH cutv AS (
-                SELECT floor(max(l_orderkey) / 4)::BIGINT AS c
-                FROM lineitem),
-            fin AS (
-                SELECT l_returnflag AS flag, l_quantity AS q
-                FROM lineitem
-                WHERE l_quantity <= 3
-                  AND l_orderkey > (SELECT c FROM cutv)
-                  AND l_returnflag <> 'R'),
-            g2 AS (
-                SELECT flag, count(*) AS cnt,
-                       sum(CAST(q AS DECIMAL(28,6)))::DOUBLE AS sum_q,
-                       sum(CAST(q AS DECIMAL(28,6)))::DOUBLE
-                           / count(q) AS avg_q,
-                       min(q)::DOUBLE AS min_q,
-                       max(q)::DOUBLE AS max_q
-                FROM fin GROUP BY flag)
-            SELECT cnt, flag || '|sum' AS s1, sum_q AS v FROM g2
-            UNION ALL SELECT cnt, flag || '|avg', avg_q FROM g2
-            UNION ALL SELECT cnt, flag || '|min', min_q FROM g2
-            UNION ALL SELECT cnt, flag || '|max', max_q FROM g2)
-        UNION ALL
-        -- mvjoin: the DELTA-JOIN materialized view (fact slice JOIN
-        -- the orders status dim, grouped by the DIM attribute) after
-        -- DML on BOTH tables: the fact band delete + R erase above,
-        -- and a dim band status flip to 'Z'
-        SELECT 'mvjoin', NULL::BIGINT AS k1, cnt::BIGINT AS k2, v, s1,
-               NULL::BIGINT AS vf, NULL::BIGINT AS vt, NULL::INT AS cur
-        FROM (
-            WITH cutj AS (
-                SELECT floor(max(l_orderkey) / 4)::BIGINT AS c
-                FROM lineitem),
-            cut2 AS (
-                SELECT floor(max(o_orderkey) * 3 / 4)::BIGINT AS c
-                FROM orders),
-            dimf AS (
-                SELECT o_orderkey,
-                       CASE WHEN o_orderkey > (SELECT c FROM cut2)
-                            THEN 'Z' ELSE o_orderstatus END AS flag
-                FROM orders),
-            finj AS (
-                SELECT d.flag, l.l_quantity AS q
-                FROM lineitem l JOIN dimf d
-                  ON l.l_orderkey = d.o_orderkey
-                WHERE l.l_quantity <= 3
-                  AND l.l_orderkey > (SELECT c FROM cutj)
-                  AND l.l_returnflag <> 'R'),
-            gj AS (
-                SELECT flag, count(*) AS cnt,
-                       sum(CAST(q AS DECIMAL(28,6)))::DOUBLE AS sum_q,
-                       sum(CAST(q AS DECIMAL(28,6)))::DOUBLE
-                           / count(q) AS avg_q,
-                       min(q)::DOUBLE AS min_q,
-                       max(q)::DOUBLE AS max_q
-                FROM finj GROUP BY flag)
-            SELECT cnt, flag || '|sum' AS s1, sum_q AS v FROM gj
-            UNION ALL SELECT cnt, flag || '|avg', avg_q FROM gj
-            UNION ALL SELECT cnt, flag || '|min', min_q FROM gj
-            UNION ALL SELECT cnt, flag || '|max', max_q FROM gj)
-        UNION ALL
-        -- mvstar: the 2-dim STAR view (fact slice JOIN orders-status
-        -- JOIN part-brand, grouped by BOTH dim attributes) after DML
-        -- on the fact AND both dims consumed in ONE refresh interval
-        -- (telescoping delta-join cross terms); key folds to
-        -- status#brand
-        SELECT 'mvstar', NULL::BIGINT AS k1, cnt::BIGINT AS k2, v, s1,
-               NULL::BIGINT AS vf, NULL::BIGINT AS vt, NULL::INT AS cur
-        FROM (
-            WITH cuts AS (
-                SELECT floor(max(l_orderkey) / 4)::BIGINT AS c
-                FROM lineitem),
-            cuts2 AS (
-                SELECT floor(max(o_orderkey) * 3 / 4)::BIGINT AS c
-                FROM orders),
-            cutsp AS (
-                SELECT floor(max(p_partkey) / 2)::BIGINT AS c
-                FROM part),
-            dimsf AS (
-                SELECT o_orderkey,
-                       CASE WHEN o_orderkey > (SELECT c FROM cuts2)
-                            THEN 'Z' ELSE o_orderstatus END AS st
-                FROM orders),
-            dimsp AS (
-                SELECT p_partkey,
-                       CASE WHEN p_partkey <= (SELECT c FROM cutsp)
-                            THEN 'ZZZ' ELSE p_brand END AS br
-                FROM part),
-            fins AS (
-                SELECT d.st || '#' || p.br AS flag,
-                       l.l_quantity AS q
-                FROM lineitem l
-                JOIN dimsf d ON l.l_orderkey = d.o_orderkey
-                JOIN dimsp p ON l.l_partkey = p.p_partkey
-                WHERE l.l_quantity <= 3
-                  AND l.l_orderkey > (SELECT c FROM cuts)
-                  AND l.l_returnflag <> 'R'),
-            gs AS (
-                SELECT flag, count(*) AS cnt,
-                       sum(CAST(q AS DECIMAL(28,6)))::DOUBLE AS sum_q,
-                       sum(CAST(q AS DECIMAL(28,6)))::DOUBLE
-                           / count(q) AS avg_q,
-                       min(q)::DOUBLE AS min_q,
-                       max(q)::DOUBLE AS max_q
-                FROM fins GROUP BY flag)
-            SELECT cnt, flag || '|sum' AS s1, sum_q AS v FROM gs
-            UNION ALL SELECT cnt, flag || '|avg', avg_q FROM gs
-            UNION ALL SELECT cnt, flag || '|min', min_q FROM gs
-            UNION ALL SELECT cnt, flag || '|max', max_q FROM gs)
-        UNION ALL
-        -- mvdistinct: exact per-flag COUNT(DISTINCT l_orderkey) /
-        -- SUM(DISTINCT) / AVG(DISTINCT) maintained incrementally via
-        -- the per-value multiplicity state (the band delete is the
-        -- mass last-occurrence case); sumd accumulates each distinct
-        -- value as DECIMAL(28,6) exactly, avgd = double(sumd)/cntd —
-        -- both sides derive from the same exact decimal
-        SELECT 'mvdistinct', NULL::BIGINT AS k1, cnt::BIGINT AS k2,
-               v, s1, NULL::BIGINT AS vf, NULL::BIGINT AS vt,
-               NULL::INT AS cur
-        FROM (
-            WITH cutd AS (
-                SELECT floor(max(l_orderkey) / 4)::BIGINT AS c
-                FROM lineitem),
-            find AS (
-                SELECT l_returnflag AS flag, l_orderkey AS ok
-                FROM lineitem
-                WHERE l_quantity <= 3
-                  AND l_orderkey > (SELECT c FROM cutd)
-                  AND l_returnflag <> 'R'),
-            gd AS (
-                SELECT flag, count(*) AS cnt,
-                       count(DISTINCT ok)::DOUBLE AS cd,
-                       sum(DISTINCT ok::DECIMAL(28,6))
-                           ::DECIMAL(38,6)::DOUBLE AS sd,
-                       sum(DISTINCT ok::DECIMAL(28,6))
-                           ::DECIMAL(38,6)::DOUBLE
-                           / count(DISTINCT ok) AS ad
-                FROM find GROUP BY flag)
-            SELECT cnt, flag || '|cntd' AS s1, cd AS v FROM gd
-            UNION ALL SELECT cnt, flag || '|sumd', sd FROM gd
-            UNION ALL SELECT cnt, flag || '|avgd', ad FROM gd)
-        UNION ALL
-        -- mvexpr: the EXPRESSION-keyed view (round 14) — GROUP BY
-        -- date_trunc('month', l_shipdate) declared as a derived key
-        -- (keys={"smonth": ...}), maintained across the same fact
-        -- DML history; the month folds to yyyy-MM on both sides
-        SELECT 'mvexpr', NULL::BIGINT AS k1, cnt::BIGINT AS k2, v, s1,
-               NULL::BIGINT AS vf, NULL::BIGINT AS vt, NULL::INT AS cur
-        FROM (
-            WITH cute AS (
-                SELECT floor(max(l_orderkey) / 4)::BIGINT AS c
-                FROM lineitem),
-            fine AS (
-                SELECT strftime(date_trunc('month', l_shipdate),
-                                '%Y-%m') AS flag,
-                       l_quantity AS q
-                FROM lineitem
-                WHERE l_quantity <= 3
-                  AND l_orderkey > (SELECT c FROM cute)
-                  AND l_returnflag <> 'R'),
-            ge AS (
-                SELECT flag, count(*) AS cnt,
-                       sum(CAST(q AS DECIMAL(28,6)))::DOUBLE AS sum_q,
-                       sum(CAST(q AS DECIMAL(28,6)))::DOUBLE
-                           / count(q) AS avg_q,
-                       min(q)::DOUBLE AS min_q,
-                       max(q)::DOUBLE AS max_q
-                FROM fine GROUP BY flag)
-            SELECT cnt, flag || '|sum' AS s1, sum_q AS v FROM ge
-            UNION ALL SELECT cnt, flag || '|avg', avg_q FROM ge
-            UNION ALL SELECT cnt, flag || '|min', min_q FROM ge
-            UNION ALL SELECT cnt, flag || '|max', max_q FROM ge)""",
     "s_sessionize": """
         WITH o AS (
             SELECT user_id, event_id, ts,
@@ -6306,7 +4647,6 @@ _ORACLES: dict[str, str] = {
                round(top_uni::DOUBLE / n_tokens, 6) AS top_unigram_frac,
                round(top_bi::DOUBLE / n_bigrams, 6) AS top_bigram_frac
         FROM us LEFT JOIN bs ON us.doc_id = bs.doc_id""",
-    "x_dedup_clusters": None,  # composite; assigned below _union/_wrap
     "x_hash_sample": """
         SELECT doc_id, lang FROM documents
         WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::UBIGINT
@@ -6438,37 +4778,27 @@ _ORACLES["x_kmeans_assign"] = _kmeans_oracle()
 
 
 # ---------------------------------------------------------------------------
-# composite oracles — built from the per-operator oracles above with the
-# SAME tags and casts as the composite Spark queries, so both engines
-# produce identical (column-name-sorted, value-hashed) results.
+# composite part table — one row per part: (tag, Spark builder, the part's
+# DuckDB SQL, output column -> source column); see _composite
 # ---------------------------------------------------------------------------
 
-def _wrap(tag: str, inner: str, select_list: str) -> str:
-    return f"SELECT '{tag}' AS part, {select_list} FROM ({inner})"
-
-
-def _union(*parts: str) -> str:
-    return "\nUNION ALL\n".join(parts)
-
-
-_ORACLES["r_construct_roundtrips"] = _union(
-    _wrap("construct", _ORACLES["r_construct_df"],
-          "r_regionkey::BIGINT AS i1, NULL::BIGINT AS i2, r_name AS s1"),
-    _wrap("alist_plist", _ORACLES["r_alist_plist"],
-          "r_regionkey::BIGINT AS i1, NULL::BIGINT AS i2, r_name AS s1"),
-    _wrap("matrix", _ORACLES["r_matrix_df"],
-          "n_nationkey::BIGINT AS i1, n_regionkey::BIGINT AS i2, "
-          "NULL::VARCHAR AS s1"),
-    _wrap("column_get_set", _ORACLES["r_column_get_set"],
-          "r_regionkey::BIGINT AS i1, NULL::BIGINT AS i2, r_name AS s1"),
-    _wrap("rename", """
+_COMPOSITES["r_construct_roundtrips"] = _composite(
+    "part STRING, i1 BIGINT, i2 BIGINT, s1 STRING",
+    ("construct", q_r_construct_df, _ORACLES["r_construct_df"],
+     {"i1": "r_regionkey", "s1": "r_name"}),
+    ("alist_plist", q_r_alist_plist, _ORACLES["r_alist_plist"],
+     {"i1": "r_regionkey", "s1": "r_name"}),
+    ("matrix", q_r_matrix_df, _ORACLES["r_matrix_df"],
+     {"i1": "n_nationkey", "i2": "n_regionkey"}),
+    ("column_get_set", q_r_column_get_set,
+     _ORACLES["r_column_get_set"],
+     {"i1": "r_regionkey", "s1": "r_name"}),
+    ("map_columns", q_r_map_columns, _ORACLES["r_map_columns"],
+     {"i1": "n_nationkey", "i2": "n_regionkey"}),
+    ("rename", q_r_rename_columns, """
         SELECT n_nationkey AS nation_id, n_regionkey,
                n_name AS nation_name FROM nation""",
-          "nation_id::BIGINT AS i1, n_regionkey::BIGINT AS i2, "
-          "nation_name AS s1"),
-    _wrap("map_columns", _ORACLES["r_map_columns"],
-          "n_nationkey::BIGINT AS i1, n_regionkey::BIGINT AS i2, "
-          "NULL::VARCHAR AS s1"))
+     {"i1": "nation_id", "i2": "n_regionkey", "s1": "nation_name"}))
 
 _ORACLES["r_shape_meta"] = """
     SELECT 'keys_dims' AS part, 'keys' AS k, NULL::BIGINT AS v_i,
@@ -6507,86 +4837,28 @@ def _profile_oracle_rows() -> str:
         # non-numeric mean rows are constant: FROM-less single row (a
         # bare NULL select FROM orders would fan out per source row)
         mean_row = (
-            f"SELECT 'profile', '{c}|mean', NULL::BIGINT, "
+            f"SELECT '{c}|mean', NULL::BIGINT, "
             f"round(avg({c}), 6), NULL::VARCHAR FROM orders"
             if c in _PROFILE_NUMERIC else
-            f"SELECT 'profile', '{c}|mean', NULL::BIGINT, "
+            f"SELECT '{c}|mean', NULL::BIGINT, "
             "NULL::DOUBLE, NULL::VARCHAR")
         selects += [
-            f"SELECT 'profile', '{c}|n_rows', count(*)::BIGINT, "
+            f"SELECT '{c}|n_rows', count(*)::BIGINT, "
             "NULL::DOUBLE, NULL::VARCHAR FROM orders",
-            f"SELECT 'profile', '{c}|n_null', "
+            f"SELECT '{c}|n_null', "
             f"sum(CASE WHEN {c} IS NULL THEN 1 ELSE 0 END)::BIGINT, "
             "NULL::DOUBLE, NULL::VARCHAR FROM orders",
-            f"SELECT 'profile', '{c}|n_distinct', "
+            f"SELECT '{c}|n_distinct', "
             f"count(DISTINCT {c})::BIGINT, NULL::DOUBLE, "
             "NULL::VARCHAR FROM orders",
-            f"SELECT 'profile', '{c}|min', NULL::BIGINT, NULL::DOUBLE, "
+            f"SELECT '{c}|min', NULL::BIGINT, NULL::DOUBLE, "
             f"min({c})::VARCHAR FROM orders",
-            f"SELECT 'profile', '{c}|max', NULL::BIGINT, NULL::DOUBLE, "
+            f"SELECT '{c}|max', NULL::BIGINT, NULL::DOUBLE, "
             f"max({c})::VARCHAR FROM orders",
             mean_row,
         ]
     return "\n    UNION ALL ".join(selects)
 
-
-_ORACLES["r_summary_all"] = """
-    SELECT 'quantiles' AS part, 'n' AS k,
-           count(l_extendedprice)::BIGINT AS v_i, NULL::DOUBLE AS v_d
-        FROM lineitem
-    UNION ALL SELECT 'quantiles', 'min', NULL,
-        min(l_extendedprice)::DOUBLE FROM lineitem
-    UNION ALL SELECT 'quantiles', 'q25', NULL,
-        quantile_cont(l_extendedprice, 0.25)::DOUBLE FROM lineitem
-    UNION ALL SELECT 'quantiles', 'q50', NULL,
-        quantile_cont(l_extendedprice, 0.50)::DOUBLE FROM lineitem
-    UNION ALL SELECT 'quantiles', 'q75', NULL,
-        quantile_cont(l_extendedprice, 0.75)::DOUBLE FROM lineitem
-    UNION ALL SELECT 'quantiles', 'max', NULL,
-        max(l_extendedprice)::DOUBLE FROM lineitem
-    UNION ALL SELECT 'freq', l_returnflag, count(*)::BIGINT, NULL
-        FROM lineitem GROUP BY l_returnflag
-    UNION ALL SELECT 'bits', 'length', count(*)::BIGINT, NULL FROM lineitem
-    UNION ALL SELECT 'bits', 'ones',
-        sum(CASE WHEN l_discount > 0.05 THEN 1 ELSE 0 END)::BIGINT, NULL
-        FROM lineitem
-    UNION ALL SELECT 'hist', bin::VARCHAR, n::BIGINT, lo::DOUBLE FROM (
-        WITH b AS (SELECT min(l_extendedprice) AS mn,
-                          max(l_extendedprice) AS mx FROM lineitem),
-        h AS (SELECT (CASE WHEN mx > mn
-                           THEN least(floor((l_extendedprice - mn)
-                                            / ((mx - mn) / 10.0)), 9)
-                           ELSE 0 END)::BIGINT AS bin, mn, mx
-              FROM lineitem CROSS JOIN b),
-        g AS (SELECT bin, count(*) AS n, min(mn) AS mn, min(mx) AS mx
-              FROM h GROUP BY bin)
-        SELECT bin,
-               round(mn + bin::DOUBLE * ((mx - mn) / 10.0), 6) AS lo,
-               n
-        FROM g)
-    UNION ALL SELECT 'hist2d', bx::VARCHAR || ':' || by::VARCHAR,
-        n::BIGINT, lo_x::DOUBLE FROM (
-        WITH b AS (SELECT min(l_quantity) AS mnx,
-                          max(l_quantity) AS mxx,
-                          min(l_extendedprice) AS mny,
-                          max(l_extendedprice) AS mxy FROM lineitem),
-        h AS (SELECT (CASE WHEN mxx > mnx
-                           THEN least(floor((l_quantity - mnx)
-                                            / ((mxx - mnx) / 5.0)), 4)
-                           ELSE 0 END)::BIGINT AS bx,
-                     (CASE WHEN mxy > mny
-                           THEN least(floor((l_extendedprice - mny)
-                                            / ((mxy - mny) / 5.0)), 4)
-                           ELSE 0 END)::BIGINT AS by,
-                     mnx, mxx
-              FROM lineitem CROSS JOIN b),
-        g AS (SELECT bx, by, count(*) AS n, min(mnx) AS mnx,
-                     min(mxx) AS mxx
-              FROM h GROUP BY bx, by)
-        SELECT bx, by,
-               round(mnx + bx::DOUBLE * ((mxx - mnx) / 5.0), 6) AS lo_x,
-               n
-        FROM g)"""
 
 #: Benford expectation array literal (log10(1 + 1/d), d = 1..9) —
 #: Python float reprs match the F.lit doubles the operator compiles
@@ -6607,11 +4879,11 @@ def _fk_oracle_rows() -> str:
     rows = []
     for ct, cc, pt, pc in pairs:
         rows.append(f"""
-        SELECT 'fk' AS part, '{cc}->{pc}' AS k,
-               (nc - nm)::BIGINT AS v_i,
-               round(nm::DOUBLE / nc::DOUBLE, 6) AS v_d,
+        SELECT '{cc}->{pc}' AS pair, nc - nm AS n_missing,
+               round(nm::DOUBLE / nc::DOUBLE, 6) AS containment,
                (CASE WHEN nm = nc AND pmax <= 1 THEN 'fk'
-                     WHEN nm > 0 THEN 'partial' ELSE 'none' END) AS v_s
+                     WHEN nm > 0 THEN 'partial' ELSE 'none' END)
+                   AS verdict
         FROM (
             SELECT (SELECT count(DISTINCT {cc}) FROM {ct}
                     WHERE {cc} IS NOT NULL) AS nc,
@@ -6626,14 +4898,356 @@ def _fk_oracle_rows() -> str:
     return "\n    UNION ALL".join(rows)
 
 
-_ORACLES["r_summary_all"] = f"""
-    SELECT part, k, v_i, v_d, NULL::VARCHAR AS v_s
-    FROM ({_ORACLES["r_summary_all"]})
-    UNION ALL {_profile_oracle_rows()}
-    UNION ALL
-    SELECT 'benford', digit::VARCHAR, n_obs::BIGINT,
-           chi2_term::DOUBLE, NULL::VARCHAR
-    FROM (
+#: the SCD2 status history of orders per customer (change rows only),
+#: shared by the scd2 and point-in-time parts of s_merge_upsert
+_SCD2_HIST_SQL = """
+    WITH flg AS (
+        SELECT o_custkey AS k, o_orderdate AS ts,
+               o_orderkey AS id, o_orderstatus AS st,
+               CASE WHEN lag(o_orderdate) OVER w IS NULL
+                         OR o_orderstatus IS DISTINCT FROM
+                            lag(o_orderstatus) OVER w
+                    THEN 1 ELSE 0 END AS chg
+        FROM orders
+        WINDOW w AS (PARTITION BY o_custkey
+                     ORDER BY o_orderdate, o_orderkey)),
+    kept AS (SELECT * FROM flg WHERE chg = 1)
+    SELECT k AS o_custkey, row_number() OVER w2 AS version,
+           st AS o_orderstatus, epoch_us(ts) AS vf,
+           epoch_us(lead(ts) OVER w2) AS vt,
+           lead(ts) OVER w2 IS NULL AS is_current
+    FROM kept WINDOW w2 AS (PARTITION BY k ORDER BY ts, id)"""
+_SCD2_COLS = {"k1": "o_custkey", "k2": "version", "s1": "o_orderstatus",
+               "vf": "vf", "vt": "vt", "cur": "is_current"}
+
+_MV_COLS = {"k2": "cnt", "v": "v", "s1": "s1"}
+
+_COMPOSITES["s_merge_upsert"] = _composite(
+    "part STRING, k1 BIGINT, k2 BIGINT, v DOUBLE, s1 STRING, vf BIGINT, "
+    "vt BIGINT, cur INT",
+    ("merge", _merge_upsert_base, """
+        WITH delta AS (
+            SELECT o_orderkey, o_totalprice + 1.5 AS o_totalprice
+            FROM orders WHERE o_orderkey % 10 = 0
+            UNION ALL
+            SELECT o_orderkey + 90000000, 42.0
+            FROM orders WHERE o_orderkey % 1000 = 1)
+        SELECT coalesce(t.o_orderkey, s.o_orderkey) AS o_orderkey,
+               t.o_custkey,
+               CASE WHEN s.o_orderkey IS NOT NULL THEN s.o_totalprice
+                    ELSE t.o_totalprice END AS o_totalprice
+        FROM orders t FULL JOIN delta s ON t.o_orderkey = s.o_orderkey""",
+     {"k1": "o_orderkey", "k2": "o_custkey", "v": "o_totalprice"}),
+    ("scd2", _merge_upsert_base, _SCD2_HIST_SQL,
+     _SCD2_COLS),
+    ("incr", _merge_upsert_base, """
+        SELECT o_custkey, count(*) AS cnt,
+               sum(o_totalprice::DECIMAL(28,6))::DOUBLE
+                   AS sum_o_totalprice
+        FROM orders GROUP BY o_custkey""",
+     {"k1": "o_custkey", "k2": "cnt", "v": "sum_o_totalprice"}),
+    ("diff", _merge_upsert_base, """
+        WITH oldt AS (
+            SELECT o_orderkey,
+                   md5(concat_ws('|',
+                       coalesce(
+                           md5(o_totalprice::DECIMAL(18,2)::VARCHAR),
+                           'N'),
+                       coalesce(md5(o_orderstatus), 'N'))) AS ofp
+            FROM orders),
+        newt AS (
+            SELECT o_orderkey,
+                   md5(concat_ws('|',
+                       coalesce(md5((CASE WHEN o_orderkey % 10 = 0
+                                 THEN o_totalprice + 1.5
+                                 ELSE o_totalprice END)
+                           ::DECIMAL(18,2)::VARCHAR), 'N'),
+                       coalesce(md5(o_orderstatus), 'N'))) AS nfp
+            FROM orders WHERE o_orderkey % 1000 <> 1)
+        SELECT coalesce(o.o_orderkey, n.o_orderkey) AS o_orderkey,
+               CASE WHEN o.o_orderkey IS NULL THEN 'insert'
+                    WHEN n.o_orderkey IS NULL THEN 'delete'
+                    ELSE 'update' END AS change_type,
+               o.ofp AS old_fp, n.nfp AS new_fp
+        FROM oldt o FULL JOIN newt n ON o.o_orderkey = n.o_orderkey
+        WHERE o.o_orderkey IS NULL OR n.o_orderkey IS NULL
+           OR o.ofp <> n.nfp""",
+     {"k1": "o_orderkey",
+      "s1": "concat_ws('|', change_type, coalesce(old_fp, ''), "
+            "coalesce(new_fp, ''))"}),
+    ("pit", _merge_upsert_base, f"""
+        SELECT * FROM ({_SCD2_HIST_SQL})
+        WHERE vf <= epoch_us(TIMESTAMP '1998-06-15')
+          AND (vt IS NULL OR epoch_us(TIMESTAMP '1998-06-15') < vt)""",
+     _SCD2_COLS),
+    ("apply", _merge_upsert_base, """
+        SELECT o_orderkey,
+               CASE WHEN o_orderkey % 10 = 0 THEN o_totalprice + 1.5
+                    ELSE o_totalprice END AS o_totalprice,
+               o_orderstatus
+        FROM orders WHERE o_orderkey % 1000 <> 1
+        UNION ALL
+        SELECT o_orderkey + 90000000, 42.0, 'X'
+        FROM orders WHERE o_orderkey % 1000 = 2""",
+     {"k1": "o_orderkey", "v": "o_totalprice", "s1": "o_orderstatus"}),
+    # mvmid: the materialized view after the append-only refresh
+    # (source = the whole qty<=3 slice), long (flag|metric, v)
+    # form; avg derives on both sides as exact-decimal-sum
+    # ::DOUBLE / non-null count, so the doubles are bit-identical
+    ("mvmid", _matview_parts, """
+            WITH g AS (
+                SELECT l_returnflag AS flag, count(*) AS cnt,
+                       sum(CAST(l_quantity AS DECIMAL(28,6)))::DOUBLE
+                           AS sum_q,
+                       sum(CAST(l_quantity AS DECIMAL(28,6)))::DOUBLE
+                           / count(l_quantity) AS avg_q,
+                       min(l_quantity)::DOUBLE AS min_q,
+                       max(l_quantity)::DOUBLE AS max_q
+                FROM lineitem WHERE l_quantity <= 3
+                GROUP BY l_returnflag)
+            SELECT cnt, flag || '|sum' AS s1, sum_q AS v FROM g
+            UNION ALL SELECT cnt, flag || '|avg', avg_q FROM g
+            UNION ALL SELECT cnt, flag || '|min', min_q FROM g
+            UNION ALL SELECT cnt, flag || '|max', max_q FROM g""",
+     _MV_COLS),
+    # mvread: the final view — band rows (orderkey <= cut)
+    # deleted, returnflag R erased (its cnt=0 tombstone is
+    # asserted engine-side)
+    ("mvread", _matview_parts, """
+            WITH cutv AS (
+                SELECT floor(max(l_orderkey) / 4)::BIGINT AS c
+                FROM lineitem),
+            fin AS (
+                SELECT l_returnflag AS flag, l_quantity AS q
+                FROM lineitem
+                WHERE l_quantity <= 3
+                  AND l_orderkey > (SELECT c FROM cutv)
+                  AND l_returnflag <> 'R'),
+            g2 AS (
+                SELECT flag, count(*) AS cnt,
+                       sum(CAST(q AS DECIMAL(28,6)))::DOUBLE AS sum_q,
+                       sum(CAST(q AS DECIMAL(28,6)))::DOUBLE
+                           / count(q) AS avg_q,
+                       min(q)::DOUBLE AS min_q,
+                       max(q)::DOUBLE AS max_q
+                FROM fin GROUP BY flag)
+            SELECT cnt, flag || '|sum' AS s1, sum_q AS v FROM g2
+            UNION ALL SELECT cnt, flag || '|avg', avg_q FROM g2
+            UNION ALL SELECT cnt, flag || '|min', min_q FROM g2
+            UNION ALL SELECT cnt, flag || '|max', max_q FROM g2""",
+     _MV_COLS),
+    # mvjoin: the DELTA-JOIN materialized view (fact slice JOIN
+    # the orders status dim, grouped by the DIM attribute) after
+    # DML on BOTH tables: the fact band delete + R erase above,
+    # and a dim band status flip to 'Z'
+    ("mvjoin", _matview_parts, """
+            WITH cutj AS (
+                SELECT floor(max(l_orderkey) / 4)::BIGINT AS c
+                FROM lineitem),
+            cut2 AS (
+                SELECT floor(max(o_orderkey) * 3 / 4)::BIGINT AS c
+                FROM orders),
+            dimf AS (
+                SELECT o_orderkey,
+                       CASE WHEN o_orderkey > (SELECT c FROM cut2)
+                            THEN 'Z' ELSE o_orderstatus END AS flag
+                FROM orders),
+            finj AS (
+                SELECT d.flag, l.l_quantity AS q
+                FROM lineitem l JOIN dimf d
+                  ON l.l_orderkey = d.o_orderkey
+                WHERE l.l_quantity <= 3
+                  AND l.l_orderkey > (SELECT c FROM cutj)
+                  AND l.l_returnflag <> 'R'),
+            gj AS (
+                SELECT flag, count(*) AS cnt,
+                       sum(CAST(q AS DECIMAL(28,6)))::DOUBLE AS sum_q,
+                       sum(CAST(q AS DECIMAL(28,6)))::DOUBLE
+                           / count(q) AS avg_q,
+                       min(q)::DOUBLE AS min_q,
+                       max(q)::DOUBLE AS max_q
+                FROM finj GROUP BY flag)
+            SELECT cnt, flag || '|sum' AS s1, sum_q AS v FROM gj
+            UNION ALL SELECT cnt, flag || '|avg', avg_q FROM gj
+            UNION ALL SELECT cnt, flag || '|min', min_q FROM gj
+            UNION ALL SELECT cnt, flag || '|max', max_q FROM gj""",
+     _MV_COLS),
+    # mvstar: the 2-dim STAR view (fact slice JOIN orders-status
+    # JOIN part-brand, grouped by BOTH dim attributes) after DML
+    # on the fact AND both dims consumed in ONE refresh interval
+    # (telescoping delta-join cross terms); key folds to
+    # status#brand
+    ("mvstar", _matview_parts, """
+            WITH cuts AS (
+                SELECT floor(max(l_orderkey) / 4)::BIGINT AS c
+                FROM lineitem),
+            cuts2 AS (
+                SELECT floor(max(o_orderkey) * 3 / 4)::BIGINT AS c
+                FROM orders),
+            cutsp AS (
+                SELECT floor(max(p_partkey) / 2)::BIGINT AS c
+                FROM part),
+            dimsf AS (
+                SELECT o_orderkey,
+                       CASE WHEN o_orderkey > (SELECT c FROM cuts2)
+                            THEN 'Z' ELSE o_orderstatus END AS st
+                FROM orders),
+            dimsp AS (
+                SELECT p_partkey,
+                       CASE WHEN p_partkey <= (SELECT c FROM cutsp)
+                            THEN 'ZZZ' ELSE p_brand END AS br
+                FROM part),
+            fins AS (
+                SELECT d.st || '#' || p.br AS flag,
+                       l.l_quantity AS q
+                FROM lineitem l
+                JOIN dimsf d ON l.l_orderkey = d.o_orderkey
+                JOIN dimsp p ON l.l_partkey = p.p_partkey
+                WHERE l.l_quantity <= 3
+                  AND l.l_orderkey > (SELECT c FROM cuts)
+                  AND l.l_returnflag <> 'R'),
+            gs AS (
+                SELECT flag, count(*) AS cnt,
+                       sum(CAST(q AS DECIMAL(28,6)))::DOUBLE AS sum_q,
+                       sum(CAST(q AS DECIMAL(28,6)))::DOUBLE
+                           / count(q) AS avg_q,
+                       min(q)::DOUBLE AS min_q,
+                       max(q)::DOUBLE AS max_q
+                FROM fins GROUP BY flag)
+            SELECT cnt, flag || '|sum' AS s1, sum_q AS v FROM gs
+            UNION ALL SELECT cnt, flag || '|avg', avg_q FROM gs
+            UNION ALL SELECT cnt, flag || '|min', min_q FROM gs
+            UNION ALL SELECT cnt, flag || '|max', max_q FROM gs""",
+     _MV_COLS),
+    # mvdistinct: exact per-flag COUNT(DISTINCT l_orderkey) /
+    # SUM(DISTINCT) / AVG(DISTINCT) maintained incrementally via
+    # the per-value multiplicity state (the band delete is the
+    # mass last-occurrence case); sumd accumulates each distinct
+    # value as DECIMAL(28,6) exactly, avgd = double(sumd)/cntd —
+    # both sides derive from the same exact decimal
+    ("mvdistinct", _matview_parts, """
+            WITH cutd AS (
+                SELECT floor(max(l_orderkey) / 4)::BIGINT AS c
+                FROM lineitem),
+            find AS (
+                SELECT l_returnflag AS flag, l_orderkey AS ok
+                FROM lineitem
+                WHERE l_quantity <= 3
+                  AND l_orderkey > (SELECT c FROM cutd)
+                  AND l_returnflag <> 'R'),
+            gd AS (
+                SELECT flag, count(*) AS cnt,
+                       count(DISTINCT ok)::DOUBLE AS cd,
+                       sum(DISTINCT ok::DECIMAL(28,6))
+                           ::DECIMAL(38,6)::DOUBLE AS sd,
+                       sum(DISTINCT ok::DECIMAL(28,6))
+                           ::DECIMAL(38,6)::DOUBLE
+                           / count(DISTINCT ok) AS ad
+                FROM find GROUP BY flag)
+            SELECT cnt, flag || '|cntd' AS s1, cd AS v FROM gd
+            UNION ALL SELECT cnt, flag || '|sumd', sd FROM gd
+            UNION ALL SELECT cnt, flag || '|avgd', ad FROM gd""",
+     _MV_COLS),
+    # mvexpr: the EXPRESSION-keyed view (round 14) — GROUP BY
+    # date_trunc('month', l_shipdate) declared as a derived key
+    # (keys={"smonth": ...}), maintained across the same fact
+    # DML history; the month folds to yyyy-MM on both sides
+    ("mvexpr", _matview_parts, """
+            WITH cute AS (
+                SELECT floor(max(l_orderkey) / 4)::BIGINT AS c
+                FROM lineitem),
+            fine AS (
+                SELECT strftime(date_trunc('month', l_shipdate),
+                                '%Y-%m') AS flag,
+                       l_quantity AS q
+                FROM lineitem
+                WHERE l_quantity <= 3
+                  AND l_orderkey > (SELECT c FROM cute)
+                  AND l_returnflag <> 'R'),
+            ge AS (
+                SELECT flag, count(*) AS cnt,
+                       sum(CAST(q AS DECIMAL(28,6)))::DOUBLE AS sum_q,
+                       sum(CAST(q AS DECIMAL(28,6)))::DOUBLE
+                           / count(q) AS avg_q,
+                       min(q)::DOUBLE AS min_q,
+                       max(q)::DOUBLE AS max_q
+                FROM fine GROUP BY flag)
+            SELECT cnt, flag || '|sum' AS s1, sum_q AS v FROM ge
+            UNION ALL SELECT cnt, flag || '|avg', avg_q FROM ge
+            UNION ALL SELECT cnt, flag || '|min', min_q FROM ge
+            UNION ALL SELECT cnt, flag || '|max', max_q FROM ge""",
+     _MV_COLS))
+
+
+_R_SUMMARY_KV = {"k": "k", "v_i": "v_i", "v_d": "v_d"}
+
+_COMPOSITES["r_summary_all"] = _composite(
+    "part STRING, k STRING, v_i BIGINT, v_d DOUBLE, v_s STRING",
+    ("quantiles", _r_summary_all_parts, """
+        SELECT 'n' AS k, count(l_extendedprice) AS v_i, NULL AS v_d
+        FROM lineitem
+        UNION ALL SELECT 'min', NULL, min(l_extendedprice) FROM lineitem
+        UNION ALL SELECT 'q25', NULL,
+            quantile_cont(l_extendedprice, 0.25) FROM lineitem
+        UNION ALL SELECT 'q50', NULL,
+            quantile_cont(l_extendedprice, 0.50) FROM lineitem
+        UNION ALL SELECT 'q75', NULL,
+            quantile_cont(l_extendedprice, 0.75) FROM lineitem
+        UNION ALL SELECT 'max', NULL, max(l_extendedprice) FROM lineitem""",
+     _R_SUMMARY_KV),
+    ("freq", _r_summary_all_parts, """
+        SELECT l_returnflag AS k, count(*) AS v_i, NULL AS v_d
+        FROM lineitem GROUP BY l_returnflag""",
+     _R_SUMMARY_KV),
+    ("bits", _r_summary_all_parts, """
+        SELECT 'length' AS k, count(*) AS v_i, NULL AS v_d FROM lineitem
+        UNION ALL SELECT 'ones',
+            sum(CASE WHEN l_discount > 0.05 THEN 1 ELSE 0 END), NULL
+        FROM lineitem""",
+     _R_SUMMARY_KV),
+    ("hist", _r_summary_all_parts, """
+        WITH b AS (SELECT min(l_extendedprice) AS mn,
+                          max(l_extendedprice) AS mx FROM lineitem),
+        h AS (SELECT (CASE WHEN mx > mn
+                           THEN least(floor((l_extendedprice - mn)
+                                            / ((mx - mn) / 10.0)), 9)
+                           ELSE 0 END)::BIGINT AS bin, mn, mx
+              FROM lineitem CROSS JOIN b),
+        g AS (SELECT bin, count(*) AS n, min(mn) AS mn, min(mx) AS mx
+              FROM h GROUP BY bin)
+        SELECT bin,
+               round(mn + bin::DOUBLE * ((mx - mn) / 10.0), 6) AS lo,
+               n
+        FROM g""",
+     {"k": "bin", "v_i": "n", "v_d": "lo"}),
+    ("hist2d", _r_summary_all_parts, """
+        WITH b AS (SELECT min(l_quantity) AS mnx,
+                          max(l_quantity) AS mxx,
+                          min(l_extendedprice) AS mny,
+                          max(l_extendedprice) AS mxy FROM lineitem),
+        h AS (SELECT (CASE WHEN mxx > mnx
+                           THEN least(floor((l_quantity - mnx)
+                                            / ((mxx - mnx) / 5.0)), 4)
+                           ELSE 0 END)::BIGINT AS bx,
+                     (CASE WHEN mxy > mny
+                           THEN least(floor((l_extendedprice - mny)
+                                            / ((mxy - mny) / 5.0)), 4)
+                           ELSE 0 END)::BIGINT AS by,
+                     mnx, mxx
+              FROM lineitem CROSS JOIN b),
+        g AS (SELECT bx, by, count(*) AS n, min(mnx) AS mnx,
+                     min(mxx) AS mxx
+              FROM h GROUP BY bx, by)
+        SELECT bx AS bin_x, by AS bin_y,
+               round(mnx + bx::DOUBLE * ((mxx - mnx) / 5.0), 6) AS lo_x,
+               n
+        FROM g""",
+     {"k": "concat_ws(':', CAST(bin_x AS STRING), CAST(bin_y AS STRING))",
+      "v_i": "n", "v_d": "lo_x"}),
+    ("profile", _r_summary_all_parts,
+     f"SELECT * FROM ({_profile_oracle_rows()}) AS t(k, v_i, v_d, v_s)",
+     {**_R_SUMMARY_KV, "v_s": "v_s"}),
+    ("benford", _r_summary_all_parts, f"""
         WITH r AS (
             SELECT floor(o_totalprice
                          / pow(10.0, floor(log10(o_totalprice))))::INT
@@ -6656,43 +5270,41 @@ _ORACLES["r_summary_all"] = f"""
                         - ([{_BENFORD_EXP}])[digit] * tot::DOUBLE)
                      / (([{_BENFORD_EXP}])[digit] * tot::DOUBLE), 6)
                    AS chi2_term
-        FROM c CROSS JOIN t)
-    UNION ALL {_fk_oracle_rows()}"""
+        FROM c CROSS JOIN t""",
+     {"k": "digit", "v_i": "n_obs", "v_d": "chi2_term"}),
+    ("fk", _r_summary_all_parts, _fk_oracle_rows(),
+     {"k": "pair", "v_i": "n_missing", "v_d": "containment",
+      "v_s": "verdict"}))
 
-_ORACLES["r_select_positional"] = _union(
-    _wrap("columns_select", _ORACLES["r_columns_select"],
-          "n_regionkey::BIGINT AS i1, n_name AS s1, NULL::DOUBLE AS d1"),
-    _wrap("slice_positional", _ORACLES["r_slice_positional"],
-          "c_custkey::BIGINT AS i1, c_name AS s1, c_acctbal::DOUBLE AS d1"))
+_COMPOSITES["r_select_positional"] = _composite(
+    "part STRING, i1 BIGINT, s1 STRING, d1 DOUBLE",
+    ("columns_select", q_r_columns_select, _ORACLES["r_columns_select"],
+     {"i1": "n_regionkey", "s1": "n_name"}),
+    ("slice_positional", q_r_slice_positional, _ORACLES["r_slice_positional"],
+     {"i1": "c_custkey", "s1": "c_name", "d1": "c_acctbal"}))
 
-_ORACLES["r_map_mutate"] = _union(
-    _wrap("map_rows", _ORACLES["r_map_rows"],
-          "l_orderkey::BIGINT AS i1, l_linenumber::BIGINT AS i2, "
-          "revenue::DOUBLE AS d1"),
-    _wrap("map_df", _ORACLES["r_map_df"],
-          "p_partkey::BIGINT AS i1, size10::BIGINT AS i2, "
-          "big::INT::DOUBLE AS d1"),
-    _wrap("add_replace", _ORACLES["r_add_replace"],
-          "p_partkey::BIGINT AS i1, p_size::BIGINT AS i2, "
-          "margin::DOUBLE AS d1"),
-    _wrap("copy_isolation", _ORACLES["r_copy_isolation"],
-          "p_partkey::BIGINT AS i1, p_size::BIGINT AS i2, "
-          "NULL::DOUBLE AS d1"),
-    # NA surface: same deterministic NULL injection as q_r_na_base
-    _wrap("na_fill", """
+_COMPOSITES["r_map_mutate"] = _composite(
+    "part STRING, i1 BIGINT, i2 BIGINT, d1 DOUBLE",
+    ("map_rows", q_r_map_rows, _ORACLES["r_map_rows"],
+     {"i1": "l_orderkey", "i2": "l_linenumber", "d1": "revenue"}),
+    ("map_df", q_r_map_df, _ORACLES["r_map_df"],
+     {"i1": "p_partkey", "i2": "size10", "d1": "CAST(big AS INT)"}),
+    ("add_replace", q_r_add_replace, _ORACLES["r_add_replace"],
+     {"i1": "p_partkey", "i2": "p_size", "d1": "margin"}),
+    ("copy_isolation", q_r_copy_isolation, _ORACLES["r_copy_isolation"],
+     {"i1": "p_partkey", "i2": "p_size"}),
+    ("na_fill", q_r_na_fill, """
         SELECT l_orderkey, l_linenumber,
                coalesce(CASE WHEN l_orderkey % 7 = 0 THEN NULL
                              ELSE l_quantity::DOUBLE END, -1.0) AS qty
         FROM lineitem WHERE l_orderkey % 100 < 5""",
-          "l_orderkey::BIGINT AS i1, l_linenumber::BIGINT AS i2, "
-          "qty::DOUBLE AS d1"),
-    _wrap("na_drop", """
+     {"i1": "l_orderkey", "i2": "l_linenumber", "d1": "qty"}),
+    ("na_drop", q_r_na_drop, """
         SELECT l_orderkey, l_linenumber, l_quantity::DOUBLE AS qty
         FROM lineitem
         WHERE l_orderkey % 100 < 5 AND l_orderkey % 7 != 0""",
-          "l_orderkey::BIGINT AS i1, l_linenumber::BIGINT AS i2, "
-          "qty::DOUBLE AS d1"),
-    _wrap("na_replace", """
+     {"i1": "l_orderkey", "i2": "l_linenumber", "d1": "qty"}),
+    ("na_replace", q_r_na_replace, """
         SELECT l_orderkey, l_linenumber,
                CASE WHEN qty = 1.0 THEN -5.0
                     WHEN qty = 2.0 THEN -6.0
@@ -6701,16 +5313,14 @@ _ORACLES["r_map_mutate"] = _union(
                      CASE WHEN l_orderkey % 7 = 0 THEN NULL
                           ELSE l_quantity::DOUBLE END AS qty
               FROM lineitem WHERE l_orderkey % 100 < 5)""",
-          "l_orderkey::BIGINT AS i1, l_linenumber::BIGINT AS i2, "
-          "qty::DOUBLE AS d1"))
+     {"i1": "l_orderkey", "i2": "l_linenumber", "d1": "qty"}))
 
-_ORACLES["s_join_agg"] = _union(
-    _wrap("broadcast", _ORACLES["s_join_broadcast"],
-          "r_name AS k, n_customers::BIGINT AS n, "
-          "total_acctbal::DOUBLE AS v"),
-    _wrap("fact", _ORACLES["s_join_fact"],
-          "o_orderpriority AS k, n_items::BIGINT AS n, "
-          "sum_revenue::DOUBLE AS v"))
+_COMPOSITES["s_join_agg"] = _composite(
+    "part STRING, k STRING, n BIGINT, v DOUBLE",
+    ("broadcast", q_s_join_broadcast, _ORACLES["s_join_broadcast"],
+     {"k": "r_name", "n": "n_customers", "v": "total_acctbal"}),
+    ("fact", q_s_join_fact, _ORACLES["s_join_fact"],
+     {"k": "o_orderpriority", "n": "n_items", "v": "sum_revenue"}))
 
 _ORACLES["s_bloom_semi"] = """
     WITH bkeys AS (
@@ -6748,31 +5358,28 @@ _ORACLES["s_bloom_semi"] = """
     JOIN (SELECT o_orderpriority, count(*) AS n_exact
           FROM exact GROUP BY 1) e USING (o_orderpriority)"""
 
-_ORACLES["s_join_semi_anti"] = _union(
-    _wrap("semi", _ORACLES["s_join_semi"],
-          "c_custkey::BIGINT AS i1, c_name AS s1, NULL::BIGINT AS i2"),
-    _wrap("anti", _ORACLES["s_join_anti"],
-          "c_custkey::BIGINT AS i1, c_mktsegment AS s1, "
-          "NULL::BIGINT AS i2"),
-    _wrap("bloom", _ORACLES["s_bloom_semi"],
-          "n_bloom::BIGINT AS i1, o_orderpriority AS s1, "
-          "n_exact::BIGINT AS i2"))
+_COMPOSITES["s_join_semi_anti"] = _composite(
+    "part STRING, i1 BIGINT, s1 STRING, i2 BIGINT",
+    ("semi", q_s_join_semi, _ORACLES["s_join_semi"],
+     {"i1": "c_custkey", "s1": "c_name"}),
+    ("anti", q_s_join_anti, _ORACLES["s_join_anti"],
+     {"i1": "c_custkey", "s1": "c_mktsegment"}),
+    ("bloom", q_s_bloom_semi, _ORACLES["s_bloom_semi"],
+     {"i1": "n_bloom", "s1": "o_orderpriority", "i2": "n_exact"}))
 
-_ORACLES["s_group_sets"] = _union(
-    _wrap("rollup", _ORACLES["s_group_rollup"],
-          "l_returnflag AS k1, l_linestatus AS k2, sum_qty::DOUBLE AS agg, "
-          "n::BIGINT AS n"),
-    _wrap("gsets", """
+_COMPOSITES["s_group_sets"] = _composite(
+    "part STRING, k1 STRING, k2 STRING, agg DOUBLE, n BIGINT",
+    ("rollup", q_s_group_rollup, _ORACLES["s_group_rollup"],
+     {"k1": "l_returnflag", "k2": "l_linestatus", "agg": "sum_qty", "n": "n"}),
+    ("cube", q_s_group_cube, _ORACLES["s_group_cube"],
+     {"k1": "o_orderstatus", "k2": "o_orderpriority", "n": "n"}),
+    ("gsets", q_s_grouping_sets, """
         SELECT l_returnflag, l_linestatus, count(*) AS n,
                GROUPING(l_returnflag, l_linestatus) AS gid
         FROM lineitem
         GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
                                 (l_linestatus), ())""",
-          "l_returnflag AS k1, l_linestatus AS k2, gid::DOUBLE AS agg, "
-          "n::BIGINT AS n"),
-    _wrap("cube", _ORACLES["s_group_cube"],
-          "o_orderstatus AS k1, o_orderpriority AS k2, "
-          "NULL::DOUBLE AS agg, n::BIGINT AS n"))
+     {"k1": "l_returnflag", "k2": "l_linestatus", "agg": "gid", "n": "n"}))
 
 _ORACLES["s_window_running_lag"] = """
     SELECT o_custkey, o_orderkey,
@@ -6789,36 +5396,36 @@ _ORACLES["s_window_running_lag"] = """
     WINDOW w AS (PARTITION BY o_custkey
                  ORDER BY o_orderdate ASC, o_orderkey ASC)"""
 
-_ORACLES["s_set_ops"] = _union(
-    _wrap("except", _ORACLES["s_set_except"],
-          "custkey::BIGINT AS i1, NULL::VARCHAR AS s1, NULL::VARCHAR AS s2"),
-    _wrap("intersect_union", _ORACLES["s_set_intersect_union"],
-          "custkey::BIGINT AS i1, NULL::VARCHAR AS s1, NULL::VARCHAR AS s2"),
-    _wrap("distinct", _ORACLES["s_distinct"],
-          "NULL::BIGINT AS i1, l_returnflag AS s1, l_linestatus AS s2"))
+_COMPOSITES["s_set_ops"] = _composite(
+    "part STRING, i1 BIGINT, s1 STRING, s2 STRING",
+    ("except", q_s_set_except, _ORACLES["s_set_except"],
+     {"i1": "custkey"}),
+    ("intersect_union", q_s_set_intersect_union,
+     _ORACLES["s_set_intersect_union"],
+     {"i1": "custkey"}),
+    ("distinct", q_s_distinct, _ORACLES["s_distinct"],
+     {"s1": "l_returnflag", "s2": "l_linestatus"}))
 
-_ORACLES["s_asof"] = _union(
-    _wrap("keyed", _ORACLES["s_asof_join"],
-          "event_id::BIGINT AS event_id, user_id::BIGINT AS user_id, "
-          "ts_us::BIGINT AS ts_us, r_last_orderkey::BIGINT AS "
-          "r_last_orderkey"),
-    _wrap("unkeyed", _ORACLES["s_asof_join_unkeyed"],
-          "event_id::BIGINT AS event_id, NULL::BIGINT AS user_id, "
-          "ts_us::BIGINT AS ts_us, r_last_orderkey::BIGINT AS "
-          "r_last_orderkey"),
-    _wrap("nearest", _ORACLES["s_asof_nearest"],
-          "event_id::BIGINT AS event_id, user_id::BIGINT AS user_id, "
-          "ts_us::BIGINT AS ts_us, r_last_orderkey::BIGINT AS "
-          "r_last_orderkey"))
+_COMPOSITES["s_asof"] = _composite(
+    "part STRING, event_id BIGINT, user_id BIGINT, ts_us BIGINT, "
+    "r_last_orderkey BIGINT",
+    ("keyed", q_s_asof_join, _ORACLES["s_asof_join"],
+     {"event_id": "event_id", "user_id": "user_id", "ts_us": "ts_us",
+      "r_last_orderkey": "r_last_orderkey"}),
+    ("unkeyed", q_s_asof_join_unkeyed, _ORACLES["s_asof_join_unkeyed"],
+     {"event_id": "event_id", "ts_us": "ts_us",
+      "r_last_orderkey": "r_last_orderkey"}),
+    ("nearest", q_s_asof_nearest, _ORACLES["s_asof_nearest"],
+     {"event_id": "event_id", "user_id": "user_id", "ts_us": "ts_us",
+      "r_last_orderkey": "r_last_orderkey"}))
 
-_ORACLES["s_range_joins"] = _union(
-    _wrap("broadcast", _ORACLES["s_range_join"],
-          "band AS band, n::BIGINT AS n, sum_qty::DOUBLE AS sum_qty"),
-    _wrap("bucketed", _ORACLES["s_bucketed_range_join"],
-          "band AS band, n::BIGINT AS n, sum_qty::DOUBLE AS sum_qty"),
-    # interval × interval overlap: the naive quadratic twin of the
-    # bucket-grid + span-replication + overlap-start-anchor plan
-    _wrap("overlap", """
+_COMPOSITES["s_range_joins"] = _composite(
+    "part STRING, band STRING, n BIGINT, sum_qty DOUBLE",
+    ("broadcast", q_s_range_join, _ORACLES["s_range_join"],
+     {"band": "band", "n": "n", "sum_qty": "sum_qty"}),
+    ("bucketed", q_s_bucketed_range_join, _ORACLES["s_bucketed_range_join"],
+     {"band": "band", "n": "n", "sum_qty": "sum_qty"}),
+    ("overlap", q_s_interval_overlap, """
         WITH l AS (
             SELECT o_orderkey AS lid,
                    o_totalprice::DOUBLE AS l_lo,
@@ -6833,26 +5440,24 @@ _ORACLES["s_range_joins"] = _union(
         SELECT lid, count(*) AS n_overlaps, sum(rid) AS sum_rid
         FROM l JOIN r ON l.l_lo < r.r_hi AND r.r_lo < l.l_hi
         GROUP BY lid""",
-          "lid::VARCHAR AS band, n_overlaps::BIGINT AS n, "
-          "sum_rid::DOUBLE AS sum_qty"))
+     {"band": "lid", "n": "n_overlaps", "sum_qty": "sum_rid"}))
 
-_ORACLES["s_skew_udaf"] = _union(
-    _wrap("salted", _ORACLES["s_salted_join"],
-          "o_orderstatus AS k, n::BIGINT AS n, sum_qty::DOUBLE AS v, "
-          "NULL::DOUBLE AS v2, NULL::DOUBLE AS v3"),
-    _wrap("udaf", _ORACLES["s_udaf_wavg"],
-          "l_returnflag AS k, NULL::BIGINT AS n, wavg_price::DOUBLE AS v, "
-          "NULL::DOUBLE AS v2, NULL::DOUBLE AS v3"),
-    _wrap("grouped_map", """
+_COMPOSITES["s_skew_udaf"] = _composite(
+    "part STRING, k STRING, n BIGINT, v DOUBLE, v2 DOUBLE, v3 DOUBLE",
+    ("salted", q_s_salted_join, _ORACLES["s_salted_join"],
+     {"k": "o_orderstatus", "n": "n", "v": "sum_qty"}),
+    ("udaf", q_s_udaf_wavg, _ORACLES["s_udaf_wavg"],
+     {"k": "l_returnflag", "v": "wavg_price"}),
+    ("grouped_map", q_s_grouped_map, """
         SELECT l_returnflag, count(*)::BIGINT AS n,
                quantile_cont(l_extendedprice, 0.5)::DOUBLE
                    AS median_price,
                min(l_extendedprice)::DOUBLE AS min_price,
                max(l_extendedprice)::DOUBLE AS max_price
         FROM lineitem GROUP BY l_returnflag""",
-          "l_returnflag AS k, n::BIGINT AS n, median_price::DOUBLE AS v, "
-          "min_price::DOUBLE AS v2, max_price::DOUBLE AS v3"),
-    _wrap("skewreport", """
+     {"k": "l_returnflag", "n": "n", "v": "median_price", "v2": "min_price",
+      "v3": "max_price"}),
+    ("skewreport", q_s_key_skew_report, """
         WITH counts AS (
             SELECT o_custkey, count(*) AS c FROM orders
             GROUP BY o_custkey),
@@ -6883,25 +5488,20 @@ _ORACLES["s_skew_udaf"] = _union(
                             * (tot::DOUBLE / nk::DOUBLE))
                      / (tot::DOUBLE / nk::DOUBLE), 6) AS cv
         FROM s""",
-          "'o_custkey' AS k, n_keys::BIGINT AS n, "
-          "max_frac::DOUBLE AS v, gini::DOUBLE AS v2, "
-          "cv::DOUBLE AS v3"))
+     {"k": "'o_custkey'", "n": "n_keys", "v": "max_frac", "v2": "gini",
+      "v3": "cv"}))
 
-_ORACLES["s_functions"] = _union(
-    _wrap("scalar", _ORACLES["s_scalar_functions"],
-          "o_orderkey::BIGINT AS i1, prio_name AS s1, yr::BIGINT AS i2, "
-          "mo::BIGINT AS i3, sqrt_price::DOUBLE AS d1, tag AS s2, "
-          "prio_len::BIGINT AS i4, edit_dist::BIGINT AS i5"),
-    _wrap("collection", _ORACLES["s_collection_functions"],
-          "n_nationkey::BIGINT AS i1, json_name AS s1, "
-          "arr_sum::BIGINT AS i2, arr_max::BIGINT AS i3, "
-          "NULL::DOUBLE AS d1, map_val AS s2, n_distinct::BIGINT AS i4, "
-          "NULL::BIGINT AS i5"),
-    # feature scalers at the group boundary values: every scaler is
-    # monotone, so max(round(scaled)) == round(scaled(max)) and the
-    # oracle can derive each check from the group aggregates with the
-    # operators' exact double-arithmetic order
-    _wrap("scaling", """
+_COMPOSITES["s_functions"] = _composite(
+    "part STRING, i1 BIGINT, s1 STRING, i2 BIGINT, i3 BIGINT, d1 DOUBLE, "
+    "s2 STRING, i4 BIGINT, i5 BIGINT",
+    ("scalar", q_s_scalar_functions, _ORACLES["s_scalar_functions"],
+     {"i1": "o_orderkey", "s1": "prio_name", "i2": "yr", "i3": "mo",
+      "d1": "sqrt_price", "s2": "tag", "i4": "prio_len", "i5": "edit_dist"}),
+    ("collection", q_s_collection_functions,
+     _ORACLES["s_collection_functions"],
+     {"i1": "n_nationkey", "s1": "json_name", "i2": "arr_sum", "i3": "arr_max",
+      "s2": "map_val", "i4": "n_distinct"}),
+    ("scaling", q_s_scaling, """
         WITH s AS (
           SELECT l_returnflag, count(*) AS n,
                  sum(l_extendedprice::DECIMAL(38,2)) AS sx,
@@ -6933,27 +5533,20 @@ _ORACLES["s_functions"] = _union(
         SELECT l_returnflag, n, 'mm_hi', mm_hi FROM m
         UNION ALL
         SELECT l_returnflag, n, 'rb_hi', rb_hi FROM m""",
-          "n::BIGINT AS i1, l_returnflag AS s1, NULL::BIGINT AS i2, "
-          "NULL::BIGINT AS i3, val::DOUBLE AS d1, metric AS s2, "
-          "NULL::BIGINT AS i4, NULL::BIGINT AS i5"))
+     {"i1": "n", "s1": "l_returnflag", "d1": "val", "s2": "metric"}))
 
-_SKETCH_NULLS_I = "NULL::BIGINT AS i2, NULL::BIGINT AS i3"
-_SKETCH_NULLS_D = "NULL::DOUBLE AS d1, NULL::DOUBLE AS d2, NULL::DOUBLE AS d3"
-_ORACLES["s_approx_sketches"] = _union(
-    _wrap("hll", _ORACLES["s_sketch_distinct"],
-          f"lang AS g, distinct_cb::BIGINT AS i1, {_SKETCH_NULLS_I}, "
-          f"{_SKETCH_NULLS_D}"),
-    _wrap("theta", _ORACLES["s_sketch_distinct"],
-          f"lang AS g, distinct_cb::BIGINT AS i1, {_SKETCH_NULLS_I}, "
-          f"{_SKETCH_NULLS_D}"),
-    _wrap("kll", _ORACLES["s_kll_quantiles"],
-          "l_returnflag AS g, NULL::BIGINT AS i1, "
-          f"{_SKETCH_NULLS_I}, q25::DOUBLE AS d1, q50::DOUBLE AS d2, "
-          "q75::DOUBLE AS d3"),
-    _wrap("freq", _ORACLES["s_frequent_items"],
-          "l_returnflag AS g, l_partkey::BIGINT AS i1, cnt::BIGINT AS i2, "
-          f"rank::BIGINT AS i3, {_SKETCH_NULLS_D}"),
-    _wrap("setops", """
+_COMPOSITES["s_approx_sketches"] = _composite(
+    "part STRING, g STRING, i1 BIGINT, i2 BIGINT, i3 BIGINT, d1 DOUBLE, "
+    "d2 DOUBLE, d3 DOUBLE",
+    ("hll", q_s_hll_rollup, _ORACLES["s_sketch_distinct"],
+     {"g": "lang", "i1": "distinct_cb"}),
+    ("theta", q_s_theta_distinct, _ORACLES["s_sketch_distinct"],
+     {"g": "lang", "i1": "distinct_cb"}),
+    ("kll", q_s_kll_quantiles, _ORACLES["s_kll_quantiles"],
+     {"g": "l_returnflag", "d1": "q25", "d2": "q50", "d3": "q75"}),
+    ("freq", q_s_frequent_items, _ORACLES["s_frequent_items"],
+     {"g": "l_returnflag", "i1": "l_partkey", "i2": "cnt", "i3": "rank"}),
+    ("setops", q_s_theta_set_ops, """
         WITH a AS (SELECT DISTINCT n_chars % 97 AS cb FROM documents
                    WHERE lang = 'en'),
         b AS (SELECT DISTINCT n_chars % 97 AS cb FROM documents
@@ -6966,27 +5559,25 @@ _ORACLES["s_approx_sketches"] = _union(
                                       SELECT cb FROM b)) AS n_intersect,
                (SELECT count(*) FROM (SELECT cb FROM a EXCEPT
                                       SELECT cb FROM b)) AS n_diff""",
-          "'en~de' AS g, n_a::BIGINT AS i1, n_b::BIGINT AS i2, "
-          "n_union::BIGINT AS i3, n_intersect::DOUBLE AS d1, "
-          "n_diff::DOUBLE AS d2, NULL::DOUBLE AS d3"))
+     {"g": "'en~de'", "i1": "n_a", "i2": "n_b", "i3": "n_union",
+      "d1": "n_intersect", "d2": "n_diff"}))
 
 _Z_EXPR = " + ".join(
     f"(((l_{c} % 256) >> {i}) & 1) * {1 << (i * 2 + j)}"
     for i in range(8) for j, c in enumerate(("partkey", "suppkey")))
-_ORACLES["s_source_roundtrip"] = _union(
-    _wrap("roundtrip", """
+_COMPOSITES["s_source_roundtrip"] = _composite(
+    "part STRING, s1 STRING, i1 BIGINT, d1 DOUBLE, i2 BIGINT",
+    ("roundtrip", _s_source_roundtrip_parts, """
         SELECT l_returnflag, count(*)::BIGINT AS n,
                (sum(l_quantity::DECIMAL(18,2)))::DOUBLE AS sum_qty
         FROM lineitem WHERE l_quantity >= 45 GROUP BY l_returnflag""",
-          "l_returnflag AS s1, n::BIGINT AS i1, sum_qty::DOUBLE AS d1, "
-          "NULL::BIGINT AS i2"),
-    _wrap("zorder", f"""
+     {"s1": "l_returnflag", "i1": "n", "d1": "sum_qty"}),
+    ("zorder", _s_source_roundtrip_parts, f"""
         SELECT (l_orderkey * 10 + l_linenumber) AS key,
                ({_Z_EXPR}) AS z
         FROM lineitem WHERE l_orderkey % 50 = 0""",
-          "NULL::VARCHAR AS s1, key::BIGINT AS i1, NULL::DOUBLE AS d1, "
-          "z::BIGINT AS i2"),
-    _wrap("checksum", """
+     {"i1": "key", "i2": "z"}),
+    ("checksum", _s_source_roundtrip_parts, """
         WITH c AS (
             SELECT l_orderkey, l_linenumber,
                    CAST(CAST(l_quantity AS DECIMAL(18,2)) AS VARCHAR)
@@ -7005,25 +5596,19 @@ _ORACLES["s_source_roundtrip"] = _union(
                sum(hh % 1000000)::BIGINT AS sum_h,
                bit_xor(hh)::BIGINT AS xor_h
         FROM h""",
-          "NULL::VARCHAR AS s1, n_rows::BIGINT AS i1, "
-          "sum_h::DOUBLE AS d1, xor_h::BIGINT AS i2"),
-    # widen: metadata-only type widening (int->bigint,
-    # decimal(10,2)->decimal(20,4)) — the upcast read must be
-    # value-exact vs an explicitly-cast recompute
-    _wrap("widen", """
+     {"i1": "n_rows", "d1": "sum_h", "i2": "xor_h"}),
+    ("widen", _s_source_roundtrip_parts, """
         SELECT l_returnflag, count(*)::BIGINT AS n,
                sum(CAST(CAST(l_quantity AS DECIMAL(10,2))
                         AS DECIMAL(20,4)))::DOUBLE AS s,
                min(l_orderkey)::BIGINT AS mk
         FROM lineitem WHERE l_quantity >= 48
         GROUP BY l_returnflag""",
-          "l_returnflag AS s1, n::BIGINT AS i1, s::DOUBLE AS d1, "
-          "mk::BIGINT AS i2"))
+     {"s1": "l_returnflag", "i1": "n", "d1": "s", "i2": "mk"}))
 
-_ORACLES["s_layout_prune"] = _union(
-    # zprune: the z-ordered rewrite + pruned 2-D range scan must
-    # return exactly the original table's rows under the predicate
-    _wrap("zprune", """
+_COMPOSITES["s_layout_prune"] = _composite(
+    "part STRING, i1 BIGINT, d1 DOUBLE, i2 BIGINT",
+    ("zprune", _s_layout_prune_parts, """
         SELECT count(*) AS n,
                sum(CAST(l_quantity AS DECIMAL(18,2)))::DOUBLE
                    AS sum_qty,
@@ -7032,9 +5617,8 @@ _ORACLES["s_layout_prune"] = _union(
         WHERE l_orderkey % 4 = 1
           AND l_partkey BETWEEN 100 AND 400
           AND l_suppkey BETWEEN 1 AND 40""",
-          "n::BIGINT AS i1, sum_qty::DOUBLE AS d1, sum_ok::BIGINT AS i2"),
-    # Hilbert layout twin — layout-independent result, same oracle
-    _wrap("hprune", """
+     {"i1": "n", "d1": "sum_qty", "i2": "sum_ok"}),
+    ("hprune", _s_layout_prune_parts, """
         SELECT count(*) AS n,
                sum(CAST(l_quantity AS DECIMAL(18,2)))::DOUBLE
                    AS sum_qty,
@@ -7043,10 +5627,8 @@ _ORACLES["s_layout_prune"] = _union(
         WHERE l_orderkey % 4 = 1
           AND l_partkey BETWEEN 100 AND 400
           AND l_suppkey BETWEEN 1 AND 40""",
-          "n::BIGINT AS i1, sum_qty::DOUBLE AS d1, sum_ok::BIGINT AS i2"),
-    # compact: order-independent md5 checksum of the compacted copy ==
-    # checksum of the source rows (byte preservation through coalesce)
-    _wrap("compact", """
+     {"i1": "n", "d1": "sum_qty", "i2": "sum_ok"}),
+    ("compact", _s_layout_prune_parts, """
         WITH c AS (
             SELECT l_orderkey, l_linenumber,
                    CAST(CAST(l_quantity AS DECIMAL(18,2)) AS VARCHAR)
@@ -7065,11 +5647,8 @@ _ORACLES["s_layout_prune"] = _union(
                sum(hh % 1000000)::BIGINT AS sum_h,
                bit_xor(hh)::BIGINT AS xor_h
         FROM h""",
-          "n_rows::BIGINT AS i1, sum_h::DOUBLE AS d1, "
-          "xor_h::BIGINT AS i2"),
-    # dynamic partition overwrite: untouched partitions survive, the
-    # overwritten one holds exactly the replacement slice
-    _wrap("partitioned", """
+     {"i1": "n_rows", "d1": "sum_h", "i2": "xor_h"}),
+    ("partitioned", _s_layout_prune_parts, """
         WITH base AS (
             SELECT l_returnflag, l_orderkey, l_quantity
             FROM lineitem WHERE l_quantity <= 3),
@@ -7083,22 +5662,15 @@ _ORACLES["s_layout_prune"] = _union(
                    AS sum_qty,
                sum(l_orderkey) AS sum_ok
         FROM final GROUP BY l_returnflag""",
-          "n::BIGINT AS i1, sum_qty::DOUBLE AS d1, "
-          "sum_ok::BIGINT AS i2"),
-    # snapshot time travel: version 2 = append(qty<=2, qty=3) — read
-    # AFTER version 3 overwrote the table with the qty=4 slice
-    _wrap("snapshot", """
+     {"i1": "n", "d1": "sum_qty", "i2": "sum_ok"}),
+    ("snapshot", _s_layout_prune_parts, """
         SELECT count(*) AS n,
                sum(CAST(l_quantity AS DECIMAL(18,2)))::DOUBLE
                    AS sum_qty,
                sum(l_orderkey) AS sum_ok
         FROM lineitem WHERE l_quantity <= 3""",
-          "n::BIGINT AS i1, sum_qty::DOUBLE AS d1, "
-          "sum_ok::BIGINT AS i2"),
-    # snapprune: stats-pruned predicated time travel of version 2 —
-    # the Spark side also asserts the manifest pruning handed the scan
-    # strictly fewer files; the values must match a plain filter
-    _wrap("snapprune", """
+     {"i1": "n", "d1": "sum_qty", "i2": "sum_ok"}),
+    ("snapprune", _s_layout_prune_parts, """
         SELECT count(*) AS n,
                sum(CAST(l_quantity AS DECIMAL(18,2)))::DOUBLE
                    AS sum_qty,
@@ -7107,13 +5679,8 @@ _ORACLES["s_layout_prune"] = _union(
         WHERE l_quantity <= 3
           AND l_orderkey <= (SELECT floor(max(l_orderkey) / 4)::BIGINT
                              FROM lineitem)""",
-          "n::BIGINT AS i1, sum_qty::DOUBLE AS d1, "
-          "sum_ok::BIGINT AS i2"),
-    # snapin: IN-list predicated time travel of version 2 — the
-    # OR-of-equalities prune; keys = slice min, first key past the
-    # midpoint, slice max (the Spark side also asserts the listing
-    # handed the scan strictly fewer files)
-    _wrap("snapin", """
+     {"i1": "n", "d1": "sum_qty", "i2": "sum_ok"}),
+    ("snapin", _s_layout_prune_parts, """
         WITH s AS (
             SELECT l_orderkey, l_quantity FROM lineitem
             WHERE l_quantity <= 3),
@@ -7133,12 +5700,8 @@ _ORACLES["s_layout_prune"] = _union(
         WHERE l_orderkey IN ((SELECT k1 FROM ks),
                              (SELECT k2 FROM ks),
                              (SELECT k3 FROM ks))""",
-          "n::BIGINT AS i1, sum_qty::DOUBLE AS d1, "
-          "sum_ok::BIGINT AS i2"),
-    # snapdelete: row-level DELETE of the key band from the qty=4
-    # version — survivors are the anti-filter (the Spark side also
-    # asserts untouched files were carried verbatim)
-    _wrap("snapdelete", """
+     {"i1": "n", "d1": "sum_qty", "i2": "sum_ok"}),
+    ("snapdelete", _s_layout_prune_parts, """
         SELECT count(*) AS n,
                sum(CAST(l_quantity AS DECIMAL(18,2)))::DOUBLE
                    AS sum_qty,
@@ -7148,14 +5711,8 @@ _ORACLES["s_layout_prune"] = _union(
           AND NOT (l_orderkey <=
                    (SELECT floor(max(l_orderkey) / 4)::BIGINT
                     FROM lineitem))""",
-          "n::BIGINT AS i1, sum_qty::DOUBLE AS d1, "
-          "sum_ok::BIGINT AS i2"),
-    # snapdv: ONE row removed from the snapdelete survivors by a
-    # positional deletion vector (the Spark side asserts inline that
-    # the file set is unchanged — merge-on-read, zero rewrite); the
-    # survivors are the anti-filter of the lexicographically-least
-    # (orderkey, linenumber) among them
-    _wrap("snapdv", """
+     {"i1": "n", "d1": "sum_qty", "i2": "sum_ok"}),
+    ("snapdv", _s_layout_prune_parts, """
         WITH rem AS (
             SELECT l_orderkey, l_linenumber, l_quantity
             FROM lineitem
@@ -7173,15 +5730,8 @@ _ORACLES["s_layout_prune"] = _union(
         FROM rem
         WHERE NOT (l_orderkey = (SELECT ko FROM mn)
                    AND l_linenumber = (SELECT kl FROM mn))""",
-          "n::BIGINT AS i1, sum_qty::DOUBLE AS d1, "
-          "sum_ok::BIGINT AS i2"),
-    # snapcdc: the batch change feed over versions 3..5 — one row per
-    # (version, change_type): v3 overwrite deletes every qty<=3 row
-    # and inserts every qty=4 row; v4 deletes the key band (the
-    # rewritten remainder must CANCEL in the engine's multiset diff —
-    # any spurious row breaks the hash); v5 deletes exactly the
-    # snapdv row
-    _wrap("snapcdc", """
+     {"i1": "n", "d1": "sum_qty", "i2": "sum_ok"}),
+    ("snapcdc", _s_layout_prune_parts, """
         WITH cut AS (
             SELECT floor(max(l_orderkey) / 4)::BIGINT AS c
             FROM lineitem),
@@ -7217,14 +5767,8 @@ _ORACLES["s_layout_prune"] = _union(
         FROM rem
         WHERE l_orderkey = (SELECT ko FROM mn)
           AND l_linenumber = (SELECT kl FROM mn)""",
-          "n::BIGINT AS i1, sum_qty::DOUBLE AS d1, "
-          "sum_ok::BIGINT AS i2"),
-    # snapera: the change feed over the WHOLE history after a
-    # post-DML column rename + one more append — the feed auto-splits
-    # at the rename and aligns the old eras to the final name, so the
-    # seven (version, change_type) aggregate rows are exactly the
-    # snapcdc history plus both appends' inserts and the new slice
-    _wrap("snapera", """
+     {"i1": "n", "d1": "sum_qty", "i2": "sum_ok"}),
+    ("snapera", _s_layout_prune_parts, """
         WITH cut AS (
             SELECT floor(max(l_orderkey) / 4)::BIGINT AS c
             FROM lineitem),
@@ -7275,12 +5819,8 @@ _ORACLES["s_layout_prune"] = _union(
                sum(CAST(l_quantity AS DECIMAL(18,2)))::DOUBLE,
                sum(l_orderkey)
         FROM lineitem WHERE l_quantity = 5""",
-          "n::BIGINT AS i1, sum_qty::DOUBLE AS d1, "
-          "sum_ok::BIGINT AS i2"),
-    # snapbloom: Bloom-filtered point lookup on a hash-scattered key —
-    # the Spark side also asserts the present-key lookup touched
-    # strictly fewer files and an absent key skipped (almost) all
-    _wrap("snapbloom", """
+     {"i1": "n", "d1": "sum_qty", "i2": "sum_ok"}),
+    ("snapbloom", _s_layout_prune_parts, """
         SELECT count(*) AS n,
                sum(CAST(l_quantity AS DECIMAL(18,2)))::DOUBLE
                    AS sum_qty,
@@ -7289,12 +5829,8 @@ _ORACLES["s_layout_prune"] = _union(
         WHERE l_quantity <= 2
           AND l_partkey = (SELECT min(l_partkey) FROM lineitem
                            WHERE l_quantity <= 2)""",
-          "n::BIGINT AS i1, sum_qty::DOUBLE AS d1, "
-          "sum_ok::BIGINT AS i2"),
-    # snaphp: hidden partitioning — years(l_shipdate) layout, BASE-
-    # column timestamp predicate; the Spark side asserts the
-    # transform-mapped prune listed strictly fewer files
-    _wrap("snaphp", """
+     {"i1": "n", "d1": "sum_qty", "i2": "sum_ok"}),
+    ("snaphp", _s_layout_prune_parts, """
         SELECT count(*) AS n,
                sum(CAST(l_quantity AS DECIMAL(18,2)))::DOUBLE
                    AS sum_qty,
@@ -7302,31 +5838,25 @@ _ORACLES["s_layout_prune"] = _union(
         FROM lineitem
         WHERE l_quantity <= 2
           AND l_shipdate >= TIMESTAMP '1996-01-01'""",
-          "n::BIGINT AS i1, sum_qty::DOUBLE AS d1, "
-          "sum_ok::BIGINT AS i2"),
-    # snapcnt: the metadata-only predicated COUNT(*) (engine side
-    # never scans data) must equal the real SQL count
-    _wrap("snapcnt", """
+     {"i1": "n", "d1": "sum_qty", "i2": "sum_ok"}),
+    ("snapcnt", _s_layout_prune_parts, """
         SELECT count(*) AS n
         FROM lineitem
         WHERE l_quantity <= 2
           AND l_shipdate >= TIMESTAMP '1996-01-01'""",
-          "n::BIGINT AS i1, NULL::DOUBLE AS d1, "
-          "NULL::BIGINT AS i2"))
+     {"i1": "n"}))
 
-_SPAN_NULLS = ("NULL::BIGINT AS i1, NULL::BIGINT AS i2, NULL::BIGINT AS i3, "
-               "NULL::DOUBLE AS d1, NULL::VARCHAR AS s1")
-_ORACLES["x_dedup"] = _union(
-    _wrap("exact", _ORACLES["x_dedup_exact"],
-          f"NULL::BIGINT AS doc_id, lang, source, {_SPAN_NULLS}"),
-    _wrap("normalized", _ORACLES["x_dedup_normalized"],
-          f"doc_id::BIGINT AS doc_id, lang, source, {_SPAN_NULLS}"),
-    _wrap("spans", _ORACLES["x_dedup_spans"],
-          "doc_id::BIGINT AS doc_id, NULL::VARCHAR AS lang, "
-          "NULL::VARCHAR AS source, n_tokens::BIGINT AS i1, "
-          "dup_spans::BIGINT AS i2, dup_tokens::BIGINT AS i3, "
-          "dup_frac::DOUBLE AS d1, clean_md5 AS s1"),
-    _wrap("selfspans", """
+_COMPOSITES["x_dedup"] = _composite(
+    "part STRING, doc_id BIGINT, lang STRING, source STRING, i1 BIGINT, "
+    "i2 BIGINT, i3 BIGINT, d1 DOUBLE, s1 STRING",
+    ("exact", q_x_dedup_exact, _ORACLES["x_dedup_exact"],
+     {"lang": "lang", "source": "source"}),
+    ("normalized", q_x_dedup_normalized, _ORACLES["x_dedup_normalized"],
+     {"doc_id": "doc_id", "lang": "lang", "source": "source"}),
+    ("spans", q_x_dedup_spans, _ORACLES["x_dedup_spans"],
+     {"doc_id": "doc_id", "i1": "n_tokens", "i2": "dup_spans",
+      "i3": "dup_tokens", "d1": "dup_frac", "s1": "clean_md5"}),
+    ("selfspans", q_x_self_repetition, """
         WITH base AS (
           SELECT doc_id,
                  list_filter(string_split_regex(trim(text), '\\s+'),
@@ -7362,11 +5892,9 @@ _ORACLES["x_dedup"] = _union(
                        list_transform(kept, j -> toks[j + 1]), ' '), ''))
                    AS clean_md5
         FROM final""",
-          "doc_id::BIGINT AS doc_id, NULL::VARCHAR AS lang, "
-          "NULL::VARCHAR AS source, n_tokens::BIGINT AS i1, "
-          "rep_spans::BIGINT AS i2, rep_tokens::BIGINT AS i3, "
-          "rep_frac::DOUBLE AS d1, clean_md5 AS s1"),
-    _wrap("keepbest", """
+     {"doc_id": "doc_id", "i1": "n_tokens", "i2": "rep_spans",
+      "i3": "rep_tokens", "d1": "rep_frac", "s1": "clean_md5"}),
+    ("keepbest", q_x_dedup_keep_best, """
         WITH u AS (
             SELECT doc_id, text, lang, source, n_chars FROM documents
             UNION ALL
@@ -7386,10 +5914,8 @@ _ORACLES["x_dedup"] = _union(
                                                doc_id ASC) AS rk
             FROM fp)
         SELECT doc_id, lang, source FROM r WHERE rk = 1""",
-          f"doc_id::BIGINT AS doc_id, lang, source, {_SPAN_NULLS}"))
+     {"doc_id": "doc_id", "lang": "lang", "source": "source"}))
 
-_NGRAM_PAIR_SEL = ("id_a::BIGINT AS id_a, id_b::BIGINT AS id_b, "
-                   "jaccard::DOUBLE AS jaccard")
 _NJ_BLOCKED, _NJ_GLOBAL = (_ORACLES["x_ngram_jaccard"],
                            _ORACLES["x_ngram_jaccard_global"])
 _ORACLES["x_edit_distance"] = """
@@ -7501,21 +6027,20 @@ def _fs_linkage_oracle() -> str:
         WHERE round({weight}, 6) >= 2.9"""
 
 
-_ORACLES["x_ngram_jaccard"] = _union(
-    _wrap("blocked", _NJ_BLOCKED, _NGRAM_PAIR_SEL),
-    _wrap("global", _NJ_GLOBAL, _NGRAM_PAIR_SEL),
-    _wrap("editdist", _ORACLES["x_edit_distance"],
-          "id_a::BIGINT AS id_a, id_b::BIGINT AS id_b, "
-          "dist::DOUBLE AS jaccard"),
-    _wrap("simhash", _ORACLES["x_simhash_md5"],
-          "id_a::BIGINT AS id_a, id_b::BIGINT AS id_b, "
-          "hamming::DOUBLE AS jaccard"),
-    _wrap("containment", _ORACLES["x_containment"],
-          "id_a::BIGINT AS id_a, id_b::BIGINT AS id_b, "
-          "containment::DOUBLE AS jaccard"),
-    _wrap("linkage", _fs_linkage_oracle(),
-          "id_a::BIGINT AS id_a, id_b::BIGINT AS id_b, "
-          "weight::DOUBLE AS jaccard"))
+_COMPOSITES["x_ngram_jaccard"] = _composite(
+    "part STRING, id_a BIGINT, id_b BIGINT, jaccard DOUBLE",
+    ("blocked", _x_ngram_jaccard_parts, _NJ_BLOCKED,
+     {"id_a": "id_a", "id_b": "id_b", "jaccard": "jaccard"}),
+    ("global", _x_ngram_jaccard_parts, _NJ_GLOBAL,
+     {"id_a": "id_a", "id_b": "id_b", "jaccard": "jaccard"}),
+    ("editdist", _x_ngram_jaccard_parts, _ORACLES["x_edit_distance"],
+     {"id_a": "id_a", "id_b": "id_b", "jaccard": "dist"}),
+    ("simhash", _x_ngram_jaccard_parts, _ORACLES["x_simhash_md5"],
+     {"id_a": "id_a", "id_b": "id_b", "jaccard": "hamming"}),
+    ("containment", _x_ngram_jaccard_parts, _ORACLES["x_containment"],
+     {"id_a": "id_a", "id_b": "id_b", "jaccard": "containment"}),
+    ("linkage", _x_ngram_jaccard_parts, _fs_linkage_oracle(),
+     {"id_a": "id_a", "id_b": "id_b", "jaccard": "weight"}))
 
 def _duck_cos(a: str, b: str) -> str:
     return (f"round(list_reduce(list_transform(list_zip({a}, {b}), "
@@ -7553,15 +6078,14 @@ _ORACLES["x_semantic_dedup"] = f"""
            CASE WHEN d.dup_of IS NULL THEN 1 ELSE 0 END AS keep
     FROM v LEFT JOIN dup_info d ON v.vec_id = d.id_b"""
 
-_ORACLES["x_embed_neardup"] = _union(
-    _wrap("pairs", _ORACLES["x_embed_pairs"],
-          "id_a::BIGINT AS id_a, id_b::BIGINT AS id_b, "
-          "cosine::DOUBLE AS cosine, NULL::BIGINT AS cid, "
-          "NULL::BIGINT AS keep"),
-    _wrap("semdedup", _ORACLES["x_semantic_dedup"],
-          "vec_id::BIGINT AS id_a, dup_of::BIGINT AS id_b, "
-          "max_sim::DOUBLE AS cosine, centroid_id::BIGINT AS cid, "
-          "keep::BIGINT AS keep"))
+_COMPOSITES["x_embed_neardup"] = _composite(
+    "part STRING, id_a BIGINT, id_b BIGINT, cosine DOUBLE, cid BIGINT, "
+    "keep BIGINT",
+    ("pairs", q_x_embed_pairs, _ORACLES["x_embed_pairs"],
+     {"id_a": "id_a", "id_b": "id_b", "cosine": "cosine"}),
+    ("semdedup", q_x_semantic_dedup, _ORACLES["x_semantic_dedup"],
+     {"id_a": "vec_id", "id_b": "dup_of", "cosine": "max_sim",
+      "cid": "centroid_id", "keep": "keep"}))
 
 _ORACLES["x_ivf_topk"] = f"""
     WITH q AS (SELECT embedding::DOUBLE[] AS qe FROM embeddings
@@ -7720,28 +6244,27 @@ def _ann_recall_oracle() -> str:
 _ORACLES["x_ann_recall"] = _ann_recall_oracle()
 
 
-_ORACLES["x_cosine_search"] = _union(
-    _wrap("topk", _ORACLES["x_cosine_topk"],
-          "NULL::BIGINT AS id_l, vec_id::BIGINT AS id_r, "
-          "cosine::DOUBLE AS cosine, NULL::BIGINT AS rank"),
-    _wrap("join_topk", _ORACLES["x_similarity_join_topk"],
-          "id_l::BIGINT AS id_l, id_r::BIGINT AS id_r, "
-          "cosine::DOUBLE AS cosine, rank::BIGINT AS rank"),
-    _wrap("ivf_topk", _ORACLES["x_ivf_topk"],
-          "centroid_id::BIGINT AS id_l, vec_id::BIGINT AS id_r, "
-          "cosine::DOUBLE AS cosine, NULL::BIGINT AS rank"),
-    _wrap("ann_lsh", _ORACLES["x_ann_lsh"],
-          "NULL::BIGINT AS id_l, vec_id::BIGINT AS id_r, "
-          "cosine::DOUBLE AS cosine, NULL::BIGINT AS rank"),
-    _wrap("recall", _ORACLES["x_ann_recall"],
-          "id_l::BIGINT AS id_l, n_hit::BIGINT AS id_r, "
-          "recall::DOUBLE AS cosine, n_truth::BIGINT AS rank"))
+_COMPOSITES["x_cosine_search"] = _composite(
+    "part STRING, id_l BIGINT, id_r BIGINT, cosine DOUBLE, rank BIGINT",
+    ("topk", _x_cosine_search_parts, _ORACLES["x_cosine_topk"],
+     {"id_r": "vec_id", "cosine": "cosine"}),
+    ("join_topk", _x_cosine_search_parts, _ORACLES["x_similarity_join_topk"],
+     {"id_l": "id_l", "id_r": "id_r", "cosine": "cosine", "rank": "rank"}),
+    ("ivf_topk", _x_cosine_search_parts, _ORACLES["x_ivf_topk"],
+     {"id_l": "centroid_id", "id_r": "vec_id", "cosine": "cosine"}),
+    ("ann_lsh", _x_cosine_search_parts, _ORACLES["x_ann_lsh"],
+     {"id_r": "vec_id", "cosine": "cosine"}),
+    ("recall", _x_cosine_search_parts, _ORACLES["x_ann_recall"],
+     {"id_l": "id_l", "id_r": "n_hit", "cosine": "recall", "rank": "n_truth"}))
 
-_ASSIGN_SEL = ("vec_id::BIGINT AS vec_id, centroid_id::BIGINT AS "
-               "centroid_id, centroid_sim::DOUBLE AS centroid_sim")
-_ORACLES["x_cluster_assign"] = _union(
-    _wrap("ivf", _ORACLES["x_ivf_assign"], _ASSIGN_SEL),
-    _wrap("kmeans", _ORACLES["x_kmeans_assign"], _ASSIGN_SEL))
+_COMPOSITES["x_cluster_assign"] = _composite(
+    "part STRING, vec_id BIGINT, centroid_id BIGINT, centroid_sim DOUBLE",
+    ("ivf", _x_cluster_assign_parts, _ORACLES["x_ivf_assign"],
+     {"vec_id": "vec_id", "centroid_id": "centroid_id",
+      "centroid_sim": "centroid_sim"}),
+    ("kmeans", _x_cluster_assign_parts, _ORACLES["x_kmeans_assign"],
+     {"vec_id": "vec_id", "centroid_id": "centroid_id",
+      "centroid_sim": "centroid_sim"}))
 
 _ORACLES["x_token_entropy"] = f"""
     WITH toks AS (
@@ -7869,19 +6392,18 @@ _ORACLES["x_collocations"] = f"""
     CROSS JOIN nb CROSS JOIN nu
     ORDER BY pmi DESC, gram_a, gram_b LIMIT 50"""
 
-_ORACLES["x_term_weights"] = _union(
-    _wrap("tfidf", _ORACLES["x_tfidf_topk"],
-          "doc_id::BIGINT AS doc_id, term, tf::BIGINT AS tf, "
-          "tfidf::DOUBLE AS val_d, rank::BIGINT AS val_i"),
-    _wrap("count_vectorize", _ORACLES["x_count_vectorize"],
-          "doc_id::BIGINT AS doc_id, term, tf::BIGINT AS tf, "
-          "NULL::DOUBLE AS val_d, idx::BIGINT AS val_i"),
-    _wrap("colloc", _ORACLES["x_collocations"],
-          "NULL::BIGINT AS doc_id, gram_a || ' ' || gram_b AS term, "
-          "n_pair::BIGINT AS tf, pmi::DOUBLE AS val_d, "
-          "NULL::BIGINT AS val_i"),
-    # TF-IDF cosine pairs on the de block (textstats.tfidf_cosine_pairs)
-    _wrap("tfcos", """
+_COMPOSITES["x_term_weights"] = _composite(
+    "part STRING, doc_id BIGINT, term STRING, tf BIGINT, val_d DOUBLE, "
+    "val_i BIGINT",
+    ("tfidf", q_x_tfidf_topk, _ORACLES["x_tfidf_topk"],
+     {"doc_id": "doc_id", "term": "term", "tf": "tf", "val_d": "tfidf",
+      "val_i": "rank"}),
+    ("count_vectorize", q_x_count_vectorize, _ORACLES["x_count_vectorize"],
+     {"doc_id": "doc_id", "term": "term", "tf": "tf", "val_i": "idx"}),
+    ("colloc", q_x_collocations, _ORACLES["x_collocations"],
+     {"term": "concat_ws(' ', gram_a, gram_b)", "tf": "n_pair",
+      "val_d": "pmi"}),
+    ("tfcos", q_x_tfidf_cosine, """
         WITH de AS (SELECT doc_id, text FROM documents
                     WHERE lang = 'de'),
         tc AS (
@@ -7919,9 +6441,7 @@ _ORACLES["x_term_weights"] = _union(
         JOIN norms na ON dots.id_a = na.doc_id
         JOIN norms nb ON dots.id_b = nb.doc_id
         WHERE round(dt::DOUBLE / (na.nrm * nb.nrm), 6) >= 0.8""",
-          "id_a::BIGINT AS doc_id, NULL::VARCHAR AS term, "
-          "NULL::BIGINT AS tf, cosine::DOUBLE AS val_d, "
-          "id_b::BIGINT AS val_i"))
+     {"doc_id": "id_a", "val_d": "cosine", "val_i": "id_b"}))
 
 #: shared within-lang 3-gram Jaccard pair graph (threshold 0.5) used by
 #: both x_dedup_clusters parts.
@@ -8008,19 +6528,16 @@ _ORACLES["x_triangles"] = f"""
                coalesce(tc.triangles, 0)::BIGINT AS triangles
         FROM dg d LEFT JOIN tc ON d.node = tc.node"""
 
-_ORACLES["x_dedup_clusters"] = _union(
-    _wrap("cc", _ORACLES["x_cc_clusters"],
-          "node::BIGINT AS node, component::BIGINT AS i1, "
-          "is_canonical AS flag, NULL::DOUBLE AS d1"),
-    _wrap("pagerank", _ORACLES["x_pagerank"],
-          "node::BIGINT AS node, rank::BIGINT AS i1, "
-          "NULL::BOOLEAN AS flag, rank_scaled::DOUBLE AS d1"),
-    _wrap("triangles", _ORACLES["x_triangles"],
-          "node::BIGINT AS node, triangles::BIGINT AS i1, "
-          "NULL::BOOLEAN AS flag, degree::DOUBLE AS d1"),
-    _wrap("bfs", _ORACLES["x_bfs"],
-          "node::BIGINT AS node, dist::BIGINT AS i1, "
-          "NULL::BOOLEAN AS flag, NULL::DOUBLE AS d1"))
+_COMPOSITES["x_dedup_clusters"] = _composite(
+    "part STRING, node BIGINT, i1 BIGINT, flag BOOLEAN, d1 DOUBLE",
+    ("cc", _x_dedup_clusters_parts, _ORACLES["x_cc_clusters"],
+     {"node": "node", "i1": "component", "flag": "is_canonical"}),
+    ("pagerank", _x_dedup_clusters_parts, _ORACLES["x_pagerank"],
+     {"node": "node", "i1": "rank", "d1": "rank_scaled"}),
+    ("triangles", _x_dedup_clusters_parts, _ORACLES["x_triangles"],
+     {"node": "node", "i1": "triangles", "d1": "degree"}),
+    ("bfs", _x_dedup_clusters_parts, _ORACLES["x_bfs"],
+     {"node": "node", "i1": "dist"}))
 
 _MIX_TOTAL = sum(_MIX_WEIGHTS.values())
 _MIX_CASE = ("CASE lang "
@@ -8045,14 +6562,14 @@ _ORACLES["x_mixture_sample"] = f"""
            sum(n_chars)::BIGINT AS chars_kept
     FROM kept GROUP BY lang"""
 
-_ORACLES["x_hash_sampling"] = _union(
-    _wrap("sample", _ORACLES["x_hash_sample"],
-          "doc_id::BIGINT AS doc_id, lang, NULL::VARCHAR AS split, "
-          "NULL::BIGINT AS n, NULL::BIGINT AS i2"),
-    _wrap("split", _ORACLES["x_hash_split"],
-          "NULL::BIGINT AS doc_id, lang, split, n::BIGINT AS n, "
-          "NULL::BIGINT AS i2"),
-    _wrap("weighted", """
+_COMPOSITES["x_hash_sampling"] = _composite(
+    "part STRING, doc_id BIGINT, lang STRING, split STRING, n BIGINT, "
+    "i2 BIGINT",
+    ("sample", q_x_hash_sample, _ORACLES["x_hash_sample"],
+     {"doc_id": "doc_id", "lang": "lang"}),
+    ("split", q_x_hash_split, _ORACLES["x_hash_split"],
+     {"lang": "lang", "split": "split", "n": "n"}),
+    ("weighted", q_x_weighted_sample, """
         SELECT doc_id, lang FROM (
             SELECT doc_id, lang,
                    ln((('0x' || substr(md5(doc_id::VARCHAR), 1, 13))
@@ -8060,12 +6577,10 @@ _ORACLES["x_hash_sampling"] = _union(
                    / (n_chars + 1) AS wkey
             FROM documents)
         ORDER BY wkey DESC, doc_id ASC LIMIT 100""",
-          "doc_id::BIGINT AS doc_id, lang, NULL::VARCHAR AS split, "
-          "NULL::BIGINT AS n, NULL::BIGINT AS i2"),
-    _wrap("mix", _ORACLES["x_mixture_sample"],
-          "NULL::BIGINT AS doc_id, lang, NULL::VARCHAR AS split, "
-          "n_kept::BIGINT AS n, chars_kept::BIGINT AS i2"),
-    _wrap("pergroup", """
+     {"doc_id": "doc_id", "lang": "lang"}),
+    ("mix", q_x_mixture_sample, _ORACLES["x_mixture_sample"],
+     {"lang": "lang", "n": "n_kept", "i2": "chars_kept"}),
+    ("pergroup", q_x_per_group_sample, """
         SELECT doc_id, lang FROM (
             SELECT doc_id, lang,
                    row_number() OVER (
@@ -8076,19 +6591,8 @@ _ORACLES["x_hash_sampling"] = _union(
                                 doc_id ASC) AS rk
             FROM documents)
         WHERE rk <= 8""",
-          "doc_id::BIGINT AS doc_id, lang, NULL::VARCHAR AS split, "
-          "NULL::BIGINT AS n, NULL::BIGINT AS i2"),
-    # deterministic k-fold CV: fold = md5-bucket(id || 'cv') % 10000 % 5
-    _wrap("kfold", """
-        SELECT fold, lang, count(*) AS n, sum(doc_id) AS sum_id FROM (
-            SELECT doc_id, lang,
-                   (('0x' || substr(md5(doc_id::VARCHAR || 'cv'), 1, 8))
-                    ::UBIGINT % 10000) % 5 AS fold
-            FROM documents)
-        GROUP BY fold, lang""",
-          "NULL::BIGINT AS doc_id, lang, fold::VARCHAR AS split, "
-          "n::BIGINT AS n, sum_id::BIGINT AS i2"),
-    _wrap("negatives", """
+     {"doc_id": "doc_id", "lang": "lang"}),
+    ("negatives", q_x_negative_sample, """
         WITH ids AS (SELECT DISTINCT doc_id FROM documents),
         mx AS (SELECT max(doc_id) AS m FROM ids),
         cand AS (
@@ -8102,22 +6606,26 @@ _ORACLES["x_hash_sampling"] = _union(
         SELECT c1.doc_id, c1.c::BIGINT AS neg_id, c1.j::BIGINT AS j
         FROM cand c1 JOIN ids e ON c1.c = e.doc_id
         WHERE c1.c <> c1.doc_id""",
-          "doc_id::BIGINT AS doc_id, NULL::VARCHAR AS lang, "
-          "NULL::VARCHAR AS split, j::BIGINT AS n, "
-          "neg_id::BIGINT AS i2"))
+     {"doc_id": "doc_id", "n": "j", "i2": "neg_id"}),
+    ("kfold", q_x_kfold, """
+        SELECT fold, lang, count(*) AS n, sum(doc_id) AS sum_id FROM (
+            SELECT doc_id, lang,
+                   (('0x' || substr(md5(doc_id::VARCHAR || 'cv'), 1, 8))
+                    ::UBIGINT % 10000) % 5 AS fold
+            FROM documents)
+        GROUP BY fold, lang""",
+     {"lang": "lang", "split": "fold", "n": "n", "i2": "sum_id"}))
 
-_ORACLES["x_chunk_pack"] = _union(
-    _wrap("chunk", _ORACLES["x_chunk_documents"],
-          "doc_id::BIGINT AS doc_id, chunk_id::BIGINT AS i1, "
-          "chunk_text AS s1, n_tokens::BIGINT AS n_tokens, "
-          "NULL::BIGINT AS i2"),
-    _wrap("pack", _ORACLES["x_pack_sequences"],
-          "doc_id::BIGINT AS doc_id, shard::BIGINT AS i1, "
-          "NULL::VARCHAR AS s1, n_tokens::BIGINT AS n_tokens, "
-          "bin_id::BIGINT AS i2"),
-    # sentence-boundary chunking (textstats.chunk_by_sentences,
-    # max_tokens=48): sentinel split (no lookbehind — RE2-portable)
-    _wrap("chunk_sent", """
+_COMPOSITES["x_chunk_pack"] = _composite(
+    "part STRING, doc_id BIGINT, i1 BIGINT, s1 STRING, n_tokens BIGINT, "
+    "i2 BIGINT",
+    ("chunk", q_x_chunk_documents, _ORACLES["x_chunk_documents"],
+     {"doc_id": "doc_id", "i1": "chunk_id", "s1": "chunk_text",
+      "n_tokens": "n_tokens"}),
+    ("pack", q_x_pack_sequences, _ORACLES["x_pack_sequences"],
+     {"doc_id": "doc_id", "i1": "shard", "n_tokens": "n_tokens",
+      "i2": "bin_id"}),
+    ("chunk_sent", q_x_chunk_sentences, """
         WITH s AS (
             SELECT doc_id,
                    unnest(list_filter(
@@ -8151,76 +6659,57 @@ _ORACLES["x_chunk_pack"] = _union(
                count(*)::BIGINT AS n_sentences,
                sum(tk)::BIGINT AS n_tokens
         FROM c GROUP BY doc_id, chunk_id""",
-          "doc_id::BIGINT AS doc_id, chunk_id::BIGINT AS i1, "
-          "chunk_text AS s1, n_tokens::BIGINT AS n_tokens, "
-          "n_sentences::BIGINT AS i2"))
+     {"doc_id": "doc_id", "i1": "chunk_id", "s1": "chunk_text",
+      "n_tokens": "n_tokens", "i2": "n_sentences"}))
 
-_X_MEDIA_INULLS = ("NULL::BIGINT AS i2, NULL::BIGINT AS i3, "
-                   "NULL::BIGINT AS i4")
-_ORACLES["x_media"] = _union(
-    _wrap("dedup", _ORACLES["x_media_dedup"],
-          "media_id::BIGINT AS media_id, digest AS s1, "
-          f"NULL::BIGINT AS i1, {_X_MEDIA_INULLS}"),
-    _wrap("frames", _ORACLES["x_media_frames"],
-          "media_id::BIGINT AS media_id, NULL::VARCHAR AS s1, "
-          f"n_frames::BIGINT AS i1, {_X_MEDIA_INULLS}"),
-    # audiometa: the WAV synthesis parameters are pure doc_id
-    # arithmetic, so the decoded integer surface is stated directly:
-    # n = 4096 + (doc_id%5)*1024 samples @8 kHz -> duration n/8 ms,
-    # FFT frames 1 + (n-2048)//512 at n_fft=2048/hop=512
-    _wrap("audiometa", """
+_COMPOSITES["x_media"] = _composite(
+    "part STRING, media_id BIGINT, s1 STRING, i1 BIGINT, i2 BIGINT, "
+    "i3 BIGINT, i4 BIGINT",
+    ("dedup", q_x_media_dedup, _ORACLES["x_media_dedup"],
+     {"media_id": "media_id", "s1": "digest"}),
+    ("frames", q_x_media_frames, _ORACLES["x_media_frames"],
+     {"media_id": "media_id", "i1": "n_frames"}),
+    ("audiometa", q_x_media_audiometa, """
         SELECT doc_id AS media_id, 8000 AS sample_rate,
                (4096 + (doc_id % 5) * 1024) // 8 AS duration_ms,
                1 + (4096 + (doc_id % 5) * 1024 - 2048) // 512
                    AS n_frames,
                1 AS decoded
         FROM documents WHERE doc_id < 40""",
-          "media_id::BIGINT AS media_id, NULL::VARCHAR AS s1, "
-          "sample_rate::BIGINT AS i1, duration_ms::BIGINT AS i2, "
-          "n_frames::BIGINT AS i3, decoded::BIGINT AS i4"),
-    # gifpix: solid 3x2 GIFs with palette bytes derived from doc_id —
-    # the decoder must hand back exactly those bytes and dims
-    _wrap("gifpix", """
+     {"media_id": "media_id", "i1": "sample_rate", "i2": "duration_ms",
+      "i3": "n_frames", "i4": "decoded"}),
+    ("gifpix", _pixel_bytes(q_x_media_gifpix), """
         SELECT doc_id AS media_id, 3 AS width, 2 AS height,
                doc_id % 256 AS r, (doc_id * 7) % 256 AS g,
                ((doc_id * 13) % 256)::VARCHAR AS b
         FROM documents WHERE doc_id < 40""",
-          "media_id::BIGINT AS media_id, b AS s1, "
-          "width::BIGINT AS i1, height::BIGINT AS i2, "
-          "r::BIGINT AS i3, g::BIGINT AS i4"),
-    # pngpix: identical contract for the lossless PNG decoder
-    _wrap("pngpix", """
+     {"media_id": "media_id", "s1": "b", "i1": "width", "i2": "height",
+      "i3": "r", "i4": "g"}),
+    ("pngpix", _pixel_bytes(q_x_media_pngpix), """
         SELECT doc_id AS media_id, 3 AS width, 2 AS height,
                doc_id % 256 AS r, (doc_id * 7) % 256 AS g,
                ((doc_id * 13) % 256)::VARCHAR AS b
         FROM documents WHERE doc_id < 40""",
-          "media_id::BIGINT AS media_id, b AS s1, "
-          "width::BIGINT AS i1, height::BIGINT AS i2, "
-          "r::BIGINT AS i3, g::BIGINT AS i4"),
-    # resizepix: solid 6x4 PPMs bilinear-resized to 3x2 and
-    # re-decoded — solid color is exact through interpolation and the
-    # P6 output is lossless, so the bytes survive at the new dims
-    _wrap("resizepix", """
+     {"media_id": "media_id", "s1": "b", "i1": "width", "i2": "height",
+      "i3": "r", "i4": "g"}),
+    ("resizepix", _pixel_bytes(q_x_media_resizepix), """
         SELECT doc_id AS media_id, 3 AS width, 2 AS height,
                doc_id % 256 AS r, (doc_id * 7) % 256 AS g,
                ((doc_id * 13) % 256)::VARCHAR AS b
         FROM documents WHERE doc_id < 40""",
-          "media_id::BIGINT AS media_id, b AS s1, "
-          "width::BIGINT AS i1, height::BIGINT AS i2, "
-          "r::BIGINT AS i3, g::BIGINT AS i4"))
+     {"media_id": "media_id", "s1": "b", "i1": "width", "i2": "height",
+      "i3": "r", "i4": "g"}))
 
-_ORACLES["st_windows"] = _union(
-    _wrap("tumbling", _ORACLES["st_tumbling"],
-          "win_us::BIGINT AS win_us, NULL::BIGINT AS i1, "
-          "event_type AS s1, n::BIGINT AS n, sum_value::DOUBLE AS "
-          "sum_value"),
-    _wrap("sliding", _ORACLES["st_sliding"],
-          "win_us::BIGINT AS win_us, NULL::BIGINT AS i1, "
-          "NULL::VARCHAR AS s1, n::BIGINT AS n, NULL::DOUBLE AS sum_value"),
-    _wrap("session", _ORACLES["st_session"],
-          "session_us::BIGINT AS win_us, user_id::BIGINT AS i1, "
-          "NULL::VARCHAR AS s1, n_events::BIGINT AS n, "
-          "NULL::DOUBLE AS sum_value"))
+_COMPOSITES["st_windows"] = _composite(
+    "part STRING, win_us BIGINT, i1 BIGINT, s1 STRING, n BIGINT, "
+    "sum_value DOUBLE",
+    ("tumbling", q_st_tumbling, _ORACLES["st_tumbling"],
+     {"win_us": "win_us", "s1": "event_type", "n": "n",
+      "sum_value": "sum_value"}),
+    ("sliding", q_st_sliding, _ORACLES["st_sliding"],
+     {"win_us": "win_us", "n": "n"}),
+    ("session", q_st_session, _ORACLES["st_session"],
+     {"win_us": "session_us", "i1": "user_id", "n": "n_events"}))
 
 #: unrolled k-lag EWMA terms (alpha=0.3, k=8) — the Python float repr
 #: of 0.7**j is bit-identical to the F.lit(beta**j) literal the Spark
@@ -8305,23 +6794,14 @@ def _holt_oracle() -> str:
         FROM f"""
 
 
-_ORACLES["s_window_range_trailing"] = _union(
-    _wrap("trailing", _ORACLES["s_window_range_trailing"],
-          "user_id::BIGINT AS user_id, event_id::BIGINT AS event_id, "
-          "ts_us::BIGINT AS ts_us, trailing_sum::DOUBLE AS d1, "
-          "NULL::DOUBLE AS d2, NULL::DOUBLE AS d3, "
-          "trailing_n::BIGINT AS i1"),
-    _wrap("holt", _holt_oracle(),
-          "user_id::BIGINT AS user_id, NULL::BIGINT AS event_id, "
-          "NULL::BIGINT AS ts_us, level::DOUBLE AS d1, "
-          "trend::DOUBLE AS d2, forecast::DOUBLE AS d3, "
-          "n::BIGINT AS i1"),
-    _wrap("cusum", _cusum_oracle(),
-          "user_id::BIGINT AS user_id, alarm::BIGINT AS event_id, "
-          "n::BIGINT AS ts_us, max_s_plus::DOUBLE AS d1, "
-          "max_s_minus::DOUBLE AS d2, sd::DOUBLE AS d3, "
-          "NULL::BIGINT AS i1"),
-    _wrap("zscore", """
+_COMPOSITES["s_window_range_trailing"] = _composite(
+    "part STRING, user_id BIGINT, event_id BIGINT, ts_us BIGINT, d1 DOUBLE, "
+    "d2 DOUBLE, d3 DOUBLE, i1 BIGINT",
+    ("trailing", _s_window_range_trailing_parts,
+     _ORACLES["s_window_range_trailing"],
+     {"user_id": "user_id", "event_id": "event_id", "ts_us": "ts_us",
+      "d1": "trailing_sum", "i1": "trailing_n"}),
+    ("zscore", _s_window_range_trailing_parts, """
         WITH w AS (
             SELECT user_id, event_id, epoch_us(ts) AS ts_us,
                    value,
@@ -8353,11 +6833,10 @@ _ORACLES["s_window_range_trailing"] = _union(
                        (n * sxx - sx * sx) / (n * (n - 1.0)))) > 3.0)
                    ::BIGINT END AS is_anomaly
         FROM w""",
-          "user_id::BIGINT AS user_id, event_id::BIGINT AS event_id, "
-          "ts_us::BIGINT AS ts_us, roll_mean::DOUBLE AS d1, "
-          "roll_std::DOUBLE AS d2, zscore::DOUBLE AS d3, "
-          "is_anomaly::BIGINT AS i1"),
-    _wrap("ewma", f"""
+     {"user_id": "user_id", "event_id": "event_id", "ts_us": "ts_us",
+      "d1": "roll_mean", "d2": "roll_std", "d3": "zscore",
+      "i1": "is_anomaly"}),
+    ("ewma", _s_window_range_trailing_parts, f"""
         WITH t AS (
             SELECT user_id, event_id, epoch_us(ts) AS ts_us, value,
                    ({_EWMA_NUM}) / ({_EWMA_DEN}) AS ew
@@ -8365,11 +6844,9 @@ _ORACLES["s_window_range_trailing"] = _union(
             WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
         SELECT user_id, event_id, ts_us, value::DOUBLE AS value,
                round(ew, 6) AS ewma FROM t""",
-          "user_id::BIGINT AS user_id, event_id::BIGINT AS event_id, "
-          "ts_us::BIGINT AS ts_us, ewma::DOUBLE AS d1, "
-          "value::DOUBLE AS d2, NULL::DOUBLE AS d3, "
-          "NULL::BIGINT AS i1"),
-    _wrap("distinct7", """
+     {"user_id": "user_id", "event_id": "event_id", "ts_us": "ts_us",
+      "d1": "ewma", "d2": "value"}),
+    ("distinct7", _s_window_range_trailing_parts, """
         WITH days AS (
             SELECT DISTINCT date_trunc('day', ts) AS d FROM events)
         SELECT epoch_us(d) AS day_us,
@@ -8378,24 +6855,17 @@ _ORACLES["s_window_range_trailing"] = _union(
                       BETWEEN d - INTERVAL 6 DAY AND d)::BIGINT
                    AS active_users
         FROM days""",
-          "NULL::BIGINT AS user_id, NULL::BIGINT AS event_id, "
-          "day_us::BIGINT AS ts_us, NULL::DOUBLE AS d1, "
-          "NULL::DOUBLE AS d2, NULL::DOUBLE AS d3, "
-          "active_users::BIGINT AS i1"),
-    _wrap("rollmed", """
+     {"ts_us": "day_us", "i1": "active_users"}),
+    ("rollmed", _s_window_range_trailing_parts, """
         SELECT user_id, event_id, epoch_us(ts) AS ts_us, value,
                round(quantile_cont(value, 0.5) OVER (
                    PARTITION BY user_id ORDER BY ts, event_id
                    ROWS BETWEEN 6 PRECEDING AND CURRENT ROW), 6)
                    AS roll_median
         FROM events""",
-          "user_id::BIGINT AS user_id, event_id::BIGINT AS event_id, "
-          "ts_us::BIGINT AS ts_us, roll_median::DOUBLE AS d1, "
-          "value::DOUBLE AS d2, NULL::DOUBLE AS d3, "
-          "NULL::BIGINT AS i1"),
-    # per-user ACF at lags 1..3 (relational.acf): decimal-exact mean,
-    # 6-decimal-quantized term sums — identical doubles both engines
-    _wrap("acf", """
+     {"user_id": "user_id", "event_id": "event_id", "ts_us": "ts_us",
+      "d1": "roll_median", "d2": "value"}),
+    ("acf", _s_window_range_trailing_parts, """
         WITH b AS (
             SELECT user_id, value::DOUBLE AS x,
                    lag(value::DOUBLE, 1) OVER w AS l1,
@@ -8437,13 +6907,14 @@ _ORACLES["s_window_range_trailing"] = _union(
                CASE WHEN den > 0
                    THEN round(n3::DOUBLE / den::DOUBLE, 6) END
         FROM a""",
-          "user_id::BIGINT AS user_id, NULL::BIGINT AS event_id, "
-          "lag::BIGINT AS ts_us, acf::DOUBLE AS d1, "
-          "NULL::DOUBLE AS d2, NULL::DOUBLE AS d3, "
-          "n_pairs::BIGINT AS i1"))
+     {"user_id": "user_id", "ts_us": "lag", "d1": "acf", "i1": "n_pairs"}),
+    ("holt", _s_window_range_trailing_parts, _holt_oracle(),
+     {"user_id": "user_id", "d1": "level", "d2": "trend", "d3": "forecast",
+      "i1": "n"}),
+    ("cusum", _s_window_range_trailing_parts, _cusum_oracle(),
+     {"user_id": "user_id", "event_id": "alarm", "ts_us": "n",
+      "d1": "max_s_plus", "d2": "max_s_minus", "d3": "sd"}))
 
-_SESS_NULLS_A = ("NULL::BIGINT AS i1, NULL::BIGINT AS i2, "
-                 "NULL::BIGINT AS i3, NULL::BIGINT AS i4")
 
 _ORACLES["s_transitions"] = """
     WITH p AS (
@@ -8460,16 +6931,15 @@ _ORACLES["s_transitions"] = """
     FROM c"""
 
 _SESS_BASE = _ORACLES["s_sessionize"]
-_ORACLES["s_sessionize"] = _union(
-    _wrap("sessions", _SESS_BASE,
-          "user_id::BIGINT AS i1, session_id::BIGINT AS i2, "
-          "start_us::BIGINT AS i3, end_us::BIGINT AS i4, "
-          "n_events::BIGINT AS n, NULL::VARCHAR AS s1, "
-          "NULL::VARCHAR AS s2, NULL::DOUBLE AS d1"),
-    _wrap("transitions", _ORACLES["s_transitions"],
-          _SESS_NULLS_A + ", n::BIGINT AS n, from_type AS s1, "
-          "to_type AS s2, prob::DOUBLE AS d1"),
-    _wrap("islands", """
+_COMPOSITES["s_sessionize"] = _composite(
+    "part STRING, i1 BIGINT, i2 BIGINT, i3 BIGINT, i4 BIGINT, n BIGINT, "
+    "s1 STRING, s2 STRING, d1 DOUBLE",
+    ("sessions", q_s_sessions, _SESS_BASE,
+     {"i1": "user_id", "i2": "session_id", "i3": "start_us", "i4": "end_us",
+      "n": "n_events"}),
+    ("transitions", q_s_transitions, _ORACLES["s_transitions"],
+     {"n": "n", "s1": "from_type", "s2": "to_type", "d1": "prob"}),
+    ("islands", q_s_islands, """
         WITH iv AS (
             SELECT user_id, ts AS s, ts + INTERVAL 6 HOUR AS e
             FROM events),
@@ -8494,11 +6964,9 @@ _ORACLES["s_sessionize"] = _union(
                epoch_us(min(s)) AS start_us, epoch_us(max(e)) AS end_us,
                count(*)::BIGINT AS n_intervals
         FROM g GROUP BY user_id, island_id""",
-          "user_id::BIGINT AS i1, island_id::BIGINT AS i2, "
-          "start_us::BIGINT AS i3, end_us::BIGINT AS i4, "
-          "n_intervals::BIGINT AS n, NULL::VARCHAR AS s1, "
-          "NULL::VARCHAR AS s2, NULL::DOUBLE AS d1"),
-    _wrap("paths", """
+     {"i1": "user_id", "i2": "island_id", "i3": "start_us", "i4": "end_us",
+      "n": "n_intervals"}),
+    ("paths", q_s_top_paths, """
         WITH o AS (
             SELECT user_id, event_id, ts, event_type,
                    lag(ts) OVER (PARTITION BY user_id
@@ -8526,9 +6994,7 @@ _ORACLES["s_sessionize"] = _union(
         SELECT path, count(*)::BIGINT AS n_sessions
         FROM seq GROUP BY path
         ORDER BY n_sessions DESC, path ASC LIMIT 20""",
-          "NULL::BIGINT AS i1, NULL::BIGINT AS i2, NULL::BIGINT AS i3, "
-          "NULL::BIGINT AS i4, n_sessions::BIGINT AS n, path AS s1, "
-          "NULL::VARCHAR AS s2, NULL::DOUBLE AS d1"))
+     {"n": "n_sessions", "s1": "path"}))
 
 _ORACLES["s_attribution"] = """
     WITH w AS (
@@ -8554,33 +7020,30 @@ _ORACLES["s_attribution"] = """
            last_touch_id, last_touch_type
     FROM w WHERE event_type = 'purchase'"""
 
-_ORACLES["s_funnel"] = _union(
-    _wrap("funnel", _ORACLES["s_funnel"],
-          "stage_idx::BIGINT AS i1, NULL::BIGINT AS i2, stage AS s1, "
-          "n_users::BIGINT AS n, NULL::BIGINT AS i3, "
-          "NULL::VARCHAR AS s2"),
-    _wrap("retention", """
+_COMPOSITES["s_funnel"] = _composite(
+    "part STRING, i1 BIGINT, i2 BIGINT, s1 STRING, n BIGINT, i3 BIGINT, "
+    "s2 STRING",
+    ("funnel", q_s_funnel_stages, _ORACLES["s_funnel"],
+     {"i1": "stage_idx", "s1": "stage", "n": "n_users"}),
+    ("retention", q_s_cohort_retention, """
         WITH ub AS (SELECT DISTINCT user_id,
                            date_trunc('day', ts) AS b FROM events),
         f AS (SELECT user_id, min(b) AS cohort FROM ub GROUP BY user_id)
-        SELECT date_diff('day', f.cohort, ub.b)::BIGINT AS "offset",
+        SELECT date_diff('day', f.cohort, ub.b)::BIGINT AS day_offset,
                epoch_us(f.cohort)::BIGINT AS cohort_us,
                count(DISTINCT ub.user_id)::BIGINT AS n_users
         FROM ub JOIN f USING (user_id) GROUP BY 1, 2""",
-          '"offset"::BIGINT AS i1, cohort_us::BIGINT AS i2, '
-          "NULL::VARCHAR AS s1, n_users::BIGINT AS n, "
-          "NULL::BIGINT AS i3, NULL::VARCHAR AS s2"),
-    _wrap("attribution", _ORACLES["s_attribution"],
-          "event_id::BIGINT AS i1, last_touch_id::BIGINT AS i2, "
-          "last_touch_type AS s1, user_id::BIGINT AS n, "
-          "first_touch_id::BIGINT AS i3, first_touch_type AS s2"))
+     {"i1": "day_offset", "i2": "cohort_us", "n": "n_users"}),
+    ("attribution", q_s_attribution, _ORACLES["s_attribution"],
+     {"i1": "event_id", "i2": "last_touch_id", "s1": "last_touch_type",
+      "n": "user_id", "i3": "first_touch_id", "s2": "first_touch_type"}))
 
-_ORACLES["s_time_rollup"] = _union(
-    _wrap("rollup", _ORACLES["s_time_rollup"],
-          "d_us::BIGINT AS d_us, h_us::BIGINT AS h_us, "
-          "NULL::VARCHAR AS s1, n::BIGINT AS n, "
-          "sum_value::DOUBLE AS sum_value"),
-    _wrap("resample", """
+_COMPOSITES["s_time_rollup"] = _composite(
+    "part STRING, d_us BIGINT, h_us BIGINT, s1 STRING, n BIGINT, "
+    "sum_value DOUBLE",
+    ("rollup", _s_time_rollup_parts, _ORACLES["s_time_rollup"],
+     {"d_us": "d_us", "h_us": "h_us", "n": "n", "sum_value": "sum_value"}),
+    ("resample", _s_time_rollup_parts, """
         WITH sparse AS (
             SELECT event_type,
                    time_bucket(INTERVAL '1 hour', ts) AS bucket,
@@ -8600,11 +7063,8 @@ _ORACLES["s_time_rollup"] = _union(
                coalesce(s.sum_value, 0)::DOUBLE AS sum_value
         FROM grid g LEFT JOIN sparse s
           ON g.event_type = s.event_type AND g.bucket = s.bucket""",
-          "NULL::BIGINT AS d_us, h_us::BIGINT AS h_us, "
-          "event_type AS s1, n::BIGINT AS n, "
-          "sum_value::DOUBLE AS sum_value"),
-    # linear interpolation over the same grid (resample_fill linear)
-    _wrap("linear", """
+     {"h_us": "h_us", "s1": "event_type", "n": "n", "sum_value": "sum_value"}),
+    ("linear", _s_time_rollup_parts, """
         WITH sparse AS (
             SELECT event_type,
                    time_bucket(INTERVAL '1 hour', ts) AS bucket,
@@ -8645,12 +7105,8 @@ _ORACLES["s_time_rollup"] = _union(
                                * (t - prev.t) / (nxt.t - prev.t), 6)
                END AS v
         FROM w""",
-          "NULL::BIGINT AS d_us, h_us::BIGINT AS h_us, "
-          "event_type AS s1, NULL::BIGINT AS n, "
-          "v::DOUBLE AS sum_value"),
-    # classical additive seasonal decomposition, daily cycle p=24
-    # (relational.seasonal_decompose over the zero-filled hourly grid)
-    _wrap("seasonal", """
+     {"h_us": "h_us", "s1": "event_type", "sum_value": "v"}),
+    ("seasonal", _s_time_rollup_parts, """
         WITH sparse AS (
             SELECT event_type,
                    time_bucket(INTERVAL '1 hour', ts) AS bucket,
@@ -8714,14 +7170,13 @@ _ORACLES["s_time_rollup"] = _union(
         SELECT event_type || '|residual', epoch_us(bucket)::BIGINT,
                phase, round(residual, 6)
         FROM fin""",
-          "NULL::BIGINT AS d_us, h_us::BIGINT AS h_us, "
-          "s1, phase::BIGINT AS n, x::DOUBLE AS sum_value"))
+     {"h_us": "h_us", "s1": "s1", "n": "phase", "sum_value": "x"}))
 
-_ORACLES["st_dedup"] = _union(
-    _wrap("dedup", _ORACLES["st_dedup"],
-          "event_type AS s1, NULL::BIGINT AS i1, n::BIGINT AS n, "
-          "sum_value::DOUBLE AS sum_value"),
-    _wrap("ss_join", """
+_COMPOSITES["st_dedup"] = _composite(
+    "part STRING, s1 STRING, i1 BIGINT, n BIGINT, sum_value DOUBLE",
+    ("dedup", _st_dedup_parts, _ORACLES["st_dedup"],
+     {"s1": "event_type", "n": "n", "sum_value": "sum_value"}),
+    ("ss_join", _st_dedup_parts, """
         WITH v AS (SELECT user_id, ts AS vts FROM events
                    WHERE event_type = 'view'),
         c AS (SELECT user_id, ts AS cts FROM events
@@ -8731,33 +7186,23 @@ _ORACLES["st_dedup"] = _union(
         FROM v JOIN c USING (user_id)
         WHERE cts >= vts AND cts <= vts + INTERVAL 10 MINUTE
         GROUP BY user_id""",
-          "NULL::VARCHAR AS s1, user_id::BIGINT AS i1, n::BIGINT AS n, "
-          "sum_delta::DOUBLE AS sum_value"),
-    _wrap("static_join", """
+     {"i1": "user_id", "n": "n", "sum_value": "sum_delta"}),
+    ("static_join", _st_dedup_parts, """
         SELECT n_name, count(*)::BIGINT AS n,
                (sum(value::DECIMAL(18,6)))::DOUBLE AS sum_value
         FROM events e JOIN nation ON e.user_id % 25 = n_nationkey
         GROUP BY n_name""",
-          "n_name AS s1, NULL::BIGINT AS i1, n::BIGINT AS n, "
-          "sum_value::DOUBLE AS sum_value"),
-    # snapsink: stream -> snapshot table with a replayed last batch;
-    # exactly-once means the final table is ONE copy of events (a
-    # swallowed replay; a duplicate batch would double n/sum here)
-    _wrap("snapsink", """
+     {"s1": "n_name", "n": "n", "sum_value": "sum_value"}),
+    ("snapsink", _st_dedup_parts, """
         SELECT event_type, count(*)::BIGINT AS n,
                (sum(value::DECIMAL(18,6)))::DOUBLE AS sum_value
         FROM events GROUP BY event_type""",
-          "event_type AS s1, NULL::BIGINT AS i1, n::BIGINT AS n, "
-          "sum_value::DOUBLE AS sum_value"),
-    # snapsrc: snapshot table streamed as a SOURCE across two live
-    # version commits; exactly-once offsets mean the sink holds ONE
-    # copy of events (a re-emitted file would double n/sum here)
-    _wrap("snapsrc", """
+     {"s1": "event_type", "n": "n", "sum_value": "sum_value"}),
+    ("snapsrc", _st_dedup_parts, """
         SELECT event_type, count(*)::BIGINT AS n,
                (sum(value::DECIMAL(18,6)))::DOUBLE AS sum_value
         FROM events GROUP BY event_type""",
-          "event_type AS s1, NULL::BIGINT AS i1, n::BIGINT AS n, "
-          "sum_value::DOUBLE AS sum_value"))
+     {"s1": "event_type", "n": "n", "sum_value": "sum_value"}))
 
 
 # round 3: stat functions, curation scrub, BM25, quantization oracles ------
@@ -8804,8 +7249,7 @@ _ORACLES["s_top_frequent"] = """
           FROM part GROUP BY p_brand)
     WHERE rank <= 5"""
 
-_STATS_NULLS = ("NULL::DOUBLE AS d1, NULL::DOUBLE AS d2, "
-                "NULL::DOUBLE AS d3, NULL::DOUBLE AS d4")
+
 def _msum_sql(cols: list[str], by: list[str] | None = None) -> str:
     """DuckDB mirror of ``stats.moment_sums``: exact decimal moment sums
     (same DECIMAL casts, same s_<i>/s_<i>_<j> layout)."""
@@ -8900,20 +7344,19 @@ _ORACLES["s_chisq"] = """
                  / expected, 6) AS chi2_term
     FROM e"""
 
-_ORACLES["s_stats"] = _union(
-    _wrap("moments", _ORACLES["s_moment_stats"],
-          "l_returnflag AS s1, n::BIGINT AS i1, NULL::BIGINT AS i2, "
-          "corr::DOUBLE AS d1, cov_samp::DOUBLE AS d2, "
-          "std_x::DOUBLE AS d3, std_y::DOUBLE AS d4"),
-    _wrap("corrmatrix", _ORACLES["s_corr_matrix"],
-          "col_x || '>' || col_y AS s1, n::BIGINT AS i1, "
-          "NULL::BIGINT AS i2, corr::DOUBLE AS d1, "
-          "cov_samp::DOUBLE AS d2, NULL::DOUBLE AS d3, NULL::DOUBLE AS d4"),
-    _wrap("regression", _ORACLES["s_regression"],
-          "l_returnflag AS s1, n::BIGINT AS i1, NULL::BIGINT AS i2, "
-          "slope::DOUBLE AS d1, intercept::DOUBLE AS d2, "
-          "r2::DOUBLE AS d3, NULL::DOUBLE AS d4"),
-    _wrap("regression2", """
+_COMPOSITES["s_stats"] = _composite(
+    "part STRING, s1 STRING, i1 BIGINT, i2 BIGINT, d1 DOUBLE, d2 DOUBLE, "
+    "d3 DOUBLE, d4 DOUBLE",
+    ("moments", _s_stats_parts, _ORACLES["s_moment_stats"],
+     {"s1": "l_returnflag", "i1": "n", "d1": "corr", "d2": "cov_samp",
+      "d3": "std_x", "d4": "std_y"}),
+    ("corrmatrix", _s_stats_parts, _ORACLES["s_corr_matrix"],
+     {"s1": "concat_ws('>', col_x, col_y)", "i1": "n", "d1": "corr",
+      "d2": "cov_samp"}),
+    ("regression", _s_stats_parts, _ORACLES["s_regression"],
+     {"s1": "l_returnflag", "i1": "n", "d1": "slope", "d2": "intercept",
+      "d3": "r2"}),
+    ("regression2", _s_stats_parts, """
         WITH s AS (
             SELECT l_returnflag, count(*) AS n,
                    sum(l_quantity::DECIMAL(38,2)) AS s1,
@@ -8960,21 +7403,16 @@ _ORACLES["s_stats"] = _union(
                       + ((s2y*s11 - s1y*s12)/(s11*s22 - s12*s12))*s2y)
                      / syy, 6) AS r2
         FROM d""",
-          "l_returnflag AS s1, n::BIGINT AS i1, NULL::BIGINT AS i2, "
-          "b0::DOUBLE AS d1, b1::DOUBLE AS d2, b2::DOUBLE AS d3, "
-          "r2::DOUBLE AS d4"),
-    _wrap("crosstab", _ORACLES["s_crosstab"],
-          "l_returnflag AS s1, n_F::BIGINT AS i1, n_O::BIGINT AS i2, "
-          + _STATS_NULLS),
-    _wrap("chisq", _ORACLES["s_chisq"],
-          "l_returnflag || ':' || l_linestatus AS s1, "
-          "n_obs::BIGINT AS i1, NULL::BIGINT AS i2, "
-          "expected::DOUBLE AS d1, chi2_term::DOUBLE AS d2, "
-          "NULL::DOUBLE AS d3, NULL::DOUBLE AS d4"),
-    _wrap("freq", _ORACLES["s_top_frequent"],
-          "p_brand AS s1, n::BIGINT AS i1, rank::BIGINT AS i2, "
-          + _STATS_NULLS),
-    _wrap("bins", """
+     {"s1": "l_returnflag", "i1": "n", "d1": "b0", "d2": "b1", "d3": "b2",
+      "d4": "r2"}),
+    ("crosstab", _s_stats_parts, _ORACLES["s_crosstab"],
+     {"s1": "l_returnflag", "i1": "n_F", "i2": "n_O"}),
+    ("chisq", _s_stats_parts, _ORACLES["s_chisq"],
+     {"s1": "concat_ws(':', l_returnflag, l_linestatus)", "i1": "n_obs",
+      "d1": "expected", "d2": "chi2_term"}),
+    ("freq", _s_stats_parts, _ORACLES["s_top_frequent"],
+     {"s1": "p_brand", "i1": "n", "i2": "rank"}),
+    ("bins", _s_stats_parts, """
         WITH cuts AS (
             SELECT l_returnflag,
                    quantile_cont(l_extendedprice, [0.25, 0.5, 0.75])
@@ -8988,10 +7426,8 @@ _ORACLES["s_stats"] = _union(
         SELECT l_returnflag, bin, count(*)::BIGINT AS n,
                (sum(l_extendedprice::DECIMAL(18,2)))::DOUBLE AS sum_price
         FROM binned GROUP BY l_returnflag, bin""",
-          "l_returnflag AS s1, bin::BIGINT AS i1, n::BIGINT AS i2, "
-          "sum_price::DOUBLE AS d1, NULL::DOUBLE AS d2, "
-          "NULL::DOUBLE AS d3, NULL::DOUBLE AS d4"),
-    _wrap("outliers", """
+     {"s1": "l_returnflag", "i1": "bin", "i2": "n", "d1": "sum_price"}),
+    ("outliers", _s_stats_parts, """
         WITH f AS (
             SELECT l_returnflag,
                    quantile_cont(l_extendedprice, 0.25) AS q1,
@@ -9008,10 +7444,9 @@ _ORACLES["s_stats"] = _union(
                    AS fence_hi
         FROM lineitem l JOIN f USING (l_returnflag)
         GROUP BY l.l_returnflag""",
-          "l_returnflag AS s1, n_outliers::BIGINT AS i1, n::BIGINT AS i2, "
-          "fence_lo::DOUBLE AS d1, fence_hi::DOUBLE AS d2, "
-          "NULL::DOUBLE AS d3, NULL::DOUBLE AS d4"),
-    _wrap("mad", """
+     {"s1": "l_returnflag", "i1": "n_outliers", "i2": "n", "d1": "fence_lo",
+      "d2": "fence_hi"}),
+    ("mad", _s_stats_parts, """
         WITH med AS (
             SELECT l_returnflag,
                    quantile_cont(l_extendedprice, 0.5) AS m
@@ -9031,10 +7466,9 @@ _ORACLES["s_stats"] = _union(
                round(min(mad.md), 6) AS mad
         FROM wm w JOIN mad USING (l_returnflag)
         GROUP BY w.l_returnflag""",
-          "l_returnflag AS s1, n_out::BIGINT AS i1, n::BIGINT AS i2, "
-          "median::DOUBLE AS d1, mad::DOUBLE AS d2, "
-          "NULL::DOUBLE AS d3, NULL::DOUBLE AS d4"),
-    _wrap("welch", """
+     {"s1": "l_returnflag", "i1": "n_out", "i2": "n", "d1": "median",
+      "d2": "mad"}),
+    ("welch", _s_stats_parts, """
         WITH g AS (
             SELECT l_returnflag AS grp, count(*) AS n,
                    sum(l_extendedprice::DECIMAL(38,2)) AS sx,
@@ -9058,10 +7492,9 @@ _ORACLES["s_stats"] = _union(
                round((a.mean - b.mean)
                      / sqrt((a.var + b.var) / 2.0), 6) AS cohens_d
         FROM m a JOIN m b ON a.grp < b.grp""",
-          "g1 || '>' || g2 AS s1, n1::BIGINT AS i1, n2::BIGINT AS i2, "
-          "t_stat::DOUBLE AS d1, welch_df::DOUBLE AS d2, "
-          "cohens_d::DOUBLE AS d3, NULL::DOUBLE AS d4"),
-    _wrap("anova", """
+     {"s1": "concat_ws('>', g1, g2)", "i1": "n1", "i2": "n2", "d1": "t_stat",
+      "d2": "welch_df", "d3": "cohens_d"}),
+    ("anova", _s_stats_parts, """
         WITH m AS (
             SELECT l_returnflag, count(*) AS n,
                    sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS sx,
@@ -9083,10 +7516,9 @@ _ORACLES["s_stats"] = _union(
                      / ((T::DOUBLE - S::DOUBLE * S::DOUBLE / N::DOUBLE)
                         + (Q::DOUBLE - T::DOUBLE)), 6) AS eta_sq
         FROM a""",
-          "'l_extendedprice~l_returnflag' AS s1, k::BIGINT AS i1, "
-          "n::BIGINT AS i2, f_stat::DOUBLE AS d1, eta_sq::DOUBLE AS d2, "
-          "NULL::DOUBLE AS d3, NULL::DOUBLE AS d4"),
-    _wrap("winsor", """
+     {"s1": "'l_extendedprice~l_returnflag'", "i1": "k", "i2": "n",
+      "d1": "f_stat", "d2": "eta_sq"}),
+    ("winsor", _s_stats_parts, """
         WITH p AS (
             SELECT l_returnflag,
                    quantile_cont(l_extendedprice, 0.05) AS lo,
@@ -9103,10 +7535,9 @@ _ORACLES["s_stats"] = _union(
         SELECT a.l_returnflag, n_lo, n_hi,
                round(p.lo::DOUBLE, 6) AS lo, round(p.hi::DOUBLE, 6) AS hi
         FROM a JOIN p ON a.l_returnflag = p.l_returnflag""",
-          "l_returnflag AS s1, n_lo::BIGINT AS i1, n_hi::BIGINT AS i2, "
-          "lo::DOUBLE AS d1, hi::DOUBLE AS d2, NULL::DOUBLE AS d3, "
-          "NULL::DOUBLE AS d4"),
-    _wrap("cramer", """
+     {"s1": "l_returnflag", "i1": "n_lo", "i2": "n_hi", "d1": "lo",
+      "d2": "hi"}),
+    ("cramer", _s_stats_parts, """
         WITH cells AS (
             SELECT l_returnflag AS rv, l_linestatus AS cv,
                    count(*) AS o
@@ -9128,11 +7559,9 @@ _ORACLES["s_stats"] = _union(
                              * (least(r, c)::DOUBLE - 1.0))), 6)
                    AS cramers_v
         FROM q""",
-          "'l_returnflag~l_linestatus' AS s1, n::BIGINT AS i1, "
-          "r::BIGINT AS i2, chi2::DOUBLE AS d1, "
-          "cramers_v::DOUBLE AS d2, c::DOUBLE AS d3, "
-          "NULL::DOUBLE AS d4"),
-    _wrap("kappa", """
+     {"s1": "'l_returnflag~l_linestatus'", "i1": "n", "i2": "r", "d1": "chi2",
+      "d2": "cramers_v", "d3": "c"}),
+    ("kappa", _s_stats_parts, """
         WITH cells AS (
             SELECT (l_quantity::BIGINT % 3)::INT AS a,
                    (l_partkey % 3)::INT AS b, count(*) AS c
@@ -9156,10 +7585,9 @@ _ORACLES["s_stats"] = _union(
                                  / (n::DOUBLE * n::DOUBLE)), 6) END
                    AS kappa
         FROM ag CROSS JOIN pe""",
-          "'qty%3~partkey%3' AS s1, n::BIGINT AS i1, NULL::BIGINT AS i2, "
-          "kappa::DOUBLE AS d1, p_obs::DOUBLE AS d2, "
-          "p_exp::DOUBLE AS d3, NULL::DOUBLE AS d4"),
-    _wrap("psi", """
+     {"s1": "'qty%3~partkey%3'", "i1": "n", "d1": "kappa", "d2": "p_obs",
+      "d3": "p_exp"}),
+    ("psi", _s_stats_parts, """
         WITH ref AS (SELECT l_quantity::DOUBLE AS x FROM lineitem),
         cur AS (SELECT (l_quantity + 5)::DOUBLE AS x FROM lineitem),
         cuts AS (SELECT quantile_cont(x, [0.1, 0.2, 0.3, 0.4, 0.5,
@@ -9187,10 +7615,9 @@ _ORACLES["s_stats"] = _union(
                round(p_ref, 6) AS p_ref, round(p_cur, 6) AS p_cur,
                round((p_cur - p_ref) * ln(p_cur / p_ref), 6) AS psi_term
         FROM t""",
-          "bin::VARCHAR AS s1, n_ref::BIGINT AS i1, n_cur::BIGINT AS i2, "
-          "p_ref::DOUBLE AS d1, p_cur::DOUBLE AS d2, "
-          "psi_term::DOUBLE AS d3, NULL::DOUBLE AS d4"),
-    _wrap("targetenc", """
+     {"s1": "bin", "i1": "n_ref", "i2": "n_cur", "d1": "p_ref", "d2": "p_cur",
+      "d3": "psi_term"}),
+    ("targetenc", _s_stats_parts, """
         WITH per AS (SELECT l_returnflag, count(*) AS n,
                             sum(l_quantity::DECIMAL(28,6)) AS s
                      FROM lineitem GROUP BY 1),
@@ -9201,10 +7628,8 @@ _ORACLES["s_stats"] = _union(
                round((s::DOUBLE + 20.0 * (gs::DOUBLE / gn::DOUBLE))
                      / (n::DOUBLE + 20.0), 6) AS enc
         FROM per CROSS JOIN g""",
-          "l_returnflag AS s1, n::BIGINT AS i1, NULL::BIGINT AS i2, "
-          "enc::DOUBLE AS d1, NULL::DOUBLE AS d2, NULL::DOUBLE AS d3, "
-          "NULL::DOUBLE AS d4"),
-    _wrap("bootstrap", f"""
+     {"s1": "l_returnflag", "i1": "n", "d1": "enc"}),
+    ("bootstrap", _s_stats_parts, f"""
         WITH t AS (SELECT lang, doc_id,
                           n_chars::DECIMAL(28,6) AS x FROM documents),
         reps AS (SELECT unnest(generate_series(0, 39)) AS r),
@@ -9243,21 +7668,19 @@ _ORACLES["s_stats"] = _union(
                round(sel.lo, 6) AS lo, round(sel.hi, 6) AS hi,
                40 AS n_replicates
         FROM base b JOIN sel USING (lang)""",
-          "lang AS s1, n::BIGINT AS i1, n_replicates::BIGINT AS i2, "
-          "mean::DOUBLE AS d1, lo::DOUBLE AS d2, hi::DOUBLE AS d3, "
-          "NULL::DOUBLE AS d4"),
-    _wrap("partialcorr", _partialcorr_oracle(),
-          "l_returnflag AS s1, n::BIGINT AS i1, NULL::BIGINT AS i2, "
-          "r_xy::DOUBLE AS d1, r_xz::DOUBLE AS d2, r_yz::DOUBLE AS d3, "
-          "partial_r::DOUBLE AS d4"),
-    _wrap("mahala", _mahala_oracle(),
-          "l_returnflag AS s1, n::BIGINT AS i1, n_out::BIGINT AS i2, "
-          "sum_d2::DOUBLE AS d1, NULL::DOUBLE AS d2, "
-          "NULL::DOUBLE AS d3, NULL::DOUBLE AS d4"))
+     {"s1": "lang", "i1": "n", "i2": "n_replicates", "d1": "mean", "d2": "lo",
+      "d3": "hi"}),
+    ("mahala", _s_stats_parts, _mahala_oracle(),
+     {"s1": "l_returnflag", "i1": "n", "i2": "n_out", "d1": "sum_d2"}),
+    ("partialcorr", _s_stats_parts, _partialcorr_oracle(),
+     {"s1": "l_returnflag", "i1": "n", "d1": "r_xy", "d2": "r_xz",
+      "d3": "r_yz", "d4": "partial_r"}))
 
 # rank/ordinal statistics family — split out of s_stats in round 8
-_ORACLES["s_stats_rank"] = _union(
-    _wrap("spearman", """
+_COMPOSITES["s_stats_rank"] = _composite(
+    "part STRING, s1 STRING, i1 BIGINT, i2 BIGINT, d1 DOUBLE, d2 DOUBLE, "
+    "d3 DOUBLE, d4 DOUBLE",
+    ("spearman", _s_stats_rank_parts, """
         WITH r AS (
             SELECT (rank() OVER (ORDER BY l_quantity)
                     + (count(*) OVER (PARTITION BY l_quantity) - 1)
@@ -9280,10 +7703,8 @@ _ORACLES["s_stats_rank"] = _union(
                             * (n::DOUBLE * syy::DOUBLE
                                - sy::DOUBLE * sy::DOUBLE)), 6) AS rho
         FROM s""",
-          "'l_quantity>l_extendedprice' AS s1, n::BIGINT AS i1, "
-          "NULL::BIGINT AS i2, rho::DOUBLE AS d1, NULL::DOUBLE AS d2, "
-          "NULL::DOUBLE AS d3, NULL::DOUBLE AS d4"),
-    _wrap("mannwhitney", """
+     {"s1": "'l_quantity>l_extendedprice'", "i1": "n", "d1": "rho"}),
+    ("mannwhitney", _s_stats_rank_parts, """
         WITH vc AS (
             SELECT l_returnflag AS g, l_quantity AS v, count(*) AS c
             FROM lineitem GROUP BY 1, 2),
@@ -9324,10 +7745,33 @@ _ORACLES["s_stats_rank"] = _union(
                                        - 1.0)))), 6) AS z
         FROM u JOIN ts ON u.g1 = ts.g1 AND u.g2 = ts.g2
         JOIN bg ON u.g1 = bg.g1 AND u.g2 = bg.g2""",
-          "g1 || '>' || g2 AS s1, n1::BIGINT AS i1, n2::BIGINT AS i2, "
-          "u1::DOUBLE AS d1, z::DOUBLE AS d2, NULL::DOUBLE AS d3, "
-          "NULL::DOUBLE AS d4"),
-    _wrap("kendall", """
+     {"s1": "concat_ws('>', g1, g2)", "i1": "n1", "i2": "n2", "d1": "u1",
+      "d2": "z"}),
+    ("auc", _s_stats_rank_parts, """
+        WITH vc AS (
+            SELECT (l_returnflag = 'A')::INT AS g,
+                   l_quantity AS v, count(*) AS c
+            FROM lineitem GROUP BY 1, 2),
+        p AS (
+            SELECT a.v AS v1, b.v AS v2,
+                   a.c::DOUBLE AS c1, b.c::DOUBLE AS c2
+            FROM vc a JOIN vc b ON a.g < b.g),
+        u AS (
+            SELECT sum(CAST(round(CASE WHEN v2 < v1 THEN c1 * c2
+                                       WHEN v2 = v1 THEN c1 * c2 / 2.0
+                                       ELSE 0.0 END, 12)
+                            AS DECIMAL(38,12))) AS u1
+            FROM p),
+        ns AS (SELECT g, sum(c) AS n FROM vc GROUP BY g)
+        SELECT (SELECT n FROM ns WHERE g = 1)::BIGINT AS n_pos,
+               (SELECT n FROM ns WHERE g = 0)::BIGINT AS n_neg,
+               round(1.0 - u1::DOUBLE
+                     / ((SELECT n FROM ns WHERE g = 0)::DOUBLE
+                        * (SELECT n FROM ns WHERE g = 1)::DOUBLE), 6)
+                   AS auc
+        FROM u""",
+     {"s1": "'l_quantity~is_A'", "i1": "n_pos", "i2": "n_neg", "d1": "auc"}),
+    ("kendall", _s_stats_rank_parts, """
         WITH cells AS (
             SELECT l_quantity AS x, l_linenumber AS y,
                    count(*)::DECIMAL(19,0) AS c
@@ -9355,37 +7799,9 @@ _ORACLES["s_stats_rank"] = _union(
                             * (CAST(n * (n - 1) / 2 AS DECIMAL(38,0))
                                - n2)::DOUBLE), 6) AS tau_b
         FROM cd, tx, ty, tot""",
-          "'l_quantity~l_linenumber' AS s1, n::BIGINT AS i1, "
-          "NULL::BIGINT AS i2, tau_b::DOUBLE AS d1, "
-          "concordant::DOUBLE AS d2, discordant::DOUBLE AS d3, "
-          "NULL::DOUBLE AS d4"),
-    _wrap("auc", """
-        WITH vc AS (
-            SELECT (l_returnflag = 'A')::INT AS g,
-                   l_quantity AS v, count(*) AS c
-            FROM lineitem GROUP BY 1, 2),
-        p AS (
-            SELECT a.v AS v1, b.v AS v2,
-                   a.c::DOUBLE AS c1, b.c::DOUBLE AS c2
-            FROM vc a JOIN vc b ON a.g < b.g),
-        u AS (
-            SELECT sum(CAST(round(CASE WHEN v2 < v1 THEN c1 * c2
-                                       WHEN v2 = v1 THEN c1 * c2 / 2.0
-                                       ELSE 0.0 END, 12)
-                            AS DECIMAL(38,12))) AS u1
-            FROM p),
-        ns AS (SELECT g, sum(c) AS n FROM vc GROUP BY g)
-        SELECT (SELECT n FROM ns WHERE g = 1)::BIGINT AS n_pos,
-               (SELECT n FROM ns WHERE g = 0)::BIGINT AS n_neg,
-               round(1.0 - u1::DOUBLE
-                     / ((SELECT n FROM ns WHERE g = 0)::DOUBLE
-                        * (SELECT n FROM ns WHERE g = 1)::DOUBLE), 6)
-                   AS auc
-        FROM u""",
-          "'l_quantity~is_A' AS s1, n_pos::BIGINT AS i1, "
-          "n_neg::BIGINT AS i2, auc::DOUBLE AS d1, NULL::DOUBLE AS d2, "
-          "NULL::DOUBLE AS d3, NULL::DOUBLE AS d4"),
-    _wrap("theilsen", """
+     {"s1": "'l_quantity~l_linenumber'", "i1": "n", "d1": "tau_b",
+      "d2": "concordant", "d3": "discordant"}),
+    ("theilsen", _s_stats_rank_parts, """
         WITH cells AS (
             SELECT l_quantity::DOUBLE AS x, l_tax::DOUBLE AS y,
                    count(*)::DECIMAL(38,0) AS c
@@ -9417,11 +7833,9 @@ _ORACLES["s_stats_rank"] = _union(
         SELECT (SELECT count(*) FROM lineitem) AS n,
                round((SELECT slope FROM m), 6) AS slope,
                round((SELECT intercept FROM i), 6) AS intercept""",
-          "'l_tax~l_quantity' AS s1, n::BIGINT AS i1, "
-          "NULL::BIGINT AS i2, slope::DOUBLE AS d1, "
-          "intercept::DOUBLE AS d2, NULL::DOUBLE AS d3, "
-          "NULL::DOUBLE AS d4"),
-    _wrap("mutualinfo", """
+     {"s1": "'l_tax~l_quantity'", "i1": "n", "d1": "slope",
+      "d2": "intercept"}),
+    ("mutualinfo", _s_stats_rank_parts, """
         WITH cells AS (
             SELECT l_returnflag AS x, l_linestatus AS y,
                    count(*) AS c
@@ -9459,13 +7873,9 @@ _ORACLES["s_stats_rank"] = _union(
                                / sqrt(h_x::DOUBLE * h_y::DOUBLE), 6)
                END AS nmi
         FROM a""",
-          "'l_returnflag~l_linestatus' AS s1, n::BIGINT AS i1, "
-          "NULL::BIGINT AS i2, mi::DOUBLE AS d1, nmi::DOUBLE AS d2, "
-          "h_x::DOUBLE AS d3, h_y::DOUBLE AS d4"),
-    # unkeyed weighted percentile: sequential lower weighted-quantile
-    # rule — DuckDB runs the global cumulative window directly; the
-    # Spark side reproduces it with the bucketed two-pass plan
-    _wrap("wpct", """
+     {"s1": "'l_returnflag~l_linestatus'", "i1": "n", "d1": "mi", "d2": "nmi",
+      "d3": "h_x", "d4": "h_y"}),
+    ("wpct", _s_stats_rank_parts, """
         WITH w AS (
             SELECT l_extendedprice AS v, l_quantity AS q,
                    l_quantity::DECIMAL(38,6) AS wt
@@ -9487,11 +7897,9 @@ _ORACLES["s_stats_rank"] = _union(
                round(min(CASE WHEN cw::DOUBLE >= tw::DOUBLE * 0.9
                               THEN v::DOUBLE END), 6) AS p90
         FROM c""",
-          "'l_extendedprice~l_quantity' AS s1, n::BIGINT AS i1, "
-          "NULL::BIGINT AS i2, p25::DOUBLE AS d1, p50::DOUBLE AS d2, "
-          "p90::DOUBLE AS d3, NULL::DOUBLE AS d4"),
-    # grouped weighted percentile: per-key cumulative-weight windows
-    _wrap("wpctg", """
+     {"s1": "'l_extendedprice~l_quantity'", "i1": "n", "d1": "p25",
+      "d2": "p50", "d3": "p90"}),
+    ("wpctg", _s_stats_rank_parts, """
         WITH w AS (
             SELECT l_returnflag AS g, l_extendedprice AS v,
                    l_quantity AS q, l_quantity::DECIMAL(38,6) AS wt
@@ -9505,41 +7913,36 @@ _ORACLES["s_stats_rank"] = _union(
                                  AND CURRENT ROW) AS cw,
                    sum(wt) OVER (PARTITION BY g) AS tw
             FROM w)
-        SELECT g, count(*)::BIGINT AS n,
+        SELECT g AS l_returnflag, count(*)::BIGINT AS n,
                round(min(CASE WHEN cw::DOUBLE >= tw::DOUBLE * 0.5
                               THEN v::DOUBLE END), 6) AS p50,
                round(min(CASE WHEN cw::DOUBLE >= tw::DOUBLE * 0.9
                               THEN v::DOUBLE END), 6) AS p90
         FROM c GROUP BY g""",
-          "g AS s1, n::BIGINT AS i1, NULL::BIGINT AS i2, "
-          "p50::DOUBLE AS d1, p90::DOUBLE AS d2, NULL::DOUBLE AS d3, "
-          "NULL::DOUBLE AS d4"))
+     {"s1": "l_returnflag", "i1": "n", "d1": "p50", "d2": "p90"}))
 
 # stateful streaming composite (round 8: +holt): the holt part's
 # oracle is the SAME DuckDB list-state recursion the batch operator
 # checks against — the stream's single-batch result must equal the
 # batch fold over the full ordered series
-_ORACLES["st_stateful"] = _union(
-    _wrap("totals", _ORACLES["st_totals"],
-          "user_id::BIGINT AS i1, count::BIGINT AS i2, "
-          "total::DOUBLE AS d1, NULL::DOUBLE AS d2, "
-          "NULL::DOUBLE AS d3"),
-    _wrap("holt", _holt_oracle(),
-          "user_id::BIGINT AS i1, n::BIGINT AS i2, "
-          "level::DOUBLE AS d1, trend::DOUBLE AS d2, "
-          "forecast::DOUBLE AS d3"))
+_COMPOSITES["st_stateful"] = _composite(
+    "part STRING, i1 BIGINT, i2 BIGINT, d1 DOUBLE, d2 DOUBLE, d3 DOUBLE",
+    ("totals", _st_stateful_parts, _ORACLES["st_totals"],
+     {"i1": "user_id", "i2": "count", "d1": "total"}),
+    ("holt", _st_stateful_parts, _holt_oracle(),
+     {"i1": "user_id", "i2": "n", "d1": "level", "d2": "trend",
+      "d3": "forecast"}))
 
 # pivot + unpivot merged into one tagged union (round 8 — freed a
 # registry slot for s_stats_rank); building-block oracles unchanged
-_ORACLES["s_pivot_unpivot"] = _union(
-    _wrap("pivot", _ORACLES["s_pivot"],
-          "o_orderstatus AS s1, p1::BIGINT AS i1, p2::BIGINT AS i2, "
-          "p3::BIGINT AS i3, p4::BIGINT AS i4, p5::BIGINT AS i5, "
-          "NULL::DOUBLE AS d1"),
-    _wrap("unpivot", _ORACLES["s_unpivot"],
-          "measure AS s1, p_partkey::BIGINT AS i1, NULL::BIGINT AS i2, "
-          "NULL::BIGINT AS i3, NULL::BIGINT AS i4, NULL::BIGINT AS i5, "
-          "val::DOUBLE AS d1"))
+_COMPOSITES["s_pivot_unpivot"] = _composite(
+    "part STRING, s1 STRING, i1 BIGINT, i2 BIGINT, i3 BIGINT, i4 BIGINT, "
+    "i5 BIGINT, d1 DOUBLE",
+    ("pivot", q_s_pivot, _ORACLES["s_pivot"],
+     {"s1": "o_orderstatus", "i1": "p1", "i2": "p2", "i3": "p3", "i4": "p4",
+      "i5": "p5"}),
+    ("unpivot", q_s_unpivot, _ORACLES["s_unpivot"],
+     {"s1": "measure", "i1": "p_partkey", "d1": "val"}))
 
 
 _ORACLES["x_decontaminate"] = """
@@ -9619,17 +8022,16 @@ _URL_NORM_CTE = """
                 ELSE 'shop.co.uk' END AS domain
     FROM documents"""
 
-_ORACLES["x_curation_scrub"] = _union(
-    _wrap("decontaminate", _ORACLES["x_decontaminate"],
-          "doc_id::BIGINT AS doc_id, n_ngrams::BIGINT AS i1, "
-          "n_hit::BIGINT AS i2, contaminated::BIGINT AS i3, "
-          "NULL::BIGINT AS i4, overlap_frac::DOUBLE AS d1, "
-          "NULL::VARCHAR AS s1"),
-    _wrap("pii", _ORACLES["x_pii_redact"],
-          "doc_id::BIGINT AS doc_id, n_email::BIGINT AS i1, "
-          "n_phone::BIGINT AS i2, n_ipv4::BIGINT AS i3, "
-          "n_pii::BIGINT AS i4, NULL::DOUBLE AS d1, redacted_md5 AS s1"),
-    _wrap("expect", """
+_COMPOSITES["x_curation_scrub"] = _composite(
+    "part STRING, doc_id BIGINT, i1 BIGINT, i2 BIGINT, i3 BIGINT, i4 BIGINT, "
+    "d1 DOUBLE, s1 STRING",
+    ("decontaminate", _x_curation_scrub_parts, _ORACLES["x_decontaminate"],
+     {"doc_id": "doc_id", "i1": "n_ngrams", "i2": "n_hit",
+      "i3": "contaminated", "d1": "overlap_frac"}),
+    ("pii", _x_curation_scrub_parts, _ORACLES["x_pii_redact"],
+     {"doc_id": "doc_id", "i1": "n_email", "i2": "n_phone", "i3": "n_ipv4",
+      "i4": "n_pii", "s1": "redacted_md5"}),
+    ("expect", _x_curation_scrub_parts, """
         WITH g AS (
             SELECT count(*) AS n,
                    sum((l_orderkey IS NULL)::INT) AS null_orderkey,
@@ -9655,11 +8057,9 @@ _ORACLES["x_curation_scrub"] = _union(
                (qty_under_45 = 0)::BIGINT FROM g
         UNION ALL SELECT 'unique_l_orderkey_l_linenumber', v::BIGINT,
                n::BIGINT, (v = 0)::BIGINT FROM u""",
-          "NULL::BIGINT AS doc_id, n_violations::BIGINT AS i1, "
-          "n_rows::BIGINT AS i2, passed::BIGINT AS i3, "
-          "NULL::BIGINT AS i4, NULL::DOUBLE AS d1, rule AS s1"),
-    _wrap("blocklist", f"""
-        SELECT doc_id,
+     {"i1": "n_violations", "i2": "n_rows", "i3": "passed", "s1": "rule"}),
+    ("blocklist", _x_curation_scrub_parts, f"""
+        SELECT *, n_hits > 2 AS blocked FROM (SELECT doc_id,
                len(list_filter(list_transform({_TOKS}, t -> lower(t)),
                                t -> list_contains(
                                    ['table', 'spark', 'window'], t)))
@@ -9669,27 +8069,18 @@ _ORACLES["x_curation_scrub"] = _union(
                                t -> list_contains(
                                    ['table', 'spark', 'window'], t))))
                    AS n_terms
-        FROM documents""",
-          "doc_id::BIGINT AS doc_id, n_hits::BIGINT AS i1, "
-          "n_terms::BIGINT AS i2, (n_hits > 2)::BIGINT AS i3, "
-          "NULL::BIGINT AS i4, NULL::DOUBLE AS d1, "
-          "NULL::VARCHAR AS s1"),
-    # URL curation: the oracle states the EXPECTED canonical URL /
-    # registered domain for the synthesized messy URLs (ground truth)
-    _wrap("url", f"""
+        FROM documents)""",
+     {"doc_id": "doc_id", "i1": "n_hits", "i2": "n_terms", "i3": "blocked"}),
+    ("url", _x_curation_scrub_parts, f"""
         SELECT doc_id, url_norm || '|' || domain AS s1
         FROM ({_URL_NORM_CTE})""",
-          "doc_id::BIGINT AS doc_id, NULL::BIGINT AS i1, "
-          "NULL::BIGINT AS i2, NULL::BIGINT AS i3, NULL::BIGINT AS i4, "
-          "NULL::DOUBLE AS d1, s1"),
-    _wrap("urldedup", f"""
-        SELECT min(doc_id) AS doc_id, url_norm AS s1
+     {"doc_id": "doc_id", "s1": "s1"}),
+    ("urldedup", _x_curation_scrub_parts, f"""
+        SELECT min(doc_id) AS doc_id, url_norm
         FROM ({_URL_NORM_CTE}) GROUP BY url_norm""",
-          "doc_id::BIGINT AS doc_id, NULL::BIGINT AS i1, "
-          "NULL::BIGINT AS i2, NULL::BIGINT AS i3, NULL::BIGINT AS i4, "
-          "NULL::DOUBLE AS d1, s1"),
-    _wrap("domcap", f"""
-        SELECT doc_id, domain AS s1 FROM (
+     {"doc_id": "doc_id", "s1": "url_norm"}),
+    ("domcap", _x_curation_scrub_parts, f"""
+        SELECT doc_id, domain FROM (
             SELECT doc_id, domain,
                    row_number() OVER (
                        PARTITION BY domain
@@ -9699,11 +8090,8 @@ _ORACLES["x_curation_scrub"] = _union(
                                 doc_id ASC) AS rk
             FROM ({_URL_NORM_CTE}))
         WHERE rk <= 5""",
-          "doc_id::BIGINT AS doc_id, NULL::BIGINT AS i1, "
-          "NULL::BIGINT AS i2, NULL::BIGINT AS i3, NULL::BIGINT AS i4, "
-          "NULL::DOUBLE AS d1, s1"),
-    # temperature-scaled language mix: w = p^0.7 / sum(p^0.7)
-    _wrap("tempw", """
+     {"doc_id": "doc_id", "s1": "domain"}),
+    ("tempw", _x_curation_scrub_parts, """
         WITH per AS (SELECT lang, count(*) AS n FROM documents
                      GROUP BY lang),
         t AS (SELECT lang, n,
@@ -9713,12 +8101,8 @@ _ORACLES["x_curation_scrub"] = _union(
         SELECT lang, n::BIGINT AS n,
                round(pa / sum(pa) OVER (), 6) AS w
         FROM t""",
-          "NULL::BIGINT AS doc_id, n::BIGINT AS i1, NULL::BIGINT AS i2, "
-          "NULL::BIGINT AS i3, NULL::BIGINT AS i4, w::DOUBLE AS d1, "
-          "lang AS s1"),
-    # deterministic temperature resample at budget 200: keep iff
-    # md5-bucket(doc_id || 'temp') < min(10000, 200*w*10000/n)
-    _wrap("tempsamp", """
+     {"i1": "n", "d1": "w", "s1": "lang"}),
+    ("tempsamp", _x_curation_scrub_parts, """
         WITH per AS (SELECT lang, count(*) AS n FROM documents
                      GROUP BY lang),
         t AS (SELECT lang, n,
@@ -9734,13 +8118,8 @@ _ORACLES["x_curation_scrub"] = _union(
                   < least(10000.0, 200.0 * w.w * 10000.0 / w.n))
         SELECT lang, count(*) AS n_kept, sum(doc_id) AS sum_id
         FROM keep GROUP BY lang""",
-          "NULL::BIGINT AS doc_id, n_kept::BIGINT AS i1, "
-          "sum_id::BIGINT AS i2, NULL::BIGINT AS i3, NULL::BIGINT AS i4, "
-          "NULL::DOUBLE AS d1, lang AS s1"),
-    # fuzzy MinHash decontamination: at 96/24 banding the Spark output
-    # equals the exact-Jaccard screen; the oracle computes exactly
-    # that — per-doc best benchmark match (ties to min bench id)
-    _wrap("fuzzydecon", """
+     {"i1": "n_kept", "i2": "sum_id", "s1": "lang"}),
+    ("fuzzydecon", _x_curation_scrub_parts, """
         WITH sh AS (
             SELECT doc_id,
                    list_distinct([substring(text, i, 5)
@@ -9764,14 +8143,9 @@ _ORACLES["x_curation_scrub"] = _union(
                h.bench_id, h.jac AS jaccard
         FROM documents d
         LEFT JOIN (SELECT * FROM hits WHERE rk = 1) h USING (doc_id)""",
-          "doc_id::BIGINT AS doc_id, contaminated::BIGINT AS i1, "
-          "bench_id::BIGINT AS i2, NULL::BIGINT AS i3, "
-          "NULL::BIGINT AS i4, jaccard::DOUBLE AS d1, "
-          "NULL::VARCHAR AS s1"),
-    # hashed linear quality classifier: md5 token bucket % 1024 ->
-    # deterministic milli-weight ((b*2654435761) % 2001 - 1000) ->
-    # exact-integer mean-weight logit; label = sum > 0 * n (integers)
-    _wrap("qualclf", f"""
+     {"doc_id": "doc_id", "i1": "contaminated", "i2": "bench_id",
+      "d1": "jaccard"}),
+    ("qualclf", _x_curation_scrub_parts, f"""
         WITH w AS (
             SELECT b AS bucket,
                    (b * 2654435761) % 2001 - 1000 AS w_milli
@@ -9793,14 +8167,9 @@ _ORACLES["x_curation_scrub"] = _union(
                CASE WHEN sc.n_tokens > 0
                     THEN (sc.logit_milli > 0)::BIGINT END AS label
         FROM documents d LEFT JOIN sc USING (doc_id)""",
-          "doc_id::BIGINT AS doc_id, n_tokens::BIGINT AS i1, "
-          "logit_milli::BIGINT AS i2, label::BIGINT AS i3, "
-          "NULL::BIGINT AS i4, score::DOUBLE AS d1, "
-          "NULL::VARCHAR AS s1"),
-    # cardpii: Luhn-gated card redaction over deterministic templates —
-    # the oracle states the EXPECTED candidate/valid counts and the
-    # redacted text per class (ground truth)
-    _wrap("cardpii", """
+     {"doc_id": "doc_id", "i1": "n_tokens", "i2": "logit_milli", "i3": "label",
+      "d1": "score"}),
+    ("cardpii", _x_curation_scrub_parts, """
         SELECT doc_id,
                CASE WHEN doc_id % 4 IN (0, 1, 2) THEN 1 ELSE 0 END
                    AS n_candidates,
@@ -9812,10 +8181,8 @@ _ORACLES["x_curation_scrub"] = _union(
                    WHEN 2 THEN 'grouped [CARD] card'
                    ELSE 'no digits here' END) AS redacted_md5
         FROM documents""",
-          "doc_id::BIGINT AS doc_id, n_candidates::BIGINT AS i1, "
-          "n_valid::BIGINT AS i2, NULL::BIGINT AS i3, "
-          "NULL::BIGINT AS i4, NULL::DOUBLE AS d1, "
-          "redacted_md5 AS s1"))
+     {"doc_id": "doc_id", "i1": "n_candidates", "i2": "n_valid",
+      "s1": "redacted_md5"}))
 
 _ORACLES["x_bm25_scores"] = """
     WITH toks AS (
@@ -9880,19 +8247,15 @@ _ORACLES["x_postings_stats"] = """
           FROM agg)
     WHERE rank <= 10"""
 
-_ORACLES["x_bm25"] = _union(
-    _wrap("bm25", _ORACLES["x_bm25_scores"],
-          "NULL::VARCHAR AS s1, doc_id::BIGINT AS i1, "
-          "n_terms_hit::BIGINT AS i2, NULL::BIGINT AS i3, "
-          "score::DOUBLE AS d1"),
-    _wrap("phrase", _ORACLES["x_phrase_search"],
-          "NULL::VARCHAR AS s1, doc_id::BIGINT AS i1, "
-          "n_hits::BIGINT AS i2, first_pos::BIGINT AS i3, "
-          "NULL::DOUBLE AS d1"),
-    _wrap("postings", _ORACLES["x_postings_stats"],
-          "term AS s1, df::BIGINT AS i1, cf::BIGINT AS i2, "
-          "rank::BIGINT AS i3, NULL::DOUBLE AS d1"),
-    _wrap("snippets", f"""
+_COMPOSITES["x_bm25"] = _composite(
+    "part STRING, s1 STRING, i1 BIGINT, i2 BIGINT, i3 BIGINT, d1 DOUBLE",
+    ("bm25", q_x_bm25_scores, _ORACLES["x_bm25_scores"],
+     {"i1": "doc_id", "i2": "n_terms_hit", "d1": "score"}),
+    ("phrase", q_x_phrase_search, _ORACLES["x_phrase_search"],
+     {"i1": "doc_id", "i2": "n_hits", "i3": "first_pos"}),
+    ("postings", q_x_postings_stats, _ORACLES["x_postings_stats"],
+     {"s1": "term", "i1": "df", "i2": "cf", "i3": "rank"}),
+    ("snippets", q_x_phrase_snippets, f"""
         WITH t AS (SELECT doc_id, {_TOKS} AS tk FROM documents),
         hits AS (
             SELECT doc_id, tk, unnest(
@@ -9905,8 +8268,7 @@ _ORACLES["x_bm25"] = _union(
                    tk[greatest(pos - 3, 1) :
                       least(pos + 1 + 3, len(tk))], ' ') AS snippet
         FROM hits""",
-          "snippet AS s1, doc_id::BIGINT AS i1, NULL::BIGINT AS i2, "
-          "pos::BIGINT AS i3, NULL::DOUBLE AS d1"))
+     {"s1": "snippet", "i1": "doc_id", "i3": "pos"}))
 
 _ORACLES["x_embed_int8"] = """
     WITH v AS (
@@ -10004,24 +8366,30 @@ def _jlproj_oracle() -> str:
         FROM n"""
 
 
-_ORACLES["x_embed_quantize"] = _union(
-    _wrap("int8", _ORACLES["x_embed_int8"],
-          "vec_id::BIGINT AS vec_id, q_sum::BIGINT AS i1, "
-          "q_absmax::BIGINT AS i2, NULL::BIGINT AS i3, "
-          "NULL::BIGINT AS i4, scale::DOUBLE AS d1, "
-          "l2_err::DOUBLE AS d2"),
-    _wrap("pq", _ORACLES["x_pq_encode"],
-          "vec_id::BIGINT AS vec_id, c0::BIGINT AS i1, c1::BIGINT AS i2, "
-          "c2::BIGINT AS i3, c3::BIGINT AS i4, recon_err::DOUBLE AS d1, "
-          "NULL::DOUBLE AS d2"),
-    _wrap("jlproj", _jlproj_oracle(),
-          "vec_id::BIGINT AS vec_id, npos::BIGINT AS i1, "
-          "NULL::BIGINT AS i2, NULL::BIGINT AS i3, NULL::BIGINT AS i4, "
-          "p0::DOUBLE AS d1, p1::DOUBLE AS d2"))
+_COMPOSITES["x_embed_quantize"] = _composite(
+    "part STRING, vec_id BIGINT, i1 BIGINT, i2 BIGINT, i3 BIGINT, i4 BIGINT, "
+    "d1 DOUBLE, d2 DOUBLE",
+    ("int8", q_x_embed_int8, _ORACLES["x_embed_int8"],
+     {"vec_id": "vec_id", "i1": "q_sum", "i2": "q_absmax", "d1": "scale",
+      "d2": "l2_err"}),
+    ("pq", q_x_pq_encode, _ORACLES["x_pq_encode"],
+     {"vec_id": "vec_id", "i1": "c0", "i2": "c1", "i3": "c2", "i4": "c3",
+      "d1": "recon_err"}),
+    ("jlproj", q_x_jl_projection, _jlproj_oracle(),
+     {"vec_id": "vec_id", "i1": "npos", "d1": "p0", "d2": "p1"}))
+
+
+#: part tags per batch composite, in union order (bench attribution)
+_TAGGED_PARTS: dict[str, list[str]] = {
+    name: [p.tag for p in comp.parts]
+    for name, comp in _COMPOSITES.items() if name not in _STREAMING}
 
 
 def oracle_sql() -> dict[str, str]:
-    """Oracles for every ``queries()`` key except ROWS_ONLY; the
-    per-operator building-block oracles remain as unreferenced entries
-    (they compose the composite SQL above)."""
-    return dict(_ORACLES)
+    """Oracles for every ``queries()`` key except ROWS_ONLY: a
+    composite's ``UNION ALL`` comes from the part table, any other
+    entry's SQL from ``_ORACLES`` (which also holds the per-operator
+    building blocks the part table reads)."""
+    return {name: _composite_sql(_COMPOSITES[name]) if name in _COMPOSITES
+            else _ORACLES[name]
+            for name in queries() if name not in ROWS_ONLY}

@@ -270,13 +270,20 @@ def streaming_cusum(sdf: DataFrame, mu: float, sigma: float,
 _START_LOCK = threading.Lock()
 
 
+#: free bytes /dev/shm must report before scratch goes there — container
+#: tmpfs mounts are often only 64 MiB, and a full tmpfs fails writes
+#: mid-query instead of up front
+SHM_MIN_FREE_BYTES = 1 << 30
+
+
 def scratch_dir() -> str:
     """Fast ephemeral scratch for verification-stream checkpoints and
     test-only table dirs. These checkpoints live only for the duration
     of a memory-sink verification query (removed on stop), so
     durability is irrelevant — prefer RAM-backed tmpfs when present
-    (state-store + offset-log commits are many tiny fsync-ing files,
-    measured IO-bound on disk /tmp). Override with $SPARK_GRAFT_SCRATCH
+    with at least ``SHM_MIN_FREE_BYTES`` free (state-store + offset-log
+    commits are many tiny fsync-ing files, measured IO-bound on disk
+    /tmp), else the system temp dir. Override with $SPARK_GRAFT_SCRATCH
     (e.g. cluster-local SSD scratch); production streams pass their own
     durable ``checkpoint_dir`` explicitly and never come through here.
     """
@@ -285,7 +292,12 @@ def scratch_dir() -> str:
     env = os.environ.get("SPARK_GRAFT_SCRATCH")
     if env:
         return env
-    if os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK):
+    try:
+        st = os.statvfs("/dev/shm")
+    except OSError:
+        st = None
+    if (st is not None and st.f_bavail * st.f_frsize >= SHM_MIN_FREE_BYTES
+            and os.access("/dev/shm", os.W_OK)):
         return "/dev/shm"
     return tempfile.gettempdir()
 
@@ -318,37 +330,42 @@ def run_stream_to_memory(stream_df: DataFrame, query_name: str,
     spark = stream_df.sparkSession
     ckpt = tempfile.mkdtemp(prefix=f"cdf_ck_{query_name}_",
                             dir=scratch_dir())
-    # the set -> start -> restore window is serialized: independent
-    # streams are routinely STARTED from a small thread pool so their
-    # micro-batches overlap (guide §2.6), and an unguarded restore
-    # could capture another starter's temporary value as "previous"
-    # and leave the session conf pinned low for later batch queries
-    with _START_LOCK:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        stream_parts = min(int(prev), 8) if str(prev).isdigit() else 8
-        spark.conf.set("spark.sql.shuffle.partitions", str(stream_parts))
-        try:
-            q = (stream_df.writeStream.format("memory")
-                 .queryName(query_name)
-                 .option("checkpointLocation", ckpt)
-                 .outputMode(output_mode).start())
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-    q.processAllAvailable()
-    if min_rows is not None:
-        import time as _time
-        spark = stream_df.sparkSession
-        deadline = _time.time() + timeout
-        while (spark.table(query_name).count() < min_rows
-               and _time.time() < deadline):
-            # short poll: the no-data micro-batch that emits
-            # watermark-gated rows usually lands within ~100ms of
-            # processAllAvailable; 0.5s polls added ~0.4s per waiting
-            # stream to the composite wall
-            _time.sleep(0.1)
-            q.processAllAvailable()
-    q.stop()
-    shutil.rmtree(ckpt, ignore_errors=True)
+    q = None
+    try:
+        # the set -> start -> restore window is serialized: independent
+        # streams are routinely STARTED from a small thread pool so
+        # their micro-batches overlap, and an unguarded restore could
+        # capture another starter's temporary value as "previous" and
+        # leave the session conf pinned low for later batch queries
+        with _START_LOCK:
+            prev = spark.conf.get("spark.sql.shuffle.partitions")
+            stream_parts = min(int(prev), 8) if str(prev).isdigit() else 8
+            spark.conf.set("spark.sql.shuffle.partitions",
+                           str(stream_parts))
+            try:
+                q = (stream_df.writeStream.format("memory")
+                     .queryName(query_name)
+                     .option("checkpointLocation", ckpt)
+                     .outputMode(output_mode).start())
+            finally:
+                spark.conf.set("spark.sql.shuffle.partitions", prev)
+        q.processAllAvailable()
+        if min_rows is not None:
+            import time as _time
+            deadline = _time.time() + timeout
+            while (spark.table(query_name).count() < min_rows
+                   and _time.time() < deadline):
+                # short poll: the no-data micro-batch that emits
+                # watermark-gated rows usually lands within ~100ms of
+                # processAllAvailable; 0.5s polls added ~0.4s per
+                # waiting stream to the composite wall
+                _time.sleep(0.1)
+                q.processAllAvailable()
+    finally:
+        # a failed start() or micro-batch must not leak the checkpoint
+        if q is not None:
+            q.stop()
+        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def streaming_dedup(sdf: DataFrame, key_cols: list[str],

@@ -10,14 +10,16 @@ would silently execute under whatever a later query left in the session.
 from __future__ import annotations
 
 import importlib.util
+import os
 import sys
 
 
 def _load_entry():
     if "__spark_entry__" in sys.modules:
         return sys.modules["__spark_entry__"]
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", "/root/repo/__spark_entry__.py")
+        "__spark_entry__", os.path.join(root, "__spark_entry__.py"))
     mod = importlib.util.module_from_spec(spec)
     sys.modules["__spark_entry__"] = mod
     spec.loader.exec_module(mod)

@@ -154,13 +154,13 @@ def test_pii_redact_is_narrow_codegen(spark, sf_dir):
 def test_bm25_df_dictionary_is_broadcast(spark, sf_dir):
     """Per-term document frequencies (<= |query| rows) and the corpus
     scalar stats must broadcast back onto the (doc, term) side."""
-    p = _plan(E.q_x_bm25(spark, sf_dir))
+    p = _plan(E.queries()["x_bm25"](spark, sf_dir))
     assert p.count("BroadcastExchange") >= 2
 
 
 def test_quantize_is_narrow(spark, sf_dir):
     """Quantization is per-row array math: no shuffle, no Python."""
-    p = _plan(E.q_x_embed_quantize(spark, sf_dir))
+    p = _plan(E.queries()["x_embed_quantize"](spark, sf_dir))
     assert "Exchange" not in p
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
 

@@ -79,3 +79,9 @@ def test_every_part_tag_is_documented_in_survey():
         if part not in text
     ]
     assert not missing, missing
+
+
+def test_oracle_sql_covers_exactly_the_checked_entries():
+    """``oracle_sql()`` carries one statement per oracled registry entry
+    and nothing else — building-block SQL stays internal."""
+    assert set(E.oracle_sql()) == set(E.queries()) - E.ROWS_ONLY

@@ -1180,3 +1180,48 @@ def test_stream_cdc_across_widen_commit(spark, tmp_path):
     assert got == ({(1, "insert", k) for k in range(6)}
                    | {(3, "insert", k) for k in (10, 11, 12)}
                    | {(4, "delete", 2)})
+
+
+def test_failed_start_removes_checkpoint(spark, stream_dir):
+    """``start()`` raising (complete mode over a non-aggregating stream)
+    must still remove the query's scratch checkpoint and restore the
+    session's shuffle-partition conf."""
+    import glob
+    import os
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    stream = ST.read_stream_parquet(spark, stream_dir,
+                                    _events_batch(spark).schema)
+    with pytest.raises(Exception, match="(?i)complete"):
+        ST.run_stream_to_memory(stream.select("event_id"), "t_badstart",
+                                output_mode="complete")
+    assert not glob.glob(os.path.join(ST.scratch_dir(),
+                                      "cdf_ck_t_badstart_*"))
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+
+
+def test_scratch_dir_needs_free_shm(monkeypatch):
+    """/dev/shm is scratch only with SHM_MIN_FREE_BYTES free; a small
+    or missing tmpfs falls back to the system temp dir, and
+    $SPARK_GRAFT_SCRATCH overrides both."""
+    import os
+    import tempfile
+    from types import SimpleNamespace
+
+    def statvfs_with(free):
+        return lambda path: SimpleNamespace(f_bavail=free // 4096,
+                                            f_frsize=4096)
+
+    def no_shm(path):
+        raise FileNotFoundError(path)
+
+    monkeypatch.delenv("SPARK_GRAFT_SCRATCH", raising=False)
+    monkeypatch.setattr(os, "access", lambda path, mode: True)
+    monkeypatch.setattr(os, "statvfs", statvfs_with(64 << 20))
+    assert ST.scratch_dir() == tempfile.gettempdir()
+    monkeypatch.setattr(os, "statvfs", no_shm)
+    assert ST.scratch_dir() == tempfile.gettempdir()
+    monkeypatch.setattr(os, "statvfs",
+                        statvfs_with(ST.SHM_MIN_FREE_BYTES))
+    assert ST.scratch_dir() == "/dev/shm"
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", "/elsewhere")
+    assert ST.scratch_dir() == "/elsewhere"

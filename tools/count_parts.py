@@ -1,6 +1,8 @@
 """Derive the tagged-part count mechanically from __spark_entry__'s
-_TAGGED_PARTS (round-11 directive: docs stated "~186" while the truth
-was 183 — counts in README/SURVEY must come from this, not by hand).
+composite part table (``_TAGGED_PARTS`` lists the tags of every batch
+composite in ``_COMPOSITES``; round-11 directive: docs stated "~186"
+while the truth was 183 — counts in README/SURVEY must come from this,
+not by hand).
 
 Usage: python tools/count_parts.py [--per-entry]
 """

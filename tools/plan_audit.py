@@ -30,9 +30,11 @@ Output is a markdown table on stdout (pipe into PLANS_r{N}.md).
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))))
 
 SKIP = {"st_windows", "st_stateful", "st_dedup"}  # real streams
 

@@ -363,7 +363,19 @@ def ngram_order_profile(frame, id_col: str = "doc_id",
     of the wall) runs once instead of per query. *carry_cols* rides
     block/metadata columns along so blocked and global queries can
     share ONE profile. Returns a plain DataFrame
-    (id_col, *carry_cols, __toks__)."""
+    (id_col, *carry_cols, __toks__).
+
+    The tokenized intermediate is always ``localCheckpoint``-ed
+    (lazily, on the first action), independent of any ``persist`` the
+    caller adds. Two consequences:
+
+    - its block-manager storage (executor memory, spilling to local
+      disk) stays held until the returned DataFrame — and every plan
+      built on it — is dropped and garbage-collected; ``unpersist``
+      on the result does not release it;
+    - the checkpoint truncates the lineage, so if an executor holding
+      checkpointed blocks is lost the profile cannot be recomputed and
+      later actions on it fail — rebuild it from *frame*."""
     ccols = list(carry_cols or [])
     base = ensure_min_partitions(_plain(frame).select(id_col, *ccols,
                                                       text_col))

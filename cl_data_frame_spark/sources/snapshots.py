@@ -13,9 +13,10 @@ Layout::
                                    "schema", "parent", "operation"}
       _manifests/v00000002.json   DELTA commit: {"add", "remove",
                                    "stats_add", "op_rename", ...}
-      _manifests/v00000020.ckpt   full-state checkpoint every
-                                   _CHECKPOINT_EVERY commits
+      _manifests/v00000020.ckpt.parquet   full-state checkpoint
+                                   every _CHECKPOINT_EVERY commits
       _manifests/sidecars/sc-<token>.json   bloom-filter bytes
+      _manifests/sidecars/dv-<token>/*.parquet   deletion vectors
       data/v00000001-<token>/part-*.parquet
 
 Commits are O(changed files) on disk (the public Delta log protocol's
@@ -91,10 +92,6 @@ def _manifest_path(table_dir: str, version: int) -> str:
     return os.path.join(table_dir, _MANIFEST_DIR, f"v{version:08d}.json")
 
 
-def _ckpt_path(table_dir: str, version: int) -> str:
-    return os.path.join(table_dir, _MANIFEST_DIR, f"v{version:08d}.ckpt")
-
-
 def _ckpt_pq_path(table_dir: str, version: int) -> str:
     return os.path.join(table_dir, _MANIFEST_DIR,
                         f"v{version:08d}.ckpt.parquet")
@@ -147,12 +144,12 @@ def _versions(table_dir: str) -> list[int]:
 # added/removed files, stats/bloom for the added files, metadata-op
 # records — so commit JSON is O(changed files), not O(#files). Every
 # _CHECKPOINT_EVERY commits (and before vacuum drops history) a full
-# reconstructed state lands in a vNNNNNNNN.ckpt file; a read resolves
-# O(1) checkpoint + O(commits-since-checkpoint) deltas. Reconstructed
-# states are LRU-cached in-process (manifests are immutable once
-# published, so the cache can never serve a stale answer). The
-# _read_manifest contract is unchanged: callers always receive the
-# FULL logical state dict, whatever the on-disk encoding.
+# reconstructed state lands in a vNNNNNNNN.ckpt.parquet file; a read
+# resolves O(1) checkpoint + O(commits-since-checkpoint) deltas.
+# Reconstructed states are LRU-cached in-process (manifests are
+# immutable once published, so the cache can never serve a stale
+# answer). The _read_manifest contract is unchanged: callers always
+# receive the FULL logical state dict, whatever the on-disk encoding.
 # ---------------------------------------------------------------------------
 
 _STATE_CACHE: "dict[tuple[str, int], dict]" = {}
@@ -534,13 +531,7 @@ def _read_manifest(table_dir: str, version: int) -> dict:
         except (OSError, ValueError, KeyError):
             pass   # absent / unreadable ckpt: ArrowInvalid is a
             # ValueError, Arrow IO errors are OSError — fall through
-            # to the JSON ckpt, then the delta chain (always correct)
-        try:
-            with open(_ckpt_path(table_dir, v)) as f:
-                state = json.load(f)
-            break
-        except (FileNotFoundError, json.JSONDecodeError):
-            pass
+            # to the delta chain (always correct)
         try:
             with open(_manifest_path(table_dir, v)) as f:
                 d = json.load(f)
@@ -672,8 +663,8 @@ def _compute_op_metrics(parent: dict | None, manifest: dict) -> dict:
     - ``numRemovedRows``: rows in the removed files, from the PARENT's
       stats (omitted on partial coverage);
     - ``numDeletedRows``: deletion-vector positions newly recorded by
-      this commit (merge-on-read DML; omitted when a legacy DV entry
-      lacks its count — never loads a sidecar).
+      this commit (merge-on-read DML), from the ``n`` every DV entry
+      records — never loads a sidecar.
 
     Commit-scoped like ``op_info``/``cdc``: carried on the version
     that committed it, never inherited, so every audit question
@@ -704,17 +695,9 @@ def _compute_op_metrics(parent: dict | None, manifest: dict) -> dict:
     pdv = (parent.get("dv") or {}) if parent else {}
     cdv = manifest.get("dv") or {}
     if cdv or pdv:
-        deleted = 0
-        for f, e in cdv.items():
-            n = e.get("n")
-            pe = pdv.get(f)
-            pn = 0 if pe is None else pe.get("n")
-            if n is None or pn is None:
-                deleted = None          # legacy entry without a count
-                break
-            deleted += max(0, int(n) - int(pn))
-        if deleted is not None:
-            out["numDeletedRows"] = deleted
+        out["numDeletedRows"] = sum(
+            max(0, int(e["n"]) - (int(pdv[f]["n"]) if f in pdv else 0))
+            for f, e in cdv.items())
     return out
 
 
@@ -730,8 +713,8 @@ def _write_checkpoint(table_dir: str, state: dict) -> None:
     state dict in driver memory, and a real cluster could hand the
     same file to distributed Spark. Idempotent content (deterministic
     replay of the log), so last-writer-wins os.replace is safe under
-    racing writers. Pre-existing ``.ckpt`` JSON checkpoints stay
-    readable forever."""
+    racing writers. This is the only checkpoint encoding; an absent
+    or unreadable one falls back to the delta chain."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     files = list(state["files"])
@@ -1112,20 +1095,17 @@ def _load_sidecar(path: str) -> dict:
 
 
 def _bloom_bits(entry: dict, table_dir: str | None) -> bytes | None:
-    """The filter's bytes: inline ``b64`` (legacy manifests) or lazily
-    resolved from the sidecar file the manifest references — loaded
-    only for files that already survived min/max stats pruning, and
-    never serialized into commit JSON."""
+    """The filter's bytes, lazily resolved from the sidecar file the
+    manifest references — loaded only for files that already survived
+    min/max stats pruning, and never serialized into commit JSON."""
     import base64
-    if "b64" in entry:
-        return base64.b64decode(entry["b64"])
-    if entry.get("sc") and table_dir is not None:
-        try:
-            sc = _load_sidecar(os.path.join(table_dir, entry["sc"]))
-            return base64.b64decode(sc[entry["f"]][entry["c"]])
-        except (OSError, KeyError, json.JSONDecodeError):
-            return None   # missing sidecar: sound (no pruning)
-    return None
+    if table_dir is None:
+        return None
+    try:
+        sc = _load_sidecar(os.path.join(table_dir, entry["sc"]))
+        return base64.b64decode(sc[entry["f"]][entry["c"]])
+    except (OSError, KeyError, json.JSONDecodeError):
+        return None   # missing sidecar: sound (no pruning)
 
 
 def _bloom_may_contain(entry: dict, canonical: str,
@@ -1303,55 +1283,43 @@ def _dv_meta_cols():
             F.col("_metadata.row_index").cast("long").alias("__pos__"))
 
 
-def _dv_positions(table_dir: str, rel_file: str, entry: dict) -> list:
-    """The deleted row indexes for *rel_file* from its DV sidecar
-    (same immutable-sidecar mechanics and cache as bloom filters for
-    legacy JSON entries; parquet v2 entries — executor-written —
-    read columnar and filter to the file's identity)."""
-    if "scp" in entry:
-        import pyarrow.dataset as ds
-        fid = entry.get("f", _dv_fid(rel_file))
-        t = ds.dataset(os.path.join(table_dir, entry["scp"]),
-                       format="parquet") \
-            .to_table(filter=ds.field("__fid__") == fid,
-                      columns=["__pos__"])
-        return t.column("__pos__").to_pylist()
-    sc = _load_sidecar(os.path.join(table_dir, entry["sc"]))
-    return sc[entry.get("f", rel_file)]
+#: the one deletion-vector encoding: every DV sidecar directory holds
+#: (file identity, deleted row index) rows with exactly this schema
+_DV_SCHEMA = "__fid__ string, __pos__ long"
+
+
+def _dv_positions(table_dir: str, entry: dict) -> list:
+    """The deleted row indexes one manifest DV entry records: its
+    sidecar directory read columnar, filtered to the file's identity
+    (the entry's ``f``)."""
+    import pyarrow.dataset as ds
+    t = ds.dataset(os.path.join(table_dir, entry["scp"]),
+                   format="parquet") \
+        .to_table(filter=ds.field("__fid__") == entry["f"],
+                  columns=["__pos__"])
+    return t.column("__pos__").to_pylist()
 
 
 def _dv_pos_df(spark: SparkSession, table_dir: str, dv: dict):
-    """All deleted (``__fid__``, ``__pos__``) pairs for a manifest
-    ``dv`` map as a DataFrame — parquet v2 sidecars SCAN distributed
-    (the driver never materializes the positions), legacy JSON
-    entries parallelize their (bounded) lists."""
-    parts = []
-    v2: dict[str, set] = {}
-    legacy = []
-    for f, e in dv.items():
-        if "scp" in e:
-            # v2 entries record the matching identity in "f"
-            v2.setdefault(e["scp"], set()).add(
-                e.get("f", _dv_fid(f)))
-        else:
-            # legacy JSON entries' "f" is the sidecar CONTENT key
-            # (a rel path), not the read-side identity
-            legacy += [(_dv_fid(f), int(p))
-                       for p in _dv_positions(table_dir, f, e)]
-    for scp, fids in v2.items():
-        parts.append(
-            spark.read.parquet(os.path.join(table_dir, scp))
-            .where(F.col("__fid__").isin(sorted(fids)))
-            .select("__fid__", F.col("__pos__").cast("long")))
-    if legacy or not parts:
-        parts.append(spark.createDataFrame(
-            legacy, "__fid__ string, __pos__ long"))
-    out = parts[0]
-    for pdf in parts[1:]:
-        out = out.unionByName(pdf)
+    """All deleted (``__fid__``, ``__pos__``) pairs for a non-empty
+    manifest ``dv`` map as a DataFrame: one distributed scan per
+    referenced sidecar directory, read with the fixed ``_DV_SCHEMA``
+    (no footer inference) and filtered to the identities whose entries
+    point at it — the driver never materializes the positions."""
+    fids: dict[str, set] = {}
+    for e in dv.values():
+        fids.setdefault(e["scp"], set()).add(e["f"])
+    out = None
+    for scp, fs in fids.items():
+        part = (spark.read.schema(_DV_SCHEMA)
+                .parquet(os.path.join(table_dir, scp))
+                .where(F.col("__fid__").isin(sorted(fs))))
+        out = part if out is None else out.unionByName(part)
     return out
 
 
+#: at most this many new+old positions per DML commit are collected to
+#: the driver and written there; above it the executors write the DV
 _DV_SMALL_TOTAL = 50_000
 
 #: merge-on-read anti-join broadcast ceiling: below this many TOTAL
@@ -1362,107 +1330,72 @@ _DV_SMALL_TOTAL = 50_000
 _DV_BROADCAST_MAX = 10_000_000
 
 
-def _dv_total_positions(table_dir: str, dv: dict) -> int:
+def _dv_total_positions(dv: dict) -> int:
     """Total recorded deleted positions across a manifest ``dv`` map —
-    O(#files) metadata (every writer records ``n``); a (legacy) entry
-    missing the count loads its JSON sidecar list, which the JSON
-    write path bounds."""
-    total = 0
-    for f, e in dv.items():
-        n = e.get("n")
-        if n is None:
-            n = len(_dv_positions(table_dir, f, e))
-        total += int(n)
-    return total
+    O(#files) metadata: every DV entry records its count ``n``."""
+    return sum(int(e["n"]) for e in dv.values())
 
 
-def _write_dv_sidecar_distributed(spark: SparkSession,
-                                  table_dir: str, pos_df,
-                                  rel_by_fid: dict,
-                                  old_dv: dict,
-                                  n_new: int | None = None) -> dict:
-    """Publish one commit's deletion vectors from the EXECUTORS:
-    *pos_df* holds the NEW (__fid__, __pos__) pairs (computed over
-    already-DV-filtered rows, so disjoint from the existing vectors),
-    the affected files' existing vectors fold in as DataFrames, and
-    the union lands in one parquet sidecar directory written by
-    Spark. The driver collects ONLY the per-file counts (#files
-    rows) — the 100k-positions-per-file × #files driver bound of the
-    JSON path is gone; reads scan the same parquet distributed
-    (``_dv_pos_df``).
+def _write_dv_dir(spark: SparkSession, table_dir: str, pos_df,
+                  rel_by_fid: dict, old_dv: dict, n_new: int) -> dict:
+    """Publish one commit's deletion vectors as ONE parquet sidecar
+    directory, ``_manifests/sidecars/dv-<uuid>/``, of ``_DV_SCHEMA``
+    rows. *pos_df* holds the NEW (__fid__, __pos__) pairs (computed
+    over already-DV-filtered rows, so disjoint from the existing
+    vectors); the affected files' existing vectors fold in. The size
+    picks who writes the directory, never what is written:
 
-    Point-DML fast path: when the caller knows the new-position
-    total (*n_new*, from the per-file match counts it already
-    collected) and new+old fits ``_DV_SMALL_TOTAL``, the positions
-    are BOUNDED by definition — a driver-side JSON sidecar is one
-    small write instead of a Spark write+read-back round trip."""
-    olds = {rel: old_dv[rel] for fid, rel in rel_by_fid.items()
+    - new (*n_new*, from the per-file match counts the caller already
+      collected) plus old positions within ``_DV_SMALL_TOTAL`` are
+      bounded, so the driver collects them and writes one
+      ``part-0.parquet`` with pyarrow — no Spark write or read-back on
+      the point-DML (GDPR-delete) hot path;
+    - anything larger is written by the EXECUTORS with Spark, and the
+      driver collects only the per-file counts (#files rows).
+
+    Returns the manifest ``dv`` entries, ``{"scp", "f", "n"}`` each."""
+    olds = {fid: old_dv[rel] for fid, rel in rel_by_fid.items()
             if rel in old_dv}
-    if n_new is not None:
-        n_old = 0
-        for rel, e in olds.items():
-            n = e.get("n")
-            if n is None:       # legacy entry: the JSON is tiny
-                n = len(_dv_positions(table_dir, rel, e))
-            n_old += int(n)
-        if n_new + n_old <= _DV_SMALL_TOTAL:
-            merged: dict[str, set] = {}
-            for r in pos_df.collect():
-                merged.setdefault(rel_by_fid[r["__fid__"]],
-                                  set()).add(int(r["__pos__"]))
-            for rel, e in olds.items():
-                merged[rel] = merged.get(rel, set()) \
-                    | set(_dv_positions(table_dir, rel, e))
-            return _write_dv_sidecar(
-                table_dir,
-                {k: sorted(v) for k, v in merged.items()})
-    if olds:
-        pos_df = pos_df.unionByName(
-            _dv_pos_df(spark, table_dir, olds))
-    name = f"dv-{uuid.uuid4().hex}"
-    rel_dir = os.path.join(_MANIFEST_DIR, _SIDECAR_DIR, name)
+    rel_dir = os.path.join(_MANIFEST_DIR, _SIDECAR_DIR,
+                           f"dv-{uuid.uuid4().hex}")
     out = os.path.join(table_dir, rel_dir)
-    pos_df.repartition("__fid__").write.mode("error").parquet(out)
-    counts = {r["__fid__"]: int(r["n"]) for r in
-              spark.read.parquet(out).groupBy("__fid__")
-              .agg(F.count(F.lit(1)).alias("n")).collect()}
+    if n_new + _dv_total_positions(olds) <= _DV_SMALL_TOTAL:
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        merged: dict[str, set] = {}
+        for r in pos_df.collect():
+            merged.setdefault(r["__fid__"], set()).add(int(r["__pos__"]))
+        for fid, e in olds.items():
+            merged.setdefault(fid, set()).update(
+                _dv_positions(table_dir, e))
+        fids = sorted(merged)
+        os.makedirs(out)
+        pq.write_table(pa.table({
+            "__fid__": pa.array([f for f in fids for _ in merged[f]],
+                                pa.string()),
+            "__pos__": pa.array([p for f in fids
+                                 for p in sorted(merged[f])],
+                                pa.int64())}),
+            os.path.join(out, "part-0.parquet"))
+        counts = {fid: len(merged[fid]) for fid in fids}
+    else:
+        if olds:
+            pos_df = pos_df.unionByName(
+                _dv_pos_df(spark, table_dir, olds))
+        pos_df.repartition("__fid__").write.mode("error").parquet(out)
+        counts = {r["__fid__"]: int(r["n"]) for r in
+                  spark.read.schema(_DV_SCHEMA).parquet(out)
+                  .groupBy("__fid__")
+                  .agg(F.count(F.lit(1)).alias("n")).collect()}
     return {rel_by_fid[fid]: {"scp": rel_dir, "f": fid, "n": n}
             for fid, n in counts.items() if fid in rel_by_fid}
 
 
-def _write_dv_sidecar(table_dir: str, positions: dict) -> dict:
-    """Publish one DV sidecar holding every file's deleted positions
-    for a commit; returns the manifest ``dv`` entries referencing it."""
-    scdir = os.path.join(table_dir, _MANIFEST_DIR, _SIDECAR_DIR)
-    os.makedirs(scdir, exist_ok=True)
-    name = f"dv-{uuid.uuid4().hex}.json"
-    rel = os.path.join(_MANIFEST_DIR, _SIDECAR_DIR, name)
-    tmp = os.path.join(scdir, f".{name}.tmp")
-    with open(tmp, "w") as f:
-        json.dump({k: sorted(v) for k, v in positions.items()}, f)
-    os.replace(tmp, os.path.join(scdir, name))
-    return {k: {"sc": rel, "f": k, "n": len(v)}
-            for k, v in positions.items()}
-
-
-def _carry_dv(parent_manifest: dict | None, surviving_files,
-              table_dir: str | None = None) -> dict:
-    """Parent DV entries restricted to the surviving files. With
-    *table_dir* (the DML/OPTIMIZE call sites), a legacy entry missing
-    its recorded position count gets ``n`` BACKFILLED into the carried
-    manifest — one bounded JSON sidecar load now, so the merge-on-read
-    broadcast gate (``_dv_total_positions``) stays O(#files) metadata
-    on legacy tables from the next commit onward."""
+def _carry_dv(parent_manifest: dict | None, surviving_files) -> dict:
+    """Parent DV entries restricted to the surviving files."""
     keep = set(surviving_files)
     pd_ = (parent_manifest or {}).get("dv") or {}
-    out = {}
-    for f, e in pd_.items():
-        if f not in keep:
-            continue
-        if table_dir is not None and e.get("n") is None:
-            e = {**e, "n": len(_dv_positions(table_dir, f, e))}
-        out[f] = e
-    return out
+    return {f: e for f, e in pd_.items() if f in keep}
 
 
 def _read_files_renamed(spark: SparkSession, table_dir: str,
@@ -1565,7 +1498,7 @@ def _read_files_renamed(spark: SparkSession, table_dir: str,
         out = out.unionByName(p, allowMissingColumns=merge_schema)
     if dv:
         pos_df = _dv_pos_df(spark, table_dir, dv)
-        if _dv_total_positions(table_dir, dv) <= _DV_BROADCAST_MAX:
+        if _dv_total_positions(dv) <= _DV_BROADCAST_MAX:
             pos_df = F.broadcast(pos_df)
         # above the gate: no hint — AQE picks the join strategy (a
         # table carrying 100M+ accumulated DV positions between
@@ -2225,15 +2158,12 @@ def snapshot_clone(src_table_dir: str, dst_table_dir: str,
         # "f"/"c" keys stay as-written — they index INTO the source
         # sidecar's content, which is shared, not copied)
         manifest["bloom"] = {
-            remap(f): {c: ({**e, "sc": remap(e["sc"])}
-                           if e.get("sc") else e)
+            remap(f): {c: {**e, "sc": remap(e["sc"])}
                        for c, e in b.items()}
             for f, b in m["bloom"].items()}
     if m.get("dv"):
-        manifest["dv"] = {
-            remap(f): ({**e, "scp": remap(e["scp"])} if e.get("scp")
-                       else {**e, "sc": remap(e["sc"])})
-            for f, e in m["dv"].items()}
+        manifest["dv"] = {remap(f): {**e, "scp": remap(e["scp"])}
+                          for f, e in m["dv"].items()}
     if m.get("constraints"):
         manifest["constraints"] = m["constraints"]
     if m.get("generated"):
@@ -3804,8 +3734,7 @@ def _optimize_once(spark: SparkSession, table_dir: str,
         manifest["renamed_files"] = renames
     # compacted files had their DVs APPLIED during the read above, so
     # their vectors are materialized away; carried files keep theirs
-    # (legacy entries get their position count backfilled)
-    dv = _carry_dv(m, carried, table_dir)
+    dv = _carry_dv(m, carried)
     if dv:
         manifest["dv"] = dv
     parts_ = {**_carry_partitions(m, carried), **new_parts}
@@ -3854,10 +3783,13 @@ def _version_change_rows(spark: SparkSession, table_dir: str,
                          m: dict, pm: dict | None
                          ) -> DataFrame | None:
     """One version's row-level change set, RECOMPUTED from its
-    manifest diff against the parent (the pre-materialization rules,
-    kept as (a) the commit-time producer of the ``_change_data``
-    files and (b) the read fallback for commits that predate
-    materialization). Returns a DataFrame with ``_change_type`` and
+    manifest diff against the parent. Two live callers: (a) DML
+    commits (delete/update/merge) run it once at commit time to
+    produce their ``_change_data`` files; (b) ``snapshot_changes``
+    runs it at read time for every commit WITHOUT a ``cdc`` key —
+    appends, clones, non-initial overwrites, restores and
+    ``snapshot_widen_column(rewrite=True)`` commits — so this is not
+    a legacy path. Returns a DataFrame with ``_change_type`` and
     ``_commit_version`` appended, or None for a no-change version:
 
     - appends/clones (and the initial version) emit their added
@@ -3902,8 +3834,7 @@ def _version_change_rows(spark: SparkSession, table_dir: str,
         # positions, and 100k literals inflate the plan/codegen and
         # driver memory (same shape as the scan path's DV anti-join)
         pos_df = spark.createDataFrame(
-            [(_dv_fid(f), int(p)) for p in positions],
-            "__fid__ string, __pos__ long")
+            [(_dv_fid(f), int(p)) for p in positions], _DV_SCHEMA)
         return (_read_files_renamed(
             spark, table_dir, [f],
             {**manifest, "dv": {}}, with_pos=True)
@@ -3914,9 +3845,9 @@ def _version_change_rows(spark: SparkSession, table_dir: str,
     # restore to a pre-delete version — re-exposes rows (new side);
     # both on files present in BOTH versions
     for f in (set(cdv) | set(pdv)) & pset & cset:
-        old_pos = set(_dv_positions(table_dir, f, pdv[f])) \
+        old_pos = set(_dv_positions(table_dir, pdv[f])) \
             if f in pdv else set()
-        new_pos = set(_dv_positions(table_dir, f, cdv[f])) \
+        new_pos = set(_dv_positions(table_dir, cdv[f])) \
             if f in cdv else set()
         if new_pos - old_pos:
             hidden = rows_at(pm, f, new_pos - old_pos)
@@ -4030,8 +3961,9 @@ def snapshot_changes(spark: SparkSession, table_dir: str,
 
     Commits whose manifest references MATERIALIZED change files
     (``_change_data``, written at DML commit time) are plain parquet
-    scans; older commits fall back to the distributed manifest-diff
-    recompute (``_version_change_rows`` — the same classification
+    scans; every other commit (appends, clones, non-initial
+    overwrites, restores, widen-rewrites) is recomputed from its
+    manifest diff (``_version_change_rows`` — the same classification
     that produced the materialized files, so both paths agree
     bit-for-bit).
 
@@ -4527,10 +4459,7 @@ def snapshot_count(table_dir: str, version: int | None = None,
                 f"count with snapshot_read(...).count()")
         total += int(n)
         if f in dv:
-            ndv = dv[f].get("n")
-            if ndv is None:
-                ndv = len(_dv_positions(table_dir, f, dv[f]))
-            total -= int(ndv)
+            total -= int(dv[f]["n"])
     if some:
         # hybrid tail: one pruned scan over ONLY the mixed files
         # (DV-filtered by _read_files_renamed), exact row predicate
@@ -4852,17 +4781,13 @@ def snapshot_vacuum(table_dir: str, keep_last: int = 1,
                 if e.get("sc"):
                     sidecars.add(os.path.normpath(e["sc"]))
         for e in (m.get("dv") or {}).values():
-            if e.get("sc"):
-                sidecars.add(os.path.normpath(e["sc"]))
-            if e.get("scp"):
-                sidecars.add(os.path.normpath(e["scp"]))
+            sidecars.add(os.path.normpath(e["scp"]))
     # a surviving DELTA commit whose replay base is being dropped must
     # be materialized as a checkpoint first, or it becomes unreadable
     if not dry_run:
         for v in surviving:
             if v - 1 in survset \
-                    or os.path.exists(_ckpt_pq_path(table_dir, v)) \
-                    or os.path.exists(_ckpt_path(table_dir, v)):
+                    or os.path.exists(_ckpt_pq_path(table_dir, v)):
                 continue
             try:
                 with open(_manifest_path(table_dir, v)) as f:
@@ -4894,7 +4819,7 @@ def snapshot_vacuum(table_dir: str, keep_last: int = 1,
             rel = os.path.normpath(os.path.relpath(full, table_dir))
             if rel not in sidecars and _old_enough(full):
                 if not dry_run:
-                    if os.path.isdir(full):  # parquet v2 DV sidecar
+                    if os.path.isdir(full):  # DV sidecar directory
                         import shutil
                         shutil.rmtree(full, ignore_errors=True)
                     else:
@@ -4905,12 +4830,10 @@ def snapshot_vacuum(table_dir: str, keep_last: int = 1,
     for v in versions:
         if v not in surviving:
             os.remove(_manifest_path(table_dir, v))
-            for cp in (_ckpt_path(table_dir, v),
-                       _ckpt_pq_path(table_dir, v)):
-                try:
-                    os.remove(cp)
-                except FileNotFoundError:
-                    pass
+            try:
+                os.remove(_ckpt_pq_path(table_dir, v))
+            except FileNotFoundError:
+                pass
     _cache_drop_table(os.path.abspath(table_dir))
     return deleted
 
@@ -5077,7 +5000,7 @@ def _merge_once(spark: SparkSession, table_dir: str, src, keys, on,
             rewrite_files = [f for f in touched if f not in carried]
             untouched = [f for f in m["files"] if f in carried]
             if dv_files:
-                new_dv_entries = _write_dv_sidecar_distributed(
+                new_dv_entries = _write_dv_dir(
                     spark, table_dir,
                     matched.filter(F.col("__fid__").isin(dv_fids))
                     .select("__fid__",
@@ -5134,8 +5057,7 @@ def _merge_once(spark: SparkSession, table_dir: str, src, keys, on,
         renames = _carry_renames(m, untouched)
         if renames:
             manifest["renamed_files"] = renames
-        dv = {**_carry_dv(m, untouched, table_dir),
-              **new_dv_entries}
+        dv = {**_carry_dv(m, untouched), **new_dv_entries}
         if dv:
             manifest["dv"] = dv
         parts_ = _carry_partitions(m, untouched)
@@ -5415,7 +5337,7 @@ def _dml_rewrite_once(spark: SparkSession, table_dir: str, where,
             dv_fids = {_dv_fid(f) for f in dv_files}
             n_new = sum(int(r["__match__"]) for r in per_file
                         if r["__fid__"] in dv_fids)
-            new_dv_entries = _write_dv_sidecar_distributed(
+            new_dv_entries = _write_dv_dir(
                 spark, table_dir,
                 t_meta.filter(cond & F.col("__fid__").isin(dv_fids))
                 .select("__fid__", F.col("__pos__").cast("long")),
@@ -5470,7 +5392,7 @@ def _dml_rewrite_once(spark: SparkSession, table_dir: str, where,
     renames = _carry_renames(m, untouched)
     if renames:
         manifest["renamed_files"] = renames
-    dv = {**_carry_dv(m, untouched, table_dir), **new_dv_entries}
+    dv = {**_carry_dv(m, untouched), **new_dv_entries}
     if dv:
         manifest["dv"] = dv
     parts_ = _carry_partitions(m, untouched)

@@ -81,10 +81,13 @@ class _DiffPartition(InputPartition):
     ONE commit's rewritten file set per task, the same rows the DML
     itself shuffled.
 
-    Since round 11 this is the FALLBACK for commits that predate CDC
-    materialization: DML commits persist their change rows as
+    DML commits (delete/update/merge) persist their change rows as
     ``_change_data`` files at commit time, and those stream as plain
-    per-file chunks (memory bound: one FILE)."""
+    per-file chunks (memory bound: one FILE). This row diff is the
+    live path for commits that carry no ``cdc`` key and cannot stream
+    as plain insert/delete file chunks: overwrites (including
+    ``snapshot_widen_column(rewrite=True)``, which commits as one)
+    and restores where either side carries deletion vectors."""
     table_dir: str
     commit_version: int = 0
     operation: str = "merge"
@@ -316,8 +319,8 @@ class SnapshotStreamReader(DataSourceStreamReader):
                     and parent is not None:
                 # materialized change data (written at DML commit
                 # time): plain file scans, task memory bounded by one
-                # FILE — the single-task rediff below is only the
-                # fallback for commits that predate materialization
+                # FILE — commits without a ``cdc`` key (overwrite,
+                # restore, widen-rewrite) take the paths below
                 file_chunks((m["cdc"] or {}).get("files") or [],
                             {}, align, None, v, cdc_file=True)
                 continue
@@ -344,12 +347,10 @@ class SnapshotStreamReader(DataSourceStreamReader):
             dv_unhidden = []
             both = (set(cdv) | set(pdv)) & pset & cset
             for f in both:
-                old_pos = set(_dv_positions(self._table_dir, f,
-                                            pdv[f])) if f in pdv \
-                    else set()
-                new_pos = set(_dv_positions(self._table_dir, f,
-                                            cdv[f])) if f in cdv \
-                    else set()
+                old_pos = set(_dv_positions(self._table_dir, pdv[f])) \
+                    if f in pdv else set()
+                new_pos = set(_dv_positions(self._table_dir, cdv[f])) \
+                    if f in cdv else set()
                 if new_pos - old_pos:
                     dv_hidden.append((f, (rmap_p.get(f) or [])
                                       + align,
@@ -375,12 +376,12 @@ class SnapshotStreamReader(DataSourceStreamReader):
                 table_dir=self._table_dir, commit_version=v,
                 operation=op,
                 removed=[(f, (rmap_p.get(f) or []) + align,
-                          sorted(_dv_positions(self._table_dir, f,
+                          sorted(_dv_positions(self._table_dir,
                                                pdv[f]))
                           if f in pdv else [])
                          for f in removed],
                 added=[(f, (rmap_c.get(f) or []) + align,
-                        sorted(_dv_positions(self._table_dir, f,
+                        sorted(_dv_positions(self._table_dir,
                                              cdv[f]))
                         if f in cdv else [])
                        for f in added],

@@ -17,3 +17,15 @@ def spark():
 def sf_dir():
     import os
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+@pytest.fixture(scope="session")
+def built_queries(spark, sf_dir):
+    """Every ``__spark_entry__.queries()`` entry built ONCE at *sf_dir*
+    ({name: DataFrame}), shared by the plan guards and the registry
+    consistency checks that inspect the same DataFrames. ``st_stateful``
+    is left out: building it runs a real stream, and no reader of this
+    fixture inspects it."""
+    import __spark_entry__ as E
+    return {name: fn(spark, sf_dir) for name, fn in E.queries().items()
+            if name != "st_stateful"}

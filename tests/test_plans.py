@@ -108,14 +108,13 @@ _BNLJ_OK = {"s_range_joins", "s_skew_udaf", "x_term_weights", "x_bm25",
             "x_cosine_search"}
 
 
-def test_no_query_plans_a_cartesian_product(spark, sf_dir):
+def test_no_query_plans_a_cartesian_product(built_queries):
     """Global guard: no oracle query may degrade to CartesianProduct, and
-    nested-loop broadcasts may appear only where they are the design."""
-    import __spark_entry__ as E
-    for name, fn in E.queries().items():
-        if name == "st_stateful":  # executes a real stream on build
-            continue
-        p = _plan(fn(spark, sf_dir))
+    nested-loop broadcasts may appear only where they are the design.
+    (``st_stateful`` executes a real stream on build and is not in
+    ``built_queries``.)"""
+    for name, df in built_queries.items():
+        p = _plan(df)
         assert "CartesianProduct" not in p, name
         if name not in _BNLJ_OK:
             assert "BroadcastNestedLoopJoin" not in p, name

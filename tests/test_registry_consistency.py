@@ -26,13 +26,11 @@ def test_declared_parts_appear_in_oracle_sql():
         assert not missing, (entry, missing)
 
 
-def test_spark_part_tags_match_declared(spark):
-    sf = "/root/testdata/sf0.001"
-    qs = E.queries()
+def test_spark_part_tags_match_declared(built_queries):
     for entry, parts in E._TAGGED_PARTS.items():
         if entry in _SKIP_SPARK_RUN:
             continue
-        df = qs[entry](spark, sf)
+        df = built_queries[entry]
         if "part" not in df.columns:
             continue
         got = {r["part"] for r in df.select("part").distinct().collect()}

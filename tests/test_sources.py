@@ -2663,11 +2663,14 @@ class TestDeletionVectorsDistributed:
         assert S.snapshot_read(spark, t).nrow == exp2
         assert sum(e["n"] for e in dv2.values()) == n - exp2
 
-    def test_point_delete_keeps_driver_json_path(self, spark,
-                                                 tmp_path):
+    def test_point_delete_writes_parquet_dv_on_driver(self, spark,
+                                                      tmp_path):
         """A bounded point DML (new+old positions under the small
-        total) publishes the one-small-JSON sidecar — no Spark write
-        round trip on the GDPR-delete hot path."""
+        total) publishes the one DV encoding — a parquet sidecar
+        directory — written on the driver: one pyarrow file and no
+        ``_SUCCESS`` marker, i.e. no Spark write round trip on the
+        GDPR-delete hot path."""
+        import os
         from pyspark.sql import functions as F
         from cl_data_frame_spark.sources import snapshots as S
         t = str(tmp_path / "pointdv")
@@ -2675,13 +2678,15 @@ class TestDeletionVectorsDistributed:
             spark.range(5000).select(F.col("id").alias("k"))
             .repartition(2), t, stats_cols=["k"], num_files=2)
         v = S.snapshot_delete(spark, t, [("k", "==", 77)])
-        m = S._read_manifest(t, v)
-        (e,) = m["dv"].values()
-        assert "sc" in e and "scp" not in e and e["n"] == 1
-        # the next point delete folds into JSON too
+        (e,) = S._read_manifest(t, v)["dv"].values()
+        assert set(e) == {"scp", "f", "n"} and e["n"] == 1
         v2 = S.snapshot_delete(spark, t, [("k", "==", 99)])
-        m2 = S._read_manifest(t, v2)
-        assert sum(x["n"] for x in m2["dv"].values()) == 2
+        dv2 = S._read_manifest(t, v2)["dv"]
+        assert all(set(x) == {"scp", "f", "n"} for x in dv2.values())
+        assert sum(x["n"] for x in dv2.values()) == 2
+        for x in dv2.values():
+            assert os.listdir(os.path.join(t, x["scp"])) \
+                == ["part-0.parquet"]
         assert S.snapshot_read(spark, t).nrow == 4998
 
     def test_vacuum_sweeps_parquet_dv_dirs(self, spark, tmp_path):
@@ -2702,37 +2707,6 @@ class TestDeletionVectorsDistributed:
         S.snapshot_vacuum(t, keep_last=1, retain_hours=0, force=True)
         assert not os.path.exists(os.path.join(t, scp))
         assert S.snapshot_read(spark, t).nrow == 340_000
-
-    def test_legacy_json_dv_entries_still_read(self, spark,
-                                               tmp_path):
-        """Tables written before the parquet sidecars (manifest
-        entries with ``sc``) keep reading; a new DML folds their
-        positions into the new parquet vector."""
-        from pyspark.sql import functions as F
-        from cl_data_frame_spark.sources import snapshots as S
-        t = str(tmp_path / "dvleg")
-        S.snapshot_write(
-            spark.range(500).select(F.col("id").alias("k"))
-            .repartition(1), t, stats_cols=["k"], num_files=1)
-        m = S._read_manifest(t, 1)
-        f = m["files"][0]
-        # hand-write a legacy JSON sidecar hiding row 3
-        entries = S._write_dv_sidecar(t, {f: [3]})
-        m2 = dict(m, version=2, parent=1, operation="delete",
-                  dv=entries)
-        S._publish(t, m2)
-        assert S.snapshot_read(spark, t).nrow == 499
-        assert 3 not in {r.k for r in
-                         S.snapshot_read(spark, t).spark_df
-                         .collect()}
-        v3 = S.snapshot_delete(spark, t, [("k", "==", 10)])
-        m3 = S._read_manifest(t, v3)
-        e = m3["dv"][f]
-        # a small fold-in stays on the one-JSON fast path
-        assert "sc" in e and e["n"] == 2
-        got = {r.k for r in
-               S.snapshot_read(spark, t).spark_df.collect()}
-        assert len(got) == 498 and not {3, 10} & got
 
 
 class TestDeletionVectorRaces:
@@ -3192,41 +3166,6 @@ def test_materialized_changes_read_plan_is_scan_only(spark, tmp_path):
                "Exchange"):
         assert op not in plan, (op, plan[:2000])
     assert fr.spark_df.count() >= 3
-
-
-def test_legacy_json_checkpoint_stays_readable(spark, tmp_path):
-    """Round 11: tables checkpointed by the pre-parquet code (single
-    JSON .ckpt blobs) reconstruct unchanged — the parquet reader falls
-    through to the JSON checkpoint, then to the delta chain."""
-    import json as _json
-
-    from cl_data_frame_spark.sources import snapshots as S
-    t = str(tmp_path / "tbl")
-    files = [f"data/v1/p{i}.parquet" for i in range(5)]
-    st = {"version": 1, "parent": None, "operation": "append",
-          "schema": '{"type":"struct","fields":[]}', "files": files,
-          "stats": {f: {"k": {"min": i, "max": i, "null_count": 0}}
-                    for i, f in enumerate(files)}}
-    S._publish(t, st)
-    st2 = {**st, "version": 2, "parent": 1,
-           "files": files + ["data/v2/p.parquet"],
-           "stats": {**st["stats"],
-                     "data/v2/p.parquet": {"k": {"min": 9, "max": 9,
-                                                 "null_count": 0}}}}
-    S._publish(t, st2)
-    # hand-write a LEGACY JSON checkpoint for v2 and drop the parquet
-    # one, as a pre-round-11 table would look on disk
-    pqp = S._ckpt_pq_path(t, 2)
-    if os.path.exists(pqp):
-        os.remove(pqp)
-    with open(S._ckpt_path(t, 2), "w") as f:
-        _json.dump(st2, f)
-    S._STATE_CACHE.clear()
-    m = S._read_manifest(t, 2)
-    assert len(m["files"]) == 6 and len(m["stats"]) == 6
-    # predicated listing: no parquet ckpt -> exact path, same answer
-    got = S.snapshot_scan_files(t, 2, where=[("k", "==", 3)])
-    assert got == [files[3]]
 
 
 def test_corrupt_parquet_checkpoint_falls_back(spark, tmp_path):
@@ -4280,49 +4219,7 @@ class TestDVBroadcastGate:
         from cl_data_frame_spark.sources import snapshots as S
         t = self._dv_table(spark, tmp_path, "dvtot")
         m = S._read_manifest(t, 2)
-        assert S._dv_total_positions(t, m["dv"]) == 100
-
-    def test_legacy_entries_backfill_n_on_next_dml(self, spark,
-                                                   tmp_path,
-                                                   monkeypatch):
-        # round 14: a legacy DV entry without its recorded count makes
-        # the gate load the JSON sidecar; the next DML touch backfills
-        # ``n`` into the manifest so later gated reads are O(#files)
-        # metadata again
-        import json as _json
-        from cl_data_frame_spark.sources import snapshots as S
-        t = self._dv_table(spark, tmp_path, "dvlegacy")
-        # forge the legacy shape: strip "n" from the live manifest's
-        # dv entries (pre-r13 tables never recorded it)
-        m = S._read_manifest(t, 2)
-        assert all("n" in e for e in m["dv"].values())
-        p = S._manifest_path(t, 2)
-        raw = _json.load(open(p))
-        container = raw.get("dv_add") or raw.get("dv") or {}
-        for e in container.values():
-            e.pop("n", None)
-        with open(p + ".tmp2", "w") as f:
-            _json.dump(raw, f)
-        import os
-        os.replace(p + ".tmp2", p)
-        S._STATE_CACHE.clear()
-        assert any("n" not in e for e in
-                   S._read_manifest(t, 2)["dv"].values())
-        # gate still works (loads the bounded JSON once)
-        assert S.snapshot_read(spark, t).nrow == 1900
-        # a DML touch of OTHER rows carries the legacy entries with n
-        S.snapshot_delete(spark, t, [("k", ">=", 1990)])
-        m3 = S._read_manifest(t, 3)
-        assert all(e.get("n") is not None for e in m3["dv"].values())
-        # and the gated read no longer touches any JSON position list
-        calls = []
-        orig = S._dv_positions
-        monkeypatch.setattr(
-            S, "_dv_positions",
-            lambda *a: (calls.append(1), orig(*a))[1])
-        assert S._dv_total_positions(t, m3["dv"]) == 110
-        assert not calls, \
-            "after backfill the gate must be manifest-metadata only"
+        assert S._dv_total_positions(m["dv"]) == 100
 
 
 class TestSnapshotSetTxn:

@@ -189,7 +189,10 @@ def minhash_index_update(spark: SparkSession, index_dir: str, batch,
     last: FileExistsError | None = None
     for _ in range(6):
         index = read_index()
-        flags = compute_flags(index)
+        # checkpointed once per attempt: the novel-signature append
+        # and the caller's collect both read the flags, and each
+        # would otherwise re-run the band joins
+        flags = compute_flags(index).localCheckpoint(eager=True)
         if txn is not None:
             done = snapshot_txn_version(index_dir, txn[0])
             if done is not None and int(txn[1]) <= done:

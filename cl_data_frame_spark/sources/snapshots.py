@@ -1342,8 +1342,10 @@ def _write_dv_dir(spark: SparkSession, table_dir: str, pos_df,
     directory, ``_manifests/sidecars/dv-<uuid>/``, of ``_DV_SCHEMA``
     rows. *pos_df* holds the NEW (__fid__, __pos__) pairs (computed
     over already-DV-filtered rows, so disjoint from the existing
-    vectors); the affected files' existing vectors fold in. The size
-    picks who writes the directory, never what is written:
+    vectors) — a projection of the commit's checkpointed matched
+    slice (``_dv_split``), so collecting or writing it reads no data
+    file again; the affected files' existing vectors fold in. The
+    size picks who writes the directory, never what is written:
 
     - new (*n_new*, from the per-file match counts the caller already
       collected) plus old positions within ``_DV_SMALL_TOTAL`` are
@@ -3616,7 +3618,8 @@ def _optimize_once(spark: SparkSession, table_dir: str,
                     or f in dvm]   # DV'd files always compact: an
         # OPTIMIZE (even a predicated one) materializes merge-on-read
         # debt away — Delta's PURGE semantics
-    carried = [f for f in m["files"] if f not in set(selected)]
+    selected_set = set(selected)
+    carried = [f for f in m["files"] if f not in selected_set]
     if not selected:
         return base_v                  # nothing to compact: no-op
     paths = [os.path.join(table_dir, f) for f in selected]
@@ -3780,17 +3783,22 @@ def snapshot_diff(spark: SparkSession, table_dir: str,
 
 
 def _version_change_rows(spark: SparkSession, table_dir: str,
-                         m: dict, pm: dict | None
+                         m: dict, pm: dict | None,
+                         hidden: DataFrame | None = None
                          ) -> DataFrame | None:
     """One version's row-level change set, RECOMPUTED from its
     manifest diff against the parent. Two live callers: (a) DML
     commits (delete/update/merge) run it once at commit time to
-    produce their ``_change_data`` files; (b) ``snapshot_changes``
-    runs it at read time for every commit WITHOUT a ``cdc`` key —
-    appends, clones, non-initial overwrites, restores and
-    ``snapshot_widen_column(rewrite=True)`` commits — so this is not
-    a legacy path. Returns a DataFrame with ``_change_type`` and
-    ``_commit_version`` appended, or None for a no-change version:
+    produce their ``_change_data`` files, passing as *hidden* the
+    rows their new deletion vectors hide — the matched slice the
+    commit already materialized (``_dv_split``), so no DV position is
+    re-read and no row is fetched back from the touched files;
+    (b) ``snapshot_changes`` runs it at read time for every commit
+    WITHOUT a ``cdc`` key — appends, clones, non-initial overwrites,
+    restores and ``snapshot_widen_column(rewrite=True)`` commits — so
+    this is not a legacy path. Returns a DataFrame with
+    ``_change_type`` and ``_commit_version`` appended, or None for a
+    no-change version:
 
     - appends/clones (and the initial version) emit their added
       files' rows as inserts;
@@ -3800,10 +3808,13 @@ def _version_change_rows(spark: SparkSession, table_dir: str,
       the PARENT manifest — its deletion vectors apply — plus rows
       newly hidden by DV growth) against its new side (added files
       under the child manifest, plus rows a shrunk vector
-      re-exposed): with the commit's recorded merge keys the diff is
-      a keyed full-outer join emitting update pre/post-image pairs;
-      otherwise a full-row multiset diff cancels the carried rows of
-      rewritten files with multiplicity."""
+      re-exposed; a DV entry equal in both versions names the same
+      immutable sidecar and changes nothing): with the commit's
+      recorded merge keys the diff is a keyed full-outer join
+      emitting update pre/post-image pairs; otherwise a full-row
+      multiset diff cancels the carried rows of rewritten files with
+      multiplicity. With *hidden* given, it IS the DV-growth part of
+      the old side."""
     v = m["version"]
     op = m.get("operation", "append")
     parent = m.get("parent")
@@ -3843,16 +3854,23 @@ def _version_change_rows(spark: SparkSession, table_dir: str,
             .drop("__fid__", "__pos__"))
     # vector GROWTH hides rows (old side); vector SHRINKAGE — a
     # restore to a pre-delete version — re-exposes rows (new side);
-    # both on files present in BOTH versions
-    for f in (set(cdv) | set(pdv)) & pset & cset:
+    # both on files present in BOTH versions whose entry changed
+    if hidden is not None:
+        old_side = hidden if old_side is None \
+            else old_side.unionByName(hidden)
+        dv_changed = set()   # the caller's rows ARE the growth
+    else:
+        dv_changed = {f for f in (set(cdv) | set(pdv)) & pset & cset
+                      if pdv.get(f) != cdv.get(f)}
+    for f in dv_changed:
         old_pos = set(_dv_positions(table_dir, pdv[f])) \
             if f in pdv else set()
         new_pos = set(_dv_positions(table_dir, cdv[f])) \
             if f in cdv else set()
         if new_pos - old_pos:
-            hidden = rows_at(pm, f, new_pos - old_pos)
-            old_side = hidden if old_side is None \
-                else old_side.unionByName(hidden)
+            grown = rows_at(pm, f, new_pos - old_pos)
+            old_side = grown if old_side is None \
+                else old_side.unionByName(grown)
         if old_pos - new_pos:
             unhidden = rows_at(m, f, old_pos - new_pos)
             new_side = unhidden if new_side is None \
@@ -3885,12 +3903,18 @@ def _read_cdc_files(spark: SparkSession, table_dir: str,
 
 
 def _materialize_cdc(spark: SparkSession, table_dir: str,
-                     manifest: dict, parent_manifest: dict) -> None:
+                     manifest: dict, parent_manifest: dict,
+                     hidden: DataFrame | None = None) -> None:
     """Delta's ``_change_data``: compute a DML commit's row-level
     change set ONCE, distributed, at commit time — the same
     ``_version_change_rows`` classification both feeds would
     recompute — and land it under ``_change_data/``, recorded in the
-    manifest's commit-scoped ``cdc`` key. Both ``snapshot_changes``
+    manifest's commit-scoped ``cdc`` key. *hidden* is the rows the
+    commit's new deletion vectors hide, handed over from the
+    commit's single matched-slice pass (``_dv_split``): the old side
+    reuses them instead of re-reading the vectors' positions and
+    fetching those rows back from the touched files. Both
+    ``snapshot_changes``
     and the streaming change feed then read plain file scans: no
     per-read rediff, and the streaming path's task memory is bounded
     by ONE FILE instead of one commit's rewritten volume. Runs BEFORE
@@ -3900,7 +3924,7 @@ def _materialize_cdc(spark: SparkSession, table_dir: str,
     appends (interleaved appended files sit on both diff sides and
     cancel)."""
     chg = _version_change_rows(spark, table_dir, manifest,
-                               parent_manifest)
+                               parent_manifest, hidden=hidden)
     if chg is None:
         manifest["cdc"] = {"files": []}   # materialized: no changes
         return
@@ -4011,7 +4035,9 @@ def snapshot_changes(spark: SparkSession, table_dir: str,
         _read_manifest(table_dir, to_version)["schema"])["fields"]
     final_names = [f["name"] for f in final_fields]
     out: DataFrame | None = None
+    final_set = set(final_names)
     extra_names: list[str] = []
+    extra_set: set[str] = set()
     for v in range(from_version + 1, to_version + 1):
         m = _read_manifest(table_dir, v)
         if "cdc" in m:
@@ -4029,8 +4055,8 @@ def snapshot_changes(spark: SparkSession, table_dir: str,
             part = part.withColumnsRenamed(ren)
         for f in era_fields:
             name = ren.get(f["name"], f["name"])
-            if name not in set(final_names) \
-                    and name not in set(extra_names):
+            if name not in final_set and name not in extra_set:
+                extra_set.add(name)
                 extra_names.append(name)   # dropped-era column
         out = part if out is None \
             else out.unionByName(part, allowMissingColumns=True)
@@ -4186,15 +4212,18 @@ def _classify_changes(old_side: DataFrame | None,
         # cross-product into phantom update pre/post-image rows. Same
         # guard the streaming _read_diff applies: verify uniqueness
         # (null-safe: groupBy, not countDistinct) and fall back to the
-        # full-row multiset diff otherwise. Two tiny aggregates over
-        # the commit's changed slice.
-        def _has_dup(sdf: DataFrame) -> bool:
-            r = (sdf.groupBy(*keys).agg(F.count(F.lit(1)).alias("c"))
-                 .agg(F.max("c").alias("m")).collect()[0]["m"])
-            return (r or 0) > 1
-        keyed_ok = not _has_dup(old_side) and not _has_dup(new_side)
+        # full-row multiset diff otherwise. One tiny aggregate over
+        # the commit's changed slice, both sides tagged by side.
+        tagged = old_side.select(*keys, F.lit(0).alias("__side__")) \
+            .unionByName(new_side.select(*keys,
+                                         F.lit(1).alias("__side__")))
+        r = (tagged.groupBy("__side__", *keys)
+             .agg(F.count(F.lit(1)).alias("c"))
+             .agg(F.max("c").alias("m")).collect()[0]["m"])
+        keyed_ok = (r or 0) <= 1
     if keyed_ok:
-        non_key = [c for c in cols if c not in set(keys)]
+        key_set = set(keys)
+        non_key = [c for c in cols if c not in key_set]
         # explicit presence markers: testing the key for NULL would
         # misread a genuinely-NULL key value as an absent row
         o = old_side.select(*[F.col(c).alias(f"__o_{c}")
@@ -4882,6 +4911,13 @@ def snapshot_merge(spark: SparkSession, table_dir: str, source,
     Without usable stats it falls back to the whole-table rewrite
     (correct at any stats coverage, since skipping is conservative).
 
+    With ``dv=True`` (default) the overlapping files' key-matched
+    rows are read ONCE, into a local checkpoint: the per-file match
+    counts, the deletion vectors of small-match files, the matched
+    rows that re-enter the merge and the change feed's pre-images
+    all read that checkpoint, and per-file live totals come from the
+    manifest (see ``_dv_split``).
+
     Losing the atomic publish race no longer abandons the computed
     merge (the public Delta commit protocol retries): if every
     interleaved winner was an append whose files provably can't hold
@@ -4963,60 +4999,33 @@ def _merge_once(spark: SparkSession, table_dir: str, src, keys, on,
     touched = [f for f in m["files"]
                if _file_may_match(_stats_for_prune(m, f), preds)] \
         if preds else list(m["files"])
-    untouched = [f for f in m["files"] if f not in set(touched)]
+    touched_set = set(touched)
+    untouched = [f for f in m["files"] if f not in touched_set]
     schema = StructType.fromJson(json.loads(m["schema"]))
     # --- deletion-vector merge (Delta's DV merge shape) -------------
-    # count each touched file's KEY-matched rows; small-match files
-    # are NOT rewritten: their matched positions take a DV and only
-    # the updated rows re-enter the merge target (so merge_into
-    # updates them and appends the result next to the vector), their
-    # unmatched rows stay in the original file. Zero-match files
-    # (stats false positives) carry verbatim. Big-match files keep
-    # the classic whole-file rewrite.
+    # the touched files' KEY-matched rows are read once (see
+    # _dv_split); small-match files are NOT rewritten: their matched
+    # positions take a DV and only those rows re-enter the merge
+    # target (so merge_into updates them and appends the result next
+    # to the vector), their unmatched rows stay in the original file.
+    # Zero-match files (stats false positives) carry verbatim.
+    # Big-match files keep the classic whole-file rewrite.
     new_dv_entries: dict = {}
     rewrite_files = list(touched)
-    t_extra = None
+    hidden = None
     if touched and use_dv:
-        fid_to_rel = {_dv_fid(f): f for f in touched}
-        t_meta = _read_files_renamed(spark, table_dir, touched, m,
-                                     with_pos=True)
         src_keys = _plain(src).select(*keys).distinct()
-        matched = t_meta.join(src_keys, on=list(keys),
-                              how="left_semi")
-        tot = {r["__fid__"]: r["c"] for r in
-               t_meta.groupBy("__fid__")
-               .agg(F.count(F.lit(1)).alias("c")).collect()}
-        mat = {r["__fid__"]: r["c"] for r in
-               matched.groupBy("__fid__")
-               .agg(F.count(F.lit(1)).alias("c")).collect()}
-        dv_fids = [fid for fid, c in mat.items()
-                   if 0 < c <= _DV_MAX_ROWS
-                   and c <= _DV_MAX_FRACTION * tot.get(fid, 0)]
-        zero = [fid_to_rel[fid] for fid in tot
-                if mat.get(fid, 0) == 0 and fid in fid_to_rel]
-        dv_files = [fid_to_rel[fid] for fid in dv_fids]
-        if dv_files or zero:
-            carried = set(untouched) | set(dv_files) | set(zero)
-            rewrite_files = [f for f in touched if f not in carried]
-            untouched = [f for f in m["files"] if f in carried]
-            if dv_files:
-                new_dv_entries = _write_dv_dir(
-                    spark, table_dir,
-                    matched.filter(F.col("__fid__").isin(dv_fids))
-                    .select("__fid__",
-                            F.col("__pos__").cast("long")),
-                    {fid: fid_to_rel[fid] for fid in dv_fids},
-                    m.get("dv") or {},
-                    n_new=sum(int(mat[fid]) for fid in dv_fids))
-                t_extra = (matched
-                           .filter(F.col("__fid__").isin(dv_fids))
-                           .drop("__fid__", "__pos__"))
+        rewrite_files, new_dv_entries, hidden = _dv_split(
+            spark, table_dir, m, touched,
+            lambda t: t.join(src_keys, on=list(keys), how="left_semi"))
+        rewrite_set = set(rewrite_files)
+        untouched = [f for f in m["files"] if f not in rewrite_set]
     if rewrite_files:
         t_df = _read_files_renamed(spark, table_dir, rewrite_files, m)
     else:
         t_df = spark.createDataFrame([], schema)
-    if t_extra is not None:
-        t_df = t_df.unionByName(t_extra)
+    if hidden is not None:
+        t_df = t_df.unionByName(hidden)
     merged = _plain(merge_into(t_df, src, on, update_cols=update_cols,
                                insert_unmatched=insert_unmatched)) \
         .select(*[f.name for f in schema.fields])
@@ -5080,7 +5089,8 @@ def _merge_once(spark: SparkSession, table_dir: str, src, keys, on,
         # joining old and new rows on the merge keys
         manifest["op_info"] = {"keys": [str(k) for k in keys]}
         if change_data:
-            _materialize_cdc(spark, table_dir, manifest, m)
+            _materialize_cdc(spark, table_dir, manifest, m,
+                             hidden=hidden)
         _publish(table_dir, manifest)
         return version
     except FileExistsError:
@@ -5271,6 +5281,57 @@ _DV_MAX_FRACTION = 0.2
 _DV_MAX_ROWS = 100_000
 
 
+def _dv_split(spark: SparkSession, table_dir: str, m: dict,
+              touched: list[str], match
+              ) -> tuple[list[str], dict, DataFrame | None]:
+    """Split a row-level DML's *touched* files into rewrites and
+    deletion vectors, reading their matched rows ONCE. *match* maps
+    the touched files' live rows (with ``__fid__``/``__pos__``) to
+    the matched slice — MERGE's semi-join with the source keys,
+    DELETE/UPDATE's predicate filter. The slice is a local
+    checkpoint that its first consumer, the per-file match count,
+    materializes (no separate checkpoint job); every later consumer
+    reads the checkpoint: the new DV positions and the rows the
+    vectors hide (returned, for the rewrite and the change feed).
+    Per-file live totals come from the manifest (``snapshot_count``'s
+    rule: the recorded ``__rows__`` minus the file's DV ``n``), so
+    the touched files scan once.
+
+    A file with no match carries verbatim; one whose matches are at
+    most ``_DV_MAX_ROWS`` and ``_DV_MAX_FRACTION`` of its live rows
+    takes a vector; the rest rewrite (so does a file that records no
+    row count). Returns ``(rewrite_files, new_dv_entries, hidden)`` —
+    *hidden* is None when no file took a vector."""
+    fid_to_rel = {_dv_fid(f): f for f in touched}
+    t_meta = _read_files_renamed(spark, table_dir, touched, m,
+                                 with_pos=True)
+    matched = match(t_meta).localCheckpoint(eager=False)
+    mat = {r["__fid__"]: int(r["c"]) for r in
+           matched.groupBy("__fid__")
+           .agg(F.count(F.lit(1)).alias("c")).collect()}
+    stats, old_dv = m.get("stats") or {}, m.get("dv") or {}
+    tot = {}
+    for f in touched:
+        n = ((stats.get(f) or {}).get(_ROWS_KEY) or {}).get("min")
+        if n is not None:
+            tot[_dv_fid(f)] = int(n) - (int(old_dv[f]["n"])
+                                        if f in old_dv else 0)
+    dv_fids = sorted(fid for fid, c in mat.items()
+                     if fid in fid_to_rel and c <= _DV_MAX_ROWS
+                     and c <= _DV_MAX_FRACTION * tot.get(fid, 0))
+    heavy = mat.keys() - set(dv_fids)
+    rewrite = [f for f in touched if _dv_fid(f) in heavy]
+    if not dv_fids:
+        return rewrite, {}, None
+    hidden = matched.filter(F.col("__fid__").isin(dv_fids))
+    entries = _write_dv_dir(
+        spark, table_dir,
+        hidden.select("__fid__", F.col("__pos__").cast("long")),
+        {fid: fid_to_rel[fid] for fid in dv_fids}, old_dv,
+        n_new=sum(mat[fid] for fid in dv_fids))
+    return rewrite, entries, hidden.drop("__fid__", "__pos__")
+
+
 def _dml_rewrite_once(spark: SparkSession, table_dir: str, where,
                       num_files: int | None, operation: str,
                       rewrite, use_dv: bool = True,
@@ -5302,55 +5363,24 @@ def _dml_rewrite_once(spark: SparkSession, table_dir: str, where,
     match_cond = _dnf_column(preds)
     cond = F.coalesce(match_cond, F.lit(False))
     # --- decide per touched file: deletion vector vs rewrite --------
-    # one count pass over the touched subset (post-existing-DV rows):
+    # the touched subset's matching rows are read once (see _dv_split):
     # zero-match files (stats false positives) are carried verbatim;
     # small-match files take a positional DV sidecar (the data file is
     # NOT rewritten — merge-on-read, a 1-row GDPR delete in a 1 GB
     # file writes bytes proportional to 1 row); big-match files take
     # the classic rewrite. UPDATE appends its transformed rows as a
     # new file next to the DV that hides the old ones.
-    dv_files: list[str] = []
     rewrite_files: list[str] = list(touched)
     new_dv_entries: dict = {}
-    upd_df = None
+    hidden = upd_df = None
     if touched and use_dv:
-        fid_to_rel = {_dv_fid(f): f for f in touched}
-        t_meta = _read_files_renamed(spark, table_dir, touched, m,
-                                     with_pos=True)
-        per_file = (t_meta.groupBy("__fid__")
-                    .agg(F.count(F.lit(1)).alias("__total__"),
-                         F.count(F.when(cond, 1)).alias("__match__"))
-                    .collect())
-        rewrite_files = []
-        for r in per_file:
-            rel = fid_to_rel.get(r["__fid__"])
-            if rel is None or r["__match__"] == 0:
-                continue    # zero-match (stats false positive) or
-                # empty file: carried verbatim, no rewrite, no DV
-            if (r["__match__"] <= _DV_MAX_ROWS
-                    and r["__match__"]
-                    <= _DV_MAX_FRACTION * r["__total__"]):
-                dv_files.append(rel)
-            else:
-                rewrite_files.append(rel)
-        if dv_files:
-            dv_fids = {_dv_fid(f) for f in dv_files}
-            n_new = sum(int(r["__match__"]) for r in per_file
-                        if r["__fid__"] in dv_fids)
-            new_dv_entries = _write_dv_dir(
-                spark, table_dir,
-                t_meta.filter(cond & F.col("__fid__").isin(dv_fids))
-                .select("__fid__", F.col("__pos__").cast("long")),
-                {fid: fid_to_rel[fid] for fid in dv_fids},
-                m.get("dv") or {}, n_new=n_new)
-            if operation != "delete":
-                matching = (t_meta
-                            .filter(cond
-                                    & F.col("__fid__").isin(dv_fids))
-                            .drop("__fid__", "__pos__"))
-                upd_df = rewrite(matching, F.lit(True), schema, m)
+        rewrite_files, new_dv_entries, hidden = _dv_split(
+            spark, table_dir, m, touched, lambda t: t.filter(cond))
+        if hidden is not None and operation != "delete":
+            upd_df = rewrite(hidden, F.lit(True), schema, m)
+    rewrite_set = set(rewrite_files)
     untouched = [f for f in m["files"]
-                 if f not in set(rewrite_files)]  # incl. DV'd/carried
+                 if f not in rewrite_set]  # incl. DV'd/carried
     version = base_v + 1
     token = uuid.uuid4().hex[:12]
     rel_dir = os.path.join(_DATA_DIR, f"v{version:08d}-{token}")
@@ -5411,7 +5441,7 @@ def _dml_rewrite_once(spark: SparkSession, table_dir: str, where,
     if txns:
         manifest["txn"] = txns
     if change_data:
-        _materialize_cdc(spark, table_dir, manifest, m)
+        _materialize_cdc(spark, table_dir, manifest, m, hidden=hidden)
     try:
         _publish(table_dir, manifest)
         return version

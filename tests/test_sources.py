@@ -2191,23 +2191,25 @@ class TestCheckpointedManifestLog:
         N = 120_000
         files = [f"data/v00000001-x/part-{i:07d}.parquet"
                  for i in range(N)]
+        stats = {f: {"k": {"min": i, "max": i, "null_count": 0}}
+                 for i, f in enumerate(files)}
         S._publish(t, {
             "version": 1, "parent": None, "operation": "append",
             "schema": '{"type":"struct","fields":[]}',
-            "files": files,
-            "stats": {f: {"k": {"min": i, "max": i, "null_count": 0}}
-                      for i, f in enumerate(files)}})
+            "files": files, "stats": stats})
         prev = list(files)
+        # each version's stats are carried forward here, not re-read:
+        # N is above the state cache's per-entry bound, so every
+        # _read_manifest would replay the delta chain from v1
         for v in range(2, 22):          # v20 writes the parquet ckpt
             newf = f"data/v{v:08d}-x/part-0000000.parquet"
-            m = S._read_manifest(t, v - 1)
+            stats = {**stats, newf: {"k": {"min": 10 * N + v,
+                                           "max": 10 * N + v,
+                                           "null_count": 0}}}
             S._publish(t, {
                 "version": v, "parent": v - 1, "operation": "append",
-                "schema": m["schema"], "files": prev + [newf],
-                "stats": {**m["stats"],
-                          newf: {"k": {"min": 10 * N + v,
-                                       "max": 10 * N + v,
-                                       "null_count": 0}}}})
+                "schema": '{"type":"struct","fields":[]}',
+                "files": prev + [newf], "stats": stats})
             prev = prev + [newf]
         assert os.path.exists(S._ckpt_pq_path(t, 20))
         ckpt_bytes = os.path.getsize(S._ckpt_pq_path(t, 20))
@@ -2916,6 +2918,13 @@ class TestMaterializedChangeData:
 
     def test_dml_commits_carry_cdc_and_feeds_agree(
             self, spark, tmp_path):
+        """The materialized feed equals the read-time recompute as a
+        multiset, for DV merge/delete/update, a merge that DVs one
+        file and rewrites another, and a merge over duplicate target
+        keys (the keyed classifier's guard falls back to the full-row
+        diff)."""
+        from collections import Counter
+
         from cl_data_frame_spark.sources import snapshots as S
         t = str(tmp_path / "tbl")
         t2 = str(tmp_path / "tbl2")
@@ -2923,15 +2932,31 @@ class TestMaterializedChangeData:
             S.snapshot_write(
                 spark.range(100).selectExpr("id AS k", "id*2 AS v")
                 .repartitionByRange(2, "k"), dst, stats_cols=["k"])
-            S.snapshot_merge(
+            S.snapshot_merge(                                 # v2
                 spark, dst, spark.createDataFrame(
                     [(5, 555), (1000, 1)], "k bigint, v bigint"),
                 on="k", change_data=cd)
-            S.snapshot_delete(spark, dst, [("k", "==", 7)],
+            S.snapshot_delete(spark, dst, [("k", "==", 7)],   # v3
                               change_data=cd)
-            S.snapshot_update(spark, dst, [("k", "==", 8)],
+            S.snapshot_update(spark, dst, [("k", "==", 8)],   # v4
                               {"v": "888"}, change_data=cd)
-        for v in (2, 3, 4):
+            # v5: heavy match in the low file (rewrite), one row of
+            # the high file (DV), one insert
+            S.snapshot_merge(
+                spark, dst, spark.createDataFrame(
+                    [(k, 10 * k) for k in range(10, 30)]
+                    + [(60, 6060), (2000, 2)], "k bigint, v bigint"),
+                on="k", change_data=cd)
+            S.snapshot_write(                                 # v6
+                spark.createDataFrame([(70, 1), (70, 2)],
+                                      "k bigint, v bigint")
+                .coalesce(1), dst, stats_cols=["k"])
+            S.snapshot_merge(                                 # v7
+                spark, dst, spark.createDataFrame(
+                    [(70, 777)], "k bigint, v bigint"),
+                on="k", change_data=cd)
+        dml = (2, 3, 4, 5, 7)
+        for v in dml:
             m = S._read_manifest(t, v)
             assert "cdc" in m and m["cdc"]["files"], v
             for f in m["cdc"]["files"]:
@@ -2939,13 +2964,67 @@ class TestMaterializedChangeData:
                 assert os.path.exists(os.path.join(t, f))
             assert S.snapshot_detail(t, v)["cdc_files"] >= 1
             assert "cdc" not in S._read_manifest(t2, v)
-        # materialized scan == distributed recompute, bit-for-bit
-        a = {(r._commit_version, r._change_type, r.k, r.v) for r in
-             S.snapshot_changes(spark, t, 0).spark_df.collect()}
-        b = {(r._commit_version, r._change_type, r.k, r.v) for r in
-             S.snapshot_changes(spark, t2, 0).spark_df.collect()}
+            pm = S._read_manifest(t, v - 1)
+            new_dv = {f for f, e in (m.get("dv") or {}).items()
+                      if (pm.get("dv") or {}).get(f) != e}
+            assert new_dv, v                  # every DML took a DV
+            if v in (5, 7):                   # ...and also rewrote
+                assert set(pm["files"]) - set(m["files"]), v
+        # materialized scan == distributed recompute, as multisets
+        a = Counter((r._commit_version, r._change_type, r.k, r.v)
+                    for r in S.snapshot_changes(spark, t, 0)
+                    .spark_df.collect())
+        b = Counter((r._commit_version, r._change_type, r.k, r.v)
+                    for r in S.snapshot_changes(spark, t2, 0)
+                    .spark_df.collect())
         assert a == b
-        assert {r for r in a if r[0] == 3} == {(3, "delete", 7, 14)}
+        assert Counter({r: c for r, c in a.items() if r[0] == 3}) \
+            == Counter({(3, "delete", 7, 14): 1})
+        assert Counter({r: c for r, c in a.items() if r[0] == 5}) \
+            == Counter([(5, "update_preimage", k, 2 * k)
+                        for k in range(10, 30)]
+                       + [(5, "update_postimage", k, 10 * k)
+                          for k in range(10, 30)]
+                       + [(5, "update_preimage", 60, 120),
+                          (5, "update_postimage", 60, 6060),
+                          (5, "insert", 2000, 2)])
+        # duplicate target keys: no phantom pre/post pairs, the
+        # full-row diff's delete/insert multiset instead
+        assert Counter({r: c for r, c in a.items() if r[0] == 7}) \
+            == Counter([(7, "delete", 70, 140), (7, "delete", 70, 1),
+                        (7, "delete", 70, 2)]
+                       + [(7, "insert", 70, 777)] * 3)
+
+    def test_point_dml_job_counts(self, spark, tmp_path):
+        """A point DV merge and a point DV delete (change feed on)
+        read their matched rows once: the counts, the vector, the
+        merge target and the change feed share one checkpoint, and
+        the change feed's uniqueness guard is one aggregate."""
+        from cl_data_frame_spark.sources import snapshots as S
+        jvm_sc = spark.sparkContext._jsc.sc()
+
+        def jobs(fn):
+            j0 = int(jvm_sc.dagScheduler().nextJobId())
+            fn()
+            return int(jvm_sc.dagScheduler().nextJobId()) - j0
+        t = str(tmp_path / "tbl")
+        S.snapshot_write(
+            spark.range(1000).selectExpr("id AS k", "id*2 AS v")
+            .repartitionByRange(4, "k"), t, stats_cols=["k"])
+        merge_jobs = jobs(lambda: S.snapshot_merge(
+            spark, t, spark.createDataFrame(
+                [(500, 1), (5000, 2)], "k bigint, v bigint"),
+            on="k"))
+        delete_jobs = jobs(lambda: S.snapshot_delete(
+            spark, t, [("k", "in", [10, 20, 30])]))
+        m = S._read_manifest(t, 3)
+        assert sum(e["n"] for e in m["dv"].values()) == 4
+        assert S.snapshot_read(spark, t).spark_df.count() == 998
+        # local[4], AQE on: 17 and 4 jobs here; 30 and 5 when the
+        # counts, the vector, the merge target and the feed each
+        # re-read the matched rows
+        assert merge_jobs <= 17, merge_jobs
+        assert delete_jobs <= 4, delete_jobs
 
     def test_streaming_planner_has_no_diff_task(self, spark, tmp_path):
         """The judge's memory-bound criterion: for materialized DML

@@ -1342,10 +1342,11 @@ def _write_dv_dir(spark: SparkSession, table_dir: str, pos_df,
     directory, ``_manifests/sidecars/dv-<uuid>/``, of ``_DV_SCHEMA``
     rows. *pos_df* holds the NEW (__fid__, __pos__) pairs (computed
     over already-DV-filtered rows, so disjoint from the existing
-    vectors) — a projection of the commit's checkpointed matched
-    slice (``_dv_split``), so collecting or writing it reads no data
-    file again; the affected files' existing vectors fold in. The
-    size picks who writes the directory, never what is written:
+    vectors) — a projection of the commit's checkpointed vector
+    slice (``_dv_split``), which this collect or write materializes
+    for the commit's later consumers; the affected files' existing
+    vectors fold in. The size picks who writes the directory, never
+    what is written:
 
     - new (*n_new*, from the per-file match counts the caller already
       collected) plus old positions within ``_DV_SMALL_TOTAL`` are
@@ -3790,8 +3791,8 @@ def _version_change_rows(spark: SparkSession, table_dir: str,
     manifest diff against the parent. Two live callers: (a) DML
     commits (delete/update/merge) run it once at commit time to
     produce their ``_change_data`` files, passing as *hidden* the
-    rows their new deletion vectors hide — the matched slice the
-    commit already materialized (``_dv_split``), so no DV position is
+    rows their new deletion vectors hide — the vector slice the
+    commit already checkpointed (``_dv_split``), so no DV position is
     re-read and no row is fetched back from the touched files;
     (b) ``snapshot_changes`` runs it at read time for every commit
     WITHOUT a ``cdc`` key — appends, clones, non-initial overwrites,
@@ -3808,13 +3809,11 @@ def _version_change_rows(spark: SparkSession, table_dir: str,
       the PARENT manifest — its deletion vectors apply — plus rows
       newly hidden by DV growth) against its new side (added files
       under the child manifest, plus rows a shrunk vector
-      re-exposed; a DV entry equal in both versions names the same
-      immutable sidecar and changes nothing): with the commit's
-      recorded merge keys the diff is a keyed full-outer join
-      emitting update pre/post-image pairs; otherwise a full-row
-      multiset diff cancels the carried rows of rewritten files with
-      multiplicity. With *hidden* given, it IS the DV-growth part of
-      the old side."""
+      re-exposed): with the commit's recorded merge keys the diff is
+      a keyed full-outer join emitting update pre/post-image pairs;
+      otherwise a full-row multiset diff cancels the carried rows of
+      rewritten files with multiplicity. With *hidden* given, it IS
+      the DV-growth part of the old side."""
     v = m["version"]
     op = m.get("operation", "append")
     parent = m.get("parent")
@@ -3854,14 +3853,13 @@ def _version_change_rows(spark: SparkSession, table_dir: str,
             .drop("__fid__", "__pos__"))
     # vector GROWTH hides rows (old side); vector SHRINKAGE — a
     # restore to a pre-delete version — re-exposes rows (new side);
-    # both on files present in BOTH versions whose entry changed
+    # both on files present in BOTH versions
     if hidden is not None:
         old_side = hidden if old_side is None \
             else old_side.unionByName(hidden)
         dv_changed = set()   # the caller's rows ARE the growth
     else:
-        dv_changed = {f for f in (set(cdv) | set(pdv)) & pset & cset
-                      if pdv.get(f) != cdv.get(f)}
+        dv_changed = (set(cdv) | set(pdv)) & pset & cset
     for f in dv_changed:
         old_pos = set(_dv_positions(table_dir, pdv[f])) \
             if f in pdv else set()
@@ -3911,11 +3909,10 @@ def _materialize_cdc(spark: SparkSession, table_dir: str,
     recompute — and land it under ``_change_data/``, recorded in the
     manifest's commit-scoped ``cdc`` key. *hidden* is the rows the
     commit's new deletion vectors hide, handed over from the
-    commit's single matched-slice pass (``_dv_split``): the old side
+    commit's checkpointed vector slice (``_dv_split``): the old side
     reuses them instead of re-reading the vectors' positions and
     fetching those rows back from the touched files. Both
-    ``snapshot_changes``
-    and the streaming change feed then read plain file scans: no
+    ``snapshot_changes`` and the streaming change feed then read plain file scans: no
     per-read rediff, and the streaming path's task memory is bounded
     by ONE FILE instead of one commit's rewritten volume. Runs BEFORE
     the manifest publish, so a lost publish race leaves only orphan
@@ -4911,12 +4908,12 @@ def snapshot_merge(spark: SparkSession, table_dir: str, source,
     Without usable stats it falls back to the whole-table rewrite
     (correct at any stats coverage, since skipping is conservative).
 
-    With ``dv=True`` (default) the overlapping files' key-matched
-    rows are read ONCE, into a local checkpoint: the per-file match
-    counts, the deletion vectors of small-match files, the matched
-    rows that re-enter the merge and the change feed's pre-images
-    all read that checkpoint, and per-file live totals come from the
-    manifest (see ``_dv_split``).
+    With ``dv=True`` (default) one aggregate counts the overlapping
+    files' key-matched rows (live totals come from the manifest);
+    only the small-match files' matched rows are then read, once,
+    into a local checkpoint that their deletion vectors, the rows
+    re-entering the merge and the change feed's pre-images all read
+    (see ``_dv_split``).
 
     Losing the atomic publish race no longer abandons the computed
     merge (the public Delta commit protocol retries): if every
@@ -5003,18 +5000,19 @@ def _merge_once(spark: SparkSession, table_dir: str, src, keys, on,
     untouched = [f for f in m["files"] if f not in touched_set]
     schema = StructType.fromJson(json.loads(m["schema"]))
     # --- deletion-vector merge (Delta's DV merge shape) -------------
-    # the touched files' KEY-matched rows are read once (see
-    # _dv_split); small-match files are NOT rewritten: their matched
-    # positions take a DV and only those rows re-enter the merge
-    # target (so merge_into updates them and appends the result next
-    # to the vector), their unmatched rows stay in the original file.
+    # the touched files' KEY-matched rows are counted, and the
+    # vector files' slice is read once (see _dv_split); small-match
+    # files are NOT rewritten: their matched positions take a DV and
+    # only those rows re-enter the merge target (so merge_into
+    # updates them and appends the result next to the vector), their
+    # unmatched rows stay in the original file.
     # Zero-match files (stats false positives) carry verbatim.
     # Big-match files keep the classic whole-file rewrite.
     new_dv_entries: dict = {}
     rewrite_files = list(touched)
     hidden = None
     if touched and use_dv:
-        src_keys = _plain(src).select(*keys).distinct()
+        src_keys = _plain(src).select(*keys)
         rewrite_files, new_dv_entries, hidden = _dv_split(
             spark, table_dir, m, touched,
             lambda t: t.join(src_keys, on=list(keys), how="left_semi"))
@@ -5285,17 +5283,19 @@ def _dv_split(spark: SparkSession, table_dir: str, m: dict,
               touched: list[str], match
               ) -> tuple[list[str], dict, DataFrame | None]:
     """Split a row-level DML's *touched* files into rewrites and
-    deletion vectors, reading their matched rows ONCE. *match* maps
-    the touched files' live rows (with ``__fid__``/``__pos__``) to
-    the matched slice — MERGE's semi-join with the source keys,
-    DELETE/UPDATE's predicate filter. The slice is a local
-    checkpoint that its first consumer, the per-file match count,
-    materializes (no separate checkpoint job); every later consumer
-    reads the checkpoint: the new DV positions and the rows the
-    vectors hide (returned, for the rewrite and the change feed).
-    Per-file live totals come from the manifest (``snapshot_count``'s
-    rule: the recorded ``__rows__`` minus the file's DV ``n``), so
-    the touched files scan once.
+    deletion vectors. *match* maps live rows (with
+    ``__fid__``/``__pos__``) to the matched slice — MERGE's semi-join
+    with the source keys, DELETE/UPDATE's predicate filter. One
+    aggregate over the touched files counts each file's matches and
+    stores nothing; per-file live totals come from the manifest
+    (``snapshot_count``'s rule: the recorded ``__rows__`` minus the
+    file's DV ``n``). Only the vector files' slice is then read, into
+    a local checkpoint that its first consumer (``_write_dv_dir``)
+    materializes, so what is stored is exactly the rows the new
+    vectors hide — never a bulk DML's heavy files, which rewrite from
+    their data files anyway. Every later consumer reads that
+    checkpoint: the rows that re-enter the rewrite and the change
+    feed's old side (returned as *hidden*).
 
     A file with no match carries verbatim; one whose matches are at
     most ``_DV_MAX_ROWS`` and ``_DV_MAX_FRACTION`` of its live rows
@@ -5305,9 +5305,8 @@ def _dv_split(spark: SparkSession, table_dir: str, m: dict,
     fid_to_rel = {_dv_fid(f): f for f in touched}
     t_meta = _read_files_renamed(spark, table_dir, touched, m,
                                  with_pos=True)
-    matched = match(t_meta).localCheckpoint(eager=False)
     mat = {r["__fid__"]: int(r["c"]) for r in
-           matched.groupBy("__fid__")
+           match(t_meta).groupBy("__fid__")
            .agg(F.count(F.lit(1)).alias("c")).collect()}
     stats, old_dv = m.get("stats") or {}, m.get("dv") or {}
     tot = {}
@@ -5323,7 +5322,9 @@ def _dv_split(spark: SparkSession, table_dir: str, m: dict,
     rewrite = [f for f in touched if _dv_fid(f) in heavy]
     if not dv_fids:
         return rewrite, {}, None
-    hidden = matched.filter(F.col("__fid__").isin(dv_fids))
+    hidden = match(_read_files_renamed(
+        spark, table_dir, [fid_to_rel[fid] for fid in dv_fids], m,
+        with_pos=True)).localCheckpoint(eager=False)
     entries = _write_dv_dir(
         spark, table_dir,
         hidden.select("__fid__", F.col("__pos__").cast("long")),
@@ -5363,7 +5364,8 @@ def _dml_rewrite_once(spark: SparkSession, table_dir: str, where,
     match_cond = _dnf_column(preds)
     cond = F.coalesce(match_cond, F.lit(False))
     # --- decide per touched file: deletion vector vs rewrite --------
-    # the touched subset's matching rows are read once (see _dv_split):
+    # the touched subset's matching rows are counted, and the vector
+    # files' slice is read once (see _dv_split):
     # zero-match files (stats false positives) are carried verbatim;
     # small-match files take a positional DV sidecar (the data file is
     # NOT rewritten — merge-on-read, a 1-row GDPR delete in a 1 GB

@@ -2996,10 +2996,11 @@ class TestMaterializedChangeData:
                        + [(7, "insert", 70, 777)] * 3)
 
     def test_point_dml_job_counts(self, spark, tmp_path):
-        """A point DV merge and a point DV delete (change feed on)
-        read their matched rows once: the counts, the vector, the
-        merge target and the change feed share one checkpoint, and
-        the change feed's uniqueness guard is one aggregate."""
+        """A point DV merge and a point DV delete (change feed on):
+        one aggregate counts the matches, the vector, the merge
+        target and the change feed share one checkpoint of the
+        vector rows, and the change feed's uniqueness guard is one
+        aggregate."""
         from cl_data_frame_spark.sources import snapshots as S
         jvm_sc = spark.sparkContext._jsc.sc()
 
@@ -3020,11 +3021,64 @@ class TestMaterializedChangeData:
         m = S._read_manifest(t, 3)
         assert sum(e["n"] for e in m["dv"].values()) == 4
         assert S.snapshot_read(spark, t).spark_df.count() == 998
-        # local[4], AQE on: 17 and 4 jobs here; 30 and 5 when the
-        # counts, the vector, the merge target and the feed each
-        # re-read the matched rows
-        assert merge_jobs <= 17, merge_jobs
+        # local[4], AQE on: 18 and 4 jobs here; 30 and 5 when the
+        # vector, the merge target and the feed each re-read the
+        # matched rows
+        assert merge_jobs <= 18, merge_jobs
         assert delete_jobs <= 4, delete_jobs
+
+    def test_dml_checkpoints_only_vector_rows(self, spark, tmp_path,
+                                              monkeypatch):
+        """A DML that rewrites one file and takes a vector on another
+        stores only the vector file's matched rows: the heavy file's
+        matches are counted, never checkpointed, so a bulk DELETE,
+        UPDATE or MERGE stores no copy of what it rewrites."""
+        from cl_data_frame_spark.sources import snapshots as S
+        cls = type(spark.range(1))
+        real = cls.localCheckpoint
+        slices = []
+
+        def spy(self, *a, **kw):
+            out = real(self, *a, **kw)
+            if "__pos__" in self.columns:
+                slices.append(out)
+            return out
+        monkeypatch.setattr(cls, "localCheckpoint", spy)
+        # file 0 holds k 0..999 (900 matches: rewrite), file 1 holds
+        # 1000..1999 (3 matches: vector), files 2-3 are pruned
+        keys = list(range(900)) + [1000, 1001, 1002]
+
+        def table(name):
+            t = str(tmp_path / name)
+            for i in range(4):
+                S.snapshot_write(
+                    spark.range(i * 1000, (i + 1) * 1000, 1, 1)
+                    .selectExpr("id AS k", "id*2 AS v"), t,
+                    mode="append", stats_cols=["k"])
+            return t
+        src = spark.createDataFrame([(k, -1) for k in keys],
+                                    "k bigint, v bigint")
+        ops = {
+            "delete": lambda t: S.snapshot_delete(
+                spark, t, [("k", "in", keys)]),
+            "update": lambda t: S.snapshot_update(
+                spark, t, [("k", "in", keys)], {"v": "-1"}),
+            "merge": lambda t: S.snapshot_merge(spark, t, src, on="k")}
+        for name, op in ops.items():
+            t = table(name)
+            by_min = {st["k"]["min"]: f for f, st in
+                      S._read_manifest(t, 4)["stats"].items()}
+            slices.clear()
+            m = S._read_manifest(t, op(t))
+            assert by_min[0] not in m["files"], name      # rewritten
+            assert m["dv"][by_min[1000]]["n"] == 3, name  # vector
+            assert [c.count() for c in slices] == [3], name
+            df = S.snapshot_read(spark, t).spark_df
+            if name == "delete":
+                assert df.count() == 4000 - len(keys)
+            else:
+                assert df.count() == 4000
+                assert df.filter("v = -1").count() == len(keys), name
 
     def test_streaming_planner_has_no_diff_task(self, spark, tmp_path):
         """The judge's memory-bound criterion: for materialized DML

@@ -39,6 +39,7 @@ from pyspark.sql import types as T
 from .errors import (CollectGuardExceeded, ColumnLengthMismatch,
                      DuplicateKey, EmptyFrame, KeyNotFound)
 from .keys import OrderedKeys
+from .session import local_frame
 from .sparktypes import to_spark_type
 
 ROW_ID = "__row_id__"
@@ -545,9 +546,9 @@ class SparkFrame:
         if positions == sorted(positions) and len(set(positions)) == len(positions):
             return base.filter(F.col(_POS).isin(positions)).drop(_POS)
         spark = self._df.sparkSession
-        order_df = spark.createDataFrame(
-            list(enumerate(positions)),
-            schema=T.StructType([
+        order_df = local_frame(
+            spark, list(enumerate(positions)),
+            T.StructType([
                 T.StructField("__out__", T.LongType(), False),
                 T.StructField(_POS, T.LongType(), False)]))
         out = (base.drop(ROW_ID)
@@ -841,6 +842,9 @@ class SparkFrame:
             ids = [r[0] for r in
                    self._df.select(ROW_ID).orderBy(ROW_ID).collect()]
             dtype = _infer_type(values)
+            # user values stay on the list path, not session.local_frame:
+            # Arrow reads a naive datetime as UTC where this path (and
+            # collect) use the OS zone, so they would not round-trip
             lit_df = spark.createDataFrame(
                 list(zip(ids, _coerce_values(values, dtype))),
                 schema=T.StructType([

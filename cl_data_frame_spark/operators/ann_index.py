@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..frame import SparkFrame
+from ..session import local_frame
 from .similarity import _lit_vec, _route, kmeans_fit
 
 _CENTROIDS = "centroids"
@@ -105,8 +106,8 @@ def ann_index_build(spark: SparkSession, index_dir: str, frame,
     cdir, _ = _dirs(index_dir)
     cents, _assign = kmeans_fit(frame, k=k, max_iter=max_iter,
                                 id_col=id_col, vec_col=vec_col)
-    cdf = spark.createDataFrame(
-        [(int(cid), [float(x) for x in vec]) for cid, vec in cents],
+    cdf = local_frame(
+        spark, [(int(cid), [float(x) for x in vec]) for cid, vec in cents],
         "centroid_id bigint, vector array<double>")
     snapshot_write(cdf, cdir, mode="overwrite", num_files=1)
     return ann_index_update(spark, index_dir, frame,
@@ -210,8 +211,8 @@ def ann_index_recluster(spark: SparkSession, index_dir: str,
     train = _plain(train_frame) if train_frame is not None else cur
     cents, _assign = kmeans_fit(train, k=k, max_iter=max_iter,
                                 id_col=id_col, vec_col=vec_col)
-    cdf = spark.createDataFrame(
-        [(int(cid), [float(x) for x in vec]) for cid, vec in cents],
+    cdf = local_frame(
+        spark, [(int(cid), [float(x) for x in vec]) for cid, vec in cents],
         "centroid_id bigint, vector array<double>")
     assign = _route(cur, cents, id_col, vec_col).spark_df \
         .localCheckpoint(eager=True)

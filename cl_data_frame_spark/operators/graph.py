@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..frame import SparkFrame
+from ..session import local_frame
 
 
 def _plain(frame) -> DataFrame:
@@ -161,8 +162,7 @@ def bfs_distances(pairs, sources=None, id_a: str = "id_a",
         row = edges.agg(F.min("a").alias("m")).first()
         sources = [] if row["m"] is None else [row["m"]]
     spark = edges.sparkSession
-    src = spark.createDataFrame([(int(s),) for s in sources],
-                                "node bigint")
+    src = local_frame(spark, [(int(s),) for s in sources], "node bigint")
     dist = src.select("node", F.lit(0).cast("int").alias("dist")) \
         .localCheckpoint(eager=False)
     frontier = dist.select("node")

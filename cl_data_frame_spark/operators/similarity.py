@@ -14,6 +14,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..frame import SparkFrame
+from ..session import local_frame
 from .dedup import bind_once, cosine_similarity, dot_product, vector_norm
 
 
@@ -536,11 +537,12 @@ def ivf_assign_join(frame, centroids, id_col: str = "vec_id",
     spark = sdf.sparkSession
     # centroid norms precomputed driver-side (Python's left-to-right sum
     # is bit-identical to the SQL fold, as in ivf_assign)
-    cdf = spark.createDataFrame(
+    cdf = local_frame(
+        spark,
         [(int(cid), [float(x) for x in vec],
           math.sqrt(sum(float(x) * float(x) for x in vec)))
          for cid, vec in centroids],
-        ["__cid__", "__cvec__", "__nb__"])
+        "__cid__ bigint, __cvec__ array<double>, __nb__ double")
     v = F.col(vec_col).cast("array<double>")
     na = F.sqrt(F.aggregate(F.transform(v, lambda x: x * x),
                             F.lit(0.0), lambda acc, x: acc + x))

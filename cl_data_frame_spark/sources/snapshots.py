@@ -67,6 +67,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cl_data_frame_spark.frame import SparkFrame
+from cl_data_frame_spark.session import local_frame
 
 _MANIFEST_DIR = "_manifests"
 _DATA_DIR = "data"
@@ -3520,7 +3521,7 @@ def snapshot_read(spark: SparkSession, table_dir: str,
     if not files:  # every file pruned: empty frame with the schema
         from pyspark.sql.types import StructType
         schema = StructType.fromJson(json.loads(state["schema"]))
-        return SparkFrame(spark.createDataFrame([], schema))
+        return SparkFrame(local_frame(spark, [], schema))
     sdf = _read_files_renamed(spark, table_dir, files, state)
     branches = _norm_dnf(where)
     if branches:
@@ -3843,8 +3844,8 @@ def _version_change_rows(spark: SparkSession, table_dir: str,
         # an isin literal list: a DV can hold up to _DV_MAX_ROWS
         # positions, and 100k literals inflate the plan/codegen and
         # driver memory (same shape as the scan path's DV anti-join)
-        pos_df = spark.createDataFrame(
-            [(_dv_fid(f), int(p)) for p in positions], _DV_SCHEMA)
+        pos_df = local_frame(
+            spark, [(_dv_fid(f), int(p)) for p in positions], _DV_SCHEMA)
         return (_read_files_renamed(
             spark, table_dir, [f],
             {**manifest, "dv": {}}, with_pos=True)
@@ -4063,7 +4064,7 @@ def snapshot_changes(spark: SparkSession, table_dir: str,
             {"type": "struct", "fields": list(final_fields)}) \
             .add("_change_type", "string") \
             .add("_commit_version", "long")
-        return SparkFrame(spark.createDataFrame([], schema))
+        return SparkFrame(local_frame(spark, [], schema))
     ordered = [c for c in final_names if c in out.columns] \
         + [c for c in extra_names if c in out.columns] \
         + ["_change_type", "_commit_version"]
@@ -4964,11 +4965,17 @@ def _merge_once(spark: SparkSession, table_dir: str, src, keys, on,
         raise FileNotFoundError(f"no snapshot versions in {table_dir}")
     m = _read_manifest(table_dir, base_v)
     stats = m.get("stats") or {}
-    # key columns whose stats EVERY live file carries (partial coverage
-    # would make skipped-vs-kept asymmetric; fall back instead)
+    # a 0-row part file (a small write spread over more tasks than
+    # rows) records __rows__ but no column bounds: it matches nothing
+    nonempty = [f for f in m["files"]
+                if ((stats.get(f) or {}).get(_ROWS_KEY) or {}).get("min")
+                != 0]
+    # key columns whose stats EVERY non-empty live file carries (partial
+    # coverage would make skipped-vs-kept asymmetric; fall back
+    # instead)
     usable = [k for k in keys
               if all(f in stats and stats[f].get(k, {}).get("min")
-                     is not None for f in m["files"])]
+                     is not None for f in nonempty)]
     if not usable:
         target = snapshot_read(spark, table_dir)
         merged = merge_into(target, src, on, update_cols=update_cols,
@@ -4993,9 +5000,9 @@ def _merge_once(spark: SparkSession, table_dir: str, src, keys, on,
         lo, hi = bounds[f"lo_{c}"], bounds[f"hi_{c}"]
         if lo is not None:
             preds += [(c, ">=", lo), (c, "<=", hi)]
-    touched = [f for f in m["files"]
+    touched = [f for f in nonempty
                if _file_may_match(_stats_for_prune(m, f), preds)] \
-        if preds else list(m["files"])
+        if preds else nonempty
     touched_set = set(touched)
     untouched = [f for f in m["files"] if f not in touched_set]
     schema = StructType.fromJson(json.loads(m["schema"]))
@@ -5011,99 +5018,102 @@ def _merge_once(spark: SparkSession, table_dir: str, src, keys, on,
     new_dv_entries: dict = {}
     rewrite_files = list(touched)
     hidden = None
-    if touched and use_dv:
-        src_keys = _plain(src).select(*keys)
-        rewrite_files, new_dv_entries, hidden = _dv_split(
-            spark, table_dir, m, touched,
-            lambda t: t.join(src_keys, on=list(keys), how="left_semi"))
-        rewrite_set = set(rewrite_files)
-        untouched = [f for f in m["files"] if f not in rewrite_set]
-    if rewrite_files:
-        t_df = _read_files_renamed(spark, table_dir, rewrite_files, m)
-    else:
-        t_df = spark.createDataFrame([], schema)
-    if hidden is not None:
-        t_df = t_df.unionByName(hidden)
-    merged = _plain(merge_into(t_df, src, on, update_cols=update_cols,
-                               insert_unmatched=insert_unmatched)) \
-        .select(*[f.name for f in schema.fields])
-    if m.get("constraints"):
-        # MERGE mints new values exactly like UPDATE does — the
-        # file-skipping path must enforce what the whole-table
-        # fallback (via snapshot_write) already enforces
-        merged = merged.localCheckpoint(eager=False)
-        _enforce_constraints(merged, m["constraints"])
-    # publish: untouched files carried over verbatim (stats included),
-    # rewritten rows land in a fresh data dir with fresh stats
-    version = base_v + 1
-    token = uuid.uuid4().hex[:12]
-    rel_dir = os.path.join(_DATA_DIR, f"v{version:08d}-{token}")
-    out_dir = os.path.join(table_dir, rel_dir)
-    writer = merged.coalesce(num_files) if num_files else merged
-    with _micros_timestamps(writer.sparkSession):
-        writer.write.mode("error").parquet(out_dir)
-    new_files = sorted(
-        os.path.join(rel_dir, f) for f in os.listdir(out_dir)
-        if f.endswith(".parquet"))
-    stats_cols = sorted({c for f in m["files"]
-                         for c in (stats.get(f) or {})} - {_ROWS_KEY})
-    new_stats = _collect_file_stats(
-        table_dir, new_files, stats_cols, rows=True)
     try:
-        manifest = {
-            "version": version,
-            "parent": base_v,
-            "operation": "merge",
-            "schema": m["schema"],
-            "files": untouched + new_files,
-            "stats": {**{f: stats[f] for f in untouched}, **new_stats},
-        }
-        bloom = _carry_bloom(m, untouched)
-        if bloom:
-            manifest["bloom"] = bloom
-        renames = _carry_renames(m, untouched)
-        if renames:
-            manifest["renamed_files"] = renames
-        dv = {**_carry_dv(m, untouched), **new_dv_entries}
-        if dv:
-            manifest["dv"] = dv
-        parts_ = _carry_partitions(m, untouched)
-        if parts_:
-            manifest["partitions"] = parts_
+        if touched and use_dv:
+            src_keys = _plain(src).select(*keys)
+            rewrite_files, new_dv_entries, hidden = _dv_split(
+                spark, table_dir, m, touched,
+                lambda t: t.join(src_keys, on=list(keys), how="left_semi"))
+            rewrite_set = set(rewrite_files)
+            untouched = [f for f in m["files"] if f not in rewrite_set]
+        if rewrite_files:
+            t_df = _read_files_renamed(spark, table_dir, rewrite_files, m)
+        else:
+            t_df = local_frame(spark, [], schema)
+        if hidden is not None:
+            t_df = t_df.unionByName(hidden)
+        merged = _plain(merge_into(t_df, src, on, update_cols=update_cols,
+                                   insert_unmatched=insert_unmatched)) \
+            .select(*[f.name for f in schema.fields])
         if m.get("constraints"):
-            manifest["constraints"] = m["constraints"]
-        if m.get("generated"):
-            manifest["generated"] = m["generated"]
-        if m.get("cluster_by"):
-            manifest["cluster_by"] = m["cluster_by"]
-        _txn_guard(m.get("txn"), txn, txn_expect)
-        txns = dict(m.get("txn") or {})
-        for _a, _v in _txn_entries(txn):
-            txns[_a] = _v
-        if txns:
-            manifest["txn"] = txns
-        # commit-scoped (never carried): lets the CDC change feed
-        # classify this commit's diff into update pre/post-images by
-        # joining old and new rows on the merge keys
-        manifest["op_info"] = {"keys": [str(k) for k in keys]}
-        if change_data:
-            _materialize_cdc(spark, table_dir, manifest, m,
-                             hidden=hidden)
-        _publish(table_dir, manifest)
-        return version
-    except FileExistsError:
-        # lost the race — absorb commutable interleaved appends by
-        # rebasing the already-written result; true conflicts
-        # propagate to snapshot_merge's recompute loop
-        rebased = _try_rebase_publish(
-            table_dir, base_v, set(rewrite_files), new_files,
-            new_stats, "merge", m["schema"], keys=usable, preds=preds,
-            dv_add=new_dv_entries, cdc=manifest.get("cdc"),
-            op_info=manifest.get("op_info"), txn_add=txn,
-            txn_expect=txn_expect)
-        if rebased is not None:
-            return rebased
-        raise
+            # MERGE mints new values exactly like UPDATE does — the
+            # file-skipping path must enforce what the whole-table
+            # fallback (via snapshot_write) already enforces
+            merged = merged.localCheckpoint(eager=False)
+            _enforce_constraints(merged, m["constraints"])
+        # publish: untouched files carried over verbatim (stats included),
+        # rewritten rows land in a fresh data dir with fresh stats
+        version = base_v + 1
+        token = uuid.uuid4().hex[:12]
+        rel_dir = os.path.join(_DATA_DIR, f"v{version:08d}-{token}")
+        out_dir = os.path.join(table_dir, rel_dir)
+        writer = merged.coalesce(num_files) if num_files else merged
+        with _micros_timestamps(writer.sparkSession):
+            writer.write.mode("error").parquet(out_dir)
+        new_files = sorted(
+            os.path.join(rel_dir, f) for f in os.listdir(out_dir)
+            if f.endswith(".parquet"))
+        stats_cols = sorted({c for f in m["files"]
+                             for c in (stats.get(f) or {})} - {_ROWS_KEY})
+        new_stats = _collect_file_stats(
+            table_dir, new_files, stats_cols, rows=True)
+        try:
+            manifest = {
+                "version": version,
+                "parent": base_v,
+                "operation": "merge",
+                "schema": m["schema"],
+                "files": untouched + new_files,
+                "stats": {**{f: stats[f] for f in untouched}, **new_stats},
+            }
+            bloom = _carry_bloom(m, untouched)
+            if bloom:
+                manifest["bloom"] = bloom
+            renames = _carry_renames(m, untouched)
+            if renames:
+                manifest["renamed_files"] = renames
+            dv = {**_carry_dv(m, untouched), **new_dv_entries}
+            if dv:
+                manifest["dv"] = dv
+            parts_ = _carry_partitions(m, untouched)
+            if parts_:
+                manifest["partitions"] = parts_
+            if m.get("constraints"):
+                manifest["constraints"] = m["constraints"]
+            if m.get("generated"):
+                manifest["generated"] = m["generated"]
+            if m.get("cluster_by"):
+                manifest["cluster_by"] = m["cluster_by"]
+            _txn_guard(m.get("txn"), txn, txn_expect)
+            txns = dict(m.get("txn") or {})
+            for _a, _v in _txn_entries(txn):
+                txns[_a] = _v
+            if txns:
+                manifest["txn"] = txns
+            # commit-scoped (never carried): lets the CDC change feed
+            # classify this commit's diff into update pre/post-images by
+            # joining old and new rows on the merge keys
+            manifest["op_info"] = {"keys": [str(k) for k in keys]}
+            if change_data:
+                _materialize_cdc(spark, table_dir, manifest, m,
+                                 hidden=hidden)
+            _publish(table_dir, manifest)
+            return version
+        except FileExistsError:
+            # lost the race — absorb commutable interleaved appends by
+            # rebasing the already-written result; true conflicts
+            # propagate to snapshot_merge's recompute loop
+            rebased = _try_rebase_publish(
+                table_dir, base_v, set(rewrite_files), new_files,
+                new_stats, "merge", m["schema"], keys=usable, preds=preds,
+                dv_add=new_dv_entries, cdc=manifest.get("cdc"),
+                op_info=manifest.get("op_info"), txn_add=txn,
+                txn_expect=txn_expect)
+            if rebased is not None:
+                return rebased
+            raise
+    finally:
+        _release_checkpoint(hidden)
 
 
 def snapshot_restore(table_dir: str, version: int) -> int:
@@ -5295,7 +5305,9 @@ def _dv_split(spark: SparkSession, table_dir: str, m: dict,
     vectors hide — never a bulk DML's heavy files, which rewrite from
     their data files anyway. Every later consumer reads that
     checkpoint: the rows that re-enter the rewrite and the change
-    feed's old side (returned as *hidden*).
+    feed's old side (returned as *hidden*). The caller releases it
+    (``_release_checkpoint``) once its commit has published or given
+    up.
 
     A file with no match carries verbatim; one whose matches are at
     most ``_DV_MAX_ROWS`` and ``_DV_MAX_FRACTION`` of its live rows
@@ -5331,6 +5343,21 @@ def _dv_split(spark: SparkSession, table_dir: str, m: dict,
         {fid: fid_to_rel[fid] for fid in dv_fids}, old_dv,
         n_new=sum(mat[fid] for fid in dv_fids))
     return rewrite, entries, hidden.drop("__fid__", "__pos__")
+
+
+def _release_checkpoint(df: DataFrame | None) -> None:
+    """Drop the stored blocks of the local checkpoints *df* reads, once
+    every reader has run. ``DataFrame.unpersist()`` does not: the
+    blocks belong to the checkpointed RDD, not to a cached plan, and
+    would otherwise stay until a driver GC lets the ContextCleaner
+    drop them."""
+    if df is None:
+        return
+    leaves = df._jdf.queryExecution().logical().collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.nodeName() == "LogicalRDD":
+            leaf.rdd().unpersist(False)
 
 
 def _dml_rewrite_once(spark: SparkSession, table_dir: str, where,
@@ -5375,88 +5402,91 @@ def _dml_rewrite_once(spark: SparkSession, table_dir: str, where,
     rewrite_files: list[str] = list(touched)
     new_dv_entries: dict = {}
     hidden = upd_df = None
-    if touched and use_dv:
-        rewrite_files, new_dv_entries, hidden = _dv_split(
-            spark, table_dir, m, touched, lambda t: t.filter(cond))
-        if hidden is not None and operation != "delete":
-            upd_df = rewrite(hidden, F.lit(True), schema, m)
-    rewrite_set = set(rewrite_files)
-    untouched = [f for f in m["files"]
-                 if f not in rewrite_set]  # incl. DV'd/carried
-    version = base_v + 1
-    token = uuid.uuid4().hex[:12]
-    rel_dir = os.path.join(_DATA_DIR, f"v{version:08d}-{token}")
-    out_dir = os.path.join(table_dir, rel_dir)
-    new_files: list[str] = []
-    new_stats: dict = {}
-    kept = None
-    if rewrite_files:
-        t_df = _read_files_renamed(spark, table_dir, rewrite_files, m)
-        kept = rewrite(t_df, match_cond, schema, m)
-    if upd_df is not None:
-        kept = kept.unionByName(upd_df) if kept is not None else upd_df
-    if kept is not None:
-        writer = kept.coalesce(num_files) if num_files else kept
-        with _micros_timestamps(spark):
-            writer.write.mode("error").parquet(out_dir)
-        new_files = sorted(
-            os.path.join(rel_dir, f) for f in os.listdir(out_dir)
-            if f.endswith(".parquet"))
-        stats_cols = sorted({c for f in m["files"]
-                             for c in (stats.get(f) or {})}
-                            - {_ROWS_KEY})
-        new_stats = _collect_file_stats(table_dir, new_files,
-                                        stats_cols, rows=True)
-    manifest = {
-        "version": version,
-        "parent": base_v,
-        "operation": operation,
-        "schema": m["schema"],
-        "files": untouched + new_files,
-        "stats": {**{f: stats[f] for f in untouched if f in stats},
-                  **new_stats},
-    }
-    if not manifest["stats"]:
-        del manifest["stats"]
-    bloom = _carry_bloom(m, untouched)
-    if bloom:
-        manifest["bloom"] = bloom
-    renames = _carry_renames(m, untouched)
-    if renames:
-        manifest["renamed_files"] = renames
-    dv = {**_carry_dv(m, untouched), **new_dv_entries}
-    if dv:
-        manifest["dv"] = dv
-    parts_ = _carry_partitions(m, untouched)
-    if parts_:
-        manifest["partitions"] = parts_
-    if m.get("constraints"):
-        manifest["constraints"] = m["constraints"]
-    if m.get("generated"):
-        manifest["generated"] = m["generated"]
-    if m.get("cluster_by"):
-        manifest["cluster_by"] = m["cluster_by"]
-    _txn_guard(m.get("txn"), txn, None)
-    txns = dict(m.get("txn") or {})
-    for _a, _v in _txn_entries(txn):
-        txns[_a] = _v
-    if txns:
-        manifest["txn"] = txns
-    if change_data:
-        _materialize_cdc(spark, table_dir, manifest, m, hidden=hidden)
     try:
-        _publish(table_dir, manifest)
-        return version
-    except FileExistsError:
-        pred_cols = sorted({c for b in preds for c, _o, _v in b})
-        rebased = _try_rebase_publish(
-            table_dir, base_v, set(rewrite_files), new_files,
-            new_stats, operation, m["schema"], keys=pred_cols,
-            preds=preds, dv_add=new_dv_entries,
-            cdc=manifest.get("cdc"), txn_add=txn)
-        if rebased is not None:
-            return rebased
-        raise
+        if touched and use_dv:
+            rewrite_files, new_dv_entries, hidden = _dv_split(
+                spark, table_dir, m, touched, lambda t: t.filter(cond))
+            if hidden is not None and operation != "delete":
+                upd_df = rewrite(hidden, F.lit(True), schema, m)
+        rewrite_set = set(rewrite_files)
+        untouched = [f for f in m["files"]
+                     if f not in rewrite_set]  # incl. DV'd/carried
+        version = base_v + 1
+        token = uuid.uuid4().hex[:12]
+        rel_dir = os.path.join(_DATA_DIR, f"v{version:08d}-{token}")
+        out_dir = os.path.join(table_dir, rel_dir)
+        new_files: list[str] = []
+        new_stats: dict = {}
+        kept = None
+        if rewrite_files:
+            t_df = _read_files_renamed(spark, table_dir, rewrite_files, m)
+            kept = rewrite(t_df, match_cond, schema, m)
+        if upd_df is not None:
+            kept = kept.unionByName(upd_df) if kept is not None else upd_df
+        if kept is not None:
+            writer = kept.coalesce(num_files) if num_files else kept
+            with _micros_timestamps(spark):
+                writer.write.mode("error").parquet(out_dir)
+            new_files = sorted(
+                os.path.join(rel_dir, f) for f in os.listdir(out_dir)
+                if f.endswith(".parquet"))
+            stats_cols = sorted({c for f in m["files"]
+                                 for c in (stats.get(f) or {})}
+                                - {_ROWS_KEY})
+            new_stats = _collect_file_stats(table_dir, new_files,
+                                            stats_cols, rows=True)
+        manifest = {
+            "version": version,
+            "parent": base_v,
+            "operation": operation,
+            "schema": m["schema"],
+            "files": untouched + new_files,
+            "stats": {**{f: stats[f] for f in untouched if f in stats},
+                      **new_stats},
+        }
+        if not manifest["stats"]:
+            del manifest["stats"]
+        bloom = _carry_bloom(m, untouched)
+        if bloom:
+            manifest["bloom"] = bloom
+        renames = _carry_renames(m, untouched)
+        if renames:
+            manifest["renamed_files"] = renames
+        dv = {**_carry_dv(m, untouched), **new_dv_entries}
+        if dv:
+            manifest["dv"] = dv
+        parts_ = _carry_partitions(m, untouched)
+        if parts_:
+            manifest["partitions"] = parts_
+        if m.get("constraints"):
+            manifest["constraints"] = m["constraints"]
+        if m.get("generated"):
+            manifest["generated"] = m["generated"]
+        if m.get("cluster_by"):
+            manifest["cluster_by"] = m["cluster_by"]
+        _txn_guard(m.get("txn"), txn, None)
+        txns = dict(m.get("txn") or {})
+        for _a, _v in _txn_entries(txn):
+            txns[_a] = _v
+        if txns:
+            manifest["txn"] = txns
+        if change_data:
+            _materialize_cdc(spark, table_dir, manifest, m, hidden=hidden)
+        try:
+            _publish(table_dir, manifest)
+            return version
+        except FileExistsError:
+            pred_cols = sorted({c for b in preds for c, _o, _v in b})
+            rebased = _try_rebase_publish(
+                table_dir, base_v, set(rewrite_files), new_files,
+                new_stats, operation, m["schema"], keys=pred_cols,
+                preds=preds, dv_add=new_dv_entries,
+                cdc=manifest.get("cdc"), txn_add=txn)
+            if rebased is not None:
+                return rebased
+            raise
+    finally:
+        _release_checkpoint(hidden)
 
 
 def snapshot_detail(table_dir: str,

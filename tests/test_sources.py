@@ -2949,8 +2949,8 @@ class TestMaterializedChangeData:
                 on="k", change_data=cd)
             S.snapshot_write(                                 # v6
                 spark.createDataFrame([(70, 1), (70, 2)],
-                                      "k bigint, v bigint")
-                .coalesce(1), dst, stats_cols=["k"])
+                                      "k bigint, v bigint"),
+                dst, stats_cols=["k"])
             S.snapshot_merge(                                 # v7
                 spark, dst, spark.createDataFrame(
                     [(70, 777)], "k bigint, v bigint"),
@@ -3045,6 +3045,15 @@ class TestMaterializedChangeData:
                 slices.append(out)
             return out
         monkeypatch.setattr(cls, "localCheckpoint", spy)
+        # the commit releases its checkpoint: count what it stored
+        # just before that
+        counts = []
+        release = S._release_checkpoint
+
+        def counted_release(df):
+            counts.extend(c.count() for c in slices)
+            release(df)
+        monkeypatch.setattr(S, "_release_checkpoint", counted_release)
         # file 0 holds k 0..999 (900 matches: rewrite), file 1 holds
         # 1000..1999 (3 matches: vector), files 2-3 are pruned
         keys = list(range(900)) + [1000, 1001, 1002]
@@ -3070,16 +3079,67 @@ class TestMaterializedChangeData:
             by_min = {st["k"]["min"]: f for f, st in
                       S._read_manifest(t, 4)["stats"].items()}
             slices.clear()
+            counts.clear()
             m = S._read_manifest(t, op(t))
             assert by_min[0] not in m["files"], name      # rewritten
             assert m["dv"][by_min[1000]]["n"] == 3, name  # vector
-            assert [c.count() for c in slices] == [3], name
+            assert counts == [3], name
             df = S.snapshot_read(spark, t).spark_df
             if name == "delete":
                 assert df.count() == 4000 - len(keys)
             else:
                 assert df.count() == 4000
                 assert df.filter("v = -1").count() == len(keys), name
+
+    def test_dml_releases_its_vector_checkpoint(self, spark, tmp_path):
+        """Once a DV delete, update or merge returns, the checkpoint
+        of its vector rows holds no stored blocks."""
+        from cl_data_frame_spark.sources import snapshots as S
+        jvm_sc = spark.sparkContext._jsc.sc()
+
+        def stored():
+            return {i.id() for i in jvm_sc.getRDDStorageInfo()
+                    if "localCheckpoint" in i.callSite()}
+        t = str(tmp_path / "tbl")
+        S.snapshot_write(
+            spark.range(1000).selectExpr("id AS k", "id*2 AS v")
+            .repartitionByRange(2, "k"), t, stats_cols=["k"])
+        ops = [
+            lambda: S.snapshot_delete(spark, t, [("k", "==", 7)]),
+            lambda: S.snapshot_update(spark, t, [("k", "==", 8)],
+                                      {"v": "-1"}),
+            lambda: S.snapshot_merge(spark, t, spark.range(1).selectExpr(
+                "9L AS k", "-9L AS v"), on="k")]
+        for i, op in enumerate(ops):
+            before = stored()
+            v = op()
+            assert S._read_manifest(t, v)["dv"], i
+            assert stored() - before == set(), i
+        assert S.snapshot_read(spark, t).spark_df.count() == 999
+
+    def test_empty_part_files_keep_the_dv_merge(self, spark, tmp_path):
+        """A 2-row append spread over four tasks writes 0-row part
+        files (row count, no key bounds); a later point MERGE still
+        takes a deletion vector instead of overwriting the table."""
+        from cl_data_frame_spark.sources import snapshots as S
+        t = str(tmp_path / "tbl")
+        S.snapshot_write(
+            spark.range(100).selectExpr("id AS k", "id*2 AS v")
+            .repartitionByRange(2, "k"), t, stats_cols=["k"])
+        v = S.snapshot_write(
+            spark.createDataFrame([(70, 1), (70, 2)], "k bigint, v bigint"),
+            t, stats_cols=["k"])
+        stats = S._read_manifest(t, v)["stats"]
+        assert any(st[S._ROWS_KEY]["min"] == 0 and "k" not in st
+                   for st in stats.values())
+        v = S.snapshot_merge(spark, t, spark.createDataFrame(
+            [(70, 777)], "k bigint, v bigint"), on="k")
+        m = S._read_manifest(t, v)
+        assert m["operation"] == "merge" and m.get("dv")
+        got = sorted((r.k, r.v) for r in
+                     S.snapshot_read(spark, t).spark_df.collect())
+        assert got == sorted([(k, 2 * k) for k in range(100) if k != 70]
+                             + [(70, 777)] * 3)
 
     def test_streaming_planner_has_no_diff_task(self, spark, tmp_path):
         """The judge's memory-bound criterion: for materialized DML

@@ -5,6 +5,15 @@ Runs the same entry alternately from checkout A (baseline) and B
 variants), so environment noise waves hit both sides equally. Reports
 per-rep times, min per side, and the frozen sentinel around each rep.
 
+Both sides share that session, so a session-level setting (a static
+conf such as ``spark.sql.codegen.cache.maxEntries``, or anything else
+``get_spark`` sets before the session starts) comes from checkout A
+and cannot be A/B-ed here: compare such a change across separate
+processes instead. Each rep also prints how many classes Spark's
+code generator compiled during it (``CodegenMetrics``); a warm rep of
+an entry whose plans inline no per-call literals compiles none, so a
+change that breaks plan reuse shows up as a nonzero count.
+
 Usage:
     python tools/ab_bench.py <dirA> <dirB> <reps> <entry> [entry ...]
 """
@@ -50,7 +59,13 @@ def sentinel():
     return time.time() - t0
 
 
+def compiles():
+    cm = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return cm.METRIC_COMPILATION_TIME().getCount()
+
+
 def run(qs, name):
+    c0 = compiles()
     t0 = time.time()
     df = qs[name](spark, SF)
     t1 = time.time()
@@ -62,7 +77,7 @@ def run(qs, name):
     # they accumulate across the interleaved reps and bias whichever
     # side runs later (observed: +12s on the 4th entry's B reps)
     spark._jvm.System.gc()
-    return t1 - t0, t2 - t1
+    return t1 - t0, t2 - t1, compiles() - c0
 
 
 for name in ENTRIES:
@@ -70,10 +85,11 @@ for name in ENTRIES:
     for rep in range(REPS):
         for side, root in (("A", DIR_A), ("B", DIR_B)):
             qs = load(root)
-            b, e = run(qs, name)
+            b, e, c = run(qs, name)
             res[side].append((b, e))
             print(f"{name} {side} rep{rep}: build {b:6.2f} exec {e:6.2f} "
-                  f"total {b+e:6.2f}  sent {sentinel():.3f}", flush=True)
+                  f"total {b+e:6.2f}  compiles {c:5d}  "
+                  f"sent {sentinel():.3f}", flush=True)
     for side in ("A", "B"):
         tots = [b + e for b, e in res[side]]
         bs = [b for b, _ in res[side]]

@@ -81,9 +81,9 @@ def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
     Python RDD (``Scan ExistingRDD``) that runs one Python task per
     default-parallelism slice in every job that scans it.
 
-    The values must already have their column's Python type (``int``
-    for bigint, ``float`` for double, lists for arrays): Arrow converts
-    them without the list path's per-row coercion."""
+    Arrow reads a naive ``datetime`` as UTC where the list path reads
+    it in the OS zone, so arbitrary user values stay on the list
+    path."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
     if isinstance(schema, str):

@@ -55,6 +55,12 @@ _POS = "__pos__"
 MAX_COLLECT_ROWS = 10_000_000
 
 
+def sql_ident(name: str) -> str:
+    """*name* as a backquoted SQL identifier, for expression strings
+    (``F.expr``/``selectExpr``) that take user-supplied column names."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 class ALL:
     """Sentinel matching the reference's ``t`` slice ('everything')."""
 

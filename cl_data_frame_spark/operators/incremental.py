@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cl_data_frame_spark.frame import SparkFrame
+from cl_data_frame_spark.frame import SparkFrame, sql_ident
 
 
 def _plain(frame) -> DataFrame:
@@ -55,22 +55,23 @@ def _signatures(sdf: DataFrame, id_col: str, text_col: str,
         id_col, F.explode(char_shingles(text_col, shingle_k))
         .alias("__s__")
     ).select(id_col, F.xxhash64("__s__").alias("__h__"))
+    # one parsed expression per lane: a Column chain per lane costs a
+    # py4j round trip per function, literal and alias
     return exploded.groupBy(id_col).agg(
-        *[F.min(F.xxhash64("__h__", F.lit(i))).alias(f"__m{i}__")
+        *[F.expr(f"min(xxhash64(__h__, {i})) AS __m{i}__")
           for i in range(num_hashes)])
 
 
 def _banded(sigs: DataFrame, id_col: str, num_hashes: int,
             bands: int) -> DataFrame:
     rows_per_band = num_hashes // bands
-    band_hashes = [
-        F.xxhash64(*[F.col(f"__m{i}__")
-                     for i in range(b * rows_per_band,
-                                    (b + 1) * rows_per_band)])
-        for b in range(bands)]
-    return sigs.select(
-        id_col, F.posexplode(F.array(*band_hashes))
-        .alias("band", "band_hash"))
+    band_hashes = ", ".join(
+        "xxhash64(" + ", ".join(f"__m{i}__" for i in range(
+            b * rows_per_band, (b + 1) * rows_per_band)) + ")"
+        for b in range(bands))
+    return sigs.selectExpr(
+        sql_ident(id_col),
+        f"posexplode(array({band_hashes})) AS (band, band_hash)")
 
 
 def minhash_index_update(spark: SparkSession, index_dir: str, batch,
@@ -98,7 +99,7 @@ def minhash_index_update(spark: SparkSession, index_dir: str, batch,
     if num_hashes % bands != 0:
         raise ValueError("num_hashes must be divisible by bands")
     from cl_data_frame_spark.sources.snapshots import (
-        snapshot_txn_version)
+        _release_checkpoint, snapshot_txn_version)
     sdf = _plain(batch)
     sigs = _signatures(sdf, id_col, text_col, num_hashes,
                        shingle_k=5).localCheckpoint(eager=True)
@@ -120,10 +121,16 @@ def minhash_index_update(spark: SparkSession, index_dir: str, batch,
                 "the index or match its parameters")
         return index
 
-    def match_frac(a, b):
-        hits = sum((F.col(f"a.__m{i}__") == F.col(f"b.__m{i}__"))
-                   .cast("int") for i in range(num_hashes))
-        return hits / F.lit(float(num_hashes))
+    # the signature match fraction as one SQL expression, summed in the
+    # order Python's sum() built the Column tree ((0 + a) folds to
+    # (a + 0)); the divisor is a DOUBLE literal, as F.lit(float) was
+    eqs = [f"CAST((a.__m{i}__ = b.__m{i}__) AS INT)"
+           for i in range(num_hashes)]
+    hits = f"({eqs[0]} + 0)"
+    for eq in eqs[1:]:
+        hits = f"({hits} + {eq})"
+    est_jaccard = (f"round(({hits} / {float(num_hashes)!r}D), 6)"
+                   " AS est_jaccard")
 
     def compute_flags(index):
         cands = []
@@ -162,9 +169,7 @@ def minhash_index_update(spark: SparkSession, index_dir: str, batch,
                           pairs["__new__"] == F.col(f"a.{id_col}"))
                     .join(sig_old.alias("b"),
                           pairs["__old__"] == F.col(f"b.{id_col}"))
-                    .select("__new__", "__old__",
-                            F.round(match_frac("a", "b"), 6)
-                            .alias("est_jaccard"))
+                    .selectExpr("__new__", "__old__", est_jaccard)
                     .filter(F.col("est_jaccard")
                             >= jaccard_threshold))
         best = (verified.groupBy("__new__")
@@ -187,28 +192,34 @@ def minhash_index_update(spark: SparkSession, index_dir: str, batch,
     # RE-DEDUPS against the new state before retrying (a blind retry
     # would admit both batches' mutual near-dups as novel)
     last: FileExistsError | None = None
-    for _ in range(6):
-        index = read_index()
-        # checkpointed once per attempt: the novel-signature append
-        # and the caller's collect both read the flags, and each
-        # would otherwise re-run the band joins
-        flags = compute_flags(index).localCheckpoint(eager=True)
-        if txn is not None:
-            done = snapshot_txn_version(index_dir, txn[0])
-            if done is not None and int(txn[1]) <= done:
-                return SparkFrame(flags)   # replay: already appended
-        novel_ids = flags.filter(~F.col("is_duplicate")) \
-            .select(id_col)
-        novel_sigs = sigs.join(novel_ids, on=id_col)
-        try:
-            snapshot_write(novel_sigs, index_dir, mode="append",
-                           txn=txn)
-            return SparkFrame(flags)
-        except FileExistsError as exc:
-            last = exc
-    raise FileExistsError(
-        f"index update lost the publish race 6 times in "
-        f"{index_dir}: {last}")
+    try:
+        for _ in range(6):
+            index = read_index()
+            # checkpointed once per attempt: the novel-signature append
+            # and the caller's collect both read the flags, and each
+            # would otherwise re-run the band joins
+            flags = compute_flags(index).localCheckpoint(eager=True)
+            if txn is not None:
+                done = snapshot_txn_version(index_dir, txn[0])
+                if done is not None and int(txn[1]) <= done:
+                    return SparkFrame(flags)   # replay: already appended
+            novel_ids = flags.filter(~F.col("is_duplicate")) \
+                .select(id_col)
+            novel_sigs = sigs.join(novel_ids, on=id_col)
+            try:
+                snapshot_write(novel_sigs, index_dir, mode="append",
+                               txn=txn)
+                return SparkFrame(flags)
+            except FileExistsError as exc:
+                last = exc
+                _release_checkpoint(flags)
+        raise FileExistsError(
+            f"index update lost the publish race 6 times in "
+            f"{index_dir}: {last}")
+    finally:
+        # the returned flags are their own checkpoint; nothing reads
+        # the signatures once the append has published or given up
+        _release_checkpoint(sigs)
 
 
 def minhash_index_stream_sink(index_dir: str, flags_dir: str,

@@ -1328,7 +1328,7 @@ def _apply_feed(spark: SparkSession, view_dir: str, meta: dict,
     refresh's view commit loses the CAS and re-lands them together),
     converging at the next committed refresh."""
     from cl_data_frame_spark.sources.snapshots import (
-        snapshot_merge, snapshot_read)
+        _release_checkpoint, snapshot_merge, snapshot_read)
     keys = list(meta["keys"])
     measure_cols = list(meta["measure_cols"])
     distinct_cols = list(meta.get("distinct_cols") or ())
@@ -1337,207 +1337,218 @@ def _apply_feed(spark: SparkSession, view_dir: str, meta: dict,
     kll_k = int(meta.get("kll_k") or 800)
     scale = int(meta["scale"])
     sum_t = _SUM_T.format(s=scale)
-    if distinct_cols:
-        # the feed now has several consumers (per-group delta +
-        # per-value state deltas): pin ONE materialization
-        changes = changes.localCheckpoint(eager=True)
-    # per-group deltas: small (#touched groups), computed once
-    delta = _delta_agg(changes, keys, measure_cols, scale,
-                       approx_cols, quantile_cols, kll_k) \
-        .localCheckpoint(eager=True)
-    nullkey = F.col(keys[0]).isNull()
-    for k in keys[1:]:
-        nullkey = nullkey | F.col(k).isNull()
-    # one action answers both "how many groups" and "any NULL key"
-    probe = delta.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.max(nullkey.cast("int")).alias("bad")).collect()[0]
-    n_touched = int(probe["n"])
-    if n_touched == 0:
-        # metadata-only / no-op commits in the range: just advance
-        # the meta cache; the NEXT real refresh re-reads the same
-        # (cheap, empty) range again from the commit watermark.
-        _write_meta(view_dir, {**meta, **meta_noop})
-        return {"mode": "empty", **summary, "groups_touched": 0}
-    if probe["bad"]:
-        raise ValueError(
-            f"NULL group key in the change feed: materialized views "
-            f"require non-NULL group keys {keys} (filter or coalesce "
-            f"them in the base table first)")
-    # distinct states advance FIRST (their own watermarks make this
-    # exactly-once; the view commit below is the refresh's atomic
-    # completion point), then each touched group's absolute cntd is
-    # read back from the live state, group-pruned
-    cntd_abs: dict[str, DataFrame] = {}
-    if distinct_cols:
-        all_key_rows = delta.select(*keys).collect() \
-            if n_touched <= 10_000 else None
-        prune = _eq_dnf_prune(keys, all_key_rows)
-        for c in distinct_cols:
-            _advance_dstate(spark, view_dir, c, keys, feed_ctx,
-                            changes)
-            st = _plain(snapshot_read(
-                spark, _dstate_dir(view_dir, c), where=prune)) \
-                .where(F.col("dcnt") > 0)
-            cntd_abs[c] = _dstate_rollup(st, keys, c, scale)
-    view = _plain(snapshot_read(spark, view_dir))
-    stored_types = dict(view.dtypes)
-    # current view rows for ONLY the touched groups (broadcast
-    # semi-join: the view — arbitrarily many groups — streams once).
-    # The joined frame is touched-groups-sized; checkpointing it means
-    # the view scan runs ONCE, however many downstream actions the
-    # merge machinery takes (key-envelope collect, DV matching, CDC
-    # classification are each an action over the upserts)
-    touched = view.join(_maybe_broadcast(delta.select(*keys),
-                                         n_touched),
-                        on=keys, how="left_semi")
-    # delta columns (d_*/add_*/del_*) and view columns (cnt/sum_*/...)
-    # never collide, so the join needs no alias qualifiers — which the
-    # checkpoint could not preserve anyway
-    j = delta.join(touched, on=keys, how="left") \
-        .localCheckpoint(eager=True)
-    new_cnt = F.coalesce(F.col("cnt"), F.lit(0)) + F.col("d_cnt")
-    # min/max are not self-maintainable under deletion: repair any
-    # group whose deleted values may include a stored extreme (or
-    # whose view row is missing while the feed deletes from it —
-    # an inconsistent feed; recompute exactly rather than guess)
-    repair = F.lit(False)
-    for c in measure_cols:
-        dmin, dmax = F.col(f"del_min_{c}"), F.col(f"del_max_{c}")
-        vmin, vmax = F.col(f"min_{c}"), F.col(f"max_{c}")
-        has_del = dmin.isNotNull()
-        repair = repair | (has_del & (
-            F.col("cnt").isNull() | vmin.isNull()
-            | (dmin <= vmin) | (dmax >= vmax)))
-    for c in approx_cols:
-        # HLL sketches cannot subtract: a group that lost any
-        # non-NULL value recomputes exactly from the pinned base
-        repair = repair | (F.col(f"deld_{c}") == 1)
-    for c in quantile_cols:
-        # neither can KLL: same exact-repair rule
-        repair = repair | (F.col(f"delq_{c}") == 1)
-    stored_cols = ["cnt"] + [f"{p}_{c}" for c in measure_cols
-                             for p in ("sum", "nn", "min", "max")] \
-        + [f"{p}_{c}" for c in distinct_cols
-           for p in ("cntd", "sumd")] \
-        + [f"hll_{c}" for c in approx_cols] \
-        + [f"kll_{c}" for c in quantile_cols]
-    # arithmetic path (no deleted extreme): counts and exact-decimal
-    # sums add; inserted values can only improve min/max (F.least /
-    # F.greatest skip NULLs, so a fresh group takes the added extreme)
-    arith_cols = [*[F.col(k) for k in keys],
-                  new_cnt.cast("long").alias("cnt")]
-    for c in measure_cols:
-        new_nn = (F.coalesce(F.col(f"nn_{c}"), F.lit(0))
-                  + F.col(f"d_nn_{c}"))
-        new_sum = (F.coalesce(F.col(f"sum_{c}"),
-                              F.lit(0).cast(sum_t))
-                   + F.col(f"d_sum_{c}"))
-        arith_cols += [
-            new_sum.cast(sum_t).alias(f"sum_{c}"),
-            new_nn.cast("long").alias(f"nn_{c}"),
-            F.when(new_nn > 0,
-                   F.least(F.col(f"min_{c}"),
-                           F.col(f"add_min_{c}")))
-            .alias(f"min_{c}"),
-            F.when(new_nn > 0,
-                   F.greatest(F.col(f"max_{c}"),
-                              F.col(f"add_max_{c}")))
-            .alias(f"max_{c}"),
-        ]
-    for c in approx_cols:
-        # insert-only groups: one lossless sketch union (an empty
-        # inserted-side sketch — all-NULL adds — unions as identity);
-        # fresh groups take the inserted sketch outright
-        arith_cols.append(
-            F.when(F.col(f"hll_{c}").isNull(),
-                   F.col(f"add_hll_{c}"))
-            .otherwise(F.hll_union(F.col(f"hll_{c}"),
-                                   F.col(f"add_hll_{c}")))
-            .alias(f"hll_{c}"))
-    for c in quantile_cols:
-        # insert-only groups: one lossless sketch merge; an all-NULL
-        # inserted side is a NULL sketch — keep the stored one
-        arith_cols.append(
-            F.when(F.col(f"kll_{c}").isNull(),
-                   F.col(f"add_kll_{c}"))
-            .when(F.col(f"add_kll_{c}").isNull(),
-                  F.col(f"kll_{c}"))
-            .otherwise(F.kll_sketch_merge_double(
-                F.col(f"kll_{c}"), F.col(f"add_kll_{c}")))
-            .alias(f"kll_{c}"))
-    arith = j.where(~repair).select(*arith_cols)
-    for c in distinct_cols:
-        # absolute live-value aggregates for the touched groups; a
-        # touched group with no live state rows counts 0 (SQL:
-        # COUNT(DISTINCT) over empty/all-NULL is 0, not NULL) with a
-        # NULL distinct-sum (SUM(DISTINCT) over empty is NULL)
-        arith = arith.join(cntd_abs[c], on=keys, how="left") \
-            .withColumn(f"cntd_{c}",
-                        F.coalesce(F.col(f"cntd_{c}"), F.lit(0)))
-    # repaired groups: exact re-aggregation from the base PINNED at
-    # the target version(s), over only those groups (their key rows
-    # come off the checkpointed join — no extra view scan)
-    repair_keys = j.where(repair).select(*keys)
-    n_repair = repair_keys.count()
-    if n_repair:
-        # a bounded repair set is collected (metadata-sized: n_repair
-        # key tuples) so the reader can prune its base scan
-        key_rows = j.where(repair).select(*keys).collect() \
-            if n_repair <= 10_000 else None
-        base = repair_reader(key_rows)
-        base_rows = base.join(_maybe_broadcast(repair_keys, n_repair),
-                              on=keys, how="inner")
-        recomputed = _full_agg(base_rows, keys, measure_cols, scale,
-                               distinct_cols, approx_cols,
-                               quantile_cols, kll_k)
-        # groups repaired AWAY (no base rows left) need tombstones
-        # too, or the merge would leave their stale view rows live
-        erased = repair_keys.join(recomputed.select(*keys),
-                                  on=keys, how="left_anti")
-        tomb_cols = [*[F.col(k) for k in keys],
-                     F.lit(0).cast("long").alias("cnt")]
+    # this refresh's local checkpoints, released once the view commit
+    # has landed or failed (nothing reads them after it)
+    pinned: list[DataFrame] = []
+    try:
+        if distinct_cols:
+            # the feed now has several consumers (per-group delta +
+            # per-value state deltas): pin ONE materialization
+            changes = changes.localCheckpoint(eager=True)
+            pinned.append(changes)
+        # per-group deltas: small (#touched groups), computed once
+        delta = _delta_agg(changes, keys, measure_cols, scale,
+                           approx_cols, quantile_cols, kll_k) \
+            .localCheckpoint(eager=True)
+        pinned.append(delta)
+        nullkey = F.col(keys[0]).isNull()
+        for k in keys[1:]:
+            nullkey = nullkey | F.col(k).isNull()
+        # one action answers both "how many groups" and "any NULL key"
+        probe = delta.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.max(nullkey.cast("int")).alias("bad")).collect()[0]
+        n_touched = int(probe["n"])
+        if n_touched == 0:
+            # metadata-only / no-op commits in the range: just advance
+            # the meta cache; the NEXT real refresh re-reads the same
+            # (cheap, empty) range again from the commit watermark.
+            _write_meta(view_dir, {**meta, **meta_noop})
+            return {"mode": "empty", **summary, "groups_touched": 0}
+        if probe["bad"]:
+            raise ValueError(
+                f"NULL group key in the change feed: materialized views "
+                f"require non-NULL group keys {keys} (filter or coalesce "
+                f"them in the base table first)")
+        # distinct states advance FIRST (their own watermarks make this
+        # exactly-once; the view commit below is the refresh's atomic
+        # completion point), then each touched group's absolute cntd is
+        # read back from the live state, group-pruned
+        cntd_abs: dict[str, DataFrame] = {}
+        if distinct_cols:
+            all_key_rows = delta.select(*keys).collect() \
+                if n_touched <= 10_000 else None
+            prune = _eq_dnf_prune(keys, all_key_rows)
+            for c in distinct_cols:
+                _advance_dstate(spark, view_dir, c, keys, feed_ctx,
+                                changes)
+                st = _plain(snapshot_read(
+                    spark, _dstate_dir(view_dir, c), where=prune)) \
+                    .where(F.col("dcnt") > 0)
+                cntd_abs[c] = _dstate_rollup(st, keys, c, scale)
+        view = _plain(snapshot_read(spark, view_dir))
+        stored_types = dict(view.dtypes)
+        # current view rows for ONLY the touched groups (broadcast
+        # semi-join: the view — arbitrarily many groups — streams once).
+        # The joined frame is touched-groups-sized; checkpointing it means
+        # the view scan runs ONCE, however many downstream actions the
+        # merge machinery takes (key-envelope collect, DV matching, CDC
+        # classification are each an action over the upserts)
+        touched = view.join(_maybe_broadcast(delta.select(*keys),
+                                             n_touched),
+                            on=keys, how="left_semi")
+        # delta columns (d_*/add_*/del_*) and view columns (cnt/sum_*/...)
+        # never collide, so the join needs no alias qualifiers — which the
+        # checkpoint could not preserve anyway
+        j = delta.join(touched, on=keys, how="left") \
+            .localCheckpoint(eager=True)
+        pinned.append(j)
+        new_cnt = F.coalesce(F.col("cnt"), F.lit(0)) + F.col("d_cnt")
+        # min/max are not self-maintainable under deletion: repair any
+        # group whose deleted values may include a stored extreme (or
+        # whose view row is missing while the feed deletes from it —
+        # an inconsistent feed; recompute exactly rather than guess)
+        repair = F.lit(False)
         for c in measure_cols:
-            t = stored_types.get(f"min_{c}", "double")
-            tomb_cols += [
-                F.lit(0).cast(sum_t).alias(f"sum_{c}"),
-                F.lit(0).cast("long").alias(f"nn_{c}"),
-                F.lit(None).cast(t).alias(f"min_{c}"),
-                F.lit(None).cast(t).alias(f"max_{c}"),
-            ]
-        for c in distinct_cols:
-            tomb_cols += [
-                F.lit(0).cast("long").alias(f"cntd_{c}"),
-                F.lit(None).cast(sum_t).alias(f"sumd_{c}"),
+            dmin, dmax = F.col(f"del_min_{c}"), F.col(f"del_max_{c}")
+            vmin, vmax = F.col(f"min_{c}"), F.col(f"max_{c}")
+            has_del = dmin.isNotNull()
+            repair = repair | (has_del & (
+                F.col("cnt").isNull() | vmin.isNull()
+                | (dmin <= vmin) | (dmax >= vmax)))
+        for c in approx_cols:
+            # HLL sketches cannot subtract: a group that lost any
+            # non-NULL value recomputes exactly from the pinned base
+            repair = repair | (F.col(f"deld_{c}") == 1)
+        for c in quantile_cols:
+            # neither can KLL: same exact-repair rule
+            repair = repair | (F.col(f"delq_{c}") == 1)
+        stored_cols = ["cnt"] + [f"{p}_{c}" for c in measure_cols
+                                 for p in ("sum", "nn", "min", "max")] \
+            + [f"{p}_{c}" for c in distinct_cols
+               for p in ("cntd", "sumd")] \
+            + [f"hll_{c}" for c in approx_cols] \
+            + [f"kll_{c}" for c in quantile_cols]
+        # arithmetic path (no deleted extreme): counts and exact-decimal
+        # sums add; inserted values can only improve min/max (F.least /
+        # F.greatest skip NULLs, so a fresh group takes the added extreme)
+        arith_cols = [*[F.col(k) for k in keys],
+                      new_cnt.cast("long").alias("cnt")]
+        for c in measure_cols:
+            new_nn = (F.coalesce(F.col(f"nn_{c}"), F.lit(0))
+                      + F.col(f"d_nn_{c}"))
+            new_sum = (F.coalesce(F.col(f"sum_{c}"),
+                                  F.lit(0).cast(sum_t))
+                       + F.col(f"d_sum_{c}"))
+            arith_cols += [
+                new_sum.cast(sum_t).alias(f"sum_{c}"),
+                new_nn.cast("long").alias(f"nn_{c}"),
+                F.when(new_nn > 0,
+                       F.least(F.col(f"min_{c}"),
+                               F.col(f"add_min_{c}")))
+                .alias(f"min_{c}"),
+                F.when(new_nn > 0,
+                       F.greatest(F.col(f"max_{c}"),
+                                  F.col(f"add_max_{c}")))
+                .alias(f"max_{c}"),
             ]
         for c in approx_cols:
-            tomb_cols.append(
-                F.lit(None).cast("binary").alias(f"hll_{c}"))
+            # insert-only groups: one lossless sketch union (an empty
+            # inserted-side sketch — all-NULL adds — unions as identity);
+            # fresh groups take the inserted sketch outright
+            arith_cols.append(
+                F.when(F.col(f"hll_{c}").isNull(),
+                       F.col(f"add_hll_{c}"))
+                .otherwise(F.hll_union(F.col(f"hll_{c}"),
+                                       F.col(f"add_hll_{c}")))
+                .alias(f"hll_{c}"))
         for c in quantile_cols:
-            tomb_cols.append(
-                F.lit(None).cast("binary").alias(f"kll_{c}"))
-        upserts = arith.unionByName(recomputed) \
-            .unionByName(erased.select(*tomb_cols))
-    else:
-        upserts = arith
-    # conform exactly to the view's stored schema (decimal widths,
-    # parquet type stability next to carried-over files), then pin ONE
-    # materialization: snapshot_merge takes several actions over its
-    # source (key envelope, DV matching, the merge itself, CDC
-    # classification) and the upserts are touched-groups-sized
-    upserts = upserts.select(
-        *[F.col(k) for k in keys],
-        *[F.col(c).cast(stored_types[c]).alias(c)
-          for c in stored_cols]).localCheckpoint(eager=True)
-    snapshot_merge(spark, view_dir, SparkFrame(upserts), on=keys,
-                   txn=txn, txn_expect=txn_expect)
-    _write_meta(view_dir, {**meta, **meta_done})
-    return {"mode": "incremental", **summary,
-            "groups_touched": n_touched, "groups_repaired": n_repair,
-            # observability: True when any key-set broadcast hint was
-            # withheld this refresh (AQE chose the join strategy)
-            "broadcast_gated": (n_touched > _KEY_BROADCAST_MAX
-                                or n_repair > _KEY_BROADCAST_MAX)}
+            # insert-only groups: one lossless sketch merge; an all-NULL
+            # inserted side is a NULL sketch — keep the stored one
+            arith_cols.append(
+                F.when(F.col(f"kll_{c}").isNull(),
+                       F.col(f"add_kll_{c}"))
+                .when(F.col(f"add_kll_{c}").isNull(),
+                      F.col(f"kll_{c}"))
+                .otherwise(F.kll_sketch_merge_double(
+                    F.col(f"kll_{c}"), F.col(f"add_kll_{c}")))
+                .alias(f"kll_{c}"))
+        arith = j.where(~repair).select(*arith_cols)
+        for c in distinct_cols:
+            # absolute live-value aggregates for the touched groups; a
+            # touched group with no live state rows counts 0 (SQL:
+            # COUNT(DISTINCT) over empty/all-NULL is 0, not NULL) with a
+            # NULL distinct-sum (SUM(DISTINCT) over empty is NULL)
+            arith = arith.join(cntd_abs[c], on=keys, how="left") \
+                .withColumn(f"cntd_{c}",
+                            F.coalesce(F.col(f"cntd_{c}"), F.lit(0)))
+        # repaired groups: exact re-aggregation from the base PINNED at
+        # the target version(s), over only those groups (their key rows
+        # come off the checkpointed join — no extra view scan)
+        repair_keys = j.where(repair).select(*keys)
+        n_repair = repair_keys.count()
+        if n_repair:
+            # a bounded repair set is collected (metadata-sized: n_repair
+            # key tuples) so the reader can prune its base scan
+            key_rows = j.where(repair).select(*keys).collect() \
+                if n_repair <= 10_000 else None
+            base = repair_reader(key_rows)
+            base_rows = base.join(_maybe_broadcast(repair_keys, n_repair),
+                                  on=keys, how="inner")
+            recomputed = _full_agg(base_rows, keys, measure_cols, scale,
+                                   distinct_cols, approx_cols,
+                                   quantile_cols, kll_k)
+            # groups repaired AWAY (no base rows left) need tombstones
+            # too, or the merge would leave their stale view rows live
+            erased = repair_keys.join(recomputed.select(*keys),
+                                      on=keys, how="left_anti")
+            tomb_cols = [*[F.col(k) for k in keys],
+                         F.lit(0).cast("long").alias("cnt")]
+            for c in measure_cols:
+                t = stored_types.get(f"min_{c}", "double")
+                tomb_cols += [
+                    F.lit(0).cast(sum_t).alias(f"sum_{c}"),
+                    F.lit(0).cast("long").alias(f"nn_{c}"),
+                    F.lit(None).cast(t).alias(f"min_{c}"),
+                    F.lit(None).cast(t).alias(f"max_{c}"),
+                ]
+            for c in distinct_cols:
+                tomb_cols += [
+                    F.lit(0).cast("long").alias(f"cntd_{c}"),
+                    F.lit(None).cast(sum_t).alias(f"sumd_{c}"),
+                ]
+            for c in approx_cols:
+                tomb_cols.append(
+                    F.lit(None).cast("binary").alias(f"hll_{c}"))
+            for c in quantile_cols:
+                tomb_cols.append(
+                    F.lit(None).cast("binary").alias(f"kll_{c}"))
+            upserts = arith.unionByName(recomputed) \
+                .unionByName(erased.select(*tomb_cols))
+        else:
+            upserts = arith
+        # conform exactly to the view's stored schema (decimal widths,
+        # parquet type stability next to carried-over files), then pin ONE
+        # materialization: snapshot_merge takes several actions over its
+        # source (key envelope, DV matching, the merge itself, CDC
+        # classification) and the upserts are touched-groups-sized
+        upserts = upserts.select(
+            *[F.col(k) for k in keys],
+            *[F.col(c).cast(stored_types[c]).alias(c)
+              for c in stored_cols]).localCheckpoint(eager=True)
+        pinned.append(upserts)
+        snapshot_merge(spark, view_dir, SparkFrame(upserts), on=keys,
+                       txn=txn, txn_expect=txn_expect)
+        _write_meta(view_dir, {**meta, **meta_done})
+        return {"mode": "incremental", **summary,
+                "groups_touched": n_touched, "groups_repaired": n_repair,
+                # observability: True when any key-set broadcast hint was
+                # withheld this refresh (AQE chose the join strategy)
+                "broadcast_gated": (n_touched > _KEY_BROADCAST_MAX
+                                    or n_repair > _KEY_BROADCAST_MAX)}
+    finally:
+        for df in pinned:
+            _release_checkpoint(df)
 
 
 def matview_evolve(spark: SparkSession, view_dir: str,

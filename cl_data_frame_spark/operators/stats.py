@@ -20,10 +20,12 @@ row per (group, pivot-value) pair through the shuffle, not raw rows.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from cl_data_frame_spark.frame import SparkFrame
+from cl_data_frame_spark.frame import SparkFrame, sql_ident
 
 
 def _plain(frame) -> DataFrame:
@@ -174,10 +176,7 @@ def moment_agg_exprs(cols: list[str]) -> list[Column]:
     instead of ~6 — k=8 columns means 45 aggregates on the composite
     builders' critical path); the parsed trees equal the Column trees
     (same casts, same written order), so results are bit-identical."""
-    def q(c: str) -> str:
-        return "`" + c.replace("`", "``") + "`"
-
-    dec = {c: f"CAST({q(c)} AS DECIMAL(38,2))" for c in cols}
+    dec = {c: f"CAST({sql_ident(c)} AS DECIMAL(38,2))" for c in cols}
     aggs = [F.expr("COUNT(1) AS n")]
     for i, ci in enumerate(cols):
         aggs.append(F.expr(f"SUM({dec[ci]}) AS s_{i}"))
@@ -203,6 +202,15 @@ def _pair_exprs(i: int, j: int):
 # run on a thread pool and were saturating the gateway).
 def _dbl(c: str) -> str:
     return f"CAST({c} AS DOUBLE)"
+
+
+def _num(v) -> str:
+    """The SQL literal ``F.lit(v)`` builds for a Python number: a
+    float is a DOUBLE (a bare ``0.5`` would parse as DECIMAL), an int
+    stays integral."""
+    if isinstance(v, float):
+        return f"{v!r}D" if math.isfinite(v) else f"CAST('{v}' AS DOUBLE)"
+    return str(int(v))
 
 
 def _mul(a: str, b: str) -> str:
@@ -368,8 +376,8 @@ def chisq_cells(frame=None, row_col: str = None, col_col: str = None,
         cells = _plain(cells)
     # expr-string twins (same written operation order — see _pair_sql);
     # row/col names are user-supplied, so quote them as identifiers
-    qr = "`" + row_col.replace("`", "``") + "`"
-    qc = "`" + col_col.replace("`", "``") + "`"
+    qr = sql_ident(row_col)
+    qc = sql_ident(col_col)
     rt = f"CAST(SUM(n_obs) OVER (PARTITION BY {qr}) AS DOUBLE)"
     ct = f"CAST(SUM(n_obs) OVER (PARTITION BY {qc}) AS DOUBLE)"
     tot = "CAST(SUM(n_obs) OVER () AS DOUBLE)"
@@ -422,8 +430,8 @@ def cramers_v(frame=None, row_col: str = None, col_col: str = None,
         cells = _plain(cells)
     # expr-string twins (same written operation order — see _pair_sql);
     # row/col names are user-supplied, so quote them as identifiers
-    qr = "`" + row_col.replace("`", "``") + "`"
-    qc = "`" + col_col.replace("`", "``") + "`"
+    qr = sql_ident(row_col)
+    qc = sql_ident(col_col)
     rt = f"CAST(SUM(n_obs) OVER (PARTITION BY {qr}) AS DOUBLE)"
     ct = f"CAST(SUM(n_obs) OVER (PARTITION BY {qc}) AS DOUBLE)"
     o = _dbl("n_obs")
@@ -655,29 +663,29 @@ def quantile_bins_outliers(frame, col: str, n_bins: int = 4,
     aggregate (moments, crosstab counts, …) and skip the scan here.
     """
     sdf = _plain(frame)
+    qcol = sql_ident(col)
     bin_probs = [i / n_bins for i in range(1, n_bins)]
     probs = bin_probs + [0.25, 0.75]
     if stats is None:
-        agg = F.percentile(
-            F.col(col),
-            F.array(*[F.lit(p) for p in probs])).alias("__p__")
+        agg = F.expr(f"percentile({qcol}, array("
+                     f"{', '.join(map(_num, probs))}), 1) AS __p__")
         stats = sdf.groupBy(*by).agg(agg) if by else sdf.agg(agg)
     else:
         stats = _plain(stats)
     joined = (sdf.join(F.broadcast(stats), on=by) if by
               else sdf.crossJoin(F.broadcast(stats)))
     nb = len(bin_probs)
-    cuts = F.slice("__p__", 1, nb)
-    label = F.lit(1) + F.size(F.filter(cuts, lambda c: F.col(col) > c))
-    q1, q3 = F.col("__p__")[nb], F.col("__p__")[nb + 1]
-    lo = q1 - F.lit(k) * (q3 - q1)
-    hi = q3 + F.lit(k) * (q3 - q1)
+    label = (f"(1 + size(filter(slice(__p__, 1, {nb}), "
+             f"__cut__ -> ({qcol} > __cut__))))")
+    q1, q3 = f"__p__[{nb}]", f"__p__[{nb + 1}]"
+    lo = _sub(q1, _mul(_num(k), _sub(q3, q1)))
+    hi = _add(q3, _mul(_num(k), _sub(q3, q1)))
     out = (joined
-           .withColumn(output_col, label)
-           .withColumn("fence_lo", F.round(lo, 6))
-           .withColumn("fence_hi", F.round(hi, 6))
-           .withColumn("is_outlier",
-                       (F.col(col) < lo) | (F.col(col) > hi))
+           .withColumn(output_col, F.expr(label))
+           .withColumn("fence_lo", F.expr(f"round({lo}, 6)"))
+           .withColumn("fence_hi", F.expr(f"round({hi}, 6)"))
+           .withColumn("is_outlier", F.expr(
+               f"(({qcol} < {lo}) OR ({qcol} > {hi}))"))
            .drop("__p__"))
     return SparkFrame(out)
 
@@ -709,24 +717,25 @@ def mad_outliers(frame, col: str, by: list[str] | None = None,
     0.5) skip the first scan entirely.
     """
     sdf = _plain(frame)
+    qcol = sql_ident(col)
     if medians is None:
-        med_agg = F.percentile(F.col(col), F.lit(0.5)).alias("__med__")
+        med_agg = F.expr(f"percentile({qcol}, 0.5D, 1) AS __med__")
         meds = sdf.groupBy(*by).agg(med_agg) if by else sdf.agg(med_agg)
     else:
         meds = _plain(medians)
     with_med = (sdf.join(F.broadcast(meds), on=by) if by
                 else sdf.crossJoin(F.broadcast(meds)))
-    dev = F.abs(F.col(col) - F.col("__med__"))
-    mad_agg = F.percentile(dev, F.lit(0.5)).alias("__mad__")
+    dev = f"abs({_sub(qcol, '__med__')})"
+    mad_agg = F.expr(f"percentile({dev}, 0.5D, 1) AS __mad__")
     mads = (with_med.groupBy(*by).agg(mad_agg) if by
             else with_med.agg(mad_agg))
     joined = (with_med.join(F.broadcast(mads), on=by) if by
               else with_med.crossJoin(F.broadcast(mads)))
-    thresh = F.lit(k) * F.lit(consistency) * F.col("__mad__")
+    thresh = _mul(_mul(_num(k), _num(consistency)), "__mad__")
     out = (joined
-           .withColumn("median", F.round(F.col("__med__"), 6))
-           .withColumn("mad", F.round(F.col("__mad__"), 6))
-           .withColumn("is_mad_outlier", dev > thresh)
+           .withColumn("median", F.expr("round(__med__, 6)"))
+           .withColumn("mad", F.expr("round(__mad__, 6)"))
+           .withColumn("is_mad_outlier", F.expr(f"({dev} > {thresh})"))
            .drop("__med__", "__mad__"))
     return SparkFrame(out)
 
@@ -755,7 +764,7 @@ def global_avg_ranks(frame, col: str, npart: int | None = None) -> SparkFrame:
         spark.conf.get("spark.sql.shuffle.partitions", "200"))
     # expr-string twins (same written operation order — see _pair_sql);
     # *col* is user-supplied, so quote it as an identifier
-    qcol = "`" + col.replace("`", "``") + "`"
+    qcol = sql_ident(col)
     vals = sdf.groupBy(col).agg(F.expr("COUNT(1) AS cnt"))
     parted = (vals.repartitionByRange(npart, F.col(col))
               .sortWithinPartitions(F.col(col).asc())
@@ -998,42 +1007,38 @@ def poisson_bootstrap_ci(frame, col: str, id_col: str,
     Output: (by cols +) (n, mean, lo, hi, n_replicates) —
     ``lo``/``hi`` the (α/2, 1−α/2) percentile bounds, rounded 6.
     """
-    import math
     sdf = _plain(frame)
     # Poisson(1) CDF thresholds for k = 0..7
     cum, acc = [], 0.0
     for k in range(8):
         acc += math.exp(-1.0) / math.factorial(k)
         cum.append(acc)
-    thresholds = F.array(*[F.lit(c) for c in cum])
+    thresholds = f"array({', '.join(map(_num, cum))})"
+    salt_lit = "'|" + salt.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
-    def weight(r):
-        """Poisson(1) weight for replicate *r* (a Column). ONE md5
+    def weight(r: str) -> str:
+        """Poisson(1) weight for replicate *r* (an expression). ONE md5
         digest serves FOUR replicates (32-bit lanes of the 128-bit
         digest — md5 bits are independent, so the replicate weights
         are too): 4x fewer hash evaluations per row than the
         digest-per-replicate form (round 8, measured — the md5+conv
         chain was the bootstrap's per-row cost)."""
-        digest = F.md5(F.concat(
-            F.col(id_col).cast("string"), F.lit("|"),
-            F.floor(r / F.lit(4)).cast("int").cast("string"),
-            F.lit(f"|{salt}")))
-        lane = (r % F.lit(4)).cast("int")
-        h = F.conv(F.substring(digest, lane * F.lit(8) + F.lit(1),
-                               F.lit(8)), 16, 10)
-        u = h.cast("double") / F.lit(float(1 << 32))
-        return F.size(F.filter(thresholds, lambda t: t < u)) \
-            .cast("decimal(19,0)")
+        digest = (f"md5(concat(CAST({sql_ident(id_col)} AS STRING), "
+                  f"'|', CAST(CAST(FLOOR(({r} / 4)) AS INT) AS STRING), "
+                  f"{salt_lit}))")
+        lane = f"CAST(({r} % 4) AS INT)"
+        h = f"conv(substring({digest}, (({lane} * 8) + 1), 8), 16, 10)"
+        u = _divs(_dbl(h), _num(float(1 << 32)))
+        return (f"CAST(size(filter({thresholds}, "
+                f"__thr__ -> (__thr__ < {u}))) AS DECIMAL(19,0))")
 
-    x = F.col(col).cast("decimal(28,6)")
+    x = f"CAST({sql_ident(col)} AS DECIMAL(28,6))"
     # count/weight only non-null values: a NULL x contributes neither to
     # the point mean nor to any replicate (sum(w*x) already drops it; the
     # weight sum must agree or replicate means are deflated)
-    r_seq = F.sequence(F.lit(0), F.lit(n_replicates - 1))
-    rw = F.explode(F.transform(
-        r_seq, lambda r: F.struct(
-            r.alias("r"),
-            F.when(x.isNotNull(), weight(r)).alias("w")))).alias("rw")
+    rw = (f"explode(transform(sequence(0, {n_replicates - 1}), "
+          f"__rep__ -> struct(__rep__ AS r, CASE WHEN ({x} IS NOT NULL) "
+          f"THEN {weight('__rep__')} END AS w))) AS rw")
     # the R-way explode multiplies per-partition CPU work R-fold; a
     # small-file input (1-2 partitions) would serialize it on one core,
     # so spread the slim projection first (a shuffle of (by, x, id)
@@ -1042,51 +1047,51 @@ def poisson_bootstrap_ci(frame, col: str, id_col: str,
     para = sdf.sparkSession.sparkContext.defaultParallelism
     if sdf.rdd.getNumPartitions() < min(8, para):
         sdf = sdf.repartition(min(8, para))
-    per_rep = (sdf.select(*(by or []), x.alias("__x__"), rw)
-               .groupBy(*(by or []), F.col("rw.r").alias("__r__"))
-               .agg(F.count("__x__").alias("n"),
-                    F.sum("__x__").alias("s"),
-                    F.sum(F.col("rw.w") * F.col("__x__")).alias("sw"),
-                    F.sum("rw.w").alias("w")))
+    by_q = [sql_ident(c) for c in by or []]
+    per_rep = (sdf.selectExpr(*by_q, f"{x} AS __x__", rw)
+               .groupBy(*(by or []), F.expr("rw.r AS __r__"))
+               .agg(F.expr("count(__x__) AS n"),
+                    F.expr("sum(__x__) AS s"),
+                    F.expr("sum((rw.w * __x__)) AS sw"),
+                    F.expr("sum(rw.w) AS w")))
     # fold the R rows per group back into one record each — a SECOND
     # hash aggregation, still in Spark (base n/s are identical across
     # a group's replicates: max() reads them off any row). Replicates
     # with zero/NULL total weight (tiny group) contribute a NULL
     # rep_mean, which collect_list drops — mirroring the classical
     # "skip degenerate replicate" rule.
-    rep_mean = F.when(
-        F.col("w") > 0,
-        F.col("sw").cast("double") / F.col("w").cast("double"))
-    agg = (per_rep.withColumn("__rm__", rep_mean)
+    rep_mean = (f"CASE WHEN (w > 0) THEN "
+                f"{_divs(_dbl('sw'), _dbl('w'))} END")
+    agg = (per_rep.withColumn("__rm__", F.expr(rep_mean))
            .groupBy(*(by or []))
-           .agg(F.max("n").alias("n"),
-                F.max("s").alias("s"),
-                F.sort_array(F.collect_list("__rm__")).alias("__ms__")))
+           .agg(F.expr("max(n) AS n"), F.expr("max(s) AS s"),
+                F.expr("sort_array(collect_list(__rm__)) AS __ms__")))
     # an empty ungrouped input produces zero aggregate rows — LEFT-join
     # from a one-row frame to synthesize the single empty record
     # relationally (the grouped path correctly yields zero rows)
     if not by:
-        agg = (sdf.sparkSession.range(1).select(F.lit(1).alias("__k__"))
+        agg = (sdf.sparkSession.range(1).selectExpr("1 AS __k__")
                .join(agg.withColumn("__k__", F.lit(1)), "__k__", "left")
                .drop("__k__"))
-    cnt = F.size("__ms__")
+    cnt = "size(__ms__)"
     # index-percentile bounds — the exact floor/ceil/clamp arithmetic
     # the oracle SQL mirrors (see __spark_entry__'s bootstrap oracle)
-    lo_i = F.greatest(F.lit(0).cast("bigint"),
-                      F.floor(F.lit(alpha / 2) * cnt))
-    hi_i = F.least((cnt - 1).cast("bigint"),
-                   F.ceil(F.lit(1 - alpha / 2) * cnt) - 1)
-    ok = (F.coalesce(F.col("n"), F.lit(0)) > 0) & (cnt > 0)
-    out = agg.select(
-        *(by or []),
-        F.coalesce(F.col("n"), F.lit(0)).cast("bigint").alias("n"),
-        F.when(ok, F.round(
-            F.col("s").cast("double") / F.col("n"), 6)).alias("mean"),
-        F.when(ok, F.round(F.element_at(
-            "__ms__", (lo_i + 1).cast("int")), 6)).alias("lo"),
-        F.when(ok, F.round(F.element_at(
-            "__ms__", (hi_i + 1).cast("int")), 6)).alias("hi"),
-        F.lit(n_replicates).cast("int").alias("n_replicates"))
+    lo_i = (f"greatest(CAST(0 AS BIGINT), "
+            f"FLOOR({_mul(_num(alpha / 2), cnt)}))")
+    hi_i = (f"least(CAST({_sub(cnt, '1')} AS BIGINT), "
+            f"{_sub(f'CEIL({_mul(_num(1 - alpha / 2), cnt)})', '1')})")
+    ok = f"((coalesce(n, 0) > 0) AND ({cnt} > 0))"
+
+    def bound(i: str) -> str:
+        return (f"CASE WHEN {ok} THEN round(element_at(__ms__, "
+                f"CAST({_add(i, '1')} AS INT)), 6) END")
+    out = agg.selectExpr(
+        *by_q,
+        "CAST(coalesce(n, 0) AS BIGINT) AS n",
+        f"CASE WHEN {ok} THEN round({_divs(_dbl('s'), 'n')}, 6) END "
+        "AS mean",
+        f"{bound(lo_i)} AS lo", f"{bound(hi_i)} AS hi",
+        f"CAST({n_replicates} AS INT) AS n_replicates")
     return SparkFrame(out)
 
 
@@ -1123,7 +1128,7 @@ def population_stability_index(frame_ref, frame_cur, col: str,
     # driver and re-runs the percentile when the plan is retried)
     # expr-string twins (same written operation order — see _pair_sql);
     # *col* is user-supplied, so quote it as an identifier
-    qcol = "`" + col.replace("`", "``") + "`"
+    qcol = sql_ident(col)
     parr = "array(" + ",".join(f"CAST('{p!r}' AS DOUBLE)"
                                for p in probs) + ")"
     cuts = ref.agg(F.expr(
@@ -1179,18 +1184,19 @@ def target_encode(frame, cat_col: str, target_col: str,
     """
     out_col = out_col or f"{cat_col}_enc"
     sdf = _plain(frame)
-    y = F.col(target_col).cast("decimal(28,6)")
+    y = f"CAST({sql_ident(target_col)} AS DECIMAL(28,6))"
     per = (sdf.groupBy(cat_col)
-           .agg(F.count(F.lit(1)).alias("__n__"),
-                F.sum(y).alias("__s__")))
-    g = sdf.agg(F.count(F.lit(1)).alias("__gn__"),
-                F.sum(y).alias("__gs__"))
-    gmean = F.col("__gs__").cast("double") / F.col("__gn__").cast("double")
-    enc = ((F.col("__s__").cast("double")
-            + F.lit(smoothing) * gmean)
-           / (F.col("__n__").cast("double") + F.lit(smoothing)))
+           .agg(F.expr("COUNT(1) AS __n__"),
+                F.expr(f"SUM({y}) AS __s__")))
+    g = sdf.agg(F.expr("COUNT(1) AS __gn__"),
+                F.expr(f"SUM({y}) AS __gs__"))
+    gmean = _divs(_dbl("__gs__"), _dbl("__gn__"))
+    sm = _num(smoothing)
+    enc = _divs(_add(_dbl("__s__"), _mul(sm, gmean)),
+                _add(_dbl("__n__"), sm))
     table = (per.crossJoin(F.broadcast(g))
-             .select(cat_col, F.round(enc, 6).alias(out_col)))
+             .selectExpr(sql_ident(cat_col),
+                         f"round({enc}, 6) AS {sql_ident(out_col)}"))
     out = sdf.join(F.broadcast(table), on=cat_col, how="left")
     return SparkFrame(out)
 
@@ -1210,14 +1216,13 @@ def winsorize(frame, col: str, lower: float = 0.05, upper: float = 0.95,
     shared-pass convention).
     """
     sdf = _plain(frame)
+    x = _dbl(sql_ident(col))
     if bounds is None:
-        pct = F.percentile(F.col(col),
-                           F.array(F.lit(lower), F.lit(upper)))
-        b = (sdf.groupBy(*by).agg(pct.alias("__p__")) if by
-             else sdf.agg(pct.alias("__p__")))
-        bounds = b.select(*(by or []),
-                          F.col("__p__")[0].alias("__lo__"),
-                          F.col("__p__")[1].alias("__hi__"))
+        pct = F.expr(f"percentile({sql_ident(col)}, array({_num(lower)}, "
+                     f"{_num(upper)}), 1) AS __p__")
+        b = sdf.groupBy(*by).agg(pct) if by else sdf.agg(pct)
+        bounds = b.selectExpr(*map(sql_ident, by or []),
+                              "__p__[0] AS __lo__", "__p__[1] AS __hi__")
     else:
         bounds = _plain(bounds)
     # left join: keep-the-row contract holds for NULL-keyed rows too —
@@ -1225,11 +1230,9 @@ def winsorize(frame, col: str, lower: float = 0.05, upper: float = 0.95,
     # below passes the value through unchanged
     joined = (sdf.join(F.broadcast(bounds), on=by, how="left") if by
               else sdf.crossJoin(F.broadcast(bounds)))
-    clipped = F.least(F.greatest(F.col(col).cast("double"),
-                                 F.col("__lo__")), F.col("__hi__"))
-    clipped = F.when(F.col("__lo__").isNull(),
-                     F.col(col).cast("double")).otherwise(clipped)
-    out = (joined.withColumn(f"{col}_wins", clipped)
+    clipped = (f"CASE WHEN (__lo__ IS NULL) THEN {x} "
+               f"ELSE least(greatest({x}, __lo__), __hi__) END")
+    out = (joined.withColumn(f"{col}_wins", F.expr(clipped))
            .drop("__lo__", "__hi__"))
     return SparkFrame(out)
 
@@ -1720,8 +1723,8 @@ def theil_sen(frame, x_col: str, y_col: str,
     # stage (no driver round-trip; the whole estimator is one plan)
     m_df = weighted_lower_median(slopes, "__s__", F.col("__w__")) \
         .select(F.col("median").alias("__slope__"))
-    qx = "`" + x_col.replace("`", "``") + "`"
-    qy = "`" + y_col.replace("`", "``") + "`"
+    qx = sql_ident(x_col)
+    qy = sql_ident(y_col)
     resid = (sdf.crossJoin(F.broadcast(m_df))
              .select("__slope__",
                      F.expr(f"(CAST({qy} AS DOUBLE) - (__slope__ * "

@@ -66,7 +66,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cl_data_frame_spark.frame import SparkFrame
+from cl_data_frame_spark.frame import SparkFrame, sql_ident
 from cl_data_frame_spark.session import local_frame
 
 _MANIFEST_DIR = "_manifests"
@@ -1277,11 +1277,9 @@ def _dv_fid(rel_file: str) -> str:
     return "/".join(rel_file.split("/")[-2:])
 
 
-def _dv_meta_cols():
-    """(built lazily: Column construction needs a live JVM)"""
-    return (F.expr("substring_index(_metadata.file_path, '/', -2)")
-            .alias("__fid__"),
-            F.col("_metadata.row_index").cast("long").alias("__pos__"))
+#: a scan's deletion-vector identity columns, as ``selectExpr`` items
+_DV_META_COLS = ("substring_index(_metadata.file_path, '/', -2) AS __fid__",
+                 "CAST(_metadata.row_index AS BIGINT) AS __pos__")
 
 
 #: the one deletion-vector encoding: every DV sidecar directory holds
@@ -1450,7 +1448,7 @@ def _read_files_renamed(spark: SparkSession, table_dir: str,
             if tomb:
                 sdf = sdf.drop(*tomb)
             if need_meta:
-                sdf = sdf.select("*", *_dv_meta_cols())
+                sdf = sdf.selectExpr("*", *_DV_META_COLS)
             parts.append(sdf)
             continue
         # a version's read surface IS its manifest schema: read with
@@ -1490,12 +1488,14 @@ def _read_files_renamed(spark: SparkSession, table_dir: str,
                           for p, f in zip(era_names, fields)])
         sdf = spark.read.schema(era).parquet(*paths)
         # positional aliasing back to the logical schema (name-based
-        # renames would be ambiguous exactly in the claimed case)
-        sel = [F.col(f"`{p}`").alias(f.name)
+        # renames would be ambiguous exactly in the claimed case), as
+        # one parsed projection: a Column per field costs a py4j round
+        # trip per name and alias
+        sel = [f"{sql_ident(p)} AS {sql_ident(f.name)}"
                for p, f in zip(era_names, fields)]
         if need_meta:
-            sel += list(_dv_meta_cols())
-        sdf = sdf.select(*sel)
+            sel += _DV_META_COLS
+        sdf = sdf.selectExpr(*sel)
         parts.append(sdf)
     out = parts[0]
     for p in parts[1:]:
@@ -4187,21 +4187,38 @@ def _classify_changes(old_side: DataFrame | None,
                       ) -> DataFrame | None:
     """Distributed old-vs-new diff for one DML commit (see
     ``snapshot_changes``). Rows identical on both sides — the bulk of
-    a rewritten file — cancel and emit nothing."""
+    a rewritten file — cancel and emit nothing.
+
+    Every projection and condition is one parsed SQL expression: a
+    Column chain per field would cost a py4j round trip per column,
+    literal and alias, and the feed is built on every DML commit."""
     cols = [f["name"] for f in schema_json_obj["fields"]]
+    q = sql_ident
     pre_t = "update_preimage" if op == "update" else "delete"
     post_t = "update_postimage" if op == "update" else "insert"
-    ver = F.lit(v).cast("long")
+    ver = f"CAST({v} AS BIGINT) AS _commit_version"
     if old_side is None and new_side is None:
         return None
     if new_side is None:
-        return old_side.select(
-            *cols, F.lit(pre_t).alias("_change_type"),
-            ver.alias("_commit_version"))
+        return old_side.selectExpr(
+            *map(q, cols), f"'{pre_t}' AS _change_type", ver)
     if old_side is None:
-        return new_side.select(
-            *cols, F.lit(post_t).alias("_change_type"),
-            ver.alias("_commit_version"))
+        return new_side.selectExpr(
+            *map(q, cols), f"'{post_t}' AS _change_type", ver)
+
+    def side(sdf, prefix, *extra):
+        return sdf.selectExpr(
+            *[f"{q(c)} AS {q(prefix + c)}" for c in cols], *extra)
+
+    def null_safe_eq(names):
+        """``__o_c <=> __n_c`` for every name, AND-ed left to right;
+        None for no names."""
+        cond = None
+        for c in names:
+            t = f"({q('__o_' + c)} <=> {q('__n_' + c)})"
+            cond = t if cond is None else f"({cond} AND {t})"
+        return cond
+
     keyed_ok = False
     if keys and all(k in cols for k in keys):
         # the keyed full-outer join is only sound when the merge keys
@@ -4212,80 +4229,57 @@ def _classify_changes(old_side: DataFrame | None,
         # (null-safe: groupBy, not countDistinct) and fall back to the
         # full-row multiset diff otherwise. One tiny aggregate over
         # the commit's changed slice, both sides tagged by side.
-        tagged = old_side.select(*keys, F.lit(0).alias("__side__")) \
-            .unionByName(new_side.select(*keys,
-                                         F.lit(1).alias("__side__")))
+        tagged = old_side.selectExpr(*map(q, keys), "0 AS __side__") \
+            .unionByName(new_side.selectExpr(*map(q, keys),
+                                             "1 AS __side__"))
         r = (tagged.groupBy("__side__", *keys)
              .agg(F.count(F.lit(1)).alias("c"))
              .agg(F.max("c").alias("m")).collect()[0]["m"])
         keyed_ok = (r or 0) <= 1
     if keyed_ok:
         key_set = set(keys)
-        non_key = [c for c in cols if c not in key_set]
         # explicit presence markers: testing the key for NULL would
         # misread a genuinely-NULL key value as an absent row
-        o = old_side.select(*[F.col(c).alias(f"__o_{c}")
-                              for c in cols],
-                            F.lit(1).alias("__op__"))
-        n = new_side.select(*[F.col(c).alias(f"__n_{c}")
-                              for c in cols],
-                            F.lit(1).alias("__np__"))
-        cond = None
-        for k in keys:
-            t = F.col(f"__o_{k}").eqNullSafe(F.col(f"__n_{k}"))
-            cond = t if cond is None else (cond & t)
-        j = o.join(n, on=cond, how="full_outer")
-        o_present = F.col("__op__").isNotNull()
-        n_present = F.col("__np__").isNotNull()
-        same = None
-        for c in non_key:
-            t = F.col(f"__o_{c}").eqNullSafe(F.col(f"__n_{c}"))
-            same = t if same is None else (same & t)
-        same = same if same is not None else F.lit(True)
-        pre = (j.filter(o_present & (~n_present | ~same))
-               .select(*[F.col(f"__o_{c}").alias(c) for c in cols],
-                       F.when(n_present, F.lit("update_preimage"))
-                       .otherwise(F.lit("delete"))
-                       .alias("_change_type"),
-                       ver.alias("_commit_version")))
-        post = (j.filter(n_present & (~o_present | ~same))
-                .select(*[F.col(f"__n_{c}").alias(c) for c in cols],
-                        F.when(o_present,
-                               F.lit("update_postimage"))
-                        .otherwise(F.lit("insert"))
-                        .alias("_change_type"),
-                        ver.alias("_commit_version")))
+        o = side(old_side, "__o_", "1 AS __op__")
+        n = side(new_side, "__n_", "1 AS __np__")
+        j = o.join(n, on=F.expr(null_safe_eq(keys)), how="full_outer")
+        same = null_safe_eq([c for c in cols if c not in key_set]) \
+            or "true"
+        pre = (j.filter(f"((__op__ IS NOT NULL) AND "
+                        f"((NOT (__np__ IS NOT NULL)) OR (NOT {same})))")
+               .selectExpr(*[f"{q('__o_' + c)} AS {q(c)}" for c in cols],
+                           "CASE WHEN (__np__ IS NOT NULL) THEN "
+                           "'update_preimage' ELSE 'delete' END "
+                           "AS _change_type", ver))
+        post = (j.filter(f"((__np__ IS NOT NULL) AND "
+                         f"((NOT (__op__ IS NOT NULL)) OR (NOT {same})))")
+                .selectExpr(*[f"{q('__n_' + c)} AS {q(c)}" for c in cols],
+                            "CASE WHEN (__op__ IS NOT NULL) THEN "
+                            "'update_postimage' ELSE 'insert' END "
+                            "AS _change_type", ver))
         return pre.unionByName(post)
     # no keys: full-row multiset diff — group both sides by every
     # column (groupBy is null-safe), join the count tables null-SAFELY
     # on every column, subtract counts, re-expand the surplus
-    o = (old_side.groupBy(*cols).agg(F.count(F.lit(1)).alias("__oc__"))
-         .select(*[F.col(c).alias(f"__o_{c}") for c in cols],
-                 "__oc__"))
-    n = (new_side.groupBy(*cols).agg(F.count(F.lit(1)).alias("__nc__"))
-         .select(*[F.col(c).alias(f"__n_{c}") for c in cols],
-                 "__nc__"))
-    cond = None
-    for c in cols:
-        t = F.col(f"__o_{c}").eqNullSafe(F.col(f"__n_{c}"))
-        cond = t if cond is None else (cond & t)
-    j = o.join(n, on=cond, how="full_outer")
-    ocnt = F.coalesce(F.col("__oc__"), F.lit(0))
-    ncnt = F.coalesce(F.col("__nc__"), F.lit(0))
+    o = side(old_side.groupBy(*cols).agg(F.expr("count(1) AS __oc__")),
+             "__o_", "__oc__")
+    n = side(new_side.groupBy(*cols).agg(F.expr("count(1) AS __nc__")),
+             "__n_", "__nc__")
+    j = o.join(n, on=F.expr(null_safe_eq(cols)), how="full_outer")
+    ocnt = "coalesce(__oc__, 0)"
+    ncnt = "coalesce(__nc__, 0)"
 
     def expand(side_prefix, count_expr, label):
-        return (j.filter(count_expr > 0)
-                .select(*[F.col(f"{side_prefix}{c}").alias(c)
-                          for c in cols],
-                        count_expr.alias("__k__"))
-                .select(*cols,
-                        F.explode(F.sequence(F.lit(1),
-                                             F.col("__k__")))
-                        .alias("__i__"))
-                .select(*cols, F.lit(label).alias("_change_type"),
-                        ver.alias("_commit_version")))
-    return expand("__o_", ocnt - ncnt, pre_t) \
-        .unionByName(expand("__n_", ncnt - ocnt, post_t))
+        return (j.filter(f"({count_expr} > 0)")
+                .selectExpr(*[f"{q(side_prefix + c)} AS {q(c)}"
+                              for c in cols],
+                            f"{count_expr} AS __k__")
+                .selectExpr(*map(q, cols),
+                            "explode(sequence(1, __k__)) AS __i__")
+                .selectExpr(*map(q, cols), f"'{label}' AS _change_type",
+                            ver))
+    return expand("__o_", f"({ocnt} - {ncnt})", pre_t) \
+        .unionByName(expand("__n_", f"({ncnt} - {ocnt})", post_t))
 
 
 def _nulls_of(entry: dict):

@@ -29,3 +29,24 @@ def built_queries(spark, sf_dir):
     import __spark_entry__ as E
     return {name: fn(spark, sf_dir) for name, fn in E.queries().items()
             if name != "st_stateful"}
+
+
+@pytest.fixture
+def py4j_commands(monkeypatch):
+    """``count(fn)``: the py4j commands the driver sends to the JVM
+    while ``fn()`` runs (every thread, callbacks included)."""
+    from py4j.clientserver import ClientServerConnection
+    sent = [0]
+    real = ClientServerConnection.send_command
+
+    def send_command(self, command):
+        sent[0] += 1
+        return real(self, command)
+    monkeypatch.setattr(ClientServerConnection, "send_command",
+                        send_command)
+
+    def count(fn):
+        n0 = sent[0]
+        fn()
+        return sent[0] - n0
+    return count

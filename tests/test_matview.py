@@ -99,6 +99,27 @@ class TestMatviewBasics:
         assert r["groups_repaired"] == 1
         _assert_parity(spark, src, view, "repair")
 
+    def test_refresh_releases_its_checkpoints(self, spark, tmp_path):
+        """Once a refresh that repairs a group returns, none of its
+        checkpoints (the group deltas, the delta-view join, the
+        upserts, the view merge's vector rows) holds stored blocks."""
+        jvm_sc = spark.sparkContext._jsc.sc()
+
+        def stored():
+            return {i.id() for i in jvm_sc.getRDDStorageInfo()
+                    if "localCheckpoint" in i.callSite()}
+        src, view = _mkdirs(tmp_path, "release")
+        _seed(spark, src, [(i, f"g{i % 3}", float(i))
+                           for i in range(30)])
+        matview_create(spark, src, view, keys="grp",
+                       measure_cols=["val"])
+        snapshot_delete(spark, src, where=[("id", "==", 0)])
+        before = stored()
+        r = matview_refresh(spark, view)
+        assert r["groups_repaired"] == 1
+        assert stored() - before == set()
+        _assert_parity(spark, src, view, "release")
+
     def test_interior_delete_stays_arithmetic(self, spark, tmp_path):
         src, view = _mkdirs(tmp_path, "interior")
         _seed(spark, src, [(i, f"g{i % 3}", float(i))

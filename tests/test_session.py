@@ -22,6 +22,17 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def test_get_spark_turns_off_call_site_capture(spark):
+    """Column and DataFrame calls do not capture their Python call
+    site: PySpark's capture walks the stack and sends about ten py4j
+    commands per call."""
+    from pyspark.errors.utils import is_debugging_enabled
+    assert spark.conf.get(
+        "spark.python.sql.dataFrameDebugging.enabled") == "false"
+    F.col("x")
+    assert not is_debugging_enabled()
+
+
 def test_rerun_after_other_plans_compiles_nothing(spark, sf_dir):
     """A registry entry whose plans inline no per-call literal, rerun
     after more than Spark's default 100 other generated classes,

@@ -3028,6 +3028,25 @@ class TestMaterializedChangeData:
         assert merge_jobs <= 20, merge_jobs
         assert delete_jobs <= 4, delete_jobs
 
+    def test_point_merge_py4j_commands(self, spark, tmp_path,
+                                       py4j_commands):
+        """A point DV merge sends a bounded number of py4j commands:
+        each projection and condition of its change feed is one parsed
+        expression, and no call captures its Python call site."""
+        from cl_data_frame_spark.sources import snapshots as S
+        t = str(tmp_path / "tbl")
+        S.snapshot_write(
+            spark.range(1000).selectExpr("id AS k", "id*2 AS v")
+            .repartitionByRange(4, "k"), t, stats_cols=["k"])
+        src = spark.createDataFrame([(500, 1), (5000, 2)],
+                                    "k bigint, v bigint")
+        sent = py4j_commands(
+            lambda: S.snapshot_merge(spark, t, src, on="k"))
+        assert S._read_manifest(t, 2)["dv"]
+        # local[4]: 575 here; 1,627 with PySpark's call-site capture on
+        # and the change feed built Column by Column
+        assert sent <= 650, sent
+
     def test_dml_checkpoints_only_vector_rows(self, spark, tmp_path,
                                               monkeypatch):
         """A DML that rewrites one file and takes a vector on another

@@ -8,7 +8,16 @@ that gap with the classic incremental-view-maintenance construction
 (Gupta & Mumick, "Maintenance of Materialized Views", IEEE Data Eng.
 Bulletin 1995; self-maintainable aggregates): the view is a snapshot
 TABLE of per-group partial aggregates, and each refresh consumes the
-base table's row-level change feed —
+base table's row-level change feed.
+
+Every view has ONE shape: the aggregate of a FACT table inner-joined
+to zero or more DIM tables (``matview_create_star``). A single-table
+view (``matview_create``) is the case with no dims, and a join view
+(``matview_create_join``) the case with one. The fact's consumed
+version rides every view commit as the txn watermark ``matview``,
+each dim's as ``matview.dim``, ``matview.dim2``, ... With dims, the
+fact feed below becomes the telescoped delta-join change set (see
+``_refresh_once``); the rest of the loop is the same —
 
 1. ``snapshot_changes(from=last_consumed, to=target)`` yields exactly
    the inserted / deleted / update pre+post rows (a plain scan of the
@@ -25,8 +34,9 @@ base table's row-level change feed —
    (broadcast semi-join again);
 5. groups whose count reaches zero become cnt=0 TOMBSTONES (filtered
    by ``matview_read``) so the whole refresh is ONE ``snapshot_merge``
-   commit — and that commit carries ``txn=("matview", target)``, the
-   idempotent-writer watermark: a maintainer that crashes between its
+   commit — and that commit carries ``txn=("matview", target)`` (plus
+   each advanced dim's watermark), the idempotent-writer watermarks:
+   a maintainer that crashes between its
    commit and its bookkeeping re-reads the watermark and skips the
    double-apply (exactly-once refresh, the same protocol the
    streaming snapshot sink replays against).
@@ -73,6 +83,7 @@ from cl_data_frame_spark.frame import SparkFrame
 
 _META_FILE = "_matview.json"
 _APP_ID = "matview"
+_D_APP = "matview.dim"
 _SUM_T = "decimal(38,{s})"
 
 #: refresh-side key-set broadcast ceiling, mirroring the deletion-
@@ -128,14 +139,15 @@ def _project_keys(sdf: DataFrame, key_exprs: dict | None,
 
 
 def _expr_deps(sql: str, available) -> list[str]:
-    """The columns a derived-key SQL expression references, by
-    word-boundary match against the available names — conservative
-    for the star attribution (a false positive only carries an extra
-    column through the maintenance joins; a miss fails loudly when
-    the projection evaluates)."""
+    """The columns a derived-key or ``where=`` SQL expression
+    references, by word-boundary match against the available names
+    (a backtick-quoted name matches too) — conservative for the
+    column attribution (a false positive only carries an extra column
+    through the maintenance joins; a miss fails loudly when the
+    expression evaluates)."""
     return [c for c in available
-            if re.search(rf"(?<![A-Za-z0-9_`]){re.escape(c)}"
-                         rf"(?![A-Za-z0-9_`])", sql)]
+            if re.search(rf"(?<![A-Za-z0-9_]){re.escape(c)}"
+                         rf"(?![A-Za-z0-9_])", sql)]
 
 
 def _plain(frame) -> DataFrame:
@@ -161,6 +173,30 @@ def _write_meta(view_dir: str, meta: dict) -> None:
     with open(tmp, "w", encoding="utf-8") as fh:
         json.dump(meta, fh)
     os.replace(tmp, _meta_path(view_dir))
+
+
+def _apps(n_dims: int) -> list[str]:
+    """The view's txn watermark ids: the fact's, then one per dim
+    (``matview.dim``, ``matview.dim2``, ...)."""
+    return [_APP_ID] + [_D_APP if i == 0 else f"{_D_APP}{i + 1}"
+                        for i in range(n_dims)]
+
+
+def _applied(view_dir: str, meta: dict) -> tuple[list[int], dict]:
+    """Each source's applied version, fact first: the commit-riding
+    txn watermark, else the meta file's cached copy (the watermark is
+    the truth — a crash between a merge commit and its meta write must
+    not double-apply). Also returns the watermarks actually recorded
+    on the view, the only ones a commit can compare-and-swap."""
+    from cl_data_frame_spark.sources.snapshots import (
+        snapshot_txn_version)
+    apps = _apps(len(meta["dims"]))
+    cached = [int(meta["fact_version"]),
+              *(int(sp["version"]) for sp in meta["dims"])]
+    recorded = {app: v for app in apps
+                if (v := snapshot_txn_version(view_dir, app)) is not None}
+    return [recorded.get(app, c) for app, c in zip(apps, cached)], \
+        recorded
 
 
 def _check_keys_nonnull(sdf: DataFrame, keys: list[str],
@@ -297,8 +333,8 @@ def _advance_dstate(spark: SparkSession, view_dir: str, c: str,
     already covers our targets is a clean skip (it consumed a
     superset interval from the same watermark)."""
     from cl_data_frame_spark.sources.snapshots import (
-        SnapshotTxnConflict, snapshot_merge, snapshot_read,
-        snapshot_txn_version)
+        SnapshotTxnConflict, _release_checkpoint, snapshot_merge,
+        snapshot_read, snapshot_set_txn, snapshot_txn_version)
     sd = _dstate_dir(view_dir, c)
     targets = feed_ctx["targets"]
     applied = {app: snapshot_txn_version(sd, app)
@@ -317,43 +353,43 @@ def _advance_dstate(spark: SparkSession, view_dir: str, c: str,
         feed = feed_ctx["feed_fn"](applied)
     if feed is None:
         return
-    dd = _dstate_delta(feed, keys, c).localCheckpoint(eager=True)
-    n_dd = dd.count()
     txn = [(app, tv) for app, tv in targets if applied[app] < tv]
-    if not n_dd:
-        # nothing for c in the interval — advance the watermark anyway
-        # with a METADATA-ONLY commit: a column that goes quiet must
-        # not pin its state watermark while the view advances, or
-        # every later refresh re-walks a monotonically GROWING
-        # (still-empty-for-c) interval
-        from cl_data_frame_spark.sources.snapshots import \
-            snapshot_set_txn
-        try:
-            snapshot_set_txn(sd, txn,
-                             txn_expect={app: applied[app]
-                                         for app, _ in txn})
-        except SnapshotTxnConflict:
-            pass        # a racing maintainer advanced it — fine
-        return
-    cur = _plain(snapshot_read(spark, sd))
-    on = [*keys, c]
-    touched = cur.join(_maybe_broadcast(dd.select(*on), n_dd),
-                       on=on, how="left_semi")
-    ups = dd.join(touched, on=on, how="left").select(
-        *on,
-        (F.coalesce(F.col("dcnt"), F.lit(0)) + F.col("__d__"))
-        .cast("long").alias("dcnt")).localCheckpoint(eager=True)
+    expect = {app: applied[app] for app, _ in txn}
+    dd = _dstate_delta(feed, keys, c).localCheckpoint(eager=True)
+    ups = None
     try:
-        snapshot_merge(spark, sd, SparkFrame(ups), on=on, txn=txn,
-                       txn_expect={app: applied[app]
-                                   for app, _ in txn})
-    except SnapshotTxnConflict:
-        now = {app: snapshot_txn_version(sd, app)
-               for app, _ in targets}
-        if all(now[app] is not None and now[app] >= tv
-               for app, tv in targets):
+        n_dd = dd.count()
+        if not n_dd:
+            # nothing for c in the interval — advance the watermark
+            # anyway with a METADATA-ONLY commit: a column that goes
+            # quiet must not pin its state watermark while the view
+            # advances, or every later refresh re-walks a
+            # monotonically GROWING (still-empty-for-c) interval
+            try:
+                snapshot_set_txn(sd, txn, txn_expect=expect)
+            except SnapshotTxnConflict:
+                pass        # a racing maintainer advanced it — fine
             return
-        raise
+        cur = _plain(snapshot_read(spark, sd))
+        on = [*keys, c]
+        touched = cur.join(_maybe_broadcast(dd.select(*on), n_dd),
+                           on=on, how="left_semi")
+        ups = dd.join(touched, on=on, how="left").select(
+            *on,
+            (F.coalesce(F.col("dcnt"), F.lit(0)) + F.col("__d__"))
+            .cast("long").alias("dcnt")).localCheckpoint(eager=True)
+        try:
+            snapshot_merge(spark, sd, SparkFrame(ups), on=on, txn=txn,
+                           txn_expect=expect)
+        except SnapshotTxnConflict:
+            now = {app: snapshot_txn_version(sd, app)
+                   for app, _ in targets}
+            if not all(now[app] is not None and now[app] >= tv
+                       for app, tv in targets):
+                raise
+    finally:
+        _release_checkpoint(dd)
+        _release_checkpoint(ups)
 
 
 def matview_create(spark: SparkSession, source_dir: str,
@@ -373,7 +409,10 @@ def matview_create(spark: SparkSession, source_dir: str,
     *source_dir* at *version* (default: its latest) into the snapshot
     table *view_dir*, and record the consumed source version so
     ``matview_refresh`` can continue from the change feed. Returns
-    the source version the view reflects.
+    the source version the view reflects. A single-table view is the
+    star view with no dims (``matview_create_star`` with ``dims=()``):
+    the source is its fact, and the consumed version rides the view's
+    commits as the ``matview`` txn watermark.
 
     ``keys`` may be plain column names OR a dict declaring DERIVED
     group keys — ``keys={"day": "date_trunc('day', ts)"}`` gives the
@@ -433,88 +472,13 @@ def matview_create(spark: SparkSession, source_dir: str,
     retained value); past capacity estimates carry KLL's rank error
     (~1.65/sqrt(k) — <6% at the default k=800; FLAGGED approximate,
     never silently exact)."""
-    from cl_data_frame_spark.sources.snapshots import (
-        _latest_version, snapshot_read, snapshot_write)
-    keys, key_exprs = _parse_keys(keys)
-    measure_cols = list(measure_cols)
-    distinct_cols = list(distinct_cols)
-    distinct_approx_cols = list(distinct_approx_cols)
-    quantile_cols = list(quantile_cols)
-    quantile_probs = [float(p) for p in quantile_probs]
-    if version is None:
-        version = _latest_version(source_dir)
-        if version is None:
-            raise FileNotFoundError(
-                f"no snapshot versions in {source_dir}")
-    base = _plain(snapshot_read(spark, source_dir, version=version))
-    plain_keys = [k for k in keys if k not in key_exprs]
-    missing = [c for c in [*plain_keys, *measure_cols,
-                           *distinct_cols, *distinct_approx_cols,
-                           *quantile_cols]
-               if c not in base.columns]
-    if missing:
-        raise ValueError(
-            f"columns {missing} not in source table "
-            f"(has {base.columns})")
-    shadow = [k for k in key_exprs if k in base.columns]
-    if shadow:
-        raise ValueError(
-            f"derived key name(s) {shadow} collide with source "
-            f"columns — pick fresh output names")
-    bad = [c for c in [*distinct_cols, *distinct_approx_cols]
-           if c in keys]
-    if bad:
-        raise ValueError(
-            f"distinct_cols {bad} are group keys — COUNT(DISTINCT) "
-            f"of a key within its own group is constant 1")
-    both = sorted(set(distinct_cols) & set(distinct_approx_cols))
-    if both:
-        raise ValueError(
-            f"columns {both} in BOTH distinct_cols and "
-            f"distinct_approx_cols — pick one per column")
-    badq = [c for c in quantile_cols if c in keys]
-    if badq:
-        raise ValueError(
-            f"quantile_cols {badq} are group keys — every quantile "
-            f"of a key within its own group is the key itself")
-    base = _project_keys(base, key_exprs, "the source table")
-    if where is not None:
-        base = base.where(F.expr(where))
-    # distinct states land BEFORE the view commit: a crash in
-    # between leaves a retriable create (overwrite + txn_reset
-    # replaces everything), never a view without its state
-    for c in distinct_cols:
-        snapshot_write(SparkFrame(_dstate_build(base, keys, c)),
-                       _dstate_dir(view_dir, c), mode="overwrite",
-                       stats_cols=[*keys, c],
-                       txn=(_APP_ID, version), txn_reset=True)
-    # one materialization feeds both the null-key check and the write
-    agg = _full_agg(base, keys, measure_cols, scale, distinct_cols,
-                    distinct_approx_cols, quantile_cols, kll_k) \
-        .localCheckpoint(eager=False)
-    _check_keys_nonnull(agg, keys, "matview_create")
-    snapshot_write(SparkFrame(agg), view_dir, mode="overwrite",
-                   num_files=num_files, stats_cols=keys,
-                   txn=(_APP_ID, version), txn_reset=True)
-    meta = {
-        "source_dir": os.path.abspath(source_dir),
-        "keys": keys, "measure_cols": measure_cols,
-        "scale": scale, "source_version": version,
-    }
-    if key_exprs:
-        meta["key_exprs"] = key_exprs
-    if distinct_cols:
-        meta["distinct_cols"] = distinct_cols
-    if distinct_approx_cols:
-        meta["distinct_approx_cols"] = distinct_approx_cols
-    if quantile_cols:
-        meta["quantile_cols"] = quantile_cols
-        meta["quantile_probs"] = quantile_probs
-        meta["kll_k"] = int(kll_k)
-    if where is not None:
-        meta["where"] = where
-    _write_meta(view_dir, meta)
-    return version
+    return matview_create_star(
+        spark, source_dir, (), view_dir, keys, measure_cols,
+        scale=scale, fact_version=version, num_files=num_files,
+        where=where, distinct_cols=distinct_cols,
+        distinct_approx_cols=distinct_approx_cols,
+        quantile_cols=quantile_cols, quantile_probs=quantile_probs,
+        kll_k=kll_k)[0]
 
 
 def matview_create_join(spark: SparkSession, fact_dir: str,
@@ -536,13 +500,13 @@ def matview_create_join(spark: SparkSession, fact_dir: str,
     """Materialize ``SELECT keys, aggregates(measures) FROM fact
     INNER JOIN dim ON fact.fk = dim.pk GROUP BY keys`` into the
     snapshot table *view_dir*, maintained INCREMENTALLY from BOTH
-    tables' change feeds (delta-join IVM — see ``_refresh_star``).
+    tables' change feeds (delta-join IVM — see ``_refresh_once``).
     ``on`` is a column name shared by both tables or a
     ``(fact_col, dim_col)`` pair; keys and measures may come from
     either side (a name present in both raises — the maintenance
     join could not attribute it). Returns the consumed
     ``(fact_version, dim_version)`` pair; both ride the view's
-    commits as independent txn watermarks (``matview.fact`` /
+    commits as independent txn watermarks (``matview`` /
     ``matview.dim``), so refresh is exactly-once per source and
     CAS-protected against concurrent maintainers. The one-dim
     special case of ``matview_create_star``."""
@@ -578,20 +542,24 @@ def matview_create_star(spark: SparkSession, fact_dir: str,
     INNER JOIN dim_k`` (each dim joins the FACT on its own key),
     grouped and aggregated, maintained incrementally from ALL k+1
     change feeds. *dims* is a list of ``(dim_dir, on)`` with ``on``
-    a shared column name or ``(fact_col, dim_col)``. Every consumed
+    a shared column name or ``(fact_col, dim_col)``; with no dims it
+    is the single-table view ``matview_create`` builds. Every consumed
     version rides the view's commits as its own txn watermark
-    (``matview.fact``, ``matview.dim``, ``matview.dim2``, ...), all
-    CAS'd in one commit. Returns ``(fact_version, [dim_versions])``.
+    (``matview`` for the fact, ``matview.dim``, ``matview.dim2``, ...),
+    all CAS'd in one commit. Returns ``(fact_version,
+    [dim_versions])``.
 
     ``keys`` accepts the same derived-key dict as ``matview_create``
     (``{"day": "date_trunc('day', o_orderdate)"}``); the expression
     evaluates on the JOINED row, so it may reference fact and dim
-    columns alike — the referenced columns are attributed through the
-    maintenance joins and the projection runs on every telescoped
-    change term.
+    columns alike. The columns a derived key or the ``where=``
+    predicate references are attributed through the maintenance
+    joins like keys and measures, and both expressions run on every
+    telescoped change term.
     """
     from cl_data_frame_spark.sources.snapshots import (
-        _latest_version, snapshot_read, snapshot_write)
+        _latest_version, _release_checkpoint, snapshot_read,
+        snapshot_write)
     keys, key_exprs = _parse_keys(keys)
     measure_cols = list(measure_cols)
     distinct_cols = list(distinct_cols)
@@ -614,9 +582,6 @@ def matview_create_star(spark: SparkSession, fact_dir: str,
         raise ValueError(
             f"columns {both} in BOTH distinct_cols and "
             f"distinct_approx_cols — pick one per column")
-    if not dims:
-        raise ValueError("a star view needs at least one dim — use "
-                         "matview_create for a single-table view")
     if fact_version is None:
         fact_version = _latest_version(fact_dir)
     if fact_version is None:
@@ -647,73 +612,51 @@ def matview_create_star(spark: SparkSession, fact_dir: str,
                 f"join column {sp['fact_on']!r} not in fact table "
                 f"({fact.columns})")
         dim_dfs.append(ddf)
-    # column ownership: every key/measure must live in exactly ONE
-    # table (the shared join-key name is attributed to the fact).
-    # DERIVED keys attribute their REFERENCED columns instead — the
-    # expression itself evaluates on the joined row, so its deps may
-    # even span fact and dims
+    # DERIVED keys and the where-predicate attribute their REFERENCED
+    # columns — the expressions evaluate on the joined row, so their
+    # deps may even span fact and dims
     plain_keys = [k for k in keys if k not in key_exprs]
     avail = set(fact.columns).union(
         *[set(d.columns) for d in dim_dfs])
     shadow = [k for k in key_exprs if k in avail]
     if shadow:
         raise ValueError(
-            f"derived key name(s) {shadow} collide with fact/dim "
+            f"derived key name(s) {shadow} collide with source "
             f"columns — pick fresh output names")
-    deps = sorted({d for sql in key_exprs.values()
+    deps = sorted({d for sql in [*key_exprs.values(), where or ""]
                    for d in _expr_deps(sql, avail)})
-    need = [*plain_keys, *measure_cols,
-            *[c for c in [*distinct_cols, *distinct_approx_cols,
-                          *quantile_cols, *deps]
-              if c not in plain_keys and c not in measure_cols]]
-    fcols, dcols = [], [[] for _ in specs]
-    for c in need:
-        owners = []
-        if c in fact.columns:
-            owners.append(-1)
-        for di, ddf in enumerate(dim_dfs):
-            if c in ddf.columns:
-                sp = specs[di]
-                if c == sp["fact_on"] == sp["dim_on"] \
-                        and -1 in owners:
-                    continue       # the shared join key: fact owns
-                owners.append(di)
-        if not owners:
-            raise ValueError(
-                f"column {c!r} in neither the fact nor any dim")
-        if len(owners) > 1:
-            raise ValueError(
-                f"column {c!r} exists in BOTH tables — the "
-                f"maintenance join cannot attribute it; rename one "
-                f"side (the join key itself is fine when named the "
-                f"same on both sides)")
-        if owners[0] == -1:
-            fcols.append(c)
-        else:
-            dcols[owners[0]].append(c)
+    need = list(dict.fromkeys([
+        *plain_keys, *measure_cols, *distinct_cols,
+        *distinct_approx_cols, *quantile_cols, *deps]))
+    fcols, dcols = _attribute(need, fact.columns, specs,
+                              [d.columns for d in dim_dfs])
     joined = _project_keys(
         _star_join(fact, specs, dim_dfs, fcols, dcols, need),
-        key_exprs, "the joined tables")
+        key_exprs, "the source tables")
     if where is not None:
         joined = joined.where(F.expr(where))
-    txn = [(_F_APP, fact_version)]
-    for di, sp in enumerate(specs):
-        txn.append((_dim_app(di), sp["version"]))
-    # distinct states land BEFORE the view commit (see matview_create)
+    txn = list(zip(_apps(len(specs)),
+                   [fact_version, *(sp["version"] for sp in specs)]))
+    # distinct states land BEFORE the view commit: a crash in
+    # between leaves a retriable create (overwrite + txn_reset
+    # replaces everything), never a view without its state
     for c in distinct_cols:
         snapshot_write(SparkFrame(_dstate_build(joined, keys, c)),
                        _dstate_dir(view_dir, c), mode="overwrite",
                        stats_cols=[*keys, c], txn=txn,
                        txn_reset=True)
+    # one materialization feeds both the null-key check and the write
     agg = _full_agg(joined, keys, measure_cols, scale,
                     distinct_cols, distinct_approx_cols,
                     quantile_cols, kll_k).localCheckpoint(eager=False)
-    _check_keys_nonnull(agg, keys, "matview_create_star")
-    snapshot_write(SparkFrame(agg), view_dir, mode="overwrite",
-                   num_files=num_files, stats_cols=keys, txn=txn,
-                   txn_reset=True)
+    try:
+        _check_keys_nonnull(agg, keys, "matview_create")
+        snapshot_write(SparkFrame(agg), view_dir, mode="overwrite",
+                       num_files=num_files, stats_cols=keys, txn=txn,
+                       txn_reset=True)
+    finally:
+        _release_checkpoint(agg)
     meta = {
-        "kind": "star",
         "fact_dir": os.path.abspath(fact_dir),
         "dims": [{**sp, "cols": dcols[di]}
                  for di, sp in enumerate(specs)],
@@ -735,6 +678,35 @@ def matview_create_star(spark: SparkSession, fact_dir: str,
         meta["where"] = where
     _write_meta(view_dir, meta)
     return fact_version, [sp["version"] for sp in specs]
+
+
+def _attribute(cols, fact_cols, specs, dim_cols) -> tuple[list, list]:
+    """Split *cols* into the columns the fact owns and those each dim
+    owns (*dim_cols* lists each dim's columns). Every column must live
+    in exactly ONE table, or the maintenance join could not carry it;
+    a join key named the same on both sides belongs to the fact."""
+    fcols, dcols, missing = [], [[] for _ in specs], []
+    for c in cols:
+        owners = [-1] if c in fact_cols else []
+        for di, sp in enumerate(specs):
+            if c in dim_cols[di] and not (
+                    c == sp["fact_on"] == sp["dim_on"] and -1 in owners):
+                owners.append(di)
+        if not owners:
+            missing.append(c)
+        elif len(owners) > 1:
+            raise ValueError(
+                f"column {c!r} exists in BOTH tables — the "
+                f"maintenance join cannot attribute it; rename one "
+                f"side (the join key itself is fine when named the "
+                f"same on both sides)")
+        else:
+            (fcols if owners[0] == -1 else dcols[owners[0]]).append(c)
+    if missing:
+        raise ValueError(
+            f"columns {missing} not in source table: in neither the "
+            f"fact ({list(fact_cols)}) nor any dim")
+    return fcols, dcols
 
 
 def _star_join(fact, specs, dim_dfs, fcols, dcols, out_cols):
@@ -810,16 +782,18 @@ def _delta_agg(changes: DataFrame, keys: list[str],
 def matview_refresh(spark: SparkSession, view_dir: str,
                     to_version: int | None = None,
                     max_retries: int = 5) -> dict:
-    """Advance the view to the source's *to_version* (default: its
-    latest) by consuming the change feed since the last refresh.
-    Cost O(changed rows + touched groups); ONE snapshot_merge commit
-    on the view, carrying the ``("matview", to_version)`` txn
-    watermark (re-running a crashed refresh is a no-op once the
-    commit landed). CONCURRENT maintainers are safe too: the commit
-    compare-and-swaps the watermark (``txn_expect``) — a refresher
-    whose planned-from watermark moved under it aborts before
-    double-applying its delta and retries from the new watermark.
-    Returns a summary dict."""
+    """Advance the view to the fact's *to_version* (default: its
+    latest; a ``(fact, dim_1, ..., dim_k)`` tuple pins each source,
+    None entries meaning latest) by consuming the change feeds since
+    the last refresh. Cost O(changed rows + touched groups); ONE
+    snapshot_merge commit on the view, carrying the fact's
+    ``("matview", version)`` txn watermark and each advanced dim's
+    (re-running a crashed refresh is a no-op once the commit landed).
+    CONCURRENT maintainers are safe too: the commit compare-and-swaps
+    the watermarks (``txn_expect``) — a refresher whose planned-from
+    watermark moved under it aborts before double-applying its delta
+    and retries from the new watermark. Returns a summary dict (see
+    ``_refresh_once``)."""
     from cl_data_frame_spark.sources.snapshots import (
         SnapshotTxnConflict)
     last: Exception | None = None
@@ -837,7 +811,7 @@ def matview_refresh_chunked(spark: SparkSession, view_dir: str,
                             to_version=None,
                             max_feed_files: int = 1000
                             ) -> list[dict]:
-    """CATCH-UP refresh with bounded per-commit work: the source
+    """CATCH-UP refresh with bounded per-commit work: the fact's
     change interval is walked in version-aligned chunks under the
     same *max_feed_files* admission rule as
     ``snapshot_changes_paged`` / the streaming source's
@@ -846,59 +820,24 @@ def matview_refresh_chunked(spark: SparkSession, view_dir: str,
     view a year behind catches up as a sequence of bounded jobs
     instead of planning the whole year at once, and a crash mid
     catch-up resumes from the last committed chunk's watermark for
-    free. Star views chunk the FACT feed (dims pinned at their
-    applied versions — every intermediate state is the consistent
-    view at (fact_chunk, dims_old)) and advance the dims in one
-    final refresh. Returns the list of per-chunk summaries."""
+    free. Dims stay pinned at their applied versions while the fact
+    chunks (every intermediate state is the consistent view at
+    (fact_chunk, dims_old)) and advance in one final refresh, a
+    no-op when the view has no dims or nothing is left. Returns the
+    list of per-chunk summaries."""
     from cl_data_frame_spark.sources.snapshots import (
-        _latest_version, snapshot_change_chunks,
-        snapshot_txn_version)
+        _latest_version, snapshot_change_chunks)
     meta = _read_meta(view_dir)
-    out: list[dict] = []
-    if meta.get("kind") in ("join", "star"):
-        sm = _star_meta(meta)
-        fact_dir = sm["fact_dir"]
-        fa = snapshot_txn_version(view_dir, _F_APP)
-        fa = int(sm["fact_version"]) if fa is None else fa
-        das = []
-        for i, sp in enumerate(sm["dims"]):
-            da = snapshot_txn_version(view_dir, _dim_app(i))
-            das.append(int(sp["version"]) if da is None else da)
-        ft, _dts = _star_targets(
-            to_version, _latest_version(fact_dir),
-            [_latest_version(sp["dir"]) for sp in sm["dims"]])
-        for end in snapshot_change_chunks(fact_dir, fa,
-                                          max(ft, fa),
-                                          max_feed_files):
-            out.append(matview_refresh(
-                spark, view_dir, to_version=(end, *das)))
-        out.append(matview_refresh(spark, view_dir,
-                                   to_version=to_version))
-        return out
-    src_dir = meta["source_dir"]
-    applied = snapshot_txn_version(view_dir, _APP_ID)
-    if applied is None:
-        applied = int(meta["source_version"])
-    target = to_version if to_version is not None \
-        else _latest_version(src_dir)
-    if target is None:
-        raise FileNotFoundError(f"no snapshot versions in {src_dir}")
-    for end in snapshot_change_chunks(src_dir, applied,
-                                      max(target, applied),
-                                      max_feed_files):
-        out.append(matview_refresh(spark, view_dir, to_version=end))
-    if not out:
-        out.append(matview_refresh(spark, view_dir,
-                                   to_version=target))
+    (fa, *das), _ = _applied(view_dir, meta)
+    ft, _dts = _star_targets(
+        to_version, _latest_version(meta["fact_dir"]),
+        [_latest_version(sp["dir"]) for sp in meta["dims"]])
+    out = [matview_refresh(spark, view_dir, to_version=(end, *das))
+           for end in snapshot_change_chunks(
+               meta["fact_dir"], fa, max(ft, fa), max_feed_files)]
+    out.append(matview_refresh(spark, view_dir,
+                               to_version=to_version))
     return out
-
-
-def _refresh_once(spark: SparkSession, view_dir: str,
-                  to_version) -> dict:
-    meta = _read_meta(view_dir)
-    if meta.get("kind") in ("join", "star"):
-        return _refresh_star(spark, view_dir, meta, to_version)
-    return _refresh_single(spark, view_dir, meta, to_version)
 
 
 def _eq_dnf_prune(keys: list[str], key_rows) -> list | None:
@@ -912,120 +851,6 @@ def _eq_dnf_prune(keys: list[str], key_rows) -> list | None:
     if len(keys) == 1:
         return [(keys[0], "in", [r[keys[0]] for r in key_rows])]
     return [[(k, "==", r[k]) for k in keys] for r in key_rows]
-
-
-def _refresh_single(spark: SparkSession, view_dir: str, meta: dict,
-                    to_version) -> dict:
-    from cl_data_frame_spark.sources.snapshots import (
-        _latest_version, snapshot_changes, snapshot_read,
-        snapshot_txn_version)
-    src_dir = meta["source_dir"]
-    keys = list(meta["keys"])
-    measure_cols = list(meta["measure_cols"])
-    target = to_version if to_version is not None \
-        else _latest_version(src_dir)
-    if target is None:
-        raise FileNotFoundError(f"no snapshot versions in {src_dir}")
-    # the commit-riding watermark is the truth; the meta file is only
-    # a cache of it (a crash between merge-commit and meta write must
-    # NOT double-apply the delta)
-    applied = snapshot_txn_version(view_dir, _APP_ID)
-    # CAS only against a RECORDED watermark (matview_create always
-    # records one; the meta-file fallback has nothing to swap on)
-    cas_expect = applied
-    if applied is None:
-        applied = int(meta["source_version"])
-    if target <= applied:
-        if meta.get("source_version") != applied:
-            _write_meta(view_dir, {**meta, "source_version": applied})
-        return {"mode": "noop", "from_version": applied,
-                "to_version": applied}
-    where = meta.get("where")
-    key_exprs = meta.get("key_exprs") or {}
-    plain_keys = [k for k in keys if k not in key_exprs]
-    distinct_cols = list(meta.get("distinct_cols") or ())
-    approx_cols = list(meta.get("distinct_approx_cols") or ())
-    quantile_cols = list(meta.get("quantile_cols") or ())
-
-    def feed_fn(from_map):
-        ch = _plain(snapshot_changes(
-            spark, src_dir, from_version=from_map[_APP_ID],
-            to_version=target))
-        gone = [c for c in [*plain_keys, *measure_cols,
-                            *distinct_cols, *approx_cols,
-                            *quantile_cols]
-                if c not in ch.columns]
-        if gone:
-            raise ValueError(
-                f"view columns {gone} no longer exist in the "
-                f"source's change feed (schema evolution renamed or "
-                f"dropped them) — recreate the view with "
-                f"matview_create")
-        ch = _project_keys(ch, key_exprs, "the change feed")
-        if where is not None:
-            # row-local predicate: each change row filters
-            # independently, so the filtered feed maintains the
-            # filtered view exactly
-            try:
-                ch = ch.where(F.expr(where))
-            except Exception as exc:
-                raise ValueError(
-                    f"the view's where-predicate {where!r} no "
-                    f"longer evaluates against the change feed "
-                    f"(schema evolution?) — recreate the view: "
-                    f"{exc}") from exc
-        return ch
-
-    changes = feed_fn({_APP_ID: applied})
-
-    def repair_reader(key_rows):
-        # a bounded repair set reads the base through an IN / DNF
-        # predicate: stats/bloom/partition-tuple file skipping makes
-        # the repair scan touch only files that can hold those groups.
-        # DERIVED keys are not stored source columns — the prune uses
-        # the plain subset (sound: a superset of the files is read;
-        # the recompute still joins on the full key tuple)
-        base = _plain(snapshot_read(
-            spark, src_dir, version=target,
-            where=_eq_dnf_prune(plain_keys, key_rows)))
-        base = _project_keys(base, key_exprs, "the source table")
-        if where is not None:
-            base = base.where(F.expr(where))
-        return base
-
-    return _apply_feed(
-        spark, view_dir, meta, changes, repair_reader,
-        txn=(_APP_ID, target), txn_expect=cas_expect,
-        meta_done={"source_version": target},
-        meta_noop={"source_version": applied},
-        summary={"from_version": applied, "to_version": target},
-        feed_ctx={"feed_fn": feed_fn,
-                  "targets": [(_APP_ID, target)],
-                  "view_applied": {_APP_ID: applied}})
-
-
-_F_APP = "matview.fact"
-_D_APP = "matview.dim"
-
-
-def _dim_app(di: int) -> str:
-    return _D_APP if di == 0 else f"{_D_APP}{di + 1}"
-
-
-def _star_meta(meta: dict) -> dict:
-    """Normalize a legacy one-dim ``kind=join`` meta to the star
-    shape (kind=star, dims list)."""
-    if meta.get("kind") != "join":
-        return meta
-    return {**{k: v for k, v in meta.items()
-               if k not in ("dim_dir", "fact_on", "dim_on",
-                            "dim_cols", "dim_version")},
-            "kind": "star",
-            "dims": [{"dir": meta["dim_dir"],
-                      "fact_on": meta["fact_on"],
-                      "dim_on": meta["dim_on"],
-                      "cols": meta["dim_cols"],
-                      "version": meta["dim_version"]}]}
 
 
 def _star_targets(to_version, f_latest, d_latests):
@@ -1043,13 +868,13 @@ def _star_targets(to_version, f_latest, d_latests):
     return int(to_version), list(d_latests)
 
 
-def _refresh_star(spark: SparkSession, view_dir: str, meta: dict,
+def _refresh_once(spark: SparkSession, view_dir: str,
                   to_version) -> dict:
-    """Delta-join IVM for star views (the Gupta-Mumick construction
-    for SPJ views with aggregation, fact F and dims D_1..D_k all
-    under DML). Writing the multiset update (F+ΔF)⋈Π(D_i+ΔD_i) −
-    F⋈ΠD_i as a telescoping sum, the view's change set for one
-    refresh interval is
+    """One refresh attempt: delta-join IVM (the Gupta-Mumick
+    construction for SPJ views with aggregation, fact F and dims
+    D_1..D_k all under DML). Writing the multiset update
+    (F+ΔF)⋈Π(D_i+ΔD_i) − F⋈ΠD_i as a telescoping sum, the view's
+    change set for one refresh interval is
 
         ΔF ⋈ D_1^new ⋈ ... ⋈ D_k^new
       ∪ F^old ⋈ D_1^old..D_{i-1}^old ⋈ ΔD_i ⋈ D_{i+1}^new..D_k^new
@@ -1057,63 +882,57 @@ def _refresh_star(spark: SparkSession, view_dir: str, meta: dict,
 
     — each term joins the CHANGED table's signed delta against the
     others at old versions to its left and new versions to its
-    right, so every cross term is counted exactly once. Signs ride
+    right, so every cross term is counted exactly once. With no dims
+    the change set is ΔF alone: the single-table view. Signs ride
     the change rows, and everything downstream (signed per-group
     delta aggregation, arithmetic merge, min/max repair, tombstones)
-    is exactly the single-source path. F^old / D_i^old are
-    TIME-TRAVEL reads pinned at the versions the view last consumed;
-    a bounded dim delta's key set IN-prunes the fact read, so a
-    dim-side trickle never rescans the fact table. The one commit
-    carries every advanced source's watermark and CAS-checks all of
-    them (a concurrent maintainer aborts instead of double-applying).
+    is ``_apply_feed``. F^old / D_i^old are TIME-TRAVEL reads pinned
+    at the versions the view last consumed; a bounded dim delta's key
+    set IN-prunes the fact read, so a dim-side trickle never rescans
+    the fact table. The one commit carries every advanced source's
+    watermark and CAS-checks all of them (a concurrent maintainer
+    aborts instead of double-applying). The summary's
+    ``from_version`` / ``to_version`` are the fact's versions for a
+    view with no dims, ``(fact, dim_1, ..., dim_k)`` tuples
+    otherwise.
     """
     from cl_data_frame_spark.sources.snapshots import (
-        _latest_version, snapshot_changes, snapshot_read,
-        snapshot_txn_version)
-    meta = _star_meta(meta)
+        _latest_version, _release_checkpoint, snapshot_changes,
+        snapshot_read)
+    meta = _read_meta(view_dir)
     fact_dir = meta["fact_dir"]
     dims = meta["dims"]
+    apps = _apps(len(dims))
     keys = list(meta["keys"])
     measure_cols = list(meta["measure_cols"])
-    distinct_cols = list(meta.get("distinct_cols") or ())
-    approx_cols = list(meta.get("distinct_approx_cols") or ())
     fcols = list(meta["fact_cols"])
     dcols = [list(sp["cols"]) for sp in dims]
     key_exprs = meta.get("key_exprs") or {}
-    quantile_cols = list(meta.get("quantile_cols") or ())
     # the OUTPUT columns of each feed term: derived keys exist after
     # the projection (their dependency columns ride fcols/dcols, as
     # attributed at create)
-    need = [*keys, *measure_cols,
-            *[c for c in [*distinct_cols, *approx_cols,
-                          *quantile_cols]
-              if c not in keys and c not in measure_cols]]
+    need = list(dict.fromkeys([
+        *keys, *measure_cols, *(meta.get("distinct_cols") or ()),
+        *(meta.get("distinct_approx_cols") or ()),
+        *(meta.get("quantile_cols") or ())]))
     f_latest = _latest_version(fact_dir)
     d_latests = [_latest_version(sp["dir"]) for sp in dims]
     if f_latest is None or any(v is None for v in d_latests):
         raise FileNotFoundError(
             f"no snapshot versions in {fact_dir} / dims")
     ft, dts = _star_targets(to_version, f_latest, d_latests)
-    f_applied = snapshot_txn_version(view_dir, _F_APP)
-    d_applieds = [snapshot_txn_version(view_dir, _dim_app(i))
-                  for i in range(len(dims))]
-    cas = {}
-    if f_applied is not None:
-        cas[_F_APP] = f_applied
-    for i, da in enumerate(d_applieds):
-        if da is not None:
-            cas[_dim_app(i)] = da
-    if f_applied is None:
-        f_applied = int(meta["fact_version"])
-    d_applieds = [int(dims[i]["version"]) if da is None else da
-                  for i, da in enumerate(d_applieds)]
+    (f_applied, *d_applieds), cas = _applied(view_dir, meta)
     ft = max(ft, f_applied)
     dts = [max(t, a) for t, a in zip(dts, d_applieds)]
+
+    def versions(f, ds):
+        return (f, *ds) if dims else f
+
     if ft <= f_applied and all(t <= a for t, a
                                in zip(dts, d_applieds)):
         return {"mode": "noop",
-                "from_version": (f_applied, *d_applieds),
-                "to_version": (f_applied, *d_applieds)}
+                "from_version": versions(f_applied, d_applieds),
+                "to_version": versions(f_applied, d_applieds)}
     where = meta.get("where")
 
     def dim_at(i, v):
@@ -1124,7 +943,7 @@ def _refresh_star(spark: SparkSession, view_dir: str, meta: dict,
             raise ValueError(
                 f"view columns {gone} no longer exist in dim "
                 f"{dims[i]['dir']} (schema evolution) — recreate "
-                f"with matview_create_star")
+                f"the view")
         return ddf.select(
             F.col(dims[i]["dim_on"]).alias(f"__jk{i}__"), *dcols[i])
 
@@ -1134,6 +953,27 @@ def _refresh_star(spark: SparkSession, view_dir: str, meta: dict,
               for i in range(len(dims))],
             *fcols, *extra)
 
+    def evaluated(sdf, what):
+        """*sdf* with the derived keys projected and the where-filter
+        applied."""
+        sdf = _project_keys(sdf, key_exprs, what)
+        if where is not None:
+            # row-local predicate: each change row filters
+            # independently, so the filtered feed maintains the
+            # filtered view exactly
+            try:
+                sdf = sdf.where(F.expr(where))
+            except Exception as exc:
+                raise ValueError(
+                    f"the view's where-predicate {where!r} no longer "
+                    f"evaluates against {what} (schema evolution?) — "
+                    f"recreate the view: {exc}") from exc
+        return sdf
+
+    # the dim deltas' checkpoints (those of the feeds rebuilt for
+    # _advance_dstate too), released once the view commit has landed
+    # or failed
+    pinned: list[DataFrame] = []
     feed_stats = {"fact_full_scan": False, "pruned_keys": 0}
 
     def build_feed(f_from, d_froms, stats=None):
@@ -1158,8 +998,8 @@ def _refresh_star(spark: SparkSession, view_dir: str, meta: dict,
             if gone:
                 raise ValueError(
                     f"view columns {gone} no longer exist in the "
-                    f"fact change feed (schema evolution) — recreate "
-                    f"with matview_create_star")
+                    f"fact change feed (schema evolution renamed or "
+                    f"dropped them) — recreate the view")
             # ΔF ⋈ every dim at its NEW version; the delta keeps its
             # sign; AQE broadcasts small sides at runtime
             t = fact_sel(ff, extra=("_change_type",))
@@ -1180,11 +1020,12 @@ def _refresh_star(spark: SparkSession, view_dir: str, meta: dict,
                 raise ValueError(
                     f"view columns {gone} no longer exist in dim "
                     f"{dims[i]['dir']}'s change feed (schema "
-                    f"evolution) — recreate with matview_create_star")
+                    f"evolution) — recreate the view")
             dd = dd.select(
                 F.col(dims[i]["dim_on"]).alias(f"__jk{i}__"),
                 *dcols[i], "_change_type") \
                 .localCheckpoint(eager=True)
+            pinned.append(dd)
             # F^old ⋈ ΔD_i: the dim delta's sign rides onto every
             # matching fact row; a bounded delta key set IN-prunes
             # the fact time-travel read
@@ -1224,25 +1065,16 @@ def _refresh_star(spark: SparkSession, view_dir: str, meta: dict,
         ch = parts[0]
         for pdf in parts[1:]:
             ch = ch.unionByName(pdf)
-        ch = _project_keys(ch, key_exprs, "the joined change rows")
-        ch = ch.select(*need, "_change_type")
-        if where is not None:
-            try:
-                ch = ch.where(F.expr(where))
-            except Exception as exc:
-                raise ValueError(
-                    f"the view's where-predicate {where!r} no "
-                    f"longer evaluates against the joined change "
-                    f"rows (schema evolution?) — recreate the view: "
-                    f"{exc}") from exc
-        return ch
+        return evaluated(ch, "the change feed") \
+            .select(*need, "_change_type")
 
-    changes = build_feed(f_applied, d_applieds, stats=feed_stats)
+    # the repair read prunes on the PLAIN keys the fact owns (sound:
+    # a superset of the files is read; the recompute still joins on
+    # the full key tuple)
+    prune_keys = [k for k in keys if k not in key_exprs and k in fcols]
 
     def repair_reader(key_rows):
-        prune = _eq_dnf_prune(keys, key_rows) \
-            if key_rows is not None and set(keys) <= set(fcols) \
-            else None
+        prune = _eq_dnf_prune(prune_keys, key_rows)
         fact = _plain(snapshot_read(spark, fact_dir, version=ft,
                                     where=prune))
         dim_news = [dim_at(i, dts[i]) for i in range(len(dims))]
@@ -1270,39 +1102,32 @@ def _refresh_star(spark: SparkSession, view_dir: str, meta: dict,
         for i in range(len(dims)):
             base = base.join(dim_news[i], on=f"__jk{i}__",
                              how="inner")
-        base = _project_keys(base, key_exprs, "the joined tables")
-        base = base.select(*need)
-        if where is not None:
-            base = base.where(F.expr(where))
-        return base
+        return evaluated(base, "the source tables").select(*need)
 
-    txn = []
-    if ft > f_applied:
-        txn.append((_F_APP, ft))
-    for i in range(len(dims)):
-        if dts[i] > d_applieds[i]:
-            txn.append((_dim_app(i), dts[i]))
-    meta_done = {"fact_version": ft,
-                 "dims": [{**sp, "version": dts[i]}
-                          for i, sp in enumerate(dims)]}
-    meta_noop = {"fact_version": f_applied,
-                 "dims": [{**sp, "version": d_applieds[i]}
-                          for i, sp in enumerate(dims)]}
-    all_targets = [(_F_APP, ft)] + [(_dim_app(i), dts[i])
-                                    for i in range(len(dims))]
-    return _apply_feed(
-        spark, view_dir, meta, changes, repair_reader,
-        txn=txn, txn_expect=cas or None,
-        meta_done=meta_done, meta_noop=meta_noop,
-        summary={"from_version": (f_applied, *d_applieds),
-                 "to_version": (ft, *dts), **feed_stats},
-        feed_ctx={"feed_fn": lambda ap: build_feed(
-                      ap[_F_APP],
-                      [ap[_dim_app(i)] for i in range(len(dims))]),
-                  "targets": all_targets,
-                  "view_applied": {_F_APP: f_applied,
-                                   **{_dim_app(i): d_applieds[i]
-                                      for i in range(len(dims))}}})
+    targets = list(zip(apps, [ft, *dts]))
+    view_applied = dict(zip(apps, [f_applied, *d_applieds]))
+    try:
+        changes = build_feed(f_applied, d_applieds, stats=feed_stats)
+        return _apply_feed(
+            spark, view_dir, meta, changes, repair_reader,
+            txn=[(app, t) for app, t in targets
+                 if t > view_applied[app]],
+            txn_expect=cas or None,
+            meta_done={"fact_version": ft,
+                       "dims": [{**sp, "version": dts[i]}
+                                for i, sp in enumerate(dims)]},
+            meta_noop={"fact_version": f_applied,
+                       "dims": [{**sp, "version": d_applieds[i]}
+                                for i, sp in enumerate(dims)]},
+            summary={"from_version": versions(f_applied, d_applieds),
+                     "to_version": versions(ft, dts), **feed_stats},
+            feed_ctx={"feed_fn": lambda ap: build_feed(
+                          ap[_APP_ID], [ap[app] for app in apps[1:]]),
+                      "targets": targets,
+                      "view_applied": view_applied})
+    finally:
+        for df in pinned:
+            _release_checkpoint(df)
 
 
 def _apply_feed(spark: SparkSession, view_dir: str, meta: dict,
@@ -1311,7 +1136,8 @@ def _apply_feed(spark: SparkSession, view_dir: str, meta: dict,
                 summary: dict, feed_ctx: dict | None = None) -> dict:
     """Apply one refresh interval's signed change rows (columns:
     view keys + measures + ``_change_type``) to the stored view —
-    the shared back half of single-source and delta-join refresh:
+    the back half of every refresh, after ``_refresh_once`` has built
+    the (delta-join) change feed:
     per-group signed delta aggregation, arithmetic merge of counts /
     exact-decimal sums, min/max repair via ``repair_reader`` (called
     with the bounded repair-key rows, or None when unbounded), cnt=0
@@ -1571,10 +1397,9 @@ def matview_evolve(spark: SparkSession, view_dir: str,
     view's txn watermarks — the next ``matview_refresh`` maintains old
     and new columns together from the same feed interval. New exact
     distinct columns get their companion state table built at the
-    pinned version under the same watermarks. Works on single-source,
-    join, and star views; on star views the new columns' OWNERSHIP is
-    attributed (fact vs dim) and recorded so the telescoped change
-    terms carry them.
+    pinned version under the same watermarks. The new columns'
+    OWNERSHIP (the fact or one dim) is attributed and recorded, so
+    the telescoped change terms carry them.
 
     Run it quiesced, like ``ann_index_recluster`` or OPTIMIZE — a
     refresh racing the overwrite can fail its merge (it retries
@@ -1583,7 +1408,7 @@ def matview_evolve(spark: SparkSession, view_dir: str,
     backfill recomputes from the same pinned versions). Returns a
     summary dict."""
     from cl_data_frame_spark.sources.snapshots import (
-        snapshot_read, snapshot_txn_version, snapshot_write)
+        _release_checkpoint, snapshot_read, snapshot_write)
     meta = _read_meta(view_dir)
     add_measure_cols = list(add_measure_cols)
     add_distinct_cols = list(add_distinct_cols)
@@ -1629,71 +1454,29 @@ def matview_evolve(spark: SparkSession, view_dir: str,
                 "a view keeps ONE kll_k / quantile_probs setting — "
                 "added quantile columns must match the existing one")
     # --- the base, pinned at the view's applied watermark(s) --------
-    if meta.get("kind") in ("join", "star"):
-        sm = _star_meta(meta)
-        dims = sm["dims"]
-        fa = snapshot_txn_version(view_dir, _F_APP)
-        fa = int(sm["fact_version"]) if fa is None else fa
-        das = []
-        for i, sp in enumerate(dims):
-            da = snapshot_txn_version(view_dir, _dim_app(i))
-            das.append(int(sp["version"]) if da is None else da)
-        fact = _plain(snapshot_read(spark, sm["fact_dir"],
-                                    version=fa))
-        dim_dfs = [_plain(snapshot_read(spark, sp["dir"],
-                                        version=das[i]))
-                   for i, sp in enumerate(dims)]
-        # attribute the NEW columns (fact vs exactly one dim), same
-        # rule as create: the shared join-key name belongs to the fact
-        new_f, new_d = [], [[] for _ in dims]
-        for c in new_cols:
-            owners = []
-            if c in fact.columns:
-                owners.append(-1)
-            for di, ddf in enumerate(dim_dfs):
-                if c in ddf.columns:
-                    sp = dims[di]
-                    if c == sp["fact_on"] == sp["dim_on"] \
-                            and -1 in owners:
-                        continue
-                    owners.append(di)
-            if not owners:
-                raise ValueError(
-                    f"column {c!r} in neither the fact nor any dim")
-            if len(owners) > 1:
-                raise ValueError(
-                    f"column {c!r} exists in BOTH tables — rename "
-                    f"one side")
-            (new_f if owners[0] == -1
-             else new_d[owners[0]]).append(c)
-        fcols = list(sm["fact_cols"]) + new_f
-        dcols = [list(sp["cols"]) + new_d[i]
-                 for i, sp in enumerate(dims)]
-        need = sorted(set([*[k for k in keys if k not in key_exprs],
-                           *fcols, *[c for dc in dcols for c in dc]]))
-        specs = [{**sp} for sp in dims]
-        base = _star_join(fact, specs, dim_dfs, fcols,
-                          dcols, need)
-        base = _project_keys(base, key_exprs, "the joined tables")
-        targets = [(_F_APP, fa)] + [(_dim_app(i), das[i])
-                                    for i in range(len(dims))]
-        meta_update = {"fact_cols": fcols,
-                       "dims": [{**sp, "cols": dcols[i]}
-                                for i, sp in enumerate(dims)]}
-    else:
-        applied = snapshot_txn_version(view_dir, _APP_ID)
-        if applied is None:
-            applied = int(meta["source_version"])
-        base = _plain(snapshot_read(spark, meta["source_dir"],
-                                    version=applied))
-        missing = [c for c in new_cols if c not in base.columns]
-        if missing:
-            raise ValueError(
-                f"columns {missing} not in the source table at the "
-                f"view's applied version {applied}")
-        base = _project_keys(base, key_exprs, "the source table")
-        targets = [(_APP_ID, applied)]
-        meta_update = {}
+    dims = meta["dims"]
+    applied, _ = _applied(view_dir, meta)
+    fact = _plain(snapshot_read(spark, meta["fact_dir"],
+                                version=applied[0]))
+    dim_dfs = [_plain(snapshot_read(spark, sp["dir"],
+                                    version=applied[i + 1]))
+               for i, sp in enumerate(dims)]
+    # attribute the NEW columns (fact vs exactly one dim), the same
+    # rule as create; a new family over a column the view already
+    # carries adds nothing to carry
+    new_f, new_d = _attribute(dict.fromkeys(new_cols), fact.columns,
+                              dims, [d.columns for d in dim_dfs])
+    fcols = list(dict.fromkeys([*meta["fact_cols"], *new_f]))
+    dcols = [list(dict.fromkeys([*sp["cols"], *new_d[i]]))
+             for i, sp in enumerate(dims)]
+    base = _project_keys(
+        _star_join(fact, dims, dim_dfs, fcols, dcols,
+                   [*fcols, *sum(dcols, [])]),
+        key_exprs, "the source tables")
+    targets = list(zip(_apps(len(dims)), applied))
+    meta_update = {"fact_cols": fcols,
+                   "dims": [{**sp, "cols": dcols[i]}
+                            for i, sp in enumerate(dims)]}
     if where is not None:
         base = base.where(F.expr(where))
     # --- new distinct STATE tables at the pinned version ------------
@@ -1722,8 +1505,11 @@ def matview_evolve(spark: SparkSession, view_dir: str,
             f"cntd_{c}", F.coalesce(F.col(f"cntd_{c}"),
                                     F.lit(0).cast("long")))
     out = out.localCheckpoint(eager=True)
-    snapshot_write(SparkFrame(out), view_dir, mode="overwrite",
-                   stats_cols=keys)
+    try:
+        snapshot_write(SparkFrame(out), view_dir, mode="overwrite",
+                       stats_cols=keys)
+    finally:
+        _release_checkpoint(out)
     meta2 = {**meta, **meta_update,
              "measure_cols": meta["measure_cols"]
              + add_measure_cols}
@@ -1758,7 +1544,7 @@ def matview_drop_measures(spark: SparkSession, view_dir: str,
     import shutil
 
     from cl_data_frame_spark.sources.snapshots import (
-        snapshot_read, snapshot_write)
+        _release_checkpoint, snapshot_read, snapshot_write)
     meta = _read_meta(view_dir)
     measure_cols = list(measure_cols)
     distinct_cols = list(distinct_cols)
@@ -1785,10 +1571,13 @@ def matview_drop_measures(spark: SparkSession, view_dir: str,
            for p in ("cntd", "sumd")] \
         + [f"hll_{c}" for c in approx_cols] \
         + [f"kll_{c}" for c in quantile_cols]
-    view = _plain(snapshot_read(spark, view_dir)).drop(*drop)
-    snapshot_write(SparkFrame(view.localCheckpoint(eager=True)),
-                   view_dir, mode="overwrite",
-                   stats_cols=list(meta["keys"]))
+    view = _plain(snapshot_read(spark, view_dir)).drop(*drop) \
+        .localCheckpoint(eager=True)
+    try:
+        snapshot_write(SparkFrame(view), view_dir, mode="overwrite",
+                       stats_cols=list(meta["keys"]))
+    finally:
+        _release_checkpoint(view)
     meta2 = {**meta,
              "measure_cols": [c for c in meta["measure_cols"]
                               if c not in measure_cols]}
@@ -1817,7 +1606,7 @@ def matview_refresh_stream(spark: SparkSession, view_dir: str,
                            trigger_seconds: float | None = None,
                            available_now: bool = False):
     """CONTINUOUS maintenance: a Structured Streaming query over the
-    source's change feed whose micro-batches each call
+    view's change feeds whose micro-batches each call
     ``matview_refresh`` — the standard Delta pattern
     (``readChangeFeed`` -> ``foreachBatch`` MERGE), with the refresh
     itself providing exactly-once through the commit-riding txn
@@ -1833,37 +1622,22 @@ def matview_refresh_stream(spark: SparkSession, view_dir: str,
     for a processing-time trigger or leave both unset for Spark's
     default micro-batch loop. Returns the ``StreamingQuery`` — call
     ``.stop()`` to end maintenance."""
-    from cl_data_frame_spark.sources.snapshots import (
-        snapshot_txn_version)
     from cl_data_frame_spark.streaming.snapshot_source import (
         read_stream_snapshot)
     meta = _read_meta(view_dir)
-    if meta.get("kind") in ("join", "star"):
-        # a join/star view has k+1 change signals; ANY table's
-        # commits trigger a refresh (which consumes every feed under
-        # its own per-source watermarks). The signal rows are
-        # discarded, so a shared schema is not required — only their
-        # arrival.
-        sm = _star_meta(meta)
-        fa = snapshot_txn_version(view_dir, _F_APP)
-        fa = int(sm["fact_version"]) if fa is None else fa
-        feed = read_stream_snapshot(
-            spark, sm["fact_dir"], read_change_feed=True,
-            starting_version=fa + 1).select(F.lit(1).alias("sig"))
-        for i, sp in enumerate(sm["dims"]):
-            da = snapshot_txn_version(view_dir, _dim_app(i))
-            da = int(sp["version"]) if da is None else da
-            feed = feed.unionByName(read_stream_snapshot(
-                spark, sp["dir"], read_change_feed=True,
-                starting_version=da + 1)
-                .select(F.lit(1).alias("sig")))
-    else:
-        applied = snapshot_txn_version(view_dir, _APP_ID)
-        if applied is None:
-            applied = int(meta["source_version"])
-        feed = read_stream_snapshot(spark, meta["source_dir"],
-                                    read_change_feed=True,
-                                    starting_version=applied + 1)
+    # a view has k+1 change signals (the fact and each dim); ANY
+    # table's commits trigger a refresh (which consumes every feed
+    # under its own per-source watermarks). The signal rows are
+    # discarded, so a shared schema is not required — only their
+    # arrival.
+    applied, _ = _applied(view_dir, meta)
+    feed = None
+    for src, v in zip([meta["fact_dir"],
+                       *(sp["dir"] for sp in meta["dims"])], applied):
+        sig = read_stream_snapshot(
+            spark, src, read_change_feed=True,
+            starting_version=v + 1).select(F.lit(1).alias("sig"))
+        feed = sig if feed is None else feed.unionByName(sig)
 
     def _on_batch(_batch_df, _batch_id):
         matview_refresh(spark, view_dir)

@@ -100,9 +100,13 @@ class TestMatviewBasics:
         _assert_parity(spark, src, view, "repair")
 
     def test_refresh_releases_its_checkpoints(self, spark, tmp_path):
-        """Once a refresh that repairs a group returns, none of its
-        checkpoints (the group deltas, the delta-view join, the
-        upserts, the view merge's vector rows) holds stored blocks."""
+        """Once a create or a refresh returns, none of its checkpoints
+        holds stored blocks: the create's aggregate, the group deltas,
+        the delta-view join, the upserts, the view merge's vector rows,
+        a distinct column's state deltas and upserts, and a dim's
+        change rows."""
+        from cl_data_frame_spark.operators.matview import (
+            matview_create_join)
         jvm_sc = spark.sparkContext._jsc.sc()
 
         def stored():
@@ -111,14 +115,36 @@ class TestMatviewBasics:
         src, view = _mkdirs(tmp_path, "release")
         _seed(spark, src, [(i, f"g{i % 3}", float(i))
                            for i in range(30)])
+        before = stored()
         matview_create(spark, src, view, keys="grp",
                        measure_cols=["val"])
+        assert stored() - before == set()
         snapshot_delete(spark, src, where=[("id", "==", 0)])
-        before = stored()
         r = matview_refresh(spark, view)
         assert r["groups_repaired"] == 1
         assert stored() - before == set()
         _assert_parity(spark, src, view, "release")
+        # a distinct_cols view advances its per-value state
+        dview = str(tmp_path / "release_dmv")
+        matview_create(spark, src, dview, keys="grp",
+                       measure_cols=["val"], distinct_cols=["val"])
+        snapshot_delete(spark, src, where=[("id", "==", 1)])
+        assert matview_refresh(spark, dview)["mode"] == "incremental"
+        assert stored() - before == set()
+        # a join view refreshed over a dim-side update
+        dim, jview = str(tmp_path / "release_dim"), \
+            str(tmp_path / "release_jmv")
+        snapshot_write(SparkFrame(spark.createDataFrame(
+            [(f"g{k}", f"c{k % 2}") for k in range(3)],
+            "grp string, cat string")), dim, mode="overwrite",
+            stats_cols=["grp"])
+        matview_create_join(spark, src, dim, jview, on="grp",
+                            keys="cat", measure_cols=["val"])
+        snapshot_update(spark, dim, where=[("grp", "==", "g1")],
+                        set_exprs={"cat": F.lit("c9")})
+        r = matview_refresh(spark, jview)
+        assert r["mode"] == "incremental" and r["pruned_keys"] == 1
+        assert stored() - before == set()
 
     def test_interior_delete_stays_arithmetic(self, spark, tmp_path):
         src, view = _mkdirs(tmp_path, "interior")
@@ -224,7 +250,7 @@ class TestMatviewExactlyOnce:
         # watermark prevents the double-apply
         mp = os.path.join(view, "_matview.json")
         meta = json.load(open(mp))
-        json.dump({**meta, "source_version": 1}, open(mp, "w"))
+        json.dump({**meta, "fact_version": 1}, open(mp, "w"))
         assert matview_refresh(spark, view)["mode"] == "noop"
         _assert_parity(spark, src, view, "crash-sim")
 
@@ -470,6 +496,49 @@ class TestMatviewFiltered:
         row = matview_read(spark, view).spark_df.collect()[0]
         assert (row["cnt"], row["min_val"], row["max_val"]) \
             == (1, 7.0, 7.0)
+
+    def test_where_on_a_column_outside_the_view(self, spark,
+                                                tmp_path):
+        """The predicate may read a source column that is neither a
+        key nor a measure, backtick-quoted or not; create, the change
+        feed and the repair read all carry it."""
+        src, view = _mkdirs(tmp_path, "filtflag")
+        schema = "id int, grp string, val double, flag int"
+        snapshot_write(SparkFrame(spark.createDataFrame(
+            [(i, f"g{i % 2}", float(i), int(i % 3 != 0))
+             for i in range(20)], schema)), src, mode="overwrite",
+            stats_cols=["id", "grp"])
+        matview_create(spark, src, view, keys="grp",
+                       measure_cols=["val"], where="`flag` = 1")
+
+        def exp_filtered():
+            base = snapshot_read(spark, src).spark_df.where("flag = 1")
+            return {r["grp"]: (r["cnt"], r["mn"], r["mx"]) for r in
+                    base.groupBy("grp").agg(
+                        F.count(F.lit(1)).alias("cnt"),
+                        F.min("val").alias("mn"),
+                        F.max("val").alias("mx")).collect()}
+
+        def got():
+            return {r["grp"]: (r["cnt"], r["min_val"], r["max_val"])
+                    for r in matview_read(spark, view).spark_df
+                    .collect()}
+
+        assert got() == exp_filtered()
+        # the flag moves one row out of the view and one into it
+        snapshot_update(spark, src, where=[("id", "==", 4)],
+                        set_exprs={"flag": F.lit(0)})
+        snapshot_update(spark, src, where=[("id", "==", 3)],
+                        set_exprs={"flag": F.lit(1)})
+        matview_refresh(spark, view)
+        assert got() == exp_filtered()
+        # deleting g0's filtered min (id 2) repairs over flagged rows
+        snapshot_delete(spark, src, where=[("id", "==", 2)])
+        snapshot_write(SparkFrame(spark.createDataFrame(
+            [(50, "g1", 0.5, 0), (51, "g1", 99.0, 1)], schema)),
+            src, mode="append")
+        assert matview_refresh(spark, view)["groups_repaired"] == 1
+        assert got() == exp_filtered()
 
 
 class TestMatviewRandomizedParity:

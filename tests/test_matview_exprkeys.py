@@ -5,6 +5,7 @@ change-feed row, and to the pinned repair base. Parity against full
 recompute across DML histories, single-source and star."""
 
 import datetime
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -102,6 +103,46 @@ class TestDerivedKeySingleSource:
                .groupBy("grp", "day")
                .agg(F.count(F.lit(1)).alias("cnt")).collect()}
         got = {(r["grp"], r["day"]): r["cnt"] for r in
+               matview_read(spark, view).spark_df.collect()}
+        assert got == exp
+
+    def test_mixed_keys_repair_read_prunes_on_the_plain_key(
+            self, spark, tmp_path, monkeypatch):
+        """A view keyed on a plain column and a derived one still
+        prunes its repair read by the plain key: the base read gets an
+        IN predicate over the repair groups' plain-key values."""
+        from cl_data_frame_spark.sources import snapshots as S
+        src, view = str(tmp_path / "srcp"), str(tmp_path / "mvp")
+        rows = [(i, f"g{i % 2}", _ts(1 + i % 2, i % 24), float(i))
+                for i in range(20)]
+        snapshot_write(SparkFrame(spark.createDataFrame(
+            rows, "id int, grp string, ts timestamp, val double")),
+            src, mode="overwrite", stats_cols=["id", "grp"])
+        matview_create(
+            spark, src, view,
+            keys={"grp": "grp", "day": "date_trunc('day', ts)"},
+            measure_cols=["val"])
+        # id 0 holds the (g0, day 1) group's stored min
+        snapshot_delete(spark, src, [("id", "==", 0)])
+        seen = []
+        real = S.snapshot_read
+
+        def spy(spark_, table_dir, *args, **kwargs):
+            if os.path.abspath(table_dir) == os.path.abspath(src):
+                seen.append(kwargs.get("where"))
+            return real(spark_, table_dir, *args, **kwargs)
+
+        monkeypatch.setattr(S, "snapshot_read", spy)
+        assert matview_refresh(spark, view)["groups_repaired"] == 1
+        assert [("grp", "in", ["g0"])] in seen, seen
+        monkeypatch.undo()
+        base = snapshot_read(spark, src).spark_df
+        exp = {(r["grp"], r["day"]): (r["cnt"], r["mn"]) for r in
+               base.withColumn("day", F.expr("date_trunc('day', ts)"))
+               .groupBy("grp", "day")
+               .agg(F.count(F.lit(1)).alias("cnt"),
+                    F.min("val").alias("mn")).collect()}
+        got = {(r["grp"], r["day"]): (r["cnt"], r["min_val"]) for r in
                matview_read(spark, view).spark_df.collect()}
         assert got == exp
 

@@ -78,7 +78,7 @@ class TestJoinViewBasics:
             spark, fact, dim, view, on=("fk", "pk"), keys="cat",
             measure_cols=["val"])
         assert (fv, dv) == (1, 1)
-        assert snapshot_txn_version(view, "matview.fact") == 1
+        assert snapshot_txn_version(view, "matview") == 1
         assert snapshot_txn_version(view, "matview.dim") == 1
         _assert_parity(spark, fact, dim, view, ["cat"], "val",
                        tag="create")
@@ -143,7 +143,7 @@ class TestJoinViewRefresh:
         snapshot_write(SparkFrame(extra), fact, mode="append")
         r = matview_refresh(spark, view)
         assert r["mode"] == "incremental"
-        assert snapshot_txn_version(view, "matview.fact") == 2
+        assert snapshot_txn_version(view, "matview") == 2
         assert snapshot_txn_version(view, "matview.dim") == 1
         _assert_parity(spark, fact, dim, view, ["cat"], "val",
                        tag="fact-append")
@@ -204,7 +204,7 @@ class TestJoinViewRefresh:
         snapshot_delete(spark, dim, [("pk", "==", 1)])
         r = matview_refresh(spark, view)
         assert r["mode"] == "incremental"
-        assert snapshot_txn_version(view, "matview.fact") == 3
+        assert snapshot_txn_version(view, "matview") == 3
         assert snapshot_txn_version(view, "matview.dim") == 3
         _assert_parity(spark, fact, dim, view, ["cat"], "val",
                        tag="both-sides")
@@ -341,5 +341,5 @@ class TestJoinViewStreamingMaintenance:
         q.awaitTermination(120)
         _assert_parity(spark, fact, dim, view, ["cat"], "val",
                        tag="streamed")
-        assert snapshot_txn_version(view, "matview.fact") == 2
+        assert snapshot_txn_version(view, "matview") == 2
         assert snapshot_txn_version(view, "matview.dim") == 2

@@ -39,11 +39,13 @@ def _seed(spark, fact, d1, d2, n=60):
                    stats_cols=["pk"])
 
 
-def _expected(spark, fact, d1, d2):
+def _expected(spark, fact, d1, d2, where=None):
     f = snapshot_read(spark, fact).spark_df
     u = snapshot_read(spark, d1).spark_df
     p = snapshot_read(spark, d2).spark_df
     j = f.join(u, on="uk", how="inner").join(p, on="pk", how="inner")
+    if where is not None:
+        j = j.where(where)
     dec = F.col("val").cast("decimal(28,6)")
     return {(r["useg"], r["pcat"]):
             (r["cnt"], r["s"], r["mn"], r["mx"])
@@ -60,8 +62,8 @@ def _got(spark, view):
             for r in matview_read(spark, view).spark_df.collect()}
 
 
-def _parity(spark, fact, d1, d2, view, tag=""):
-    got, exp = _got(spark, view), _expected(spark, fact, d1, d2)
+def _parity(spark, fact, d1, d2, view, tag="", where=None):
+    got, exp = _got(spark, view), _expected(spark, fact, d1, d2, where)
     assert got == exp, (tag, got, exp)
 
 
@@ -73,7 +75,7 @@ class TestStarViewBasics:
             spark, fact, [(d1, "uk"), (d2, "pk")], view,
             keys=["useg", "pcat"], measure_cols=["val"])
         assert fv == 1 and dvs == [1, 1]
-        assert snapshot_txn_version(view, "matview.fact") == 1
+        assert snapshot_txn_version(view, "matview") == 1
         assert snapshot_txn_version(view, "matview.dim") == 1
         assert snapshot_txn_version(view, "matview.dim2") == 1
         _parity(spark, fact, d1, d2, view, "create")
@@ -97,7 +99,7 @@ class TestStarViewBasics:
         snapshot_delete(spark, d2, [("pk", "==", 0)])
         r = matview_refresh(spark, view)
         assert r["mode"] == "incremental"
-        assert snapshot_txn_version(view, "matview.fact") == 3
+        assert snapshot_txn_version(view, "matview") == 3
         assert snapshot_txn_version(view, "matview.dim") == 2
         assert snapshot_txn_version(view, "matview.dim2") == 2
         _parity(spark, fact, d1, d2, view, "all-three")
@@ -134,7 +136,7 @@ class TestStarViewBasics:
                         set_exprs={"pcat": "'q'"})
         r = matview_refresh(spark, view)
         assert r["mode"] == "incremental"
-        assert snapshot_txn_version(view, "matview.fact") == 1
+        assert snapshot_txn_version(view, "matview") == 1
         _parity(spark, fact, d1, d2, view, "dims-only")
         assert matview_refresh(spark, view)["mode"] == "noop"
 
@@ -258,6 +260,48 @@ class TestStarViewFiltered:
         got = {(r["useg"], r["pcat"]): r["cnt"] for r in
                matview_read(spark, view).spark_df.collect()}
         assert got == exp()
+
+    def test_where_on_a_fact_column_outside_the_view(self, spark,
+                                                     tmp_path):
+        """The predicate's columns ride the maintenance joins like the
+        keys' and measures' do, so a filter on a fact column that is
+        neither a key nor a measure stays exact across fact and dim
+        DML."""
+        fact, d1, d2, view = _mk(tmp_path, "swf")
+        _seed(spark, fact, d1, d2)
+        schema = "id int, uk int, pk int, val double, flag int"
+        snapshot_write(SparkFrame(spark.createDataFrame(
+            [(i, i % 5, i % 3, float(i), int(i % 4 != 0))
+             for i in range(60)], schema)), fact, mode="overwrite",
+            stats_cols=["id", "uk", "pk"])
+        w = "flag = 1"
+        matview_create_star(spark, fact, [(d1, "uk"), (d2, "pk")],
+                            view, keys=["useg", "pcat"],
+                            measure_cols=["val"], where=w)
+        _parity(spark, fact, d1, d2, view, "create", w)
+        # fact DML: the flag moves rows across the predicate, and id 1
+        # is its (u1, p1) group's filtered min
+        snapshot_update(spark, fact, where=[("id", "==", 4)],
+                        set_exprs={"flag": F.lit(1)})
+        snapshot_update(spark, fact, where=[("id", "==", 5)],
+                        set_exprs={"flag": F.lit(0)})
+        snapshot_delete(spark, fact, [("id", "==", 1)])
+        assert matview_refresh(spark, view)["groups_repaired"] >= 1
+        _parity(spark, fact, d1, d2, view, "fact-dml", w)
+        # dim DML on both dims, then all three in one interval
+        snapshot_update(spark, d1, where=[("uk", "==", 0)],
+                        set_exprs={"useg": "'z'"})
+        snapshot_update(spark, d2, where=[("pk", "==", 2)],
+                        set_exprs={"pcat": "'q'"})
+        matview_refresh(spark, view)
+        _parity(spark, fact, d1, d2, view, "dim-dml", w)
+        snapshot_write(SparkFrame(spark.createDataFrame(
+            [(900, 2, 1, -5.0, 1), (901, 2, 1, -6.0, 0)], schema)),
+            fact, mode="append")
+        snapshot_update(spark, d1, where=[("uk", "==", 2)],
+                        set_exprs={"useg": "'y'"})
+        matview_refresh(spark, view)
+        _parity(spark, fact, d1, d2, view, "all", w)
 
 
 class TestStarViewRandomizedParity:
